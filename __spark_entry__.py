@@ -92,13 +92,15 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ [EXT]).
 
-    Each callable releases the package's pinned caches (``_pin`` /
-    ``_bounded_broadcast`` registrations) before building its plan, so a
-    driver session that iterates many queries holds at most one query's
-    caches at a time instead of accumulating all of them until teardown.
-    Safe by construction: the driver executes each query before building
-    the next, and unpersist on an already-collected plan is a no-op
-    (a still-pending plan would just recompute).
+    Each callable calls ``release_caches()`` before building its plan,
+    dropping everything the previous query persisted (``.cache()``,
+    ``_bounded_broadcast`` and ``localCheckpoint`` blocks), so a session
+    that iterates many queries holds at most one query's caches at a
+    time instead of accumulating all of them until teardown. This is
+    safe only because the caller consumes each query's result before it
+    builds the next: a ``localCheckpoint`` block cannot be recomputed
+    once unpersisted, so a plan still pending across the release would
+    fail rather than recompute.
     """
     from tiny_mapreduce_rpc_server_spark import release_caches
 

@@ -149,11 +149,10 @@ def main() -> None:
 
         def run_once():
             # drop cached blocks from prior runs: a query that .cache()s
-            # internally must not get warm-cache credit across repetitions
-            # (release_caches also drops the driver-side references the
-            # dedup module tracks, so nothing accumulates across a run)
+            # or localCheckpoints internally must not get warm-cache credit
+            # across repetitions. The previous rep's result is consumed
+            # already, which is release_caches()' one precondition.
             release_caches()
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = spec.fn(spark, sf_dir)
             n = df.count() if spec.oracle is None else len(df.collect())
@@ -201,7 +200,6 @@ def main() -> None:
             # headliner protocol above (a timed release would inflate
             # cache-building sentinels relative to their headliner cells)
             release_caches()
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             len(spec.fn(spark, sf_dir).collect())
             return time.perf_counter() - t0

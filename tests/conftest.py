@@ -19,3 +19,15 @@ def spark():
         extra_conf={"spark.sql.warehouse.dir": "/tmp/spark_graft_warehouse"},
     )
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_after_test():
+    """Release what each test persisted, so the shared session does not
+    pile up caches and localCheckpoint blocks across the suite. It does
+    not request ``spark``: without an active session the release is a
+    no-op, so pure-Python tests never start a JVM."""
+    yield
+    from tiny_mapreduce_rpc_server_spark import release_caches
+
+    release_caches()

@@ -73,7 +73,6 @@ _COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 
 def _rows(spark, name):
     release_caches()
-    spark.catalog.clearCache()
     df = all_queries()[name].fn(spark, SF_ORACLE)
     return _rowset(df.columns, [tuple(r) for r in df.collect()])
 

@@ -6,9 +6,10 @@ exact computation, and value-level cross-checks — not just ``count() >= 0``.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tiny_mapreduce_rpc_server_spark.functions import dot
 from tiny_mapreduce_rpc_server_spark.operators.dedup import (
     JACCARD_VERIFY,
@@ -192,7 +193,7 @@ def test_bpe_local_matches_distributed_loop(spark, monkeypatch):
     (count DESC, lhs, rhs) tie-breaks, same left-to-right replace."""
     import tiny_mapreduce_rpc_server_spark.operators.chunking as C
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
 
     def merges(df):
         return [tuple(r) for r in df.collect()]
@@ -212,7 +213,7 @@ def test_simhash_kernel_matches_fold(spark):
     negative hash values exercising arithmetic-shift bit extraction)."""
     import tiny_mapreduce_rpc_server_spark.operators.dedup as D
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     for bits in (D.SIMHASH_BITS, D.SIMHASH_WIDE_BITS):
         got = {
             (r.doc_id, r.simhash)
@@ -243,8 +244,6 @@ def test_simhash_kernel_matches_fold(spark):
 def test_cc_local_rejects_null_endpoints(spark):
     """The kernel's non-null contract (ADVICE r11): a null endpoint must
     raise, not silently float-key the components."""
-    import pytest
-
     from tiny_mapreduce_rpc_server_spark.operators.graph import (
         propagate_components,
     )
@@ -443,7 +442,7 @@ def test_streaming_outer_join_min_watermark_at_sparse_sf(spark):
         q_streaming_outer_join,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     compare(q_streaming_outer_join(spark, sf), ORACLE_STREAMING_OUTER_JOIN, sf)
 
 
@@ -482,7 +481,7 @@ def test_streaming_full_outer_join_min_watermark_at_sparse_sf(spark):
         q_streaming_full_outer_join,
     )
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     compare(
         q_streaming_full_outer_join(spark, sf),
         ORACLE_STREAMING_FULL_OUTER_JOIN,
@@ -1194,7 +1193,7 @@ def test_lpa_converged_fixed_point_contract(spark):
     assert settled[1] == settled[2] == 1
     assert settled[10] == settled[11] == settled[12] == 10
 
-    out = q_graph_community_lpa_converged(spark, "/root/testdata/sf0.001").collect()
+    out = q_graph_community_lpa_converged(spark, SF_SMOKE).collect()
     n_nodes = sum(r.n_members for r in out)
     assert n_nodes > 0
     for r in out:
@@ -1213,7 +1212,6 @@ def test_lpa_conv_max_guard_fires_on_deep_chain(spark):
     shape within budget converges to the min label in rounds ~ n,
     pinning the rounds-vs-diameter scaling claim in
     _lpa_selfvote_converge's docstring."""
-    import pytest
     from pyspark.sql import functions as F
 
     from tiny_mapreduce_rpc_server_spark.operators.graph import (
@@ -1280,3 +1278,35 @@ def test_dedup_eval_embedding_bands(spark):
     # isotropic corpus: honest negative control
     assert iso.n_exact_high == 0 and iso.recall_high is None, iso
     assert iso.recall is None or iso.recall < 0.2, iso
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_simhash_clusters",  # localCheckpoint in the CC loop
+        "bpe_train_merges",  # localCheckpoint
+        "graph_pagerank",  # localCheckpoint per round
+        "text_tf_idf",  # .cache() plus _bounded_broadcast
+    ],
+)
+def test_release_caches_leaves_nothing_persisted(spark, name):
+    """One release_caches() after a consumed query drops every block the
+    query persisted — cache-manager entries, the bounded-broadcast
+    persist and localCheckpoint RDDs alike — and the query still runs
+    to the same rows afterwards."""
+    from tests.oracle_utils import _rowset
+    from tiny_mapreduce_rpc_server_spark import release_caches
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+
+    fn = all_queries()[name].fn
+
+    def rows():
+        t = fn(spark, SF_SMOKE).toArrow()
+        return _rowset(t.column_names, [tuple(r.values()) for r in t.to_pylist()])
+
+    release_caches()
+    first = rows()
+    release_caches()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert rows() == first

@@ -1178,7 +1178,6 @@ def test_plan_fingerprints_registry_wide(spark):
             from tiny_mapreduce_rpc_server_spark import release_caches
 
             release_caches()
-            spark.catalog.clearCache()
             retried[name] = dp.operator_tree(
                 spark, all_queries()[name].fn(spark, FP_SF_DIR)
             )

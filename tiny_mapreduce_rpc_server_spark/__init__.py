@@ -15,8 +15,7 @@ MapReduce + RPC framework), re-expressed Spark-first:
   search, text analysis, multimodal columns) designed for 100 TB scale.
 """
 
-from tiny_mapreduce_rpc_server_spark.operators.dedup import release_caches
-from tiny_mapreduce_rpc_server_spark.session import get_spark
+from tiny_mapreduce_rpc_server_spark.session import get_spark, release_caches
 
 __all__ = ["get_spark", "release_caches"]
 __version__ = "0.1.0"

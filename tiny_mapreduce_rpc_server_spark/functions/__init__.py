@@ -148,29 +148,3 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-# ---------------------------------------------------------------------------
-# deterministic hashing (engine-portable: same value computable in ANSI SQL)
-# ---------------------------------------------------------------------------
-
-
-def md5_long(col: Column, *, hex_chars: int = 15) -> Column:
-    """First `hex_chars` hex digits of md5 as a non-negative bigint.
-
-    15 hex chars = 60 bits < 63, so the value fits a signed 64-bit int in
-    every engine. Used wherever dedup/fingerprint ops need a hash that the
-    DuckDB oracle can recompute exactly (Spark's murmur3 ``F.hash`` is not
-    portable across engines).
-    """
-    return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("bigint")
-
-
-def md5_bit(col: Column, bit: int) -> Column:
-    """Bit #`bit` (0-based, from the md5 hex string's high end) as 0/1 int.
-
-    Bit b lives in hex char b//4 (1-indexed substring) at position 3-(b%4)
-    from the low side of that 4-bit nibble.
-    """
-    nibble = F.conv(F.substring(F.md5(col), bit // 4 + 1, 1), 16, 10).cast("int")
-    return F.shiftright(nibble, 3 - (bit % 4)).bitwiseAND(F.lit(1))

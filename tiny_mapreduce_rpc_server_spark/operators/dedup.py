@@ -51,33 +51,6 @@ MAX_SHINGLE_DF = 50
 BROADCAST_PAIR_BOUND = 2_000_000
 
 
-# Every DataFrame this module persists/caches, so a long-lived session
-# can release them without nuking unrelated caches. clearCache() (which
-# bench.py / the scale tools / test teardowns already call between runs)
-# also drops the blocks; this list additionally drops the DRIVER-side
-# references so the tracking itself can't accumulate.
-_TRACKED_PERSISTS: list[DataFrame] = []
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """cache() a DataFrame and register it for ``release_caches``."""
-    df = df.cache()
-    _TRACKED_PERSISTS.append(df)
-    return df
-
-
-def release_caches() -> None:
-    """Unpersist every table this module pinned (bounded-broadcast
-    candidate sets, shingle/signature tables). Call between queries in a
-    long-lived session; ``spark.catalog.clearCache()`` is the blunter
-    session-wide equivalent."""
-    while _TRACKED_PERSISTS:
-        try:
-            _TRACKED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-
-
 def _bounded_broadcast(cand: DataFrame) -> DataFrame:
     """Broadcast a small derived table (candidate pairs, duplicate-id
     lists) only when it is PROVABLY small.
@@ -98,13 +71,11 @@ def _bounded_broadcast(cand: DataFrame) -> DataFrame:
     goes through this gate runs a real Spark job (the count) at
     DataFrame-construction time — construction is NOT plan-only for the
     dedup/graph/sampling queries that need the gate. The persisted
-    blocks live until ``release_caches()`` / ``clearCache()`` / session
-    teardown.
+    blocks live until ``release_caches()`` or session teardown.
     """
     from pyspark import StorageLevel
 
     cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    _TRACKED_PERSISTS.append(cand)
     n = cand.count()
     return F.broadcast(cand) if n <= BROADCAST_PAIR_BOUND else cand
 
@@ -251,7 +222,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    docs = _pin(docs)
+    docs = docs.cache()
     strided = _substr_windows(docs, SUBSTR_STRIDE)
     dense = _substr_windows(docs, 1)
     # a strided window is duplicated if ANY OTHER doc's dense set
@@ -420,10 +391,11 @@ def _shingle_intersections(spark: SparkSession, sf_dir: str):
     (set sizes are preserved — transform keeps array length). Same
     accepted-collision contract as before (the join key was already the
     hash; the oracle intersects strings)."""
-    ds = _pin(
+    ds = (
         _doc_shingles(spark, sf_dir).select(
             "doc_id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs")
         )
+        .cache()
     )
     sizes = ds.select("doc_id", F.size("hs").alias("n"))
     ex = ds.select("doc_id", F.explode("hs").alias("s"))
@@ -558,7 +530,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_intersect. The band shuffle carries only (bucket, doc_id) —
     never the shingle arrays — and signature computation is
     embarrassingly parallel; this is the shape that survives 100 TB."""
-    ds = _pin(_doc_shingles(spark, sf_dir))
+    ds = _doc_shingles(spark, sf_dir).cache()
     ex = _band_keys(ds)
     a, b = ex.alias("a"), ex.alias("b")
     cand = (
@@ -650,7 +622,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per incoming doc that collides, with its best
     existing match (highest jaccard, ties to the lowest existing id).
     """
-    ds = _pin(_doc_shingles(spark, sf_dir))
+    ds = _doc_shingles(spark, sf_dir).cache()
     incoming_pred = (P.h1(F.col("doc_id").cast("string")) % 100) >= INCR_INCOMING_FROM
     bk = _band_keys(ds)
     inc_keys = bk.filter(incoming_pred)
@@ -749,7 +721,7 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
 
     sf = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tempfile.gettempdir(), f"tmrs_lsh_index_{sf}")
-    ds = _pin(_doc_shingles(spark, sf_dir))
+    ds = _doc_shingles(spark, sf_dir).cache()
     incoming_pred = (P.h1(F.col("doc_id").cast("string")) % 100) >= INCR_INCOMING_FROM
     existing = ds.filter(~incoming_pred)
     # ---- build: the batch indexing job (writes the lake state) ----
@@ -1068,7 +1040,7 @@ def _simhash_pairs(sh: DataFrame, block_spec) -> DataFrame:
     """Candidate generation + hamming verify at distinct-signature
     granularity (see ``q_dedup_simhash``), expanded back to doc pairs,
     for any (offset, width) block partition of the fingerprint."""
-    sh = _pin(sh)
+    sh = sh.cache()
     sig_pairs = _simhash_sig_pairs(sh, block_spec)
     # The signature-pair set is tiny (distinct signatures only), so AQE
     # coalesces its exchange to ~one partition — but the doc-expansion
@@ -1570,7 +1542,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 bytes/shingle, and both branches explode longs. Probe keys are
     # the same 8-byte hashes as before (collision argument as in
     # q_dedup_ngram_jaccard).
-    ds = _pin(
+    ds = (
         _doc_shingles(spark, sf_dir)
         .join(docs, "doc_id")
         .select(
@@ -1578,6 +1550,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             F.transform("shingles", lambda s: F.xxhash64(s)).alias("hs"),
         )
+        .cache()
     )
     bench = (
         ds.filter(F.col("source") == "src0")

@@ -44,7 +44,6 @@ from tiny_mapreduce_rpc_server_spark.operators.dedup import (
     _T,
     _bounded_broadcast,
     _doc_simhash,
-    _pin,
     _sig_pairs_of_distinct,
     _sql_simhash,
     q_dedup_ngram_jaccard,
@@ -407,15 +406,14 @@ def q_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator)."""
     from tiny_mapreduce_rpc_server_spark.operators.sampling import _split_col
 
-    pairs = _pin(
-        q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    )
+    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").cache()
     comp = propagate_components(pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    asg = _pin(
+    asg = (
         docs.join(_bounded_broadcast(comp), "doc_id", "left")
         .select("doc_id", F.coalesce("component", "doc_id").alias("rep"))
         .select("doc_id", "rep", _split_col(F.col("rep")).alias("split"))
+        .cache()
     )
     a = asg.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
     b = asg.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
@@ -503,10 +501,11 @@ def q_dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys instead of through a SECOND full exchange (`distinct`). One
     exchange and an N-row cache removed; both consumers (edge
     generation, rollup) read the same K-row pin."""
-    sig_docs = _pin(
+    sig_docs = (
         _doc_simhash(spark, sf_dir, SIMHASH_WIDE_BITS)
         .groupBy("simhash")
         .agg(F.count("*").alias("n_docs"))
+        .cache()
     )
     sig_edges = (
         _sig_pairs_of_distinct(sig_docs.select("simhash"), _SIMHASH_WIDE_BLOCKS)
@@ -703,14 +702,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
     )
-    e = _pin(e)
+    e = e.cache()
     # adjacency-intersection instead of the naive wedge join: the wedge
     # plan materializes sum_b in(b)*out(b) rows (~70M here) through a
     # sort-merge join; intersecting per-edge neighbor lists touches each
     # edge once with O(deg) work and needs no wedge shuffle at all.
     # adj(u) holds only HIGHER neighbors, so triangle {a<b<c} is found
     # exactly once, at edge (a,b), as c in adj(a) ∩ adj(b).
-    adj = _pin(e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb")))
+    adj = e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb")).cache()
     adj_u = adj.withColumnRenamed("u", "x").withColumnRenamed("nb", "nb_u")
     adj_v = adj.withColumnRenamed("u", "y").withColumnRenamed("nb", "nb_v")
     empty = F.array().cast("array<bigint>")

@@ -572,7 +572,7 @@ def _cluster_rollup(margin: float, threshold: float):
     algorithm", §2.3/§2.4): the previous two-stage form emitted candidate
     PAIRS from this kernel and re-scored them with the ordered-fold
     cosine via TWO equi-joins against the full N-row assignment — so the
-    assignment had to be cached (`_pin`) and the embedding payload
+    assignment had to be cached and the embedding payload
     crossed two more exchanges just to recompute cosines the kernel had
     already (approximately) computed. The group handed to applyInPandas
     IS the whole cluster, so the exact decision can be made in place and

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
-from tiny_mapreduce_rpc_server_spark.operators.dedup import _pin
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -381,12 +380,9 @@ def q_ann_eval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic registered queries and the oracle recomputes them in
     SQL."""
     # pin: the O(Q*N) brute-force truth feeds BOTH union branches —
-    # without it the full cosine scan executes once per path. Routed
-    # through dedup._pin so release_caches() drops it between queries
-    # in a long-lived session (ADVICE r9).
-    truth = _pin(
-        q_ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    )
+    # without it the full cosine scan executes once per path;
+    # release_caches() drops it between queries.
+    truth = q_ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").cache()
 
     def path_recall(approx: DataFrame, path: str) -> DataFrame:
         a = approx.select("query_id", "neighbor_id", F.lit(1).alias("in_a"))
@@ -538,12 +534,13 @@ def q_ann_eval_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    truth = _pin(
+    truth = (
         topk(
             emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
                 "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim")
             )
         )
+        .cache()
     )
     # sign-LSH path
     bucket = F.lit(0)
@@ -611,10 +608,11 @@ def q_ann_eval_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # answer, so one ADC scan feeds both rows.
     pv = emb.select("vec_id", F.col("embedding").alias("v"))
     cb_one = _pq_cb_one(_pq_codebook_entries(pv))
-    cand_r = _pin(
+    cand_r = (
         _pq_adc_topk(
             _pq_codes(pv, cb_one), _pq_luts(pv, cb_one), k=RERANK_R
         ).select("query_id", "rnk", "neighbor_id")
+        .cache()
     )
     pq = cand_r.filter(F.col("rnk") <= TOP_K).select("query_id", "neighbor_id")
 

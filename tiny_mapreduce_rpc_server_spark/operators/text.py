@@ -481,10 +481,7 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines; see q_bm25_search)."""
     from pyspark.sql import Window
 
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import (
-        _bounded_broadcast,
-        _pin,
-    )
+    from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
 
     raw = load_table(spark, sf_dir, "documents")
     # metadata-only on the bare scan (before spread's repartition)
@@ -516,10 +513,11 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tf"),
         ),
     )
-    pairs = _pin(
+    pairs = (
         t.select("doc_id", F.explode(runs).alias("r")).select(
             "doc_id", F.col("r.w").alias("w"), F.col("r.tf").alias("tf")
         )
+        .cache()
     )
     dfreq = pairs.groupBy("w").agg(F.count("*").alias("df"))
     scored = pairs.join(_bounded_broadcast(dfreq), "w")
@@ -1297,9 +1295,7 @@ def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + rewrite) instead of three times; pinning `sized` instead would
     # cache corpus-sized token arrays, a 100 TB hazard. Released via
     # release_caches().
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _pin
-
-    seg = _pin(seg)
+    seg = seg.cache()
     # (2) boilerplate keys: appears in >= threshold distinct docs of a source
     boiler = (
         seg.groupBy("source", "seg_key")
@@ -1459,7 +1455,6 @@ def q_text_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT]).
     """
     from tiny_mapreduce_rpc_server_spark.functions import davg
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _pin
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     toked = docs.select("doc_id", P.tokens(F.lower(F.col("text"))).alias("t"))
@@ -1482,7 +1477,7 @@ def q_text_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score")
         )
     )
-    pinned = _pin(scored)
+    pinned = scored.cache()
     # step 2: frozen literal boundaries (balance only — never rank)
     probs = [i / _LM_RANGE_PARTS for i in range(1, _LM_RANGE_PARTS)]
     bnds = sorted(set(pinned.stat.approxQuantile("score", probs, 0.001)))

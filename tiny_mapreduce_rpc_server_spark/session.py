@@ -68,3 +68,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_caches() -> None:
+    """Release everything the previous query persisted: the cache
+    manager's entries (``.cache()`` / ``persist()``) and every RDD still
+    persisted on the context, which covers ``localCheckpoint`` blocks.
+    Does nothing without an active session.
+
+    Precondition: call it only after the previous query's result has
+    been consumed. A ``localCheckpoint`` block cannot be recomputed once
+    unpersisted, so a plan built before the release and executed after
+    it fails instead of recomputing.
+    """
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)

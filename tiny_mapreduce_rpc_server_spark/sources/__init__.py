@@ -169,19 +169,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer division — double math would lose precision above 2^53 ns
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so queries can use spark.sql."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """The reference's only input type: text lines (LineRecordReader).
-
-    One column ``value: string``; Spark's TextInputFormat reproduces the
-    reference's split-straddle rule (skip first partial line when
-    offset != 0, read one line past the split end — LineRecordReader.h:44-62)
-    """
-    return spark.read.text(path)

@@ -62,7 +62,3 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)

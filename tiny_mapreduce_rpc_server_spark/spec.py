@@ -24,9 +24,12 @@ class QuerySpec:
     through ``operators.dedup._bounded_broadcast`` (dedup / graph /
     sampling composites) run a real count job and persist blocks at
     ``fn(...)`` call time — the size gate cannot be decided lazily.
-    Long-lived sessions should call
-    ``tiny_mapreduce_rpc_server_spark.release_caches()`` (or
-    ``spark.catalog.clearCache()``) between queries.
+    Query functions also ``.cache()`` shared subtrees and
+    ``localCheckpoint`` iterative loops. Long-lived sessions release
+    all of it with ``tiny_mapreduce_rpc_server_spark.release_caches()``
+    between queries, and only after the previous result has been
+    consumed: a ``localCheckpoint`` block cannot be recomputed once
+    unpersisted.
     """
 
     name: str

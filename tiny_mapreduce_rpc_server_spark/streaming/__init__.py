@@ -47,6 +47,19 @@ def _replay_batches(tag: str, batches: list[DataFrame]) -> str:
         shutil.rmtree(tmp)
     return stream_dir
 
+
+def _memory_sink(df: DataFrame, mode: str, tag: str) -> DataFrame:
+    """Drive a streaming DataFrame to completion into a fresh memory
+    sink and return the sink's table."""
+    name = f"stream_{tag}_{uuid.uuid4().hex[:8]}"
+    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return df.sparkSession.table(name)
+
+
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -104,18 +117,7 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast(_DEC.lower())).cast("double").alias("sum_value"),
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return _memory_sink(agg, "complete", "tumbling").select(
         instant_as_ntz(F.col("window.start")).alias("hour_start"),
         "event_type",
         "n",
@@ -196,13 +198,7 @@ def q_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast(_DEC.lower())).cast("double").alias("sum_value"),
         )
     )
-    name = f"stream_late_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return _memory_sink(agg, "append", "late").select(
         instant_as_ntz(F.col("window.start")).alias("hour_start"), "n", "sum_value"
     )
 
@@ -253,18 +249,7 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
         .agg(F.count("*").alias("n"))
     )
-    name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return _memory_sink(agg, "complete", "sliding").select(
         instant_as_ntz(F.col("window.start")).alias("win_start"), "event_type", "n"
     )
 
@@ -298,18 +283,7 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return _memory_sink(agg, "complete", "session").select(
         instant_as_ntz(F.col("session_window.start")).alias("session_start"), "user_id", "n_events"
     )
 
@@ -361,15 +335,9 @@ def q_streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFra
     agg = events.groupBy("user_id").applyInPandasWithState(
         _update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # update mode appends one row per (user, micro-batch); keep the final
     # (single-batch replay => already final, dedup defensively on n_events)
-    snap = spark.table(name)
+    snap = _memory_sink(agg, "update", "state")
     return snap.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"), F.max("max_value").alias("max_value")
     )
@@ -394,18 +362,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _memory_sink(deduped, "append", "dedup")
 
 
 ORACLE_STREAMING_DEDUP = """
@@ -475,18 +432,7 @@ def q_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum(F.col("value").cast(_DEC.lower())).cast("double").alias("sum_value"),
     )
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _memory_sink(agg, "complete", "static")
 
 
 ORACLE_STREAMING_STATIC_JOIN = f"""
@@ -536,13 +482,7 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         instant_as_ntz("click_ts").alias("click_ts"),
         instant_as_ntz("view_ts").alias("view_ts"),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = pairs.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _memory_sink(pairs, "append", "join")
 
 
 ORACLE_STREAMING_STREAM_JOIN = """
@@ -636,13 +576,7 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         instant_as_ntz("click_ts").alias("click_ts"),
         instant_as_ntz("view_ts").alias("view_ts"),
     )
-    name = f"stream_ojoin_{uuid.uuid4().hex[:8]}"
-    q = pairs.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _memory_sink(pairs, "append", "ojoin")
 
 
 ORACLE_STREAMING_OUTER_JOIN = """
@@ -742,13 +676,7 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         instant_as_ntz("click_ts").alias("click_ts"),
         instant_as_ntz("view_ts").alias("view_ts"),
     )
-    name = f"stream_fojoin_{uuid.uuid4().hex[:8]}"
-    q = pairs.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _memory_sink(pairs, "append", "fojoin")
 
 
 ORACLE_STREAMING_FULL_OUTER_JOIN = """
@@ -849,18 +777,7 @@ def q_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("max_slot_n"),
         F.count("*").alias("n_slots"),
     )
-    name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-    q = (
-        hourly.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return _memory_sink(hourly, "append", "chain").select(
         instant_as_ntz(F.col("window.start")).alias("hour_start"),
         "event_type",
         "total_n",
@@ -908,18 +825,7 @@ def q_streaming_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").alias("n"))
     )
-    name = f"stream_trending_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sunk = spark.table(name).select(
+    sunk = _memory_sink(agg, "complete", "trending").select(
         instant_as_ntz(F.col("window.start")).alias("hour_start"), "event_type", "n"
     )
     w = Window.partitionBy("event_type").orderBy("hour_start")
@@ -1013,18 +919,7 @@ def q_streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sum_value_good"),
     )
-    name = f"stream_quarantine_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _memory_sink(agg, "complete", "quarantine")
 
 
 ORACLE_STREAMING_QUARANTINE = f"""

@@ -77,10 +77,8 @@ def fingerprint_all(spark, sf_dir: str) -> dict[str, str]:
     fps: dict[str, str] = {}
     for name, spec in all_queries().items():
         release_caches()
-        spark.catalog.clearCache()
         fps[name] = operator_tree(spark, spec.fn(spark, sf_dir))
     release_caches()
-    spark.catalog.clearCache()
     return fps
 
 

@@ -43,7 +43,6 @@ def main() -> int:
         return 1
     for name in args.queries:
         release_caches()
-        spark.catalog.clearCache()
         df = specs[name].fn(spark, args.sf_dir)
         plan = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -54,7 +53,6 @@ def main() -> int:
             fh.write(plan.rstrip() + "\n")
         print(f"wrote {path}")
     release_caches()
-    spark.catalog.clearCache()
     return 0
 
 

@@ -121,7 +121,7 @@ def main() -> int:
     # design).
     release_caches()
     q[PROBE[0]].fn(spark, sf_dir).toPandas()
-    spark.catalog.clearCache()
+    release_caches()
     rows = []
     detail: dict[str, dict] = {}
     for name in PROBE:
@@ -151,7 +151,6 @@ def main() -> int:
         eng = None
         for rep in range(3):
             release_caches()
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             if sink:
                 path = f"/tmp/showdown_eng_{name}"

@@ -115,7 +115,6 @@ def measure(names: list[str], sf_dir: str, reps: int = 3) -> int:
 
         def run_once() -> float:
             release_caches()
-            spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = spec.fn(spark, sf_dir)
             df.toPandas() if spec.oracle else df.count()
@@ -168,7 +167,6 @@ def simhash_split() -> int:
         for sf, sf_dir in SFS:
             def compute_once() -> float:
                 release_caches()
-                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 df = spec.fn(spark, sf_dir)
                 # decimal sum: 23.5M 64-bit hashes overflow a long sum
@@ -181,7 +179,6 @@ def simhash_split() -> int:
 
             def sink_once() -> float:
                 release_caches()
-                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).write.mode("overwrite").parquet(
                     f"/tmp/simhash_split_{name}"
@@ -285,7 +282,6 @@ def main() -> int:
             best = None
             for _ in range(2):  # best-of-2: drop one-time codegen cost
                 release_caches()
-                spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 df = spec.fn(spark, sf_dir)
                 # Arrow fetch, not collect(): pair-emitting queries

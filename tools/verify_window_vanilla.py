@@ -82,8 +82,8 @@ def main() -> int:
         t0 = time.time()
         try:
             # mirror the driver contract: __spark_entry__.queries() wraps
-            # every fn with a release_caches() so pinned caches don't
-            # accumulate across a many-query session
+            # every fn with a release_caches() so caches and checkpoints
+            # don't accumulate across a many-query session
             release_caches()
             df = spec.fn(spark, args.sf_dir)
             if spec.oracle is None:
