@@ -108,6 +108,67 @@ def test_map_reduce_byte_offset_keys(spark, tmp_path):
     assert dict(kv.collect()) == {"aa": 0, "bbbb": 3, "c": 8}
 
 
+def _records_inputs(tmp_path) -> list[str]:
+    """Two files, an empty file, a file without a trailing newline and a
+    directory of part files (plus the names the planner must skip)."""
+    a = tmp_path / "a.txt"
+    a.write_text("x\ny y\n\nx\n")
+    b = tmp_path / "b.txt"
+    b.write_text("b1\nb2 b2\n")
+    empty = tmp_path / "empty.txt"
+    empty.write_text("")
+    tail = tmp_path / "tail.txt"
+    tail.write_text("t1\nno newline")
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    (parts / "part-00000").write_text("p0\n")
+    (parts / "part-00001").write_text("p1\np1 again\n")
+    (parts / "_SUCCESS").write_text("")
+    (parts / ".part-00002.tmp").write_text("staged\n")
+    return [str(p) for p in (a, b, empty, tail, parts)]
+
+
+def _identity_records(spark, paths):
+    return MapReduceEngine(spark).map_reduce(
+        paths,
+        map_fn=lambda off, line: ((off, line), 1),
+        reduce_fn=None,
+        sort_within_partitions=False,
+    )
+
+
+def test_map_reduce_records_match_linefile_source(spark, tmp_path):
+    """map_reduce reads its records with the linefile planner and reader
+    directly: over several paths it must see exactly the (offset, line)
+    rows the linefile DataSource returns for the same paths."""
+    from tiny_mapreduce_rpc_server_spark.sources.linefile import register
+
+    register(spark)
+    paths = _records_inputs(tmp_path)
+    want = []
+    for p in paths:
+        df = spark.read.format("linefile").option("path", p).load()
+        want += [(r.offset, r.line) for r in df.collect()]
+    got = [k for k, _ in _identity_records(spark, paths).collect()]
+    assert sorted(got) == sorted(want)
+    assert (3, "no newline") in got and len(got) == 11
+
+
+def test_map_reduce_one_partition_per_split(spark, tmp_path):
+    """One partition per planned byte-range split, in plan order, each
+    holding exactly the records its split reads (the reference's one
+    mapper thread per split)."""
+    from tiny_mapreduce_rpc_server_spark.sources.linefile import LineFileReader
+
+    paths = _records_inputs(tmp_path)
+    splits = [s for p in paths for s in LineFileReader({"path": p}).partitions()]
+    reader = LineFileReader({"path": paths[0]})
+    want = [[(rec, 1) for rec in reader.read(s)] for s in splits]
+    kv = _identity_records(spark, paths)
+    assert kv.getNumPartitions() == len(splits) == 6
+    assert kv.glom().collect() == want
+
+
 def test_word_count_df_matches_rdd(spark, tmp_path):
     p = tmp_path / "in.txt"
     p.write_text("x y\ny z\nx x\n")

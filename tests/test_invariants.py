@@ -210,7 +210,8 @@ def test_simhash_kernel_matches_fold(spark):
     """r12: the vectorized Arrow vote-count kernel must be bit-identical
     to the retained JVM fold — on the real corpus at BOTH bit widths and
     on synthetic edge rows (null token array, empty array, single token,
-    negative hash values exercising arithmetic-shift bit extraction)."""
+    negative hash values exercising arithmetic-shift bit extraction, a
+    null element: counted in n, no votes)."""
     import tiny_mapreduce_rpc_server_spark.operators.dedup as D
 
     sf = SF_SMOKE
@@ -231,7 +232,14 @@ def test_simhash_kernel_matches_fold(spark):
         assert got == ref and len(got) > 0
 
     edge = spark.createDataFrame(
-        [(1, None), (2, []), (3, [5]), (4, [-5, 7, -9, 3]), (5, [1, 2, 4])],
+        [
+            (1, None),
+            (2, []),
+            (3, [5]),
+            (4, [-5, 7, -9, 3]),
+            (5, [1, 2, 4]),
+            (6, [3, None, -1]),
+        ],
         "doc_id long, th array<long>",
     )
     for bits in (31, 63):

@@ -848,7 +848,10 @@ def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
     to the SQL oracle's list_sum votes. numpy's ``>>`` on int64 is the
     arithmetic shift, so bit extraction matches the JVM for negative
     hashes too. Null/empty token arrays yield fingerprint 0 exactly as
-    the fold's null-condition ``when`` does."""
+    the fold's null-condition ``when`` does, and a null element counts
+    in n with no votes, as in the fold. Arrow hands a batch holding a
+    null element to pandas as float64 (NaN) or object (None) arrays;
+    they are zero-filled, exact for the portable hashes (< 2**31)."""
     assert 0 < bits <= 63, bits
 
     def kernel(batches):
@@ -864,9 +867,10 @@ def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
             out = np.zeros(len(vals), dtype=np.int64)
             nz = np.flatnonzero(lens)
             if nz.size:
-                flat = np.concatenate(
-                    [np.asarray(v, dtype=np.int64) for v in vals[nz]]
-                )
+                flat = np.concatenate([np.asarray(v) for v in vals[nz]])
+                if flat.dtype.kind != "i":
+                    flat = np.where(pd.isna(flat), 0, flat)
+                flat = flat.astype(np.int64, copy=False)
                 seg = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
                 ones = np.empty((nz.size, bits), dtype=np.int64)
                 for j in range(bits):

@@ -22,12 +22,16 @@ k-way merges, shuffle copy (§2.4/2.5 of SURVEY.md) — is Spark-internal
 reimplemented.
 
 Scale notes: arbitrary Python callables force the RDD path (pickled rows
-through the Python worker). ``reduceByKey`` keeps the map-side combine so
-shuffle volume is per-distinct-key, not per-record; since it also leaves
-the RDD partitioned by the job's partitioner, the sorted-output guarantee
-costs an in-place per-partition sort — the whole job is ONE shuffle. For
-callable-free jobs use the DataFrame fast path (``word_count``) which
-stays entirely JVM-side.
+through the Python worker). The records come straight from the
+``linefile`` split planner: one Python task per byte-range split reads its
+split and feeds each ``(offset, line)`` to the map callback in the same
+worker, as the reference's mapper thread does — no DataSource scan, no
+Arrow hop to the JVM and back, no per-path plan. ``reduceByKey`` keeps
+the map-side combine so shuffle volume is per-distinct-key, not
+per-record; since it also leaves the RDD partitioned by the job's
+partitioner, the sorted-output guarantee costs an in-place per-partition
+sort — the whole job is ONE shuffle. For callable-free jobs use the
+DataFrame fast path (``word_count``) which stays entirely JVM-side.
 """
 
 from __future__ import annotations
@@ -38,6 +42,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tiny_mapreduce_rpc_server_spark.sources.linefile import LineFileReader
 
 # Reference defaults (Callbacks.h:44,47).
 DEFAULT_NUM_PARTITIONS = 5
@@ -83,18 +89,18 @@ class MapReduceEngine:
         part_fn = partitioner or default_partitioner
 
         # (offset, line) records — the LineRecordReader contract with TRUE
-        # byte offsets (LineRecordReader.h:14 yields byte offsets), read
-        # through the linefile DataSource: same split planner + straddle
-        # rule as the reference reader, and no zipWithIndex (which costs an
-        # extra count job before the real one).
-        from tiny_mapreduce_rpc_server_spark.sources.linefile import register
-
-        register(self.spark)
-        df = None
-        for p in paths:
-            part = self.spark.read.format("linefile").option("path", p).load()
-            df = part if df is None else df.unionAll(part)
-        records = df.rdd.map(lambda r: (r[0], r[1]))
+        # byte offsets (LineRecordReader.h:14 yields byte offsets): the
+        # linefile split planner cuts every path into byte ranges, and one
+        # task per range runs the linefile record reader (straddle rule)
+        # and hands its records to the map in the same Python worker. Not
+        # a linefile DataSource scan: that costs planner processes per
+        # path, an Arrow hop into the JVM and a second Python worker.
+        readers = [LineFileReader({"path": p}) for p in paths]
+        splits = [s for r in readers for s in r.partitions()]
+        # read() takes everything it needs from the split it is given
+        records = self.spark.sparkContext.parallelize(splits, len(splits)).flatMap(
+            readers[0].read
+        )
 
         if flat_map:
             kv = records.flatMap(lambda t: map_fn(t[0], t[1]))

@@ -20,6 +20,11 @@ from pyspark.sql import SparkSession
 # the right order of magnitude for parquet.
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 
+# the directory holding this package, so Spark's Python workers can start
+# the package's worker daemon from any working directory
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
 
 def get_spark(
     app_name: str = "tiny_mapreduce_rpc_server_spark",
@@ -31,6 +36,17 @@ def get_spark(
     Local mode for tests/bench; the same conf block is what we would ship
     to a 1000-executor cluster (AQE, skew-join handling, UTC session TZ,
     Arrow for the pandas_udf slow path).
+
+    Python workers start through ``worker_daemon``: PySpark's worker
+    re-reads the directory of every zip it imports from at the start of
+    every task, pyspark.zip included, and the daemon skips the re-read
+    while a zip is unchanged. Measured warm on 4 vCPUs (``local[4]``):
+    44 no-op Python RDD tasks take 3.5-3.9 s without it and 0.9-1.0 s
+    with it, against 0.2-0.3 s for 44 JVM-only tasks, so the re-read
+    costs about 0.2 s per Python task. The package's parent directory
+    is appended to the workers' ``PYTHONPATH`` (after any value given in
+    ``extra_conf``), so the daemon starts when the driver runs outside
+    the repository.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -62,8 +78,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config(
+            "spark.python.daemon.module",
+            "tiny_mapreduce_rpc_server_spark.worker_daemon",
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    worker_path = (extra.pop(_WORKER_PATH, None), _PACKAGE_PARENT)
+    builder = builder.config(_WORKER_PATH, os.pathsep.join(p for p in worker_path if p))
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

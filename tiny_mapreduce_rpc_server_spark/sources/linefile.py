@@ -16,6 +16,12 @@ the reference's one-mapper-thread-per-split), ``read()`` is the record
 reader. Emits ``(offset, line)`` — the reference reader's key/value pair
 (``LineRecordReader.h`` yields (int offset, string line)).
 
+The planner and the reader also feed ``MapReduceEngine.map_reduce``
+directly: it parallelizes the planned splits, one task per split, and
+runs ``read()`` in the same Python worker as the user's map callback, so
+the job's records never cross into the JVM and the straddle rule keeps
+one implementation.
+
 Scale: split planning is O(files) on the driver; reads are independent
 per split (no shuffle, no cross-task coordination) — identical cost
 model to the built-in text scan. This source exists for parity and for
