@@ -6,6 +6,8 @@ exact computation, and value-level cross-checks — not just ``count() >= 0``.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -213,6 +215,7 @@ def test_simhash_kernel_matches_fold(spark):
     negative hash values exercising arithmetic-shift bit extraction, a
     null element: counted in n, no votes)."""
     import tiny_mapreduce_rpc_server_spark.operators.dedup as D
+    from tests.fold_references import simhash_fold
 
     sf = SF_SMOKE
     for bits in (D.SIMHASH_BITS, D.SIMHASH_WIDE_BITS):
@@ -227,7 +230,7 @@ def test_simhash_kernel_matches_fold(spark):
         hashed = docs.select("doc_id", th.alias("th"))
         ref = {
             (r.doc_id, r.simhash)
-            for r in D._simhash_fold(hashed, bits).collect()
+            for r in simhash_fold(hashed, bits).collect()
         }
         assert got == ref and len(got) > 0
 
@@ -244,9 +247,140 @@ def test_simhash_kernel_matches_fold(spark):
     )
     for bits in (31, 63):
         got = sorted(D._simhash_kernel(edge, bits).collect())
-        ref = sorted(D._simhash_fold(edge, bits).collect())
+        ref = sorted(simhash_fold(edge, bits).collect())
         assert got == ref
         assert got[0]["simhash"] == 0 and got[1]["simhash"] == 0
+
+
+def test_minhash_kernel_matches_fold(spark):
+    """The Arrow minhash kernel must equal the ``P.h1`` + minima fold it
+    replaced, all 16 minima, on the real corpus and on edge rows: a null
+    shingle array (16 nulls), an empty array (all M2), a null shingle
+    (skipped), an empty-string shingle (hashes to 0), non-ASCII shingles
+    hashed per code point (an emoji is ONE element, code 128512), a
+    batch mixing ASCII and non-ASCII rows, and one very large document.
+    The two non-ASCII h1 values are pinned on both sides."""
+    import tiny_mapreduce_rpc_server_spark.operators.dedup as D
+    from tests.fold_references import minhash_fold, py_h1
+    from tiny_mapreduce_rpc_server_spark.functions import portable as P
+
+    assert py_h1("é日") == 321375 and py_h1("a😀b") == 981541
+    pinned = spark.createDataFrame([("é日",), ("a😀b",)], "s string")
+    assert [r.h for r in pinned.select(P.h1(F.col("s")).alias("h")).collect()] == [
+        321375,
+        981541,
+    ]
+
+    def check(ds):
+        got = sorted(tuple(r) for r in D._minhash_kernel(ds).collect())
+        ref = sorted(tuple(r) for r in minhash_fold(ds).collect())
+        assert got == ref and len(got) == ds.count()
+        return {r[0]: r[1:] for r in got}
+
+    corpus = D._doc_shingles(spark, SF_SMOKE)
+    assert len(check(corpus)) > 0
+
+    big = [f"w{i} w{i + 1} w{i + 2}" for i in range(200_000)]
+    edge = spark.createDataFrame(
+        [
+            (1, None),
+            (2, []),
+            (3, ["a b c", None, "d e f"]),
+            (4, [""]),
+            (5, ["é日"]),
+            (6, ["a😀b"]),
+            (7, ["plain ascii", "é日", "a😀b", "", None]),
+            (8, ["x y z"]),
+            (9, big),
+        ],
+        "doc_id long, shingles array<string>",
+    ).coalesce(1)
+    sig = check(edge)
+    assert sig[1] == (None,) * D.N_HASHES
+    assert sig[2] == (P.M2,) * D.N_HASHES
+    assert sig[3] == check(spark.createDataFrame(
+        [(3, ["a b c", "d e f"])], "doc_id long, shingles array<string>"
+    ))[3]
+    assert sig[4] == tuple(P.perm_coeffs(i)[1] for i in range(D.N_HASHES))
+    for doc, s in ((5, "é日"), (6, "a😀b")):
+        h = py_h1(s)
+        assert sig[doc] == tuple(
+            (a * h + b) % P.M2 for a, b in map(P.perm_coeffs, range(D.N_HASHES))
+        )
+    # an ASCII-only batch takes the byte path: same rows as the mixed one
+    ascii_only = edge.filter(F.col("doc_id").isin(1, 2, 3, 4, 8, 9))
+    assert check(ascii_only) == {k: v for k, v in sig.items() if k not in (5, 6, 7)}
+
+
+def test_codegen_cache_keeps_a_query_across_others(tmp_path):
+    """``get_spark`` sizes Spark's generated-code cache for the engine's
+    working set: run query A, then other registry queries compiling
+    more than Spark's default 100 cache entries, then A again — the
+    re-run compiles nothing. Runs in a fresh driver, because the cache
+    size is read once per JVM and the suite's shared session has already
+    compiled most queries."""
+    import json
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(
+        f"""
+        import json, sys
+        sys.path.insert(0, {repo!r})
+        from tiny_mapreduce_rpc_server_spark import get_spark, release_caches
+        from tiny_mapreduce_rpc_server_spark.registry import all_queries
+        spark = get_spark("codegen_cache")
+        metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        specs = all_queries()
+
+        def run(name):
+            specs[name].fn(spark, {SF_SMOKE!r}).toArrow()
+            release_caches()
+            return metric.METRIC_COMPILATION_TIME().getCount()
+
+        a = "wordcount"
+        others = ["total_order_sort", "q9_product_profit",
+                  "q21_suppliers_kept_waiting", "dedup_ngram_jaccard",
+                  "ann_ivf", "text_tf_idf", "dedup_minhash_lsh"]
+        start = run(a)
+        for n in others:
+            between = run(n)
+        print("RESULT", json.dumps([between - start, run(a) - between]))
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="2g")
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert lines, out.stderr[-3000:]
+    compiled_between, compiled_rerun = json.loads(lines[0].split(" ", 1)[1])
+    assert compiled_between > 100
+    assert compiled_rerun == 0
+
+
+def test_dedup_semantic_scaled_raises_no_user_warning(spark):
+    """The per-cluster kernel handed to ``applyInPandas`` has no type
+    hints, so PySpark uses the grouped-map eval type without warning
+    that it cannot infer one from partial hints."""
+    import warnings
+
+    from tiny_mapreduce_rpc_server_spark.operators.ml import q_dedup_semantic_scaled
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        q_dedup_semantic_scaled(spark, SF_SMOKE).toArrow()
+    assert not [w for w in caught if issubclass(w.category, UserWarning)], [
+        str(w.message) for w in caught
+    ]
 
 
 def test_cc_local_rejects_null_endpoints(spark):
@@ -538,7 +672,7 @@ def test_dedup_incremental_sides_and_threshold(spark):
     """Every reported pair crosses the batch boundary in the right
     direction (new doc in the incoming bucket, old doc in the existing
     bucket), meets the verify threshold, and doc_new appears once."""
-    from tiny_mapreduce_rpc_server_spark.functions import portable as P
+    from tests.fold_references import py_h1
     from tiny_mapreduce_rpc_server_spark.operators.dedup import (
         INCR_INCOMING_FROM,
         q_dedup_incremental,
@@ -547,7 +681,7 @@ def test_dedup_incremental_sides_and_threshold(spark):
     rows = q_dedup_incremental(spark, SF_ORACLE).collect()
     assert rows, "sf0.01 has planted near-dups; incremental must find some"
     seen = set()
-    bucket = lambda i: P.py_h1(str(i)) % 100  # noqa: E731
+    bucket = lambda i: py_h1(str(i)) % 100  # noqa: E731
     for r in rows:
         assert r["doc_new"] not in seen
         seen.add(r["doc_new"])

@@ -17,9 +17,13 @@ Spark evaluates these via higher-order array functions (JVM-side, no UDF);
 the DuckDB SQL strings below are generated from the SAME Python constants,
 so the two can't drift apart.
 
-Scale note: char-level array ops per token are fine JVM-side (whole-stage
-codegen); at 100 TB the identical formulas would be evaluated the same way —
-this is a portability layer, not a slow path.
+Scale note: the higher-order array functions (``transform``,
+``aggregate``) are CodegenFallback: Spark interprets them element by
+element, outside whole-stage codegen. Where a per-token hash is a hot
+path, a vectorized Arrow kernel computes the same integers instead
+(``dedup._minhash_kernel`` for h1 and the minhash minima,
+``dedup._simhash_kernel`` for the simhash votes), pinned bit for bit
+against these expressions.
 """
 
 from __future__ import annotations
@@ -72,22 +76,8 @@ def h1(col: Column) -> Column:
     return char_hash(col) % M2
 
 
-def py_h1(s: str) -> int:
-    """Python twin of h1() for tests/driver-side checks. F.ascii takes
-    the code of the first character, so ord() matches it for the ASCII
-    inputs these hashes are applied to."""
-    return (
-        sum(ord(c) * (((i + 1) * C1 + C2) % M1) for i, c in enumerate(s)) % M2
-    )
-
-
 def h2(col: Column) -> Column:
     return (h1(col) * C1 + 911) % M31
-
-
-def perm(i: int, x: Column) -> Column:
-    a, b = perm_coeffs(i)
-    return (F.lit(a) * x + b) % M2
 
 
 def perm_coeffs(i: int) -> tuple[int, int]:

@@ -5,8 +5,11 @@ No reference counterpart (the reference has no distinct/dedup of any kind
 — SURVEY §2.11); these are the corpus-dedup operators of an LLM data
 pipeline, built Spark-first:
 
-- signatures (minhash vectors, simhash, shingle sets) are computed as
-  per-row ARRAY expressions — whole-stage codegen, zero shuffle;
+- signatures are computed per row with zero shuffle. Shingle sets are
+  array expressions; the minhash and simhash folds run in vectorized
+  Arrow kernels (``_minhash_kernel``, ``_simhash_kernel``), because as
+  higher-order array functions they are CodegenFallback, interpreted
+  element by element;
 - candidate generation shuffles only (band_key) or (shingle) pairs, never
   the full cross product;
 - verification joins candidates back to per-doc token arrays and checks
@@ -464,41 +467,95 @@ WHERE CAST(i AS DOUBLE)/(sa.n + sb.n - i) >= {JACCARD_VERIFY}
 # ---------------------------------------------------------------------------
 
 
-def _minhash_sig_col(th) -> F.Column:
-    """All N_HASHES minhash minima in ONE fold over the token-hash array:
-    an N_HASHES-wide accumulator updated per element (``acc[i] =
-    least(acc[i], perm_i(x))``) instead of one ``transform`` +
-    ``array_min`` pass PER PERMUTATION — the same single-pass rewrite as
-    ``_simhash_ones_col`` (r11 opt #1), killing 16 array traversals and
-    16 intermediate array allocations per row. Init is M2 (every perm
-    value is ``% M2`` < M2, so it acts as +inf); a doc with zero shingles
-    folds to all-M2 where ``array_min(transform(empty))`` was NULL — its
-    band keys then self-bucket, but such docs have jaccard NULL against
-    anything, so the verified output is unchanged (the oracle gate pins
-    this). ``th`` must be a column reference (CollapseProject)."""
-    return F.aggregate(
-        th,
-        F.array_repeat(F.lit(P.M2).cast("long"), N_HASHES),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.array(*[P.perm(i, x) for i in range(N_HASHES)]),
-            lambda m, p: F.least(m, p),
-        ),
-    )
+def _minhash_kernel(ds: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh15): the minhash signature of every document's
+    shingle array, computed by a vectorized Arrow kernel.
+
+    The signature is ``mh_i = min over shingles s of perm_i(h1(s))``.
+    As Spark expressions this is a ``transform``/``aggregate`` per
+    shingle for ``h1`` and an ``aggregate``/``zip_with`` fold for the 16
+    minima, all CodegenFallback: Spark interprets them element by
+    element. Here each Arrow batch is hashed in a few numpy passes over
+    its flat string buffer, and only (doc_id, mh0..mh15) crosses back.
+
+    Exactness against the expression fold (pinned by
+    ``tests/test_invariants.py::test_minhash_kernel_matches_fold``):
+
+    - ``h1`` is the char-weighted sum of ``F.split(s, "")`` + ``F.ascii``,
+      which is per code point. A batch whose bytes are all ASCII is
+      summed byte by byte; any other batch is decoded to code points
+      first (UTF-32, so a character outside the BMP is one element, as
+      in Spark, not two UTF-16 units). An empty string hashes to 0.
+    - Sums and remainders use int64 with truncating ``fmod``, the JVM's
+      ``long`` arithmetic.
+    - A null shingle array gives 16 nulls; an empty one gives all M2
+      (the fold's initial value); a null shingle is skipped, as
+      ``least`` skips nulls.
+    """
+    # plain ints only: the kernel must unpickle without this package
+    c1, c2, m1, m2 = P.C1, P.C2, P.M1, P.M2
+    coeffs = [P.perm_coeffs(i) for i in range(N_HASHES)]
+    names = ["doc_id"] + [f"mh{i}" for i in range(N_HASHES)]
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def h1(vals):
+            # h1 of every string of an Arrow string array (nulls: any value)
+            wide = pa.types.is_large_string(vals.type)
+            offs = np.frombuffer(vals.buffers()[1], np.int64 if wide else np.int32)
+            offs = offs[vals.offset : vals.offset + len(vals) + 1].astype(np.int64)
+            buf = vals.buffers()[2]
+            if buf is None or offs[-1] == offs[0]:
+                return np.zeros(len(vals), np.int64)
+            data = np.frombuffer(buf, np.uint8)[offs[0] : offs[-1]]
+            offs = offs - offs[0]
+            if data.max() >= 128:
+                starts = np.concatenate(([0], np.cumsum((data & 0xC0) != 0x80)))
+                offs = starts[offs]
+                data = np.frombuffer(
+                    data.tobytes().decode("utf-8").encode("utf-32-le"), "<u4"
+                )
+            lens = np.diff(offs)
+            pos = np.arange(len(data)) - np.repeat(offs[:-1], lens)
+            w = (np.arange(1, lens.max() + 1, dtype=np.int64) * c1 + c2) % m1
+            cum = np.concatenate(([0], np.cumsum(data.astype(np.int64) * w[pos])))
+            return np.fmod(cum[offs[1:]] - cum[offs[:-1]], m2)
+
+        for batch in batches:
+            sh = batch.column("shingles")
+            lens = pc.list_value_length(sh).fill_null(0).to_numpy().astype(np.int64)
+            vals = sh.flatten()
+            h = h1(vals)
+            skip = vals.is_null().to_numpy(zero_copy_only=False)
+            nz = np.flatnonzero(lens)
+            seg = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
+            null_row = sh.is_null().to_numpy(zero_copy_only=False)
+            cols = [batch.column("doc_id")]
+            for a, b in coeffs:
+                p = np.where(skip, m2, np.fmod(a * h + b, m2))
+                mh = np.full(len(lens), m2, np.int64)
+                if nz.size:
+                    mh[nz] = np.minimum.reduceat(p, seg)
+                cols.append(pa.array(mh, mask=null_row))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    t = ds.schema["doc_id"].dataType.simpleString()
+    schema = ", ".join([f"doc_id {t}"] + [f"{n} long" for n in names[1:]])
+    return ds.select("doc_id", "shingles").mapInArrow(kernel, schema)
 
 
 def _band_keys(ds: DataFrame) -> DataFrame:
-    """(doc_id, bk) LSH band-bucket keys of a shingled corpus: per-row
-    minhash signature (array math, no shuffle), then the 4 band keys
-    hashed to ONE bigint (xxhash64(band, key)) so the band shuffle
-    carries an 8-byte key, never the shingle arrays."""
-    th = F.transform(F.col("shingles"), lambda s: P.h1(s))
-    sigs = ds.select("doc_id", th.alias("th"))
-    staged = sigs.select("doc_id", _minhash_sig_col(F.col("th")).alias("mhs"))
-    mh = [
-        F.element_at(F.col("mhs"), i + 1).alias(f"mh{i}") for i in range(N_HASHES)
-    ]
-    sigs = staged.select("doc_id", *mh)
+    """(doc_id, bk) LSH band-bucket keys of a shingled corpus: the
+    per-row minhash signature from the Arrow kernel (``_minhash_kernel``,
+    no shuffle), then the 4 band keys hashed to ONE bigint
+    (xxhash64(band, key)) so the band shuffle carries an 8-byte key,
+    never the shingle arrays. A doc with no shingles gets all-M2 minima
+    and self-buckets with other such docs, but its jaccard is NULL
+    against anything, so the verified output is unchanged."""
+    sigs = _minhash_kernel(ds)
     bands = F.array(
         *[
             F.struct(
@@ -624,9 +681,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ds = _doc_shingles(spark, sf_dir).cache()
     incoming_pred = (P.h1(F.col("doc_id").cast("string")) % 100) >= INCR_INCOMING_FROM
-    bk = _band_keys(ds)
-    inc_keys = bk.filter(incoming_pred)
-    ex_keys = bk.filter(~incoming_pred)
+    # split before the signature kernel: a filter does not move below
+    # mapInArrow, so filtering the band keys would sign every doc twice
+    inc_keys = _band_keys(ds.filter(incoming_pred))
+    ex_keys = _band_keys(ds.filter(~incoming_pred))
     cand = (
         # the incoming batch is small BY CONTRACT, but gate the hint on
         # an actual count anyway — this demo's batch is a corpus
@@ -767,66 +825,6 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _simhash_ones_col(th, bits: int) -> F.Column:
-    """Per-bit ONE-counts of a token-hash array in a SINGLE pass: a
-    ``bits``-wide counter array folded once over ``th`` (``acc[j] +=
-    bit_j(x)``). The r11 optimization-round rewrite of the per-bit fold
-    cascade: the old form ran one ``F.aggregate`` PER BIT — 63 passes
-    over every document's token-hash array — where one pass carrying an
-    array accumulator does the same counting (interleaved A/B at sf0.1:
-    2.39 s -> 1.44 s median for the 63-bit signature build, identical
-    output). ``th`` must be a column reference (it is referenced by the
-    fold and by ``size``; CollapseProject keeps a twice-referenced
-    non-cheap expression in its own projection)."""
-    return F.aggregate(
-        th,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, x: F.zip_with(
-            acc,
-            F.array(*[x.bitwiseAND(F.lit(1 << j)) for j in range(bits)]),
-            lambda a, b: a + F.when(b != F.lit(0), 1).otherwise(0),
-        ),
-    )
-
-
-def _simhash_from_ones(ones, n, bits: int) -> F.Column:
-    """Fingerprint from per-bit one-counts: bit j set iff the (+-1) vote
-    sum is positive — ``sum_votes_j = 2*ones[j] - n > 0  <=>  2*ones[j] >
-    n``, exact integer math, so the result is bit-identical to the
-    per-bit fold form (and to the SQL oracle's ``list_sum`` votes).
-    ``ones`` must be a column reference: it is read ``bits`` times, which
-    is exactly what keeps CollapseProject from inlining (and recomputing)
-    the fold. ``bits`` is capped at 63 so the fingerprint stays in the
-    non-negative long range (the sign bit would break shift/compare
-    symmetry between Spark and the SQL oracle)."""
-    assert 0 < bits <= 63, bits
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        out = out + F.when(
-            2 * F.element_at(ones, j + 1) > n, F.lit(1 << j)
-        ).otherwise(F.lit(0))
-    return out
-
-
-def _simhash_fold(hashed: DataFrame, bits: int) -> DataFrame:
-    """(doc_id, simhash) from the token-hash table via the one-pass JVM
-    fold (token-hash array in its own projection, the one-count array in
-    a second — the CollapseProject argument of _doc_shingles — and the
-    threshold/assemble step on top). This was ``_doc_simhash``'s build
-    through r11; it is kept as the exactness REFERENCE for the Arrow
-    kernel that replaced it (r12 opt: the two must stay bit-identical,
-    pinned by tests/test_invariants.py::test_simhash_kernel_matches_fold)."""
-    staged = hashed.select(
-        "doc_id",
-        F.size("th").cast("long").alias("n_th"),
-        _simhash_ones_col(F.col("th"), bits).alias("ones"),
-    )
-    return staged.select(
-        "doc_id",
-        _simhash_from_ones(F.col("ones"), F.col("n_th"), bits).alias("simhash"),
-    )
-
-
 def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
     """(doc_id, simhash) from the token-hash table via a vectorized
     Arrow kernel (r12 optimization round; guide §4.1/§4.2).
@@ -844,10 +842,11 @@ def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
     graph._cc_local. Only (doc_id, th) crosses the boundary.
 
     Exactness: ones[j] = count of tokens with bit j set (integer), bit j
-    of the fingerprint set iff 2*ones[j] > n — identical to the fold and
-    to the SQL oracle's list_sum votes. numpy's ``>>`` on int64 is the
-    arithmetic shift, so bit extraction matches the JVM for negative
-    hashes too. Null/empty token arrays yield fingerprint 0 exactly as
+    of the fingerprint set iff 2*ones[j] > n — identical to the fold
+    (``tests/fold_references.py::simhash_fold``) and to the SQL oracle's
+    list_sum votes. numpy's ``>>`` on int64 is the arithmetic shift, so
+    bit extraction matches the JVM for negative hashes too. Null/empty
+    token arrays yield fingerprint 0 exactly as
     the fold's null-condition ``when`` does, and a null element counts
     in n with no votes, as in the fold. Arrow hands a batch holding a
     null element to pandas as float64 (NaN) or object (None) arrays;
@@ -887,10 +886,9 @@ def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
 def _doc_simhash(
     spark: SparkSession, sf_dir: str, bits: int = SIMHASH_BITS
 ) -> DataFrame:
-    """(doc_id, simhash): tokenize + portable h2 in native codegen'd
-    expressions, then the per-bit vote count in the vectorized Arrow
-    kernel (see ``_simhash_kernel``; ``_simhash_fold`` is the retained
-    bit-identical reference)."""
+    """(doc_id, simhash): tokenize + portable h2 as Spark expressions,
+    then the per-bit vote count in the vectorized Arrow kernel (see
+    ``_simhash_kernel``)."""
     docs = load_table(spark, sf_dir, "documents")
     th = F.transform(F.array_distinct(_toks(F.col("text"))), lambda t: P.h2(t))
     hashed = spread(docs).select("doc_id", th.alias("th"))

@@ -613,7 +613,9 @@ def _cluster_rollup(margin: float, threshold: float):
 
     certain = threshold + 1e-9
 
-    def _rollup(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: applyInPandas infers its eval type from them, and
+    # a partly annotated function makes it warn on every call
+    def _rollup(key, pdf):
         n = len(pdf)
 
         def out(nd: int) -> pd.DataFrame:

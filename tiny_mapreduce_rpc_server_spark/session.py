@@ -25,6 +25,11 @@ DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
+# generated-code cache size (``spark.sql.codegen.cache.maxEntries``,
+# Spark's default 100): 558 distinct classes in one pass of the 36
+# bench=True headliners at sf0.1, rounded up (see get_spark)
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "tiny_mapreduce_rpc_server_spark",
@@ -47,6 +52,16 @@ def get_spark(
     is appended to the workers' ``PYTHONPATH`` (after any value given in
     ``extra_conf``), so the daemon starts when the driver runs outside
     the repository.
+
+    The generated-code cache holds ``CODEGEN_CACHE_ENTRIES`` classes
+    instead of Spark's 100. One pass of the 36 bench=True headliners
+    compiles 558 distinct whole-stage and expression classes, so at 100
+    entries each pass evicts what the next one needs: every warm pass of
+    the ten ``perfbench`` queries recompiled about 210 of the 214
+    classes its first pass compiled. At 1000 entries a warm pass
+    compiles none. The setting is static: it takes effect only in the
+    session that starts the JVM, and a vanilla session keeps the
+    default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -78,6 +93,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(
             "spark.python.daemon.module",
             "tiny_mapreduce_rpc_server_spark.worker_daemon",
