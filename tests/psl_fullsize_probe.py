@@ -22,7 +22,7 @@ for BOTH implementations at embedded vs full size:
 Equality at full size is pinned by
 tests/test_invariants.py::test_registrable_domain_full_size_psl (all
 three implementations host-by-host, embedded-subset hosts AND
-synthetic-rule hosts). Usage: python tools/psl_fullsize_probe.py
+synthetic-rule hosts). Usage: python tests/psl_fullsize_probe.py
 """
 
 from __future__ import annotations

@@ -1162,11 +1162,7 @@ def test_ann_pq_rerank_refine_contract(spark):
         q_ann_eval_recall_clustered,
         q_ann_pq,
         q_ann_pq_rerank,
-        _pq_adc_topk,
-        _pq_cb_one,
-        _pq_codebook_entries,
-        _pq_codes,
-        _pq_luts,
+        _pq_topk,
     )
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
@@ -1176,12 +1172,8 @@ def test_ann_pq_rerank_refine_contract(spark):
     emb = load_table(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cb_one = _pq_cb_one(_pq_codebook_entries(emb))
     pool = {
-        (r.query_id, r.neighbor_id)
-        for r in _pq_adc_topk(
-            _pq_codes(emb, cb_one), _pq_luts(emb, cb_one), k=RERANK_R
-        ).collect()
+        (r.query_id, r.neighbor_id) for r in _pq_topk(emb, RERANK_R).collect()
     }
     by_q = {}
     for r in out:
@@ -1222,7 +1214,7 @@ def test_ann_pq_rerank_refine_contract(spark):
 def test_registrable_domain_full_size_psl(spark):
     """Round-9 verdict #3: the PSL machinery at FULL list size. A ~9k-rule
     synthetic list in the official file format (generated + measured by
-    tools/psl_fullsize_probe.py) goes through load_psl_file(), and all
+    tests/psl_fullsize_probe.py) goes through load_psl_file(), and all
     THREE implementations — column-expression cascade, broadcast
     rule-table join (the hot path), DuckDB SQL generator — must agree
     host-by-host on hosts that exercise the synthetic rules (1-label
@@ -1234,7 +1226,7 @@ def test_registrable_domain_full_size_psl(spark):
     from pyspark.sql import functions as F
 
     from tiny_mapreduce_rpc_server_spark.functions import psl
-    from tools.psl_fullsize_probe import synthesize_psl_text, write_synthetic_psl
+    from tests.psl_fullsize_probe import synthesize_psl_text, write_synthetic_psl
 
     path = write_synthetic_psl("/tmp/psl_synthetic_full_test.dat")
     parsed = psl.load_psl_file(path)

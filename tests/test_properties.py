@@ -4,7 +4,9 @@ These need no SparkSession, so hypothesis can hammer hundreds of random
 cases per second: the BMP codec behind multimodal_decode, and the
 linefile reader's split planner + straddle rule — the reference's core
 input contract (LineRecordReader.h:14-119), which must lose and
-duplicate nothing for ANY content and ANY split size.
+duplicate nothing for ANY content and ANY split size. The SemDeDup
+kernel tests sit here too; ``test_exact_nearest_edge_rows`` is the one
+that needs the session, because its kernel runs inside mapInPandas.
 """
 
 from __future__ import annotations
@@ -173,6 +175,80 @@ def test_cluster_rollup_uncertainty_band_exact_fold():
     assert list(out["n_members"]) == [3]
     assert list(out["n_dropped"]) == [expected], out
     assert list(out["n_kept"]) == [3 - expected]
+
+
+def test_exact_nearest_edge_rows(spark):
+    """``_exact_nearest`` is the one nearest-centroid kernel of the
+    SemDeDup queries: top-n by (exact sequential-fold distance, cluster
+    id), min(n, K) rows per vector, nothing without centroids — and a
+    null or non-finite vector or centroid raises, naming its id, instead
+    of taking a cluster (or silently vanishing)."""
+    import math
+
+    import pandas as pd
+    import pytest
+
+    from tests.conftest import SF_ORACLE
+    from tiny_mapreduce_rpc_server_spark.operators.ml import (
+        _embeddings,
+        _exact_nearest,
+        _seeds,
+    )
+
+    def nearest(vecs, cents, n):
+        emb = spark.createDataFrame(vecs, "vec_id long, v array<double>")
+        cdf = pd.DataFrame(
+            {"cluster": [c for c, _ in cents], "cv": [cv for _, cv in cents]}
+        )
+        return _exact_nearest(spark, emb, cdf, n).collect()
+
+    def pairs(rows):
+        return sorted((r.vec_id, r.cluster) for r in rows)
+
+    vecs = [(1, [1.0, 0.0]), (2, [0.0, 1.0])]
+    # centroids 3 and 5 are identical (exact tie); given out of order
+    cents = [(5, [1.0, 0.0]), (9, [0.0, 2.0]), (3, [1.0, 0.0])]
+    one = nearest(vecs, cents, 1)
+    assert pairs(one) == [(1, 3), (2, 9)]
+    assert {r.vec_id: list(r.v) for r in one} == dict(vecs)
+    assert pairs(nearest(vecs, cents, 2)) == [(1, 3), (1, 5), (2, 3), (2, 9)]
+    # n > K: every centroid, once per vector
+    assert pairs(nearest(vecs, cents, 5)) == [
+        (v, c) for v in (1, 2) for c in (3, 5, 9)
+    ]
+    assert nearest(vecs, [], 1) == []
+
+    with pytest.raises(Exception, match="vec_id 7 has a non-finite vector"):
+        nearest(vecs + [(7, [math.nan, 0.0])], cents, 1)
+    with pytest.raises(Exception, match="vec_id 8 has a null vector"):
+        nearest(vecs + [(8, None)], cents, 2)
+    with pytest.raises(ValueError, match="cluster 4 has a non-finite vector"):
+        nearest(vecs, cents + [(4, [0.0, math.inf])], 1)
+    with pytest.raises(ValueError, match="cluster 4 has a non-finite vector"):
+        nearest(vecs, cents + [(4, [math.nan, 0.0])], 1)
+
+    # the real corpus: n=2 is the two nearest seeds of a brute-force
+    # sequential fold over every seed, and n=1 the nearer of those two
+    emb = _embeddings(spark, SF_ORACLE)
+    seeds = _seeds(emb).toPandas()
+    ref = {}
+    for r in emb.collect():
+        scored = []
+        for cid, cv in zip(seeds["cluster"], seeds["cv"]):
+            s = 0.0
+            for x, y in zip(r.v, cv):
+                s += (x - y) * (x - y)
+            scored.append((s, int(cid)))
+        ref[r.vec_id] = [cid for _, cid in sorted(scored)[:2]]
+    one = {r.vec_id: r.cluster for r in _exact_nearest(spark, emb, seeds).collect()}
+    two = {}
+    for r in _exact_nearest(spark, emb, seeds, 2).collect():
+        two.setdefault(r.vec_id, []).append(r.cluster)
+    assert len(ref) > 100 and len(seeds) >= 2
+    assert {v: sorted(c) for v, c in two.items()} == {
+        v: sorted(c) for v, c in ref.items()
+    }
+    assert one == {v: c[0] for v, c in ref.items()}
 
 
 @given(

@@ -18,7 +18,7 @@ has no network access. A production deployment downloads the full file
 and swaps it in via ``load_psl_file(path)`` — the parser, the
 expression builder, the join form, and the SQL generator all take the
 parsed form, so nothing else changes. MEASURED at full size
-(tools/psl_fullsize_probe.py, 9,291 synthetic rules in the official
+(tests/psl_fullsize_probe.py, 9,291 synthetic rules in the official
 format; equality pinned by
 tests/test_invariants.py::test_registrable_domain_full_size_psl):
 per-row cost stays O(1) in both forms (execution flat), but the

@@ -1308,21 +1308,13 @@ def _dedup_embedding_bucketed(emb: DataFrame) -> DataFrame:
     plus Spark's hash partitioning of it. Bucket count (2**N_PLANES)
     controls the candidate-volume/recall trade: near-dups split by a
     hyperplane are missed, which is the documented LSH contract."""
-    from tiny_mapreduce_rpc_server_spark.operators.similarity import (
-        N_PLANES,
-        _plane,
-    )
+    from tiny_mapreduce_rpc_server_spark.operators.similarity import _lsh_bucket
 
-    bucket = F.lit(0)
-    for p in range(N_PLANES):
-        bucket = bucket + F.when(
-            dot(F.col("embedding"), F.lit(_plane(p))) > 0, F.lit(1 << p)
-        ).otherwise(0)
     # zero-norm vectors: cosine undefined — oracle drops the NULL pair,
     # ANSI Spark would throw in the in-bucket cosine; exclude the rows
     # (they can never be part of a kept pair in either engine)
     eb = emb.filter(dot(F.col("embedding"), F.col("embedding")) > 0).withColumn(
-        "bucket", bucket
+        "bucket", _lsh_bucket(F.col("embedding"))
     )
     a = eb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"), "bucket")
     b = eb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"), F.col("bucket").alias("bucket_b"))

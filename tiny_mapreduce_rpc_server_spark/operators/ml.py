@@ -30,13 +30,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tiny_mapreduce_rpc_server_spark.functions import davg
+from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
 K = 8
 INIT_IDS = [7 + 31 * i for i in range(K)]  # fixed corpus rows as seeds
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v double[]) over the spread embeddings table — the input
+    of every k-means, SemDeDup and PQ/IVF-PQ query."""
+    return spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
 
 
 def _sq_dist(v, cv):
@@ -74,9 +82,7 @@ def _update(assigned: DataFrame) -> DataFrame:
 
 
 def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     cent0 = emb.filter(F.col("vec_id").isin(INIT_IDS)).select(
         F.col("vec_id").alias("cluster"), F.col("v").alias("cv")
     )
@@ -579,7 +585,7 @@ def _cluster_rollup(margin: float, threshold: float):
     only K accounting rows ever leave the kernel. The joins, the N-row
     cache, and the candidate shuffle all disappear.
 
-    Exactness contract (same as `_exact_voronoi`): the BLAS cosine
+    Exactness contract (same as `_exact_nearest`): the BLAS cosine
     differs from the oracle's sequential-fold cosine by < 1e-9 (float64
     dot error ~d*eps*|a||b| after normalization => cosine error
     <= ~3*d*eps ~= 4e-14 at d=64; the 1e-9 band holds to d ~ 1e6 — widen
@@ -717,9 +723,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT] training-pipeline
     operator).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     cent0 = emb.filter(F.col("vec_id").isin(INIT_IDS)).select(
         F.col("vec_id").alias("cluster"), F.col("v").alias("cv")
     )
@@ -806,68 +810,96 @@ SEED_STRIDE = 64
 SEED_RESIDUE = 7
 
 
-def _exact_voronoi(spark: SparkSession, emb: DataFrame, cents) -> DataFrame:
-    """Assign every (vec_id, v) row to its nearest centroid — exact,
-    oracle-reproducible, at BLAS speed: a mapInPandas scan computes the
-    (batch x K) distance matrix via the |x|^2+|c|^2-2x.c expansion, then
-    re-scores only the within-tolerance argmin candidates with the
-    sequential fold the oracle uses (ties to lowest cluster id).
-    ``cents`` is a pandas DataFrame (cluster, cv) sorted by cluster id —
-    the broadcast index. Shared by ``dedup_semantic_scaled`` (self-index)
-    and ``dedup_semantic_incremental`` (existing-corpus index probed by
-    both sides)."""
+def _seeds(emb: DataFrame, stride: int = SEED_STRIDE) -> DataFrame:
+    """(cluster, cv): the seed centroids of a (vec_id, v) frame, the rows
+    with ``vec_id % stride == SEED_RESIDUE``."""
+    return emb.filter(F.col("vec_id") % stride == SEED_RESIDUE).select(
+        F.col("vec_id").alias("cluster"), F.col("v").alias("cv")
+    )
+
+
+def _exact_nearest(
+    spark: SparkSession, emb: DataFrame, cents, n: int = 1
+) -> DataFrame:
+    """(vec_id, cluster, v): the ``n`` nearest centroids of every
+    (vec_id, v) row — exact, oracle-reproducible, at BLAS speed. A
+    mapInPandas scan computes the (batch x K) distance matrix via the
+    |x|^2+|c|^2-2x.c expansion, then re-scores only the candidates within
+    tolerance of the n-th smallest BLAS distance with the sequential fold
+    the oracle uses, ordered by (distance, cluster id) — so n=1 is the
+    argmin with ties to the lowest id. Emits min(n, K) rows per vector.
+    ``cents`` is a pandas DataFrame (cluster, cv) — the broadcast index.
+
+    A null or non-finite vector or centroid has no defined distance, so
+    it raises ValueError naming its vec_id or cluster: centroids once on
+    the driver, vectors once per batch.
+
+    Shared by ``dedup_semantic_scaled`` (self-index), both incremental
+    queries (existing-corpus index probed by both sides) and
+    ``dedup_semantic_twolevel`` (fine seeds to their coarse cell at n=1,
+    vectors to their NPROBE nearest cells)."""
     import numpy as np
     import pandas as pd
 
-    c_ids = cents["cluster"].to_numpy(dtype="int64")
-    c_mat = (
-        np.array([np.asarray(x, dtype="float64") for x in cents["cv"]])
-        if len(c_ids)
-        else np.empty((0, 1), dtype="float64")
-    )
-    bc = spark.sparkContext.broadcast((c_ids, c_mat))
+    def _matrix(keys, vecs, what: str):
+        rows = []
+        for key, x in zip(keys, vecs):
+            if x is None:
+                raise ValueError(f"_exact_nearest: {what} {key} has a null vector")
+            rows.append(np.asarray(x, dtype="float64"))
+        if not rows:
+            return np.empty((0, 1), dtype="float64")
+        mat = np.array(rows)
+        bad = ~np.isfinite(mat).all(axis=1)
+        if bad.any():
+            raise ValueError(
+                f"_exact_nearest: {what} {keys[bad.argmax()]} has a non-finite vector"
+            )
+        return mat
 
-    def _assign_exact(batches):
+    cents = cents.sort_values("cluster")
+    c_ids = cents["cluster"].to_numpy(dtype="int64")
+    bc = spark.sparkContext.broadcast((c_ids, _matrix(c_ids, cents["cv"], "cluster")))
+
+    def _nearest(batches):
         ids_c, cm = bc.value
         c_norm2 = (cm * cm).sum(axis=1)
         c_max = float(np.sqrt(c_norm2.max())) if len(ids_c) else 0.0
         d = cm.shape[1]
+        take = min(n, len(ids_c))
         for pb in batches:
             vids = pb["vec_id"].to_numpy(dtype="int64")
-            if len(vids) == 0 or len(ids_c) == 0:
-                yield pd.DataFrame(
-                    {"vec_id": np.empty(0, "int64"),
-                     "cluster": np.empty(0, "int64"),
-                     "v": np.empty(0, "object")}
-                )
-                continue
-            mat = np.array([np.asarray(x, dtype="float64") for x in pb["v"]])
-            x_norm2 = (mat * mat).sum(axis=1)
-            # BLAS phase: full (batch x K) distance matrix in 3 ops
-            dist = x_norm2[:, None] + c_norm2[None, :] - 2.0 * (mat @ cm.T)
-            d_min = dist.min(axis=1)
-            # 2x the worst-case |BLAS - exact| bound: candidates within
-            # it of the BLAS min always include the exact argmin
-            tol = 8.0 * d * 2.3e-16 * (np.sqrt(x_norm2) + c_max) ** 2
-            chosen = np.empty(len(vids), dtype="int64")
-            for r in range(len(vids)):
-                cand_j = np.nonzero(dist[r] <= d_min[r] + tol[r])[0]
-                best_c, best_d = -1, None
-                for j in cand_j:  # ids_c ascending => ties keep lowest id
-                    diff = mat[r] - cm[j]
-                    s = 0.0
-                    for x in diff:  # sequential fold == oracle's fold
-                        s += x * x
-                    if best_d is None or s < best_d:
-                        best_d, best_c = s, int(ids_c[j])
-                chosen[r] = best_c
+            rows: list[int] = []
+            cells: list[int] = []
+            mat = _matrix(vids, pb["v"], "vec_id")
+            if take and len(vids):
+                x_norm2 = (mat * mat).sum(axis=1)
+                # BLAS phase: full (batch x K) distance matrix in 3 ops
+                dist = x_norm2[:, None] + c_norm2[None, :] - 2.0 * (mat @ cm.T)
+                # n-th smallest BLAS distance per row; a true top-n member's
+                # BLAS distance is <= exact_nth + err <= blas_nth + 2*err, so
+                # the 2x-error tolerance band always contains the exact top-n
+                nth = np.partition(dist, take - 1, axis=1)[:, take - 1]
+                tol = 8.0 * d * 2.3e-16 * (np.sqrt(x_norm2) + c_max) ** 2
+                for r in range(len(vids)):
+                    scored = []
+                    for j in np.nonzero(dist[r] <= nth[r] + tol[r])[0]:
+                        s = 0.0
+                        for x in mat[r] - cm[j]:  # sequential fold == oracle's fold
+                            s += x * x
+                        scored.append((s, int(ids_c[j])))
+                    scored.sort()  # (exact dist, cluster id) == oracle ORDER BY
+                    for _, cid in scored[:take]:
+                        rows.append(r)
+                        cells.append(cid)
+            idx = np.array(rows, dtype="int64")
             yield pd.DataFrame(
-                {"vec_id": vids, "cluster": chosen, "v": list(pb["v"])}
+                {"vec_id": vids[idx],
+                 "cluster": np.array(cells, dtype="int64"),
+                 "v": pb["v"].to_numpy()[idx]}
             )
 
-    return emb.mapInPandas(
-        _assign_exact, "vec_id long, cluster long, v array<double>"
-    )
+    return emb.mapInPandas(_nearest, "vec_id long, cluster long, v array<double>")
 
 
 def q_dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -880,18 +912,19 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - **Seeding**: centroids are the corpus rows with
       ``vec_id % SEED_STRIDE == SEED_RESIDUE`` — K ~= N/64 emerges from
-      the data (8 clusters at sf0.01 -> 31 at sf0.1 -> ~N/64 at any
+      the data (8 clusters at sf0.01 -> 32 at sf0.1 -> ~N/64 at any
       scale), fully deterministic and SQL-expressible, so the oracle
       parameterizes with the corpus instead of hard-coding K.
     - **Assignment** (one Voronoi step, k-means with zero update
-      iterations): ``mapInPandas`` scores each Arrow batch against the
-      broadcast centroid matrix with BLAS (|x|^2 + |c|^2 - 2 x.c), then
-      re-scores only the within-tolerance argmin *candidates* with the
-      exact sequential fold (bit-identical to the oracle's
-      list_dot_product over the difference list), tie to lowest cluster
-      id. Parallelism = input partitions, NOT K; no N x K row explosion
-      (the broadcast-join + window _assign shape materializes N*K rows,
-      fine for K=8, fatal for K=50k).
+      iterations): ``_exact_nearest`` at n=1 — ``mapInPandas`` scores
+      each Arrow batch against the broadcast centroid matrix with BLAS
+      (|x|^2 + |c|^2 - 2 x.c), then re-scores only the within-tolerance
+      argmin *candidates* with the exact sequential fold (bit-identical
+      to the oracle's list_dot_product over the difference list), tie
+      to lowest cluster id; a null or non-finite vector raises instead
+      of taking a cluster. Parallelism = input partitions, NOT K; no
+      N x K row explosion (the broadcast-join + window _assign shape
+      materializes N*K rows, fine for K=8, fatal for K=50k).
     - **Pairing**: the shared ``_cluster_rollup`` fused kernel, now over
       ~N/64 groups — pairing parallelism scales with the corpus and
       per-group pair volume is ~SEED_STRIDE^2 bounded on average instead
@@ -911,16 +944,8 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT] training-pipeline
     operator).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = (
-        emb.filter(F.col("vec_id") % SEED_STRIDE == SEED_RESIDUE)
-        .select(F.col("vec_id").alias("cluster"), F.col("v").alias("cv"))
-        .toPandas()
-        .sort_values("cluster")
-    )
-    assigned = _exact_voronoi(spark, emb, cents)
+    emb = _embeddings(spark, sf_dir)
+    assigned = _exact_nearest(spark, emb, _seeds(emb).toPandas())
     # single consumer (r11 optimization round): the fused kernel makes
     # the exact per-cluster decision in place — no cache, no re-score
     # joins, only ~N/64 accounting rows leave the pairing stage
@@ -992,77 +1017,6 @@ ML_QUERIES.append(
 NPROBE = 2
 
 
-def _exact_topn_cells(
-    spark: SparkSession, emb: DataFrame, cents, nprobe: int
-) -> DataFrame:
-    """(vec_id, cell, v) with the ``nprobe`` nearest coarse centroids per
-    vector, exact and oracle-reproducible: the same two-phase discipline
-    as ``_exact_voronoi`` (BLAS distance matrix, then the oracle's
-    sequential fold on the within-tolerance candidates), generalized to
-    top-n — candidates are everything within tolerance of the n-th
-    smallest BLAS distance, exact-folded and ordered by
-    (distance, cell id). ``cents`` is a pandas DataFrame (cluster, cv)
-    sorted by cluster id."""
-    import numpy as np
-    import pandas as pd
-
-    c_ids = cents["cluster"].to_numpy(dtype="int64")
-    c_mat = (
-        np.array([np.asarray(x, dtype="float64") for x in cents["cv"]])
-        if len(c_ids)
-        else np.empty((0, 1), dtype="float64")
-    )
-    bc = spark.sparkContext.broadcast((c_ids, c_mat))
-
-    def _probe(batches):
-        ids_c, cm = bc.value
-        c_norm2 = (cm * cm).sum(axis=1)
-        c_max = float(np.sqrt(c_norm2.max())) if len(ids_c) else 0.0
-        d = cm.shape[1]
-        take = min(nprobe, len(ids_c))
-        for pb in batches:
-            vids = pb["vec_id"].to_numpy(dtype="int64")
-            if len(vids) == 0 or take == 0:
-                yield pd.DataFrame(
-                    {"vec_id": np.empty(0, "int64"),
-                     "cell": np.empty(0, "int64"),
-                     "v": np.empty(0, "object")}
-                )
-                continue
-            mat = np.array([np.asarray(x, dtype="float64") for x in pb["v"]])
-            x_norm2 = (mat * mat).sum(axis=1)
-            dist = x_norm2[:, None] + c_norm2[None, :] - 2.0 * (mat @ cm.T)
-            # n-th smallest BLAS distance per row; a true top-n member's
-            # BLAS distance is <= exact_nth + err <= blas_nth + 2*err, so
-            # the 2x-error tolerance band always contains the exact top-n
-            kth = np.partition(dist, take - 1, axis=1)[:, take - 1]
-            tol = 8.0 * d * 2.3e-16 * (np.sqrt(x_norm2) + c_max) ** 2
-            out_vid: list[int] = []
-            out_cell: list[int] = []
-            out_v: list = []
-            for r in range(len(vids)):
-                cand_j = np.nonzero(dist[r] <= kth[r] + tol[r])[0]
-                scored = []
-                for j in cand_j:
-                    diff = mat[r] - cm[j]
-                    s = 0.0
-                    for x in diff:  # sequential fold == oracle's fold
-                        s += x * x
-                    scored.append((s, int(ids_c[j])))
-                scored.sort()  # (exact dist, cell id) == oracle ORDER BY
-                for s, cid in scored[:take]:
-                    out_vid.append(int(vids[r]))
-                    out_cell.append(cid)
-                    out_v.append(pb["v"].iloc[r])
-            yield pd.DataFrame(
-                {"vec_id": np.array(out_vid, dtype="int64"),
-                 "cell": np.array(out_cell, dtype="int64"),
-                 "v": out_v}
-            )
-
-    return emb.mapInPandas(_probe, "vec_id long, cell long, v array<double>")
-
-
 def q_dedup_semantic_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with a TWO-LEVEL coarse-quantizer assignment — the
     executable escape from ``dedup_semantic_scaled``'s single-level
@@ -1087,9 +1041,10 @@ def q_dedup_semantic_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
       broadcast — it flows as a DataFrame, shuffled once by its owning
       cell id.
     - each vector probes its NPROBE nearest cells via one Arrow
-      ``mapInPandas`` scan (BLAS + exact re-score, parallelism = input
-      partitions), emitting NPROBE rows per vector — no N x K row
-      explosion at any K.
+      ``mapInPandas`` scan (``_exact_nearest`` at n=NPROBE: BLAS + exact
+      re-score, parallelism = input partitions), emitting NPROBE rows
+      per vector — no N x K row explosion at any K. The fine seeds find
+      their own cell with the same kernel at n=1.
     - the candidate join (vectors x fine-centroids-of-probed-cells) is a
       hash join on the cell id: per-vector candidate count = fines per
       cell x NPROBE ~= sqrt(K) x NPROBE, so assignment cost is
@@ -1100,41 +1055,33 @@ def q_dedup_semantic_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``_cluster_rollup``) over ~N/64 bounded-size clusters.
 
     At the fixtures: sf0.01 has K=8 fines -> f=3 -> 3 cells; sf0.1 has
-    K=31 -> f=6 -> 6 cells; at the paper's 50k clusters f=224 -> ~224
+    K=32 -> f=6 -> 6 cells; at the paper's 50k clusters f=224 -> ~224
     cells of ~224 fines — a 224 x d broadcast instead of 50k x d.
 
     No reference counterpart (SURVEY §2.11 — [EXT] training-pipeline
     operator)."""
     import math
 
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    # fine centroids STAY distributed: (f_cluster, cell, cv) via the
-    # exact single-nearest kernel against the broadcast coarse matrix
+    emb = _embeddings(spark, sf_dir)
+    # fine centroids STAY distributed: (f_cluster, cluster, cv), where
+    # cluster is the coarse cell the fine seed falls in (n=1 against the
+    # broadcast coarse matrix)
     fines = emb.filter(F.col("vec_id") % SEED_STRIDE == SEED_RESIDUE)
     k_fine = fines.count()
     f = max(1, int(math.ceil(math.sqrt(k_fine))))
-    coarse = (
-        emb.filter(F.col("vec_id") % (SEED_STRIDE * f) == SEED_RESIDUE)
-        .select(F.col("vec_id").alias("cluster"), F.col("v").alias("cv"))
-        .toPandas()
-        .sort_values("cluster")
+    coarse = _seeds(emb, SEED_STRIDE * f).toPandas()
+    f_cells = _exact_nearest(spark, fines, coarse).select(
+        F.col("vec_id").alias("f_cluster"), "cluster", F.col("v").alias("cv")
     )
-    f_cells = _exact_voronoi(spark, fines, coarse).select(
-        F.col("vec_id").alias("f_cluster"),
-        F.col("cluster").alias("cell"),
-        F.col("v").alias("cv"),
-    )
-    # every vector probes its NPROBE nearest cells (exact top-n kernel)
-    v_cells = _exact_topn_cells(spark, emb, coarse, NPROBE)
-    # candidate fines per vector: hash join on the cell id — the fine
-    # matrix is never broadcast; per-vector fan-out is fines-per-cell x
-    # NPROBE, independent of K
+    # every vector probes its NPROBE nearest cells (same kernel, top-n)
+    v_cells = _exact_nearest(spark, emb, coarse, NPROBE)
+    # candidate fines per vector: hash join on the coarse cell id — the
+    # fine matrix is never broadcast; per-vector fan-out is
+    # fines-per-cell x NPROBE, independent of K
     dist = _sq_dist(F.col("v"), F.col("cv"))
     w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cluster"))
     assigned = (
-        v_cells.join(f_cells, "cell")
+        v_cells.join(f_cells, "cluster")
         .select(
             "vec_id", "v", F.col("f_cluster").alias("cluster"), dist.alias("dist")
         )
@@ -1249,35 +1196,45 @@ def q_dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT] training-pipeline
     operator).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    existing, incoming = _split_incoming(_embeddings(spark, sf_dir))
+    cents = _seeds(existing).toPandas()
+    return _best_existing_match(
+        _paired_side(spark, incoming, cents, "vec_new", "vn"),
+        _paired_side(spark, existing, cents, "vec_old", "vo"),
     )
-    incoming_pred = (
+
+
+def _split_incoming(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(existing, incoming) halves of a (vec_id, v) frame by the portable
+    hash of vec_id (see SEM_INCR_INCOMING_FROM)."""
+    incoming = (
         P.h1(F.col("vec_id").cast("string")) % 100
     ) >= SEM_INCR_INCOMING_FROM
-    existing = emb.filter(~incoming_pred)
-    incoming = emb.filter(incoming_pred)
-    cents = (
-        existing.filter(F.col("vec_id") % SEED_STRIDE == SEED_RESIDUE)
-        .select(F.col("vec_id").alias("cluster"), F.col("v").alias("cv"))
-        .toPandas()
-        .sort_values("cluster")
-    )
-    from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
+    return emb.filter(~incoming), emb.filter(incoming)
 
-    # zero-norm vectors have no defined cosine: the oracle's division by
-    # zero yields NULL and the NULL comparison DROPS the pair, while ANSI
-    # Spark would throw in this join's cosine — exclude them from the
-    # pairing explicitly (assignment above keeps them; they simply can
-    # never match anything, same as the oracle)
-    nonzero = dot(F.col("v"), F.col("v")) > 0
-    ex_a = _exact_voronoi(spark, existing, cents).filter(nonzero).select(
-        F.col("vec_id").alias("vec_old"), "cluster", F.col("v").alias("vo")
+
+def _paired_side(
+    spark: SparkSession, vecs: DataFrame, cents, id_name: str, v_name: str
+) -> DataFrame:
+    """(id_name, cluster, v_name): ``vecs`` assigned to their nearest
+    centroid, ready for the cluster-key join. Zero-norm vectors have no
+    defined cosine: the oracle's division by zero yields NULL and the
+    NULL comparison DROPS the pair, while ANSI Spark would throw in the
+    join's cosine — so they are excluded after assignment (they can
+    never match anything, same as the oracle)."""
+    return (
+        _exact_nearest(spark, vecs, cents)
+        .filter(dot(F.col("v"), F.col("v")) > 0)
+        .select(F.col("vec_id").alias(id_name), "cluster", F.col("v").alias(v_name))
     )
-    in_a = _exact_voronoi(spark, incoming, cents).filter(nonzero).select(
-        F.col("vec_id").alias("vec_new"), "cluster", F.col("v").alias("vn")
-    )
+
+
+def _best_existing_match(in_a: DataFrame, ex_a: DataFrame) -> DataFrame:
+    """(vec_new, vec_old, cos_sim): each incoming vector's best existing
+    match at cosine >= SEMANTIC_DUP (highest cosine, ties to the lowest
+    existing id), candidates joined on the cluster key only. ``in_a`` is
+    (vec_new, cluster, vn), ``ex_a`` (vec_old, cluster, vo)."""
+    from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
 
     # batch is small by contract, but gate the broadcast on a real count
     # so a mis-sized batch degrades to a shuffled cluster-key join
@@ -1385,51 +1342,19 @@ def q_dedup_semantic_incremental_persisted(
 
     sf = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tempfile.gettempdir(), f"tmrs_sem_index_{sf}")
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    incoming_pred = (
-        P.h1(F.col("vec_id").cast("string")) % 100
-    ) >= SEM_INCR_INCOMING_FROM
-    existing = emb.filter(~incoming_pred)
-    incoming = emb.filter(incoming_pred)
+    existing, incoming = _split_incoming(_embeddings(spark, sf_dir))
     # ---- build: the batch indexing job (writes the lake state) ----
-    cents_df = existing.filter(F.col("vec_id") % SEED_STRIDE == SEED_RESIDUE).select(
-        F.col("vec_id").alias("cluster"), F.col("v").alias("cv")
-    )
-    cents_df.write.mode("overwrite").parquet(base + "/centroids")
-    cents_build = (
-        spark.read.parquet(base + "/centroids").toPandas().sort_values("cluster")
-    )
-    _exact_voronoi(spark, existing, cents_build).select(
+    _seeds(existing).write.mode("overwrite").parquet(base + "/centroids")
+    cents_build = spark.read.parquet(base + "/centroids").toPandas()
+    _exact_nearest(spark, existing, cents_build).select(
         F.col("vec_id").alias("vec_old"), "cluster", F.col("v").alias("vo")
     ).write.mode("overwrite").parquet(base + "/members")
     # ---- probe: only the STORED index + the incoming batch ----
-    cents = spark.read.parquet(base + "/centroids").toPandas().sort_values("cluster")
+    cents = spark.read.parquet(base + "/centroids").toPandas()
     members = spark.read.parquet(base + "/members")
-    from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
-    from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
-
-    nonzero = dot(F.col("v"), F.col("v")) > 0
-    ex_a = members.filter(dot(F.col("vo"), F.col("vo")) > 0)
-    in_a = _exact_voronoi(spark, incoming, cents).filter(nonzero).select(
-        F.col("vec_id").alias("vec_new"), "cluster", F.col("v").alias("vn")
-    )
-    scored = (
-        _bounded_broadcast(in_a)
-        .join(ex_a, "cluster")
-        .select(
-            "vec_new",
-            "vec_old",
-            cosine(F.col("vn"), F.col("vo")).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= SEMANTIC_DUP)
-    )
-    w = Window.partitionBy("vec_new").orderBy(F.desc("cos_sim"), F.asc("vec_old"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_new", "vec_old", "cos_sim")
+    return _best_existing_match(
+        _paired_side(spark, incoming, cents, "vec_new", "vn"),
+        members.filter(dot(F.col("vo"), F.col("vo")) > 0),
     )
 
 

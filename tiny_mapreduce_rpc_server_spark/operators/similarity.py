@@ -18,11 +18,17 @@ centroids, but LSH needs no training pass and stays deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
+from tiny_mapreduce_rpc_server_spark.operators.ml import _embeddings
+
+# full-vector squared L2: the ordered fold whose DuckDB bit-parity
+# (list_dot_product of the diff vector) ml.py's kmeans tests pin —
+# import, don't re-implement, so the pinned fold shape has ONE owner
+from tiny_mapreduce_rpc_server_spark.operators.ml import _sq_dist as _sqd_full
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -43,28 +49,49 @@ def _sql_plane(p: int) -> str:
     return "[" + ", ".join(repr(v) for v in _plane(p)) + "]::DOUBLE[]"
 
 
+def _cos_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
+    """The per-query tail every cosine path shares: rank (query_id,
+    neighbor_id, cos_sim) rows by cosine DESC, neighbor_id ASC and keep
+    the top ``k`` (one row_number window over Q partitions)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "rnk", "neighbor_id", "cos_sim")
+    )
+
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim) of query x candidate pairs that
+    carry the query vector as ``qv`` and the candidate as ``embedding``."""
+    return pairs.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine(F.col("qv"), F.col("embedding")).alias("cos_sim"),
+    )
+
+
+def _bruteforce(emb: DataFrame) -> DataFrame:
+    """Exact top-k over a (vec_id, embedding) frame: the query rows
+    broadcast against one scan of the corpus."""
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    return _cos_topk(
+        _scored(emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")))
+    )
+
+
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id < 10).
 
     The query side is tiny -> broadcast; the corpus is scanned once and
     never shuffled except the final per-query top-k (TakeOrdered via
     window over Q partitions)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    cos = cosine(F.col("qv"), F.col("embedding"))
-    scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
+    return _bruteforce(
+        spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
     )
 
 
@@ -86,35 +113,42 @@ SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {TOP_K}
 """
 
 
-def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN: 8 sign-random-projection bits -> bucket; score
-    only same-bucket candidates (expected 1/256 of the corpus per query).
-    Approximate: a neighbor in another bucket is missed — that's the
-    recall/cost trade the bucket count controls."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
+def _lsh_bucket(v: Column) -> Column:
+    """Sign-random-projection bucket of vector ``v``: bit p is set iff
+    ``v`` lies on the positive side of hyperplane p."""
     bucket = F.lit(0)
     for p in range(N_PLANES):
-        plane = F.lit(_plane(p))  # array<double> literal
-        bucket = bucket + F.when(dot(F.col("embedding"), plane) > 0, F.lit(1 << p)).otherwise(0)
-    eb = emb.withColumn("bucket", bucket)
+        bucket = bucket + F.when(dot(v, F.lit(_plane(p))) > 0, F.lit(1 << p)).otherwise(0)
+    return bucket
+
+
+def _lsh(emb: DataFrame) -> DataFrame:
+    """LSH-bucketed top-k over a (vec_id, embedding) frame: score only
+    the candidates that share the query's bucket."""
+    eb = emb.withColumn("bucket", _lsh_bucket(F.col("embedding")))
     q = eb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
         F.col("bucket").alias("qbucket"),
     )
-    cos = cosine(F.col("qv"), F.col("embedding"))
-    scored = (
-        eb.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
+    return _cos_topk(
+        _scored(
+            eb.join(
+                F.broadcast(q),
+                (F.col("bucket") == F.col("qbucket"))
+                & (F.col("vec_id") != F.col("query_id")),
+            )
         )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
+
+
+def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed ANN: 8 sign-random-projection bits -> bucket; score
+    only same-bucket candidates (expected 1/256 of the corpus per query).
+    Approximate: a neighbor in another bucket is missed — that's the
+    recall/cost trade the bucket count controls."""
+    return _lsh(
+        spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
     )
 
 
@@ -153,28 +187,10 @@ N_PROBE = 2
 CENTROID_IDS = [20 + 30 * i for i in range(N_CELLS)]
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: partition the corpus into Voronoi cells around 16
-    centroids, probe the 2 nearest cells per query, exact-score only
-    those candidates.
-
-    100 TB shape: ALL centroids travel as ONE broadcast row (the
-    ``_ivf_cents_one`` pattern ann_ivf_pq proved out), so cell
-    assignment is row-local — rank the 16 (csim, cell) structs inside
-    the row — and the corpus is scanned with NO shuffle until the final
-    per-query top-k; candidate count scales with nprobe/ncells, not
-    corpus size. (The r11 form cross-joined the corpus against the
-    16-row centroid table and ranked with a row_number window
-    partitioned by vec_id — a 16N-row exchange carrying the full
-    embedding payload, executed twice: once under the cell side, once
-    under the broadcast probe side. r12 removes both.) Ranking
-    semantics are bit-identical to that window: ``sort_array`` DESC
-    over struct(csim, -cell) orders by csim DESC then cell ASC with
-    the same NaN-largest / NULL-last double ordering, and each csim is
-    the same ordered-fold cosine over the same values. Unlike LSH
-    buckets, cells adapt to the data's density around the chosen
-    centroids."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
+def _ivf(emb: DataFrame) -> DataFrame:
+    """IVF top-k over a (vec_id, embedding) frame: every row ranks the
+    CENTROID_IDS cells inside the row against ONE broadcast centroid
+    row, then the queries' N_PROBE nearest cells are probed."""
     cents_one = (
         emb.filter(F.col("vec_id").isin(CENTROID_IDS))
         .select(F.col("vec_id").alias("cell"), F.col("embedding").alias("cv"))
@@ -210,19 +226,40 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("probe_cell"),
     )
-    cos = cosine(F.col("qv"), F.col("embedding"))
-    scored = (
-        cells.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("probe_cell")) & (F.col("vec_id") != F.col("query_id")),
+    return _cos_topk(
+        _scored(
+            cells.join(
+                F.broadcast(probes),
+                (F.col("cell") == F.col("probe_cell"))
+                & (F.col("vec_id") != F.col("query_id")),
+            )
         )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
+
+
+def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style ANN: partition the corpus into Voronoi cells around 16
+    centroids, probe the 2 nearest cells per query, exact-score only
+    those candidates.
+
+    100 TB shape: ALL centroids travel as ONE broadcast row (the
+    ``_ivf_cents_one`` pattern ann_ivf_pq proved out), so cell
+    assignment is row-local — rank the 16 (csim, cell) structs inside
+    the row — and the corpus is scanned with NO shuffle until the final
+    per-query top-k; candidate count scales with nprobe/ncells, not
+    corpus size. (The r11 form cross-joined the corpus against the
+    16-row centroid table and ranked with a row_number window
+    partitioned by vec_id — a 16N-row exchange carrying the full
+    embedding payload, executed twice: once under the cell side, once
+    under the broadcast probe side. r12 removes both.) Ranking
+    semantics are bit-identical to that window: ``sort_array`` DESC
+    over struct(csim, -cell) orders by csim DESC then cell ASC with
+    the same NaN-largest / NULL-last double ordering, and each csim is
+    the same ordered-fold cosine over the same values. Unlike LSH
+    buckets, cells adapt to the data's density around the chosen
+    centroids."""
+    return _ivf(
+        spread(load_table(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
     )
 
 
@@ -383,28 +420,30 @@ def q_ann_eval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without it the full cosine scan executes once per path;
     # release_caches() drops it between queries.
     truth = q_ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").cache()
-
-    def path_recall(approx: DataFrame, path: str) -> DataFrame:
-        a = approx.select("query_id", "neighbor_id", F.lit(1).alias("in_a"))
-        j = truth.join(a, ["query_id", "neighbor_id"], "left")
-        return j.agg(
-            F.lit(path).alias("path"),
-            F.count("*").alias("n_truth"),
-            F.count("in_a").alias("n_hit"),
-            (F.count("in_a").cast("double") / F.count("*")).alias("recall"),
-        )
-
     return (
-        path_recall(q_ann_lsh_bucketed(spark, sf_dir), "lsh")
-        .unionAll(path_recall(q_ann_ivf(spark, sf_dir), "ivf"))
-        .unionAll(path_recall(q_ann_pq(spark, sf_dir), "pq"))
-        .unionAll(path_recall(q_ann_ivf_pq(spark, sf_dir), "ivfpq"))
+        path_recall(truth, q_ann_lsh_bucketed(spark, sf_dir), "lsh")
+        .unionAll(path_recall(truth, q_ann_ivf(spark, sf_dir), "ivf"))
+        .unionAll(path_recall(truth, q_ann_pq(spark, sf_dir), "pq"))
+        .unionAll(path_recall(truth, q_ann_ivf_pq(spark, sf_dir), "ivfpq"))
         # the refine stage's honest caveat: on a SMALL corpus RERANK_R
         # covers a large fraction of N, so this row overstates what a
         # 100 TB deployment would see (there R/N -> 0 and recall is
         # bounded by how many true neighbors quantization lets into the
         # candidate pool); the clustered eval is the structural signal
-        .unionAll(path_recall(q_ann_pq_rerank(spark, sf_dir), "pq_rerank"))
+        .unionAll(path_recall(truth, q_ann_pq_rerank(spark, sf_dir), "pq_rerank"))
+    )
+
+
+def path_recall(truth: DataFrame, approx: DataFrame, path: str) -> DataFrame:
+    """One recall row for ``path``: the share of the (query_id,
+    neighbor_id) ``truth`` pairs that ``approx`` also returns."""
+    a = approx.select("query_id", "neighbor_id", F.lit(1).alias("in_a"))
+    j = truth.join(a, ["query_id", "neighbor_id"], "left")
+    return j.agg(
+        F.lit(path).alias("path"),
+        F.count("*").alias("n_truth"),
+        F.count("in_a").alias("n_hit"),
+        (F.count("in_a").cast("double") / F.count("*")).alias("recall"),
     )
 
 
@@ -507,96 +546,20 @@ def sql_clustered_eval_embeddings() -> str:
 
 
 def q_ann_eval_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the LSH-bucketed and IVF paths on a CLUSTERED embedding
-    space — the positive control for ``ann_eval_recall``'s negative
-    result on the isotropic corpus.
+    """Recall of the LSH-bucketed, IVF, PQ and PQ-rerank paths on a
+    CLUSTERED embedding space — the positive control for
+    ``ann_eval_recall``'s negative result on the isotropic corpus.
 
     The clustered set comes from ``clustered_eval_embeddings``: within a
     group, vectors are near-identical (cosine ~1), so ground-truth
     neighbors are group-mates; a bucketed path earns its recall by
-    keeping groups together. Same plan shapes as the corpus-table paths:
-    broadcast queries/centroids, no shuffle until the per-query top-k."""
+    keeping groups together. Same plan shapes as the corpus-table paths,
+    because they are the same builders (``_bruteforce``, ``_lsh``,
+    ``_ivf``, ``_pq_topk``, ``_rescore``): broadcast queries/centroids,
+    no shuffle until the per-query top-k."""
     emb = clustered_eval_embeddings(spark, sf_dir)
-    emb = emb.localCheckpoint(eager=False)  # 3 consumers, derive once
-
-    def topk(scored: DataFrame) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
-
-    cos = cosine(F.col("qv"), F.col("embedding"))
-    # brute-force ground truth
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    truth = (
-        topk(
-            emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-                "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim")
-            )
-        )
-        .cache()
-    )
-    # sign-LSH path
-    bucket = F.lit(0)
-    for p in range(N_PLANES):
-        bucket = bucket + F.when(
-            dot(F.col("embedding"), F.lit(_plane(p))) > 0, F.lit(1 << p)
-        ).otherwise(0)
-    eb = emb.withColumn("bucket", bucket)
-    qb = eb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    lsh = topk(
-        eb.join(
-            F.broadcast(qb),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim")
-        )
-    )
-    # IVF path (same fixed centroid ids as ann_ivf)
-    cent = emb.filter(F.col("vec_id").isin(CENTROID_IDS)).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv")
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cent_id"))
-    assigned = (
-        emb.join(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "embedding",
-            "cent_id",
-            cosine(F.col("embedding"), F.col("cv")).alias("csim"),
-        )
-        .withColumn("crnk", F.row_number().over(w_assign))
-    )
-    cells = assigned.filter(F.col("crnk") == 1).select(
-        "vec_id", "embedding", F.col("cent_id").alias("cell")
-    )
-    probes = assigned.filter(
-        (F.col("vec_id") < N_QUERIES) & (F.col("crnk") <= N_PROBE)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("cent_id").alias("probe_cell"),
-    )
-    ivf = topk(
-        cells.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("probe_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim")
-        )
-    )
+    emb = emb.localCheckpoint(eager=False)  # several consumers, derive once
+    truth = _bruteforce(emb).select("query_id", "neighbor_id").cache()
 
     # PQ path (same seed codebook construction as ann_pq, over the
     # derived set). Group-mates share codes, so ADC distances TIE within
@@ -607,14 +570,9 @@ def q_ann_eval_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-RERANK_R ADC survivors — its top-TOP_K prefix IS the plain pq
     # answer, so one ADC scan feeds both rows.
     pv = emb.select("vec_id", F.col("embedding").alias("v"))
-    cb_one = _pq_cb_one(_pq_codebook_entries(pv))
     cand_r = (
-        _pq_adc_topk(
-            _pq_codes(pv, cb_one), _pq_luts(pv, cb_one), k=RERANK_R
-        ).select("query_id", "rnk", "neighbor_id")
-        .cache()
+        _pq_topk(pv, RERANK_R).select("query_id", "rnk", "neighbor_id").cache()
     )
-    pq = cand_r.filter(F.col("rnk") <= TOP_K).select("query_id", "neighbor_id")
 
     # Recall-vs-R sweep (round-9 verdict #3): rerank recall is bounded
     # by candidate coverage — top-R ADC survivors cap how many true
@@ -624,40 +582,19 @@ def q_ann_eval_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the docstring's R/N caveat into data: recall should rise with R
     # and saturate once R covers the densest cluster.
     def pqr_at(r_cap: int) -> DataFrame:
-        return topk(
-            emb.join(
-                F.broadcast(
-                    cand_r.filter(F.col("rnk") <= r_cap).select(
-                        "query_id", "neighbor_id"
-                    )
-                ),
-                F.col("vec_id") == F.col("neighbor_id"),
-            )
-            .join(F.broadcast(q), "query_id")
-            .select("query_id", "neighbor_id", cos.alias("cos_sim"))
-        )
-
-    pqr = pqr_at(RERANK_R)
-
-    def path_recall(approx: DataFrame, path: str) -> DataFrame:
-        a = approx.select("query_id", "neighbor_id", F.lit(1).alias("in_a"))
-        j = truth.join(a, ["query_id", "neighbor_id"], "left")
-        return j.agg(
-            F.lit(path).alias("path"),
-            F.count("*").alias("n_truth"),
-            F.count("in_a").alias("n_hit"),
-            (F.count("in_a").cast("double") / F.count("*")).alias("recall"),
-        )
+        return _rescore(pv, cand_r.filter(F.col("rnk") <= r_cap), pv)
 
     out = (
-        path_recall(lsh, "lsh")
-        .unionAll(path_recall(ivf, "ivf"))
-        .unionAll(path_recall(pq, "pq"))
-        .unionAll(path_recall(pqr, "pq_rerank"))
+        path_recall(truth, _lsh(emb), "lsh")
+        .unionAll(path_recall(truth, _ivf(emb), "ivf"))
+        .unionAll(path_recall(truth, cand_r.filter(F.col("rnk") <= TOP_K), "pq"))
+        .unionAll(path_recall(truth, pqr_at(RERANK_R), "pq_rerank"))
     )
     for r_cap in RERANK_SWEEP_RS:
         if r_cap != RERANK_R:  # RERANK_R point IS the pq_rerank row
-            out = out.unionAll(path_recall(pqr_at(r_cap), f"pq_rerank_r{r_cap}"))
+            out = out.unionAll(
+                path_recall(truth, pqr_at(r_cap), f"pq_rerank_r{r_cap}")
+            )
     return out
 
 
@@ -1156,13 +1093,14 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT]; PQ/ADC per Jegou et
     al., "Product Quantization for Nearest Neighbor Search", TPAMI'11).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    return _pq_topk(_embeddings(spark, sf_dir))
+
+
+def _pq_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
+    """The PQ chain over a (vec_id, v) frame: seed codebook -> row-local
+    codes -> per-query lookup grids -> ADC top-``k``."""
     cb_one = _pq_cb_one(_pq_codebook_entries(emb))
-    coded = _pq_codes(emb, cb_one)
-    luts = _pq_luts(emb, cb_one)
-    return _pq_adc_topk(coded, luts)
+    return _pq_adc_topk(_pq_codes(emb, cb_one), _pq_luts(emb, cb_one), k=k)
 
 
 def _pq_codebook_entries(emb: DataFrame) -> DataFrame:
@@ -1392,34 +1330,29 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference counterpart (SURVEY §2.11 — [EXT]).
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cb_one = _pq_cb_one(_pq_codebook_entries(emb))
-    coded = _pq_codes(emb, cb_one)
-    luts = _pq_luts(emb, cb_one)
-    cands = _pq_adc_topk(coded, luts, k=RERANK_R).select(
-        "query_id", "neighbor_id"
-    )
+    emb = _embeddings(spark, sf_dir)
+    return _rescore(emb, _pq_topk(emb, RERANK_R), emb)
+
+
+def _rescore(vecs: DataFrame, cands: DataFrame, emb: DataFrame) -> DataFrame:
+    """The exact-cosine refine stage: broadcast the (query_id,
+    neighbor_id) candidate list over ``vecs`` (vec_id, v) — the raw
+    vectors, a point lookup on a real lake — score each survivor against
+    its query vector from ``emb`` (vec_id, v), and keep the top-k."""
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    rescored = (
-        emb.join(F.broadcast(cands), F.col("vec_id") == F.col("neighbor_id"))
+    return _cos_topk(
+        vecs.join(
+            F.broadcast(cands.select("query_id", "neighbor_id")),
+            F.col("vec_id") == F.col("neighbor_id"),
+        )
         .join(F.broadcast(q), "query_id")
         .select(
             "query_id",
             "neighbor_id",
             cosine(F.col("qv"), F.col("v")).alias("cos_sim"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
     )
 
 
@@ -1465,12 +1398,6 @@ SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {TOP_K}
 # IVF-PQ: coarse Voronoi cells + product quantization on RESIDUALS —
 # the standard composition (FAISS IVFADC; Jegou et al. TPAMI'11 §V)
 # ---------------------------------------------------------------------------
-
-
-# full-vector squared L2: the ordered fold whose DuckDB bit-parity
-# (list_dot_product of the diff vector) ml.py's kmeans tests pin —
-# import, don't re-implement, so the pinned fold shape has ONE owner
-from tiny_mapreduce_rpc_server_spark.operators.ml import _sq_dist as _sqd_full
 
 
 def _ivf_cents_one(emb: DataFrame) -> DataFrame:
@@ -1527,9 +1454,7 @@ def _ivf_pq_pipeline(spark: SparkSession, sf_dir: str, k: int):
     """The IVFADC stages shared by ``ann_ivf_pq`` (k=TOP_K) and
     ``ann_ivf_pq_rerank`` (k=RERANK_R, output feeds the exact-rescore
     refine). Returns (emb, adc_topk)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     cents_one = _ivf_cents_one(emb)
 
     def _cv_of(cell):
@@ -1596,27 +1521,7 @@ def q_ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     No reference counterpart (SURVEY §2.11 — [EXT]).
     """
     emb, cands = _ivf_pq_pipeline(spark, sf_dir, RERANK_R)
-    cands = cands.select("query_id", "neighbor_id")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    rescored = (
-        emb.join(F.broadcast(cands), F.col("vec_id") == F.col("neighbor_id"))
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("v")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
-    )
+    return _rescore(emb, cands, emb)
 
 
 _IVFPQ_CENT_IDS_SQL = ", ".join(str(i) for i in CENTROID_IDS)
@@ -1719,9 +1624,7 @@ def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression, the PQ encode reuses _pq_codes), so the whole report
     is one corpus scan + K-bounded aggregates.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     cells = (
         emb.join(F.broadcast(_ivf_cents_one(emb)))
         .select(_ranked_cells(F.col("v"))[0]["cell"].alias("k"))
@@ -1822,9 +1725,7 @@ def q_ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tempfile.gettempdir(), f"tmrs_pq_index_{sf}")
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     cb_entries = _pq_codebook_entries(emb)
     # ---- build: offline train + encode jobs (write the lake state) ----
     cb_entries.write.mode("overwrite").parquet(base + "/codebook")
@@ -1859,9 +1760,7 @@ def q_ann_pq_rerank_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf = _os.path.basename(_os.path.normpath(sf_dir))
     base = _os.path.join(_tempfile.gettempdir(), f"tmrs_pqr_index_{sf}")
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     cb_entries = _pq_codebook_entries(emb)
     # ---- build: train + encode + refine-store writes ----
     cb_entries.write.mode("overwrite").parquet(base + "/codebook")
@@ -1874,30 +1773,8 @@ def q_ann_pq_rerank_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored_codes = spark.read.parquet(base + "/codes")
     stored_vecs = spark.read.parquet(base + "/vectors")
     luts = _pq_luts(emb, stored_cb_one)
-    cands = _pq_adc_topk(stored_codes, luts, k=RERANK_R).select(
-        "query_id", "neighbor_id"
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    rescored = (
-        stored_vecs.join(
-            F.broadcast(cands), F.col("vec_id") == F.col("neighbor_id")
-        )
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("qv"), F.col("v")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "rnk", "neighbor_id", "cos_sim")
+    return _rescore(
+        stored_vecs, _pq_adc_topk(stored_codes, luts, k=RERANK_R), emb
     )
 
 
