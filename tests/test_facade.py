@@ -169,6 +169,27 @@ def test_map_reduce_one_partition_per_split(spark, tmp_path):
     assert kv.glom().collect() == want
 
 
+def test_map_reduce_and_linefile_read_no_records_without_data_files(spark, tmp_path):
+    """A directory holding only names the planner skips, and an empty
+    path list, give zero records through map_reduce and through the
+    linefile source, instead of failing in the split planner."""
+    from tiny_mapreduce_rpc_server_spark.sources.linefile import register
+
+    register(spark)
+    done = tmp_path / "done"
+    done.mkdir()
+    (done / "_SUCCESS").write_text("")
+    (done / ".part-00000.tmp").write_text("staged\n")
+    (done / "part-00001.tmp").write_text("staged\n")
+    eng = MapReduceEngine(spark)
+    for paths in (str(done), []):
+        kv = eng.map_reduce(paths, num_partitions=2)
+        assert kv.getNumPartitions() == 2
+        assert kv.collect() == []
+    df = spark.read.format("linefile").option("path", str(done)).load()
+    assert df.collect() == []
+
+
 def test_word_count_df_matches_rdd(spark, tmp_path):
     p = tmp_path / "in.txt"
     p.write_text("x y\ny z\nx x\n")

@@ -1421,6 +1421,8 @@ def test_dedup_eval_embedding_bands(spark):
         "bpe_train_merges",  # localCheckpoint
         "graph_pagerank",  # localCheckpoint per round
         "text_tf_idf",  # .cache() plus _bounded_broadcast
+        "dedup_incremental_persisted",  # .cache() plus _bounded_broadcast
+        "graph_community_lpa_converged",  # localCheckpoint per round
     ],
 )
 def test_release_caches_leaves_nothing_persisted(spark, name):

@@ -1172,7 +1172,6 @@ def test_plan_fingerprints_registry_wide(spark):
         # diff to zero).
         import tools.dump_plans as dp
 
-        spark.catalog.clearCache()
         retried = {}
         for name in drifted:
             from tiny_mapreduce_rpc_server_spark import release_caches

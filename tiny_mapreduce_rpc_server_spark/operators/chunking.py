@@ -296,6 +296,24 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bpe_adjacent_pairs(df: DataFrame) -> DataFrame:
+    """(p, cnt) with one row per adjacent symbol pair p = (lhs, rhs) of
+    every word in a (s, cnt) symbol table that has two or more symbols."""
+    sym = F.split(F.expr("substring(s, 2, length(s) - 2)"), r"\]\[")
+    return df.where(F.size(sym) >= 2).select(
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.size(sym) - 1),
+                lambda i: F.struct(
+                    F.element_at(sym, i).alias("lhs"),
+                    F.element_at(sym, i + 1).alias("rhs"),
+                ),
+            )
+        ).alias("p"),
+        "cnt",
+    )
+
+
 def _bpe_train(wf: DataFrame):
     """Run the merge loop over a cached (w, cnt) table. Returns the final
     vocab DataFrame (w, s, cnt) and the merge list."""
@@ -306,21 +324,8 @@ def _bpe_train(wf: DataFrame):
     )
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(1, BPE_MERGE_ROUNDS + 1):
-        sym = F.split(F.expr("substring(s, 2, length(s) - 2)"), r"\]\[")
         pairs = (
-            vocab.where(F.size(sym) >= 2)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(sym) - 1),
-                        lambda i: F.struct(
-                            F.element_at(sym, i).alias("lhs"),
-                            F.element_at(sym, i + 1).alias("rhs"),
-                        ),
-                    )
-                ).alias("p"),
-                "cnt",
-            )
+            _bpe_adjacent_pairs(vocab)
             .groupBy("p.lhs", "p.rhs")
             .agg(F.sum("cnt").alias("total"))
         )
@@ -352,21 +357,8 @@ def _bpe_pairs_weighted(df: DataFrame, sign: int = 1):
     """(lhs, rhs, total) adjacent-symbol pair counts of a (s, cnt)
     symbol table, weighted by ``sign * cnt`` — the building block of the
     pair-delta trainer (negative sign retracts a word's old pairs)."""
-    sym = F.split(F.expr("substring(s, 2, length(s) - 2)"), r"\]\[")
     return (
-        df.where(F.size(sym) >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(sym) - 1),
-                    lambda i: F.struct(
-                        F.element_at(sym, i).alias("lhs"),
-                        F.element_at(sym, i + 1).alias("rhs"),
-                    ),
-                )
-            ).alias("p"),
-            "cnt",
-        )
+        _bpe_adjacent_pairs(df)
         .groupBy("p.lhs", "p.rhs")
         .agg(F.sum(F.col("cnt") * F.lit(sign)).alias("total"))
     )

@@ -201,6 +201,39 @@ def _substr_windows(docs: DataFrame, stride: int) -> DataFrame:
     return wins.select("doc_id", F.xxhash64("w").alias("h")).distinct()
 
 
+def _span_hits(probe: DataFrame, ref: DataFrame) -> DataFrame:
+    """(doc_id, n_windows, n_dup_windows, dup_ratio) for every doc with
+    a ``probe`` window hash that some OTHER doc holds in ``ref``; both
+    frames are distinct (doc_id, h) pairs, and n_windows counts the
+    doc's ``probe`` windows."""
+    hits = (
+        probe.alias("s")
+        .join(
+            ref.alias("d"),
+            (F.col("s.h") == F.col("d.h"))
+            & (F.col("s.doc_id") != F.col("d.doc_id")),
+        )
+        .select(F.col("s.doc_id").alias("doc_id"), F.col("s.h").alias("h"))
+        .distinct()
+    )
+    n_dup = F.coalesce("n_dup_windows", F.lit(0))
+    per = (
+        probe.groupBy("doc_id")
+        .agg(F.count("*").alias("n_windows"))
+        .join(
+            hits.groupBy("doc_id").agg(F.count("*").alias("n_dup_windows")),
+            "doc_id",
+            "left",
+        )
+    )
+    return per.filter(n_dup > 0).select(
+        "doc_id",
+        "n_windows",
+        n_dup.alias("n_dup_windows"),
+        (n_dup.cast("double") / F.col("n_windows")).alias("dup_ratio"),
+    )
+
+
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate-SPAN detection: which documents share a verbatim
     >=47-char span with another document, and what fraction of each
@@ -226,35 +259,10 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     docs = docs.cache()
-    strided = _substr_windows(docs, SUBSTR_STRIDE)
-    dense = _substr_windows(docs, 1)
     # a strided window is duplicated if ANY OTHER doc's dense set
     # contains the same content, at any alignment
-    hits = (
-        strided.alias("s")
-        .join(
-            dense.alias("d"),
-            (F.col("s.h") == F.col("d.h"))
-            & (F.col("s.doc_id") != F.col("d.doc_id")),
-        )
-        .select(F.col("s.doc_id").alias("doc_id"), F.col("s.h").alias("h"))
-        .distinct()
-    )
-    n_dup = F.coalesce("n_dup_windows", F.lit(0))
-    per = (
-        strided.groupBy("doc_id")
-        .agg(F.count("*").alias("n_windows"))
-        .join(
-            hits.groupBy("doc_id").agg(F.count("*").alias("n_dup_windows")),
-            "doc_id",
-            "left",
-        )
-    )
-    return per.filter(n_dup > 0).select(
-        "doc_id",
-        "n_windows",
-        n_dup.alias("n_dup_windows"),
-        (n_dup.cast("double") / F.col("n_windows")).alias("dup_ratio"),
+    return _span_hits(
+        _substr_windows(docs, SUBSTR_STRIDE), _substr_windows(docs, 1)
     )
 
 
@@ -323,32 +331,7 @@ def q_dedup_substring_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("w"),
     )
     ex = wins.select("doc_id", F.xxhash64("w").alias("h")).distinct()
-    hits = (
-        ex.alias("s")
-        .join(
-            ex.alias("d"),
-            (F.col("s.h") == F.col("d.h"))
-            & (F.col("s.doc_id") != F.col("d.doc_id")),
-        )
-        .select(F.col("s.doc_id").alias("doc_id"), F.col("s.h").alias("h"))
-        .distinct()
-    )
-    n_dup = F.coalesce("n_dup_windows", F.lit(0))
-    per = (
-        ex.groupBy("doc_id")
-        .agg(F.count("*").alias("n_windows"))
-        .join(
-            hits.groupBy("doc_id").agg(F.count("*").alias("n_dup_windows")),
-            "doc_id",
-            "left",
-        )
-    )
-    return per.filter(n_dup > 0).select(
-        "doc_id",
-        "n_windows",
-        n_dup.alias("n_dup_windows"),
-        (n_dup.cast("double") / F.col("n_windows")).alias("dup_ratio"),
-    )
+    return _span_hits(ex, ex)
 
 
 ORACLE_DEDUP_SUBSTRING_ANCHORED = f"""
@@ -576,6 +559,12 @@ def _band_keys(ds: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard(a: str, b: str):
+    """Exact Jaccard of two shingle-array columns."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands x 4 rows) near-dup, exact-verified.
 
@@ -605,8 +594,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     da = ds.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sha"))
     db = ds.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shb"))
     joined = _bounded_broadcast(cand).join(da, "doc_a").join(db, "doc_b")
-    inter = F.size(F.array_intersect("sha", "shb"))
-    jac = inter / (F.size("sha") + F.size("shb") - inter)
+    jac = _jaccard("sha", "shb")
     return joined.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= JACCARD_VERIFY
     )
@@ -664,6 +652,44 @@ SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {JACCARD_VERIFY}
 INCR_INCOMING_FROM = 80
 
 
+def _best_lsh_match(
+    inc_keys: DataFrame, ex_keys: DataFrame, new_sh: DataFrame, old_sh: DataFrame
+) -> DataFrame:
+    """(doc_new, doc_old, jaccard): the best existing match of every
+    incoming doc. The incoming band keys probe the existing index on
+    ``bk``, each candidate pair is verified by exact shingle Jaccard
+    over the (doc_id, shingles) frames ``new_sh`` and ``old_sh``, and
+    the highest jaccard per doc_new wins, ties to the lowest doc_old."""
+    cand = (
+        # the incoming batch is small BY CONTRACT, but gate the hint on
+        # an actual count anyway — this demo's batch is a corpus
+        # fraction, and a mis-sized batch should degrade to a shuffled
+        # probe of the index, not kill the driver
+        _bounded_broadcast(inc_keys.alias("i"))
+        .join(ex_keys.alias("e"), F.col("i.bk") == F.col("e.bk"))
+        .select(
+            F.col("i.doc_id").alias("doc_new"),
+            F.col("e.doc_id").alias("doc_old"),
+        )
+        .dropDuplicates(["doc_new", "doc_old"])
+    )
+    dn = new_sh.select(F.col("doc_id").alias("doc_new"), F.col("shingles").alias("shn"))
+    do = old_sh.select(F.col("doc_id").alias("doc_old"), F.col("shingles").alias("sho"))
+    verified = (
+        _bounded_broadcast(cand)
+        .join(dn, "doc_new")
+        .join(do, "doc_old")
+        .select("doc_new", "doc_old", _jaccard("shn", "sho").alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_VERIFY)
+    )
+    w = Window.partitionBy("doc_new").orderBy(F.desc("jaccard"), F.asc("doc_old"))
+    return (
+        verified.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("doc_new", "doc_old", "jaccard")
+    )
+
+
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingestion dedup: which INCOMING documents near-dup an
     EXISTING document (MinHash-LSH candidates, exact-Jaccard verified)?
@@ -685,36 +711,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mapInArrow, so filtering the band keys would sign every doc twice
     inc_keys = _band_keys(ds.filter(incoming_pred))
     ex_keys = _band_keys(ds.filter(~incoming_pred))
-    cand = (
-        # the incoming batch is small BY CONTRACT, but gate the hint on
-        # an actual count anyway — this demo's batch is a corpus
-        # fraction, and a mis-sized batch should degrade to a shuffled
-        # probe of the index, not kill the driver
-        _bounded_broadcast(inc_keys.alias("i"))
-        .join(ex_keys.alias("e"), F.col("i.bk") == F.col("e.bk"))
-        .select(
-            F.col("i.doc_id").alias("doc_new"),
-            F.col("e.doc_id").alias("doc_old"),
-        )
-        .dropDuplicates(["doc_new", "doc_old"])
-    )
-    dn = ds.select(F.col("doc_id").alias("doc_new"), F.col("shingles").alias("shn"))
-    do = ds.select(F.col("doc_id").alias("doc_old"), F.col("shingles").alias("sho"))
-    inter = F.size(F.array_intersect("shn", "sho"))
-    jac = inter / (F.size("shn") + F.size("sho") - inter)
-    verified = (
-        _bounded_broadcast(cand)
-        .join(dn, "doc_new")
-        .join(do, "doc_old")
-        .select("doc_new", "doc_old", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_VERIFY)
-    )
-    w = Window.partitionBy("doc_new").orderBy(F.desc("jaccard"), F.asc("doc_old"))
-    return (
-        verified.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_new", "doc_old", "jaccard")
-    )
+    return _best_lsh_match(inc_keys, ex_keys, ds, ds)
 
 
 ORACLE_DEDUP_INCREMENTAL = f"""
@@ -789,35 +786,7 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     ex_keys = spark.read.parquet(base + "/bands")
     store = spark.read.parquet(base + "/shingles")
     inc = ds.filter(incoming_pred)
-    inc_keys = _band_keys(inc)
-    cand = (
-        _bounded_broadcast(inc_keys.alias("i"))
-        .join(ex_keys.alias("e"), F.col("i.bk") == F.col("e.bk"))
-        .select(
-            F.col("i.doc_id").alias("doc_new"),
-            F.col("e.doc_id").alias("doc_old"),
-        )
-        .dropDuplicates(["doc_new", "doc_old"])
-    )
-    dn = inc.select(F.col("doc_id").alias("doc_new"), F.col("shingles").alias("shn"))
-    do = store.select(
-        F.col("doc_id").alias("doc_old"), F.col("shingles").alias("sho")
-    )
-    inter = F.size(F.array_intersect("shn", "sho"))
-    jac = inter / (F.size("shn") + F.size("sho") - inter)
-    verified = (
-        _bounded_broadcast(cand)
-        .join(dn, "doc_new")
-        .join(do, "doc_old")
-        .select("doc_new", "doc_old", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_VERIFY)
-    )
-    w = Window.partitionBy("doc_new").orderBy(F.desc("jaccard"), F.asc("doc_old"))
-    return (
-        verified.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_new", "doc_old", "jaccard")
-    )
+    return _best_lsh_match(_band_keys(inc), ex_keys, inc, store)
 
 
 # ---------------------------------------------------------------------------
@@ -1692,11 +1661,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rollup cost is proportional to surviving PAIRS, not the corpus: two
     dimension-sized joins to fetch sources, one tiny aggregate."""
-    joined, _ = _shingle_intersections(spark, sf_dir)
-    jac = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
-    pairs = joined.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= JACCARD_VERIFY
-    )
+    pairs = q_dedup_ngram_jaccard(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("sa"))
     sb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("sb"))
@@ -1971,32 +1936,21 @@ def _with_messy_url(docs: DataFrame) -> DataFrame:
     prefixes, real subdomains, shuffled query params, tracking junk,
     fragments — the raw-crawl shape the canonicalizer exists for."""
     d = F.col("doc_id")
+    # host: per-source site, sometimes uppercased / www-prefixed / on a
+    # real subdomain (blog. survives canonicalization; the
+    # registrable-domain rollup still folds it into the site)
+    host = F.concat(
+        F.when(d % 2 == 0, F.lit("www.")).otherwise(F.lit("")),
+        F.when(d % 13 == 0, F.lit("blog.")).otherwise(F.lit("")),
+        F.col("source"),
+        F.when(d % 3 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
+    )
     return docs.withColumn(
         "url",
         F.concat(
             F.when(d % 5 == 0, F.lit("HTTPS")).otherwise(F.lit("https")),
             F.lit("://"),
-            # host: per-source site, sometimes uppercased / www-prefixed /
-            # on a real subdomain (blog. survives canonicalization; the
-            # registrable-domain rollup still folds it into the site)
-            F.when(
-                d % 7 == 0,
-                F.upper(
-                    F.concat(
-                        F.when(d % 2 == 0, F.lit("www.")).otherwise(F.lit("")),
-                        F.when(d % 13 == 0, F.lit("blog.")).otherwise(F.lit("")),
-                        F.col("source"),
-                        F.when(d % 3 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
-                    )
-                ),
-            ).otherwise(
-                F.concat(
-                    F.when(d % 2 == 0, F.lit("www.")).otherwise(F.lit("")),
-                    F.when(d % 13 == 0, F.lit("blog.")).otherwise(F.lit("")),
-                    F.col("source"),
-                    F.when(d % 3 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
-                )
-            ),
+            F.when(d % 7 == 0, F.upper(host)).otherwise(host),
             F.when(d % 11 == 0, F.lit(":443")).otherwise(F.lit("")),
             F.lit("/article/"),
             (d % 4).cast("string"),

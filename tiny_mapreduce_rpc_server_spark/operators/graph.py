@@ -575,6 +575,21 @@ PR_SCALE = 1_000_000_000_000
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as a ratio
 
 
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (sup, cus) supplier-customer pairs of lineitem⋈orders,
+    node ids prefixed "s"/"c" so the two sides never collide."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    return (
+        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
+        .select(
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("sup"),
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("cus"),
+        )
+        .distinct()
+    )
+
+
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the supplier<->customer trade graph (undirected:
     each distinct (supplier, customer) pair from lineitem⋈orders becomes
@@ -591,16 +606,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: ranks are fixed-point bigints (see PR_SCALE); integer
     floor-division remainders are dropped identically in both engines
     (values are non-negative, so DuckDB's // == Spark's div)."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    pairs = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("sup"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("cus"),
-        )
-        .distinct()
-    )
+    pairs = _trade_pairs(spark, sf_dir)
     edges = (
         pairs.select(F.col("sup").alias("src"), F.col("cus").alias("dst"))
         .union(pairs.select(F.col("cus").alias("src"), F.col("sup").alias("dst")))
@@ -791,16 +797,7 @@ def q_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget for; this is the query that finds them). Two hash aggregates,
     both partial-aggregated; output is bounded by the distinct degree
     values, not the node count."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    pairs = (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("sup"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("cus"),
-        )
-        .distinct()
-    )
+    pairs = _trade_pairs(spark, sf_dir)
     deg = (
         pairs.select(F.col("sup").alias("node"))
         .union(pairs.select(F.col("cus").alias("node")))
@@ -987,6 +984,60 @@ LPA_ROUNDS = 2  # unrolled so the oracle stays a static CTE chain
 LPA_MIN_CO = 2  # co-purchase weight threshold => sparse, meaningful edges
 
 
+def _co_purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) LPA edge list, both directions, localCheckpointed:
+    part pairs that co-occur in >= LPA_MIN_CO distinct orders."""
+    li = load_table(spark, sf_dir, "lineitem")
+    items = li.select("l_orderkey", "l_partkey").distinct()
+    pairs = (
+        items.alias("a")
+        .join(
+            items.alias("b"),
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(
+            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
+        )
+        .agg(F.count("*").alias("w"))
+        .filter(F.col("w") >= LPA_MIN_CO)
+        .select("src", "dst")
+    )
+    return pairs.union(
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint()
+
+
+def _neighbor_labels(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """(node, label): one vote per edge, the src's label cast to dst."""
+    return edges.join(labels.withColumnRenamed("node", "src"), "src").select(
+        F.col("dst").alias("node"), "label"
+    )
+
+
+def _vote_argmax(votes: DataFrame) -> DataFrame:
+    """(node, label) with the most (node, label) votes per node, ties to
+    the smallest label: ``min(struct(-cnt, label))`` is
+    partial-aggregable, so a hot node's reduce sees one row per distinct
+    label, never one per vote."""
+    counts = votes.groupBy("node", "label").agg(F.count("*").alias("cnt"))
+    return counts.groupBy("node").agg(
+        F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("label").alias("label")))[
+            "label"
+        ].alias("label")
+    )
+
+
+def _communities(labels: DataFrame) -> DataFrame:
+    """One row per community of a (node, label) labeling: its size and
+    its smallest and largest member."""
+    return labels.groupBy(F.col("label").alias("community")).agg(
+        F.count("*").alias("n_members"),
+        F.min("node").alias("min_member"),
+        F.max("node").alias("max_member"),
+    )
+
+
 def q_graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label-propagation community detection (LPA, Raghavan
     et al. 2007) over the part co-purchase graph — the corpus-curation
@@ -1015,43 +1066,13 @@ def q_graph_community_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference counterpart (SURVEY §2.11 — [EXT]).
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        items.alias("a")
-        .join(
-            items.alias("b"),
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= LPA_MIN_CO)
-        .select("src", "dst")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = _co_purchase_edges(spark, sf_dir)
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
     for _ in range(LPA_ROUNDS):
-        nb = edges.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).select(F.col("dst").alias("node"), "label")
-        counts = nb.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-        labels = counts.groupBy("node").agg(
-            F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("label").alias("label")))[
-                "label"
-            ].alias("label")
-        )
-    return labels.groupBy(F.col("label").alias("community")).agg(
-        F.count("*").alias("n_members"),
-        F.min("node").alias("min_member"),
-        F.max("node").alias("max_member"),
-    )
+        labels = _vote_argmax(_neighbor_labels(edges, labels))
+    return _communities(labels)
 
 
 def _sql_lpa_round(prev: str, out: str) -> str:
@@ -1103,17 +1124,7 @@ def _lpa_selfvote_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
     frequent label among its neighbors PLUS ITS OWN current label (one
     self-vote), ties to the smallest label. Same hot-key-safe
     ``min(struct(-cnt, label))`` argmax as ``q_graph_community_lpa``."""
-    nb = edges.join(labels.withColumnRenamed("node", "src"), "src").select(
-        F.col("dst").alias("node"), "label"
-    )
-    counts = nb.union(labels).groupBy("node", "label").agg(
-        F.count("*").alias("cnt")
-    )
-    return counts.groupBy("node").agg(
-        F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("label").alias("label")))[
-            "label"
-        ].alias("label")
-    )
+    return _vote_argmax(_neighbor_labels(edges, labels).union(labels))
 
 
 def q_graph_community_lpa_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1145,25 +1156,7 @@ def q_graph_community_lpa_converged(spark: SparkSession, sf_dir: str) -> DataFra
     scan); rounds are data-independent in the probe range, and the
     convergence count rides the same job as the round's checkpoint.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        items.alias("a")
-        .join(
-            items.alias("b"),
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
-        )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= LPA_MIN_CO)
-        .select("src", "dst")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = _co_purchase_edges(spark, sf_dir)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -1171,11 +1164,7 @@ def q_graph_community_lpa_converged(spark: SparkSession, sf_dir: str) -> DataFra
         .localCheckpoint()
     )
     labels, _ = _lpa_selfvote_converge(edges, labels, LPA_CONV_MAX)
-    return labels.groupBy(F.col("label").alias("community")).agg(
-        F.count("*").alias("n_members"),
-        F.min("node").alias("min_member"),
-        F.max("node").alias("max_member"),
-    )
+    return _communities(labels)
 
 
 def _lpa_selfvote_converge(

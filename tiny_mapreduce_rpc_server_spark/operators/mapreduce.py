@@ -95,12 +95,11 @@ class MapReduceEngine:
         # and hands its records to the map in the same Python worker. Not
         # a linefile DataSource scan: that costs planner processes per
         # path, an Arrow hop into the JVM and a second Python worker.
-        readers = [LineFileReader({"path": p}) for p in paths]
-        splits = [s for r in readers for s in r.partitions()]
-        # read() takes everything it needs from the split it is given
-        records = self.spark.sparkContext.parallelize(splits, len(splits)).flatMap(
-            readers[0].read
-        )
+        splits = [s for p in paths for s in LineFileReader({"path": p}).partitions()]
+        # an empty path list plans no splits: run one empty partition
+        records = self.spark.sparkContext.parallelize(
+            splits, max(len(splits), 1)
+        ).flatMap(LineFileReader.read)
 
         if flat_map:
             kv = records.flatMap(lambda t: map_fn(t[0], t[1]))

@@ -384,6 +384,20 @@ def audio_decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         )
 
 
+def _audio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, payload): one synthetic WAV per doc, its sample count n
+    and waveform slope k derived from the text hash — the (doc_id, n, k)
+    closed form every audio oracle states."""
+    docs = spread(load_table(spark, sf_dir, "documents"))
+    h = P.h1(F.col("text"))
+    src = docs.select(
+        "doc_id",
+        (h % 4000 + 100).cast("int").alias("n"),
+        (h % 97 + 1).cast("int").alias("k"),
+    )
+    return src.mapInPandas(audio_encode_batch, _AUDIO_ENCODE_SCHEMA)
+
+
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio pipeline over binary payloads: synthesize a real 16-bit
     mono PCM WAV per document (length and waveform slope hash-derived),
@@ -396,15 +410,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked end-to-end, not just for shape. Real codecs (mp3/flac)
     would slot into the decode worker unchanged; PCM keeps the
     container dependency-free."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    h = P.h1(F.col("text"))
-    src = docs.select(
-        "doc_id",
-        (h % 4000 + 100).cast("int").alias("n"),
-        (h % 97 + 1).cast("int").alias("k"),
-    )
-    audio = src.mapInPandas(audio_encode_batch, _AUDIO_ENCODE_SCHEMA)
-    return audio.mapInPandas(audio_decode_batch, _AUDIO_DECODE_SCHEMA)
+    return _audio(spark, sf_dir).mapInPandas(audio_decode_batch, _AUDIO_DECODE_SCHEMA)
 
 
 ORACLE_MULTIMODAL_AUDIO = f"""
@@ -737,15 +743,7 @@ def q_multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFram
     integer cross-multiplication, and the oracle recomputes it
     closed-form from the generating (n, k) waveform, so a pass proves
     the PCM decode and the windowing geometry end to end."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    h = P.h1(F.col("text"))
-    src = docs.select(
-        "doc_id",
-        (h % 4000 + 100).cast("int").alias("n"),
-        (h % 97 + 1).cast("int").alias("k"),
-    )
-    audio = src.mapInPandas(audio_encode_batch, _AUDIO_ENCODE_SCHEMA)
-    fp = audio.mapInPandas(audio_fp_batch, _AFP_SCHEMA)
+    fp = _audio(spark, sf_dir).mapInPandas(audio_fp_batch, _AFP_SCHEMA)
     return fp.groupBy("sig").agg(
         F.count("*").alias("n_clips"),
         F.min("doc_id").alias("canonical_doc"),

@@ -141,8 +141,6 @@ ORDER BY source
 # temperature-scaled domain mixing
 # ---------------------------------------------------------------------------
 
-_MIX_ALPHA_SQRT = True  # rate ∝ sqrt(min_count / count): upweights small sources
-
 
 def temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain mixing for pretraining: downsample large sources toward a

@@ -35,14 +35,9 @@ from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 # ---------------------------------------------------------------------------
 
 
-def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For every event, the most recent order (o_orderdate <= event ts)
-    of the same user, ties broken by max orderkey.
-
-    Union-merge as-of: orders sort before events at equal timestamps
-    (tag 0 < 1) so an order placed exactly at the event time matches;
-    ``last(..., ignorenulls)`` over the running window carries the
-    latest order's date/key forward to each event row."""
+def _orders_and_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The union-merge as-of input: orders (tag 0, okey set) and events
+    (tag 1, event_id set) as one (uid, ts, tag, okey, event_id) frame."""
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("uid"),
         F.col("o_orderdate").alias("ts"),
@@ -57,12 +52,23 @@ def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("bigint").alias("okey"),
         F.col("event_id"),
     )
+    return orders.unionByName(events)
+
+
+def asof_join_last_order(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For every event, the most recent order (o_orderdate <= event ts)
+    of the same user, ties broken by max orderkey.
+
+    Union-merge as-of: orders sort before events at equal timestamps
+    (tag 0 < 1) so an order placed exactly at the event time matches;
+    ``last(..., ignorenulls)`` over the running window carries the
+    latest order's date/key forward to each event row."""
     w = (
         Window.partitionBy("uid")
         .orderBy("ts", "tag", "okey")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    merged = orders.unionByName(events).select(
+    merged = _orders_and_events(spark, sf_dir).select(
         "uid",
         "ts",
         "tag",
@@ -132,22 +138,8 @@ def asof_join_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered oracle is ORACLE_ASOF itself — the equivalence is the
     contract, and tests/test_plans pins the (uid, slice) partitioning
     so the guard cannot silently regress to the skew-prone shape."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("uid"),
-        F.col("o_orderdate").alias("ts"),
-        F.lit(0).alias("tag"),
-        F.col("o_orderkey").alias("okey"),
-        F.lit(None).cast("bigint").alias("event_id"),
-    )
-    events = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").alias("uid"),
-        F.col("ts"),
-        F.lit(1).alias("tag"),
-        F.lit(None).cast("bigint").alias("okey"),
-        F.col("event_id"),
-    )
     slice_col = F.floor(ntz_epoch_s(F.col("ts")) / F.lit(ASOF_SLICE_SECONDS))
-    merged = orders.unionByName(events).withColumn("slice", slice_col)
+    merged = _orders_and_events(spark, sf_dir).withColumn("slice", slice_col)
 
     w_in = (
         Window.partitionBy("uid", "slice")
@@ -481,26 +473,12 @@ def asof_join_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``first(..., ignorenulls)`` over (current row, unbounded following)
     picks the earliest qualifying order, min-key at that date.
     """
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("uid"),
-        F.col("o_orderdate").alias("ts"),
-        F.lit(0).alias("tag"),
-        F.col("o_orderkey").alias("okey"),
-        F.lit(None).cast("bigint").alias("event_id"),
-    )
-    events = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").alias("uid"),
-        F.col("ts"),
-        F.lit(1).alias("tag"),
-        F.lit(None).cast("bigint").alias("okey"),
-        F.col("event_id"),
-    )
     w = (
         Window.partitionBy("uid")
         .orderBy(F.asc("ts"), F.desc("tag"), F.asc("okey"))
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    merged = orders.unionByName(events).select(
+    merged = _orders_and_events(spark, sf_dir).select(
         "uid",
         "ts",
         "tag",

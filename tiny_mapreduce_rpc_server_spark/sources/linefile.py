@@ -79,14 +79,19 @@ class LineFileReader(DataSourceReader):
             while off < size:
                 out.append(_ByteRangeSplit(f, off, min(self.split_size, size - off)))
                 off += self.split_size
-        # zero-byte inputs still need one (empty) partition for a valid scan
-        return out or [_ByteRangeSplit(self._files()[0], 0, 0)]
+        # an input with no data bytes (zero-byte files, or a directory
+        # holding only _SUCCESS, dot- or .tmp files) still needs one
+        # partition for a valid scan: an empty range, which reads nothing
+        return out or [_ByteRangeSplit(self.path, 0, 0)]
 
-    def read(self, part: _ByteRangeSplit):
+    @staticmethod
+    def read(part: _ByteRangeSplit):
         """Record reader with the straddle rule (LineRecordReader.h:44-62):
         skip the first partial line unless offset==0; keep reading one
         line past the split end so the line that *starts* inside this
         split is fully consumed here and nowhere else."""
+        if part.length == 0:
+            return
         end = part.start + part.length
         with open(part.path, "rb") as fh:
             pos = part.start

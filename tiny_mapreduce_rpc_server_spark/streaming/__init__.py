@@ -48,6 +48,69 @@ def _replay_batches(tag: str, batches: list[DataFrame]) -> str:
     return stream_dir
 
 
+def _replay_two_batches(
+    spark: SparkSession, sf_dir: str, tag: str, *cols: str
+) -> DataFrame:
+    """A file stream of the events table's ``cols`` plus ``ts`` (as an
+    instant), replayed in two microbatches: every event but the globally
+    latest, then the latest alone. The second batch advances the
+    watermark to max(ts) - 10min, so state whose horizon lies before it
+    is evicted and emitted."""
+    import os
+
+    from tiny_mapreduce_rpc_server_spark.sources import load_table
+
+    sf = os.path.basename(os.path.normpath(sf_dir))
+    ev = load_table(spark, sf_dir, "events").select(
+        *cols, ntz_as_instant("ts").alias("ts")
+    )
+    latest = ev.orderBy(F.desc("ts"), F.desc("event_id")).limit(1).collect()[0]
+    stream_dir = _replay_batches(
+        f"{tag}_{sf}",
+        [
+            ev.filter(F.col("event_id") != latest["event_id"]),
+            ev.filter(F.col("event_id") == latest["event_id"]),
+        ],
+    )
+    return (
+        spark.readStream.schema(", ".join(f"{c} {t}" for c, t in ev.dtypes))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stream_dir)
+    )
+
+
+def _click_view_join(click_src: DataFrame, view_src: DataFrame, how: str) -> DataFrame:
+    """Stream-stream ``how`` join of the clicks in ``click_src`` to the
+    views in ``view_src`` by the same user within the 10 minutes after
+    the click, both sides watermarked at 10 minutes. Columns: user_id,
+    click_id, click_ts, v_user_id, view_id, view_ts."""
+    clicks = (
+        click_src.filter(F.col("event_type") == "click")
+        .select(
+            "user_id",
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", "10 minutes")
+    )
+    views = (
+        view_src.filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user_id"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("view_ts"),
+        )
+        .withWatermark("view_ts", "10 minutes")
+    )
+    return clicks.join(
+        views,
+        (F.col("user_id") == F.col("v_user_id"))
+        & (F.col("view_ts") >= F.col("click_ts"))
+        & (F.col("view_ts") <= F.col("click_ts") + F.expr("INTERVAL 10 MINUTES")),
+        how,
+    )
+
+
 def _memory_sink(df: DataFrame, mode: str, tag: str) -> DataFrame:
     """Drive a streaming DataFrame to completion into a fresh memory
     sink and return the sink's table."""
@@ -450,31 +513,8 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the engine can discard a click once no view within its 10-minute
     horizon can still arrive. Output rows are (finalized) exact pairs, so
     the batch join is the oracle."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "10 minutes")
-    )
-    pairs = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") >= F.col("click_ts"))
-        & (F.col("view_ts") <= F.col("click_ts") + F.expr("INTERVAL 10 MINUTES")),
+    pairs = _click_view_join(
+        read_events_stream(spark, sf_dir), read_events_stream(spark, sf_dir), "inner"
     ).select(
         "user_id",
         "click_id",
@@ -521,55 +561,10 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a regression. Matched pairs are watermark-independent and always
     the batch inner join.
     """
-    import os
-
-    from tiny_mapreduce_rpc_server_spark.sources import load_table
-
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", ntz_as_instant("ts").alias("ts")
+    stream = _replay_two_batches(
+        spark, sf_dir, "ojoin", "event_id", "user_id", "event_type"
     )
-    latest = ev.orderBy(F.desc("ts"), F.desc("event_id")).limit(1).collect()[0]
-    stream_dir = _replay_batches(
-        f"ojoin_{sf}",
-        [
-            ev.filter(F.col("event_id") != latest["event_id"]),
-            ev.filter(F.col("event_id") == latest["event_id"]),
-        ],
-    )
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    views = (
-        stream.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "10 minutes")
-    )
-    pairs = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") >= F.col("click_ts"))
-        & (F.col("view_ts") <= F.col("click_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_outer",
-    ).select(
+    pairs = _click_view_join(stream, stream, "left_outer").select(
         "user_id",
         "click_id",
         "view_id",
@@ -622,54 +617,10 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-click rows for click_ts + 10min < wmF; null-view rows for
     view_ts < wmF; matched pairs are the batch inner join.
     """
-    import os
-
-    from tiny_mapreduce_rpc_server_spark.sources import load_table
-
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", ntz_as_instant("ts").alias("ts")
+    stream = _replay_two_batches(
+        spark, sf_dir, "fojoin", "event_id", "user_id", "event_type"
     )
-    latest = ev.orderBy(F.desc("ts"), F.desc("event_id")).limit(1).collect()[0]
-    stream_dir = _replay_batches(
-        f"fojoin_{sf}",
-        [
-            ev.filter(F.col("event_id") != latest["event_id"]),
-            ev.filter(F.col("event_id") == latest["event_id"]),
-        ],
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "10 minutes")
-    )
-    views = (
-        stream.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user_id"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "10 minutes")
-    )
-    pairs = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") >= F.col("click_ts"))
-        & (F.col("view_ts") <= F.col("click_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "full_outer",
-    ).select(
+    pairs = _click_view_join(stream, stream, "full_outer").select(
         F.coalesce("user_id", "v_user_id").alias("user_id"),
         "click_id",
         "view_id",
@@ -744,27 +695,7 @@ def q_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     CAVEAT (same class as q_streaming_late_data): the <=-at-the-boundary
     is engine behavior verified on this Spark; re-derive on upgrade.
     """
-    import os
-
-    from tiny_mapreduce_rpc_server_spark.sources import load_table
-
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", ntz_as_instant("ts").alias("ts")
-    )
-    latest = ev.orderBy(F.desc("ts"), F.desc("event_id")).limit(1).collect()[0]
-    stream_dir = _replay_batches(
-        f"chain_{sf}",
-        [
-            ev.filter(F.col("event_id") != latest["event_id"]),
-            ev.filter(F.col("event_id") == latest["event_id"]),
-        ],
-    )
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stream_dir)
-    )
+    stream = _replay_two_batches(spark, sf_dir, "chain", "event_id", "event_type")
     c15 = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes"), "event_type")
