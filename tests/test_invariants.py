@@ -191,7 +191,8 @@ def test_cc_local_near_gate_graph(spark):
 def test_bpe_local_matches_distributed_loop(spark, monkeypatch):
     """r12: the single-task greedy BPE kernel (incremental pair counts)
     must produce the identical merge table AND final vocab accounting as
-    the distributed per-round argmax loop — same counts, same
+    the distributed pair-delta loop (``_bpe_train``, forced through the
+    gate and run directly by ``bpe_train_scaled``) — same counts, same
     (count DESC, lhs, rhs) tie-breaks, same left-to-right replace."""
     import tiny_mapreduce_rpc_server_spark.operators.chunking as C
 
@@ -202,6 +203,7 @@ def test_bpe_local_matches_distributed_loop(spark, monkeypatch):
 
     new_m = merges(C.q_bpe_train_merges(spark, sf))
     new_e = C.q_bpe_encode(spark, sf).collect()
+    assert merges(C.q_bpe_train_scaled(spark, sf)) == new_m
     monkeypatch.setattr(C, "BPE_LOCAL_MAX_TYPES", -1)  # force the loop
     assert merges(C.q_bpe_train_merges(spark, sf)) == new_m
     assert C.q_bpe_encode(spark, sf).collect() == new_e

@@ -786,91 +786,77 @@ ANALYTIC_QUERIES = [
         "session_features",
         q_session_features,
         ORACLE_SESSION_FEATURES,
-        ("ext", "sequence", "behavioral", "session"),
     ),
     QuerySpec(
         "user_event_sequences",
         q_user_event_sequences,
         ORACLE_USER_EVENT_SEQUENCES,
-        ("ext", "sequence", "behavioral"),
     ),
     QuerySpec(
         "item_cooccurrence",
         q_item_cooccurrence,
         ORACLE_ITEM_COOCCURRENCE,
-        ("ext", "analytics", "basket"),
     ),
     QuerySpec(
         "array_set_ops",
         q_array_set_ops,
         ORACLE_ARRAY_SET_OPS,
-        ("array", "setop"),
     ),
     QuerySpec(
         "conditional_aggs",
         q_conditional_aggs,
         ORACLE_CONDITIONAL_AGGS,
-        ("agg", "conditional"),
     ),
     QuerySpec(
         "window_value_funcs",
         q_window_value_funcs,
         ORACLE_WINDOW_VALUE_FUNCS,
-        ("window",),
     ),
     QuerySpec(
         "window_rank_stats",
         q_window_rank_stats,
         ORACLE_WINDOW_RANK_STATS,
-        ("window",),
     ),
-    QuerySpec("unpivot", q_unpivot, ORACLE_UNPIVOT, ("reshape",)),
-    QuerySpec("array_funcs", q_array_funcs, ORACLE_ARRAY_FUNCS, ("array",)),
+    QuerySpec("unpivot", q_unpivot, ORACLE_UNPIVOT),
+    QuerySpec("array_funcs", q_array_funcs, ORACLE_ARRAY_FUNCS),
     QuerySpec(
         "higher_order_funcs",
         q_higher_order_funcs,
         ORACLE_HIGHER_ORDER_FUNCS,
-        ("array", "lambda"),
     ),
-    QuerySpec("map_funcs", q_map_funcs, ORACLE_MAP_FUNCS, ("map",)),
+    QuerySpec("map_funcs", q_map_funcs, ORACLE_MAP_FUNCS),
     QuerySpec(
         "window_lag_lead",
         q_window_lag_lead,
         ORACLE_WINDOW_LAG_LEAD,
-        ("window",),
     ),
     QuerySpec(
-        "ntile_buckets", q_ntile_buckets, ORACLE_NTILE_BUCKETS, ("window",)
+        "ntile_buckets", q_ntile_buckets, ORACLE_NTILE_BUCKETS
     ),
     QuerySpec(
         "grouping_sets",
         q_grouping_sets,
         ORACLE_GROUPING_SETS,
-        ("agg", "grouping"),
     ),
     QuerySpec(
         "event_funnel",
         q_event_funnel,
         ORACLE_EVENT_FUNNEL,
-        ("events", "analytics", "funnel"),
     ),
     QuerySpec(
         "funnel_time_to_convert",
         q_funnel_time_to_convert,
         ORACLE_FUNNEL_TIME_TO_CONVERT,
-        ("events", "analytics", "funnel", "quantile"),
     ),
     QuerySpec(
         "retention_cohorts",
         q_retention_cohorts,
         ORACLE_RETENTION_COHORTS,
-        ("events", "analytics", "retention"),
     ),
     QuerySpec(
         "event_transitions",
         q_event_transitions,
         ORACLE_EVENT_TRANSITIONS,
-        ("events", "analytics", "markov"),
     ),
 ]
 
@@ -932,7 +918,6 @@ ANALYTIC_QUERIES.append(
         "event_motifs",
         q_event_motifs,
         ORACLE_EVENT_MOTIFS,
-        ("ext", "sequence", "behavioral", "topk"),
     )
 )
 
@@ -1030,7 +1015,6 @@ ANALYTIC_QUERIES.append(
         "rfm_segmentation",
         q_rfm_segmentation,
         _oracle_rfm(),
-        ("ext", "segmentation", "quantile"),
     )
 )
 
@@ -1089,7 +1073,6 @@ ANALYTIC_QUERIES.append(
         "seasonality_profile",
         q_seasonality_profile,
         ORACLE_SEASONALITY,
-        ("ext", "temporal", "profile"),
     )
 )
 
@@ -1170,6 +1153,5 @@ ANALYTIC_QUERIES.append(
         "pareto_report",
         q_pareto_report,
         ORACLE_PARETO,
-        ("ext", "concentration", "profile"),
     )
 )

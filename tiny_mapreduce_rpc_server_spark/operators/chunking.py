@@ -136,8 +136,6 @@ LIMIT {BPE_TOP_PAIRS}
 # Number of BPE merge rounds trained by q_bpe_train_merges. Fixed and
 # small so the oracle can unroll the same loop as chained CTEs.
 BPE_MERGE_ROUNDS = 6
-# lineage-truncation cadence for the merge loop (see _bpe_train)
-_BPE_CHECKPOINT_EVERY = 4
 
 # Single-task trainer gate (r12, same pattern as graph.CC_LOCAL_MAX_EDGES):
 # below this many word TYPES the whole greedy merge loop runs as ONE
@@ -145,12 +143,13 @@ _BPE_CHECKPOINT_EVERY = 4
 # driver-round argmax jobs — the per-round scheduler floor (~0.3-0.4 s)
 # dominated the benched trainer, whose type table is thousands of rows.
 # The kernel maintains pair counts INCREMENTALLY (retract/re-add only the
-# words containing the merged pair — the same delta rule bpe_train_scaled
-# proves equal to full recount), so its cost is ~1.3x one counting pass
-# over the type table; at the gate that is a few hundred ms and well
-# under the distributed loop's 6-round scheduler cost. Above the gate —
-# real-corpus vocabularies are word TYPES, which can reach tens of
-# millions — the distributed loop below is unchanged.
+# words containing the merged pair — the same delta rule as the
+# distributed _bpe_train, which bpe_train_scaled proves equal to full
+# recount), so its cost is ~1.3x one counting pass over the type table;
+# at the gate that is a few hundred ms and well under the distributed
+# loop's 6-round scheduler cost. Above the gate — real-corpus
+# vocabularies are word TYPES, which can reach tens of millions — the
+# distributed loop (_bpe_train) runs.
 BPE_LOCAL_MAX_TYPES = 200_000
 
 # Symbol-boundary markers for the merge-string representation. A word is
@@ -160,6 +159,11 @@ BPE_LOCAL_MAX_TYPES = 200_000
 # the greedy merge rule BPE trainers use (for "a a a", one merge of (a,a)
 # yields [aa, a], not [aa, aa]).
 _BPE_L, _BPE_R = "[", "]"
+
+# the merge table every trainer returns, one row per merge step
+_BPE_MERGES_SCHEMA = (
+    "step int, lhs string, rhs string, merged string, pair_count bigint"
+)
 
 
 def _bpe_word_freq(spark: SparkSession, sf_dir: str):
@@ -254,11 +258,7 @@ def _bpe_train_local(vocab: DataFrame, mode: str) -> DataFrame:
         else:
             yield pd.DataFrame({"w": ws, "s": ss, "cnt": cs})
 
-    schema = (
-        "step int, lhs string, rhs string, merged string, pair_count bigint"
-        if mode == "merges"
-        else "w string, s string, cnt bigint"
-    )
+    schema = _BPE_MERGES_SCHEMA if mode == "merges" else "w string, s string, cnt bigint"
     return vocab.coalesce(1).mapInPandas(kernel, schema)
 
 
@@ -275,12 +275,10 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
       as one executor-side kernel (``_bpe_train_local``) — one job
       instead of one argmax job per round; the gate count reads the
       partitions the localCheckpoint just materialized.
-    - Above the gate, each round is a single partial/final hash
-      aggregation over the adjacent-symbol pairs of the type table (key
-      space bounded by |vocab|^2 but in practice tiny), and the argmax
-      winner — an aggregated SCALAR, like a k-means loss — is collected
-      and folded into the next round's plan as literals, keeping the
-      per-round lineage linear instead of exponentially branching.
+    - Above the gate the distributed pair-delta loop (``_bpe_train``)
+      runs: the argmax winner of a maintained pair-count table — an
+      aggregated SCALAR, like a k-means loss — is collected each round
+      and folded into the next round's plan as literals.
     - Ties break on (count DESC, lhs ASC, rhs ASC) so training is fully
       deterministic; counts are exact integers. Both paths implement
       exactly this rule (same oracle).
@@ -291,16 +289,16 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     if wf.count() <= BPE_LOCAL_MAX_TYPES:
         return _bpe_train_local(_bpe_vocab0(wf), "merges")
     _, merges = _bpe_train(wf)
-    return spark.createDataFrame(
-        merges, "step int, lhs string, rhs string, merged string, pair_count bigint"
-    )
+    return spark.createDataFrame(merges, _BPE_MERGES_SCHEMA)
 
 
-def _bpe_adjacent_pairs(df: DataFrame) -> DataFrame:
-    """(p, cnt) with one row per adjacent symbol pair p = (lhs, rhs) of
-    every word in a (s, cnt) symbol table that has two or more symbols."""
+def _bpe_pairs_weighted(df: DataFrame, sign: int = 1):
+    """(lhs, rhs, total) adjacent-symbol pair counts of a (s, cnt)
+    symbol table, weighted by ``sign * cnt`` — the building block of the
+    pair-delta trainer (negative sign retracts a word's old pairs). Words
+    of one symbol have no pair."""
     sym = F.split(F.expr("substring(s, 2, length(s) - 2)"), r"\]\[")
-    return df.where(F.size(sym) >= 2).select(
+    pairs = df.where(F.size(sym) >= 2).select(
         F.explode(
             F.transform(
                 F.sequence(F.lit(1), F.size(sym) - 1),
@@ -312,133 +310,89 @@ def _bpe_adjacent_pairs(df: DataFrame) -> DataFrame:
         ).alias("p"),
         "cnt",
     )
+    return pairs.groupBy("p.lhs", "p.rhs").agg(
+        F.sum(F.col("cnt") * F.lit(sign)).alias("total")
+    )
 
 
 def _bpe_train(wf: DataFrame):
-    """Run the merge loop over a cached (w, cnt) table. Returns the final
-    vocab DataFrame (w, s, cnt) and the merge list."""
-    vocab = wf.select(
-        "w",
-        F.regexp_replace("w", "(.)", f"{_BPE_L}$1{_BPE_R}").alias("s"),
-        "cnt",
-    )
-    merges: list[tuple[int, str, str, str, int]] = []
-    for step in range(1, BPE_MERGE_ROUNDS + 1):
-        pairs = (
-            _bpe_adjacent_pairs(vocab)
-            .groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("cnt").alias("total"))
-        )
-        win = pairs.orderBy(F.desc("total"), "lhs", "rhs").limit(1).collect()
-        if not win:
-            break
-        lhs, rhs, total = win[0]["lhs"], win[0]["rhs"], win[0]["total"]
-        merges.append((step, lhs, rhs, lhs + rhs, int(total)))
-        vocab = vocab.withColumn(
-            "s",
-            F.replace(
-                F.col("s"),
-                F.lit(f"{_BPE_L}{lhs}{_BPE_R}{_BPE_L}{rhs}{_BPE_R}"),
-                F.lit(f"{_BPE_L}{lhs}{rhs}{_BPE_R}"),
-            ),
-        )
-        # truncate lineage every few merges: without this, step k's job
-        # replays all k-1 prior replace()s over the word-type table, so
-        # per-step cost grows linearly and a real tokenizer run (10k+
-        # merges) becomes quadratic. Lazy (eager=False) so the
-        # materialization rides the NEXT round's pair-count job instead
-        # of spending a dedicated job per checkpoint.
-        if step % _BPE_CHECKPOINT_EVERY == 0:
-            vocab = vocab.localCheckpoint(eager=False)
-    return vocab, merges
+    """The distributed merge loop over a (w, cnt) word-type table, with
+    INCREMENTAL pair counts. Returns the final vocab DataFrame (w, s,
+    cnt) and the merge list.
 
+    The (lhs, rhs, total) pair-count table is maintained across rounds
+    (Sennrich et al.'s incremental counting, the shape HF tokenizers use
+    in RAM — here a distributed table):
 
-def _bpe_pairs_weighted(df: DataFrame, sign: int = 1):
-    """(lhs, rhs, total) adjacent-symbol pair counts of a (s, cnt)
-    symbol table, weighted by ``sign * cnt`` — the building block of the
-    pair-delta trainer (negative sign retracts a word's old pairs)."""
-    return (
-        _bpe_adjacent_pairs(df)
-        .groupBy("p.lhs", "p.rhs")
-        .agg(F.sum(F.col("cnt") * F.lit(sign)).alias("total"))
-    )
-
-
-def q_bpe_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE training with INCREMENTAL pair counts — the pair-delta
-    algorithm ``q_bpe_train_merges``'s docstring points to as the
-    requirement for real (10k+ merge) runs, now executable and proven
-    equal: same output contract, same oracle, so the hash comparison
-    certifies delta == full recount.
-
-    Per merge round the full-recount trainer re-aggregates the adjacent
-    pairs of EVERY word type (cost ~ total symbol volume x merges). This
-    trainer maintains the (lhs, rhs, total) pair-count table across
-    rounds instead (Sennrich et al.'s incremental counting, the shape HF
-    tokenizers use in RAM — here a pinned distributed table):
-
-    - round N's aggregation touches only the AFFECTED word types (those
-      whose symbol string contains the merged pair) — retract their old
-      pairs with negative weights, add their new pairs positively, fold
-      into the running table (union + partial-agg + positive filter);
+    - each round's aggregation touches only the AFFECTED word types
+      (those whose symbol string contains the merged pair) — retract
+      their old pairs with negative weights, add their new pairs
+      positively, fold into the running table (union + partial-agg +
+      positive filter);
     - the argmax winner is a 1-row collect over the pair table, which is
       vocabulary-sized, never corpus- or type-table-sized;
     - per-round localCheckpoint keeps both the pair table's and the
       vocab's lineage O(1) deep (without it, round k replays rounds
       1..k-1 — the same trap as the CC loop).
 
-    Aggregate cost over a full training run is O(total pair-delta
-    volume) ~= O(initial symbol volume), vs O(merges x symbol volume)
-    for recount — the difference between quadratic and near-linear for a
-    10k-merge tokenizer. Measured honestly at the sf1* replica (310
-    word types — a synthetic-vocab fixture): WALL-CLOCK is equal (a
-    48-merge run: 23.4 s recount vs 24.0 s delta; both are
-    scheduler-round-bound at this tiny type-table size), but the
-    per-round aggregation VOLUME — the term that grows with a real
-    corpus — shrinks from 100% of types per round to the affected
-    fraction: 16% at round 1, 6% at round 12, 3% at round 24+. The
-    48-merge tables were verified identical between the two trainers.
     Exactness: deltas recount the affected words' WHOLE strings (not
     local edits), so the maintained table equals the from-scratch
-    aggregation after every round, integer-exact, identical
-    tie-breaks."""
+    aggregation after every round, integer-exact, identical tie-breaks
+    (count DESC, lhs ASC, rhs ASC)."""
+    vocab = _bpe_vocab0(wf).localCheckpoint(eager=False)
+    pc = _bpe_pairs_weighted(vocab).localCheckpoint(eager=False)
+    merges: list[tuple[int, str, str, str, int]] = []
+    for step in range(1, BPE_MERGE_ROUNDS + 1):
+        win = pc.orderBy(F.desc("total"), "lhs", "rhs").limit(1).collect()
+        if not win:
+            break
+        lhs, rhs, total = win[0]["lhs"], win[0]["rhs"], win[0]["total"]
+        merges.append((step, lhs, rhs, lhs + rhs, int(total)))
+        pat = F.lit(f"{_BPE_L}{lhs}{_BPE_R}{_BPE_L}{rhs}{_BPE_R}")
+        rep = F.lit(f"{_BPE_L}{lhs}{rhs}{_BPE_R}")
+        affected = vocab.where(
+            F.col("s").contains(f"{_BPE_L}{lhs}{_BPE_R}{_BPE_L}{rhs}{_BPE_R}")
+        )
+        new_aff = affected.withColumn("s", F.replace(F.col("s"), pat, rep))
+        deltas = _bpe_pairs_weighted(affected, -1).unionByName(
+            _bpe_pairs_weighted(new_aff, 1)
+        )
+        pc = (
+            pc.unionByName(deltas)
+            .groupBy("lhs", "rhs")
+            .agg(F.sum("total").alias("total"))
+            .where(F.col("total") > 0)
+            .localCheckpoint(eager=False)
+        )
+        vocab = vocab.withColumn(
+            "s", F.replace(F.col("s"), pat, rep)
+        ).localCheckpoint(eager=False)
+    return vocab, merges
+
+
+def q_bpe_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE training by the distributed pair-delta loop (``_bpe_train``)
+    at every corpus size — the trainer real (10k+ merge) runs need, run
+    here without ``q_bpe_train_merges``'s single-task gate. Same output
+    contract, same oracle (an unrolled full recount per round), so the
+    hash comparison certifies delta == full recount.
+
+    A full recount re-aggregates the adjacent pairs of EVERY word type
+    per round (cost ~ total symbol volume x merges); the delta loop's
+    aggregate cost over a run is O(total pair-delta volume) ~= O(initial
+    symbol volume) — the difference between quadratic and near-linear
+    for a 10k-merge tokenizer. Measured at the sf1* replica (310 word
+    types — a synthetic-vocab fixture) against a per-round recount:
+    WALL-CLOCK is equal (a 48-merge run: 23.4 s recount vs 24.0 s delta;
+    both are scheduler-round-bound at this tiny type-table size), but
+    the per-round aggregation VOLUME — the term that grows with a real
+    corpus — shrinks from 100% of types per round to the affected
+    fraction: 16% at round 1, 6% at round 12, 3% at round 24+. The
+    48-merge tables were identical."""
     wf = _bpe_word_freq(spark, sf_dir).cache()
     try:
-        vocab = wf.select(
-            "w",
-            F.regexp_replace("w", "(.)", f"{_BPE_L}$1{_BPE_R}").alias("s"),
-            "cnt",
-        ).localCheckpoint(eager=False)
-        pc = _bpe_pairs_weighted(vocab).localCheckpoint(eager=False)
-        merges: list[tuple[int, str, str, str, int]] = []
-        for step in range(1, BPE_MERGE_ROUNDS + 1):
-            win = pc.orderBy(F.desc("total"), "lhs", "rhs").limit(1).collect()
-            if not win:
-                break
-            lhs, rhs, total = win[0]["lhs"], win[0]["rhs"], win[0]["total"]
-            merges.append((step, lhs, rhs, lhs + rhs, int(total)))
-            pat = F.lit(f"{_BPE_L}{lhs}{_BPE_R}{_BPE_L}{rhs}{_BPE_R}")
-            rep = F.lit(f"{_BPE_L}{lhs}{rhs}{_BPE_R}")
-            affected = vocab.where(
-                F.col("s").contains(f"{_BPE_L}{lhs}{_BPE_R}{_BPE_L}{rhs}{_BPE_R}")
-            )
-            new_aff = affected.withColumn("s", F.replace(F.col("s"), pat, rep))
-            deltas = _bpe_pairs_weighted(affected, -1).unionByName(
-                _bpe_pairs_weighted(new_aff, 1)
-            )
-            pc = (
-                pc.unionByName(deltas)
-                .groupBy("lhs", "rhs")
-                .agg(F.sum("total").alias("total"))
-                .where(F.col("total") > 0)
-                .localCheckpoint(eager=False)
-            )
-            vocab = vocab.withColumn(
-                "s", F.replace(F.col("s"), pat, rep)
-            ).localCheckpoint(eager=False)
-        return spark.createDataFrame(
-            merges, "step int, lhs string, rhs string, merged string, pair_count bigint"
-        )
+        _, merges = _bpe_train(wf)
+        return spark.createDataFrame(merges, _BPE_MERGES_SCHEMA)
     finally:
         wf.unpersist()
 
@@ -455,7 +409,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized. Aggregates are integer-exact; the single
     chars-per-token division is one IEEE op. The trainer is the same
     size-gated loop as q_bpe_train_merges (single-task kernel under
-    BPE_LOCAL_MAX_TYPES word types, distributed rounds above)."""
+    BPE_LOCAL_MAX_TYPES word types, ``_bpe_train`` above)."""
     wf = _bpe_word_freq(spark, sf_dir).localCheckpoint(eager=False)
     if wf.count() <= BPE_LOCAL_MAX_TYPES:
         vocab = _bpe_train_local(_bpe_vocab0(wf), "vocab")
@@ -561,31 +515,26 @@ CHUNKING_QUERIES: list[QuerySpec] = [
         "doc_chunking",
         q_doc_chunking,
         ORACLE_DOC_CHUNKING,
-        ("ext", "text", "chunking"),
     ),
     QuerySpec(
         "bpe_pair_stats",
         q_bpe_pair_stats,
         ORACLE_BPE_PAIR_STATS,
-        ("ext", "text", "tokenizer"),
     ),
     QuerySpec(
         "bpe_train_merges",
         q_bpe_train_merges,
         ORACLE_BPE_TRAIN_MERGES,
-        ("ext", "text", "tokenizer"),
         bench=True,
     ),
     QuerySpec(
         "bpe_train_scaled",
         q_bpe_train_scaled,
         ORACLE_BPE_TRAIN_MERGES,
-        ("ext", "text", "tokenizer", "scale"),
     ),
     QuerySpec(
         "bpe_encode",
         q_bpe_encode,
         ORACLE_BPE_ENCODE,
-        ("ext", "text", "tokenizer"),
     ),
 ]

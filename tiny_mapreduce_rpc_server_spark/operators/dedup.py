@@ -266,6 +266,16 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the span oracles' tail: every doc with a duplicated window, its window
+# count ``per``, duplicated-window count and ratio
+_SQL_SPAN_DUP = """dup AS (
+  SELECT doc_id, count(*) AS n_dup_windows FROM hits GROUP BY doc_id)
+SELECT p.doc_id, p.n_windows,
+       COALESCE(d.n_dup_windows, 0) AS n_dup_windows,
+       COALESCE(d.n_dup_windows, 0)::DOUBLE / p.n_windows AS dup_ratio
+FROM per p LEFT JOIN dup d USING (doc_id)
+WHERE COALESCE(d.n_dup_windows, 0) > 0"""
+
 ORACLE_DEDUP_SUBSTRING = f"""
 WITH spos AS (
   SELECT doc_id, text,
@@ -287,13 +297,7 @@ per AS (
   SELECT s.doc_id,
          count(*) AS n_windows
   FROM strided s GROUP BY s.doc_id),
-dup AS (
-  SELECT doc_id, count(*) AS n_dup_windows FROM hits GROUP BY doc_id)
-SELECT p.doc_id, p.n_windows,
-       COALESCE(d.n_dup_windows, 0) AS n_dup_windows,
-       COALESCE(d.n_dup_windows, 0)::DOUBLE / p.n_windows AS dup_ratio
-FROM per p LEFT JOIN dup d USING (doc_id)
-WHERE COALESCE(d.n_dup_windows, 0) > 0
+{_SQL_SPAN_DUP}
 """
 
 
@@ -348,13 +352,7 @@ hits AS (
   FROM ex s JOIN ex d ON s.w = d.w AND s.doc_id <> d.doc_id),
 per AS (
   SELECT doc_id, count(*) AS n_windows FROM ex GROUP BY doc_id),
-dup AS (
-  SELECT doc_id, count(*) AS n_dup_windows FROM hits GROUP BY doc_id)
-SELECT p.doc_id, p.n_windows,
-       COALESCE(d.n_dup_windows, 0) AS n_dup_windows,
-       COALESCE(d.n_dup_windows, 0)::DOUBLE / p.n_windows AS dup_ratio
-FROM per p LEFT JOIN dup d USING (doc_id)
-WHERE COALESCE(d.n_dup_windows, 0) > 0
+{_SQL_SPAN_DUP}
 """
 
 
@@ -600,32 +598,32 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_minhash_sig() -> str:
-    cols = ",\n         ".join(
+def _sql_minhash_bands() -> str:
+    """The minhash oracles' head: shingle sets ``ds``, their hashes
+    ``th``, the N_HASHES-wide signature ``sigs`` and one (doc_id, band,
+    key) row per band in ``ex``."""
+    sig = ",\n         ".join(
         f"list_min(list_transform(th, x -> {P.sql_perm(i, 'x')})) AS mh{i}"
         for i in range(N_HASHES)
     )
-    return cols
-
-
-def _sql_bands_union() -> str:
     parts = []
     for b in range(N_BANDS):
         key = " || '-' || ".join(
             f"mh{b * ROWS_PER_BAND + r}::VARCHAR" for r in range(ROWS_PER_BAND)
         )
         parts.append(f"SELECT doc_id, {b} AS band, {key} AS key FROM sigs")
-    return "\nUNION ALL\n".join(parts)
-
-
-ORACLE_DEDUP_MINHASH_LSH = f"""
-WITH ds AS ({_SQL_SHINGLES}),
+    bands = "\nUNION ALL\n".join(parts)
+    return f"""WITH ds AS ({_SQL_SHINGLES}),
 th AS (SELECT doc_id, shingles, list_transform(shingles, s -> {P.sql_h1("s")}) AS th FROM ds),
 sigs AS (
   SELECT doc_id, shingles,
-         {_sql_minhash_sig()}
+         {sig}
   FROM th),
-ex AS ({_sql_bands_union()}),
+ex AS ({bands})"""
+
+
+ORACLE_DEDUP_MINHASH_LSH = f"""
+{_sql_minhash_bands()},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM ex a JOIN ex b
@@ -715,13 +713,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_DEDUP_INCREMENTAL = f"""
-WITH ds AS ({_SQL_SHINGLES}),
-th AS (SELECT doc_id, shingles, list_transform(shingles, s -> {P.sql_h1("s")}) AS th FROM ds),
-sigs AS (
-  SELECT doc_id, shingles,
-         {_sql_minhash_sig()}
-  FROM th),
-ex AS ({_sql_bands_union()}),
+{_sql_minhash_bands()},
 cand AS (
   SELECT DISTINCT i.doc_id AS doc_new, e.doc_id AS doc_old
   FROM ex i JOIN ex e ON i.band = e.band AND i.key = e.key
@@ -945,24 +937,19 @@ def q_dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_sig_pairs(sh: DataFrame, block_spec) -> DataFrame:
+def _sig_pairs_of_distinct(sigs: DataFrame, block_spec) -> DataFrame:
     """The candidate-generation + hamming-verify stage of the simhash
     family at DISTINCT-SIGNATURE granularity: (sig_a, sig_b, hamming)
     with sig_a <= sig_b (the sig_a = sig_b row carries same-signature
-    doc groups). ``sh`` must already be pinned. Shared by the pair
-    expansion (``_simhash_pairs``) and the pair-free cluster rollup
-    (graph.q_dedup_simhash_clusters), which consume this SMALL set in
-    opposite ways: one multiplies it into doc pairs, one rolls it into
-    cluster accounting without ever materializing a doc pair."""
-    return _sig_pairs_of_distinct(sh.select("simhash").distinct(), block_spec)
-
-
-def _sig_pairs_of_distinct(sigs: DataFrame, block_spec) -> DataFrame:
-    """``_simhash_sig_pairs`` over an ALREADY-DISTINCT ``simhash`` column
-    (r12: the cluster rollup derives its signature set from a pinned
-    groupBy(simhash) aggregate, whose keys are distinct by construction —
-    routing it here skips a second full exchange over the signature
-    table)."""
+    doc groups), over an ALREADY-DISTINCT ``simhash`` column ``sigs``.
+    Shared by the pair expansion (``_simhash_pairs``, which passes the
+    distinct signatures of its pinned doc table) and the pair-free
+    cluster rollup (graph.q_dedup_simhash_clusters, whose signature set
+    is a pinned groupBy(simhash) aggregate, distinct by construction —
+    so it skips a second full exchange over the signature table). The
+    two consume this SMALL set in opposite ways: one multiplies it into
+    doc pairs, one rolls it into cluster accounting without ever
+    materializing a doc pair."""
     blocks = F.array(
         *[
             F.struct(
@@ -1012,7 +999,7 @@ def _simhash_pairs(sh: DataFrame, block_spec) -> DataFrame:
     granularity (see ``q_dedup_simhash``), expanded back to doc pairs,
     for any (offset, width) block partition of the fingerprint."""
     sh = sh.cache()
-    sig_pairs = _simhash_sig_pairs(sh, block_spec)
+    sig_pairs = _sig_pairs_of_distinct(sh.select("simhash").distinct(), block_spec)
     # The signature-pair set is tiny (distinct signatures only), so AQE
     # coalesces its exchange to ~one partition — but the doc-expansion
     # joins below MULTIPLY it into tens of millions of pair rows, and
@@ -1704,63 +1691,55 @@ DEDUP_QUERIES: list[QuerySpec] = [
         "source_overlap_matrix",
         q_source_overlap_matrix,
         ORACLE_SOURCE_OVERLAP_MATRIX,
-        ("ext", "dedup", "forensics"),
     ),
     QuerySpec(
         "dedup_containment",
         q_dedup_containment,
         ORACLE_DEDUP_CONTAINMENT,
-        ("ext", "dedup"),
         bench=True,
     ),
     QuerySpec(
         "dedup_eval_minhash",
         q_dedup_eval_minhash,
         _oracle_dedup_eval_minhash(),
-        ("ext", "dedup", "eval"),
     ),
     QuerySpec(
         "contamination_check",
         q_contamination_check,
         ORACLE_CONTAMINATION_CHECK,
-        ("ext", "dedup", "quality"),
         bench=True,
     ),
-    QuerySpec("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT, ("ext", "dedup")),
-    QuerySpec("dedup_exact_hash", q_dedup_exact_hash, ORACLE_DEDUP_EXACT_HASH, ("ext", "dedup")),
-    QuerySpec("dedup_substring", q_dedup_substring, ORACLE_DEDUP_SUBSTRING, ("ext", "dedup")),
+    QuerySpec("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT),
+    QuerySpec("dedup_exact_hash", q_dedup_exact_hash, ORACLE_DEDUP_EXACT_HASH),
+    QuerySpec("dedup_substring", q_dedup_substring, ORACLE_DEDUP_SUBSTRING),
     QuerySpec(
         "dedup_substring_anchored",
         q_dedup_substring_anchored,
         ORACLE_DEDUP_SUBSTRING_ANCHORED,
-        ("ext", "dedup", "scale"),
     ),
-    QuerySpec("dedup_ngram_jaccard", q_dedup_ngram_jaccard, ORACLE_DEDUP_NGRAM_JACCARD, ("ext", "dedup"), bench=True),
-    QuerySpec("dedup_minhash_lsh", q_dedup_minhash_lsh, ORACLE_DEDUP_MINHASH_LSH, ("ext", "dedup"), bench=True),
-    QuerySpec("dedup_incremental", q_dedup_incremental, ORACLE_DEDUP_INCREMENTAL, ("ext", "dedup", "incremental")),
+    QuerySpec("dedup_ngram_jaccard", q_dedup_ngram_jaccard, ORACLE_DEDUP_NGRAM_JACCARD, bench=True),
+    QuerySpec("dedup_minhash_lsh", q_dedup_minhash_lsh, ORACLE_DEDUP_MINHASH_LSH, bench=True),
+    QuerySpec("dedup_incremental", q_dedup_incremental, ORACLE_DEDUP_INCREMENTAL),
     QuerySpec(
         "dedup_incremental_persisted",
         q_dedup_incremental_persisted,
         ORACLE_DEDUP_INCREMENTAL,
-        ("ext", "dedup", "incremental", "lakehouse"),
     ),
-    QuerySpec("text_simhash", q_text_simhash, ORACLE_TEXT_SIMHASH, ("ext", "dedup")),
-    QuerySpec("dedup_simhash", q_dedup_simhash, ORACLE_DEDUP_SIMHASH, ("ext", "dedup")),
-    QuerySpec("dedup_simhash_wide", q_dedup_simhash_wide, ORACLE_DEDUP_SIMHASH_WIDE, ("ext", "dedup")),
-    QuerySpec("dedup_embedding", q_dedup_embedding, ORACLE_DEDUP_EMBEDDING, ("ext", "dedup", "embedding"), bench=True),
+    QuerySpec("text_simhash", q_text_simhash, ORACLE_TEXT_SIMHASH),
+    QuerySpec("dedup_simhash", q_dedup_simhash, ORACLE_DEDUP_SIMHASH),
+    QuerySpec("dedup_simhash_wide", q_dedup_simhash_wide, ORACLE_DEDUP_SIMHASH_WIDE),
+    QuerySpec("dedup_embedding", q_dedup_embedding, ORACLE_DEDUP_EMBEDDING, bench=True),
     QuerySpec(
         "dedup_embedding_bucketed",
         q_dedup_embedding_bucketed,
         _oracle_dedup_embedding_bucketed(),
-        ("ext", "dedup", "embedding"),
     ),
     QuerySpec(
         "dedup_eval_embedding",
         q_dedup_eval_embedding,
         _oracle_dedup_eval_embedding(),
-        ("ext", "dedup", "embedding", "eval"),
     ),
-    QuerySpec("dedup_minhash_ml", q_dedup_minhash_ml, None, ("ext", "dedup", "ml")),
+    QuerySpec("dedup_minhash_ml", q_dedup_minhash_ml, None),
 ]
 
 
@@ -2052,7 +2031,6 @@ DEDUP_QUERIES.append(
         "dedup_url_canonical",
         q_dedup_url_canonical,
         ORACLE_DEDUP_URL_CANONICAL,
-        ("ext", "dedup", "url"),
         bench=True,
     )
 )
@@ -2152,6 +2130,5 @@ DEDUP_QUERIES.append(
         "filter_domain_blocklist",
         q_filter_domain_blocklist,
         ORACLE_FILTER_DOMAIN_BLOCKLIST,
-        ("ext", "dedup", "url", "filter"),
     )
 )

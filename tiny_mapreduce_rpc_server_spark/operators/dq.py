@@ -214,19 +214,16 @@ DQ_QUERIES: list[QuerySpec] = [
         "k_anonymity_audit",
         q_k_anonymity_audit,
         ORACLE_K_ANONYMITY,
-        ("ext", "dq", "privacy"),
     ),
     QuerySpec(
         "dq_freshness_check",
         q_dq_freshness_check,
         ORACLE_DQ_FRESHNESS,
-        ("ext", "dq", "ops"),
     ),
     QuerySpec(
         "dq_constraint_check",
         q_dq_constraint_check,
         ORACLE_DQ_CONSTRAINT_CHECK,
-        ("ext", "quality", "dq"),
     ),
 ]
 
@@ -273,7 +270,6 @@ DQ_QUERIES.append(
         "pseudonymize_keys",
         q_pseudonymize_keys,
         ORACLE_PSEUDONYMIZE,
-        ("ext", "dq", "privacy", "pseudonymization"),
     )
 )
 
@@ -332,7 +328,6 @@ DQ_QUERIES.append(
         "aes_column_roundtrip",
         q_aes_column_roundtrip,
         ORACLE_AES_ROUNDTRIP,
-        ("ext", "dq", "encryption"),
     )
 )
 
@@ -420,6 +415,5 @@ DQ_QUERIES.append(
         "dq_observe_metrics",
         q_dq_observe_metrics,
         ORACLE_DQ_OBSERVE,
-        ("ext", "dq", "observability"),
     )
 )

@@ -188,18 +188,15 @@ ER_QUERIES: list[QuerySpec] = [
         "er_entity_clusters",
         q_er_entity_clusters,
         ORACLE_ER_ENTITY_CLUSTERS,
-        ("ext", "er", "graph"),
     ),
     QuerySpec(
         "er_fuzzy_candidates",
         q_er_fuzzy_candidates,
         ORACLE_ER_FUZZY_CANDIDATES,
-        ("ext", "er"),
     ),
     QuerySpec(
         "er_merge_impact",
         q_er_merge_impact,
         ORACLE_ER_MERGE_IMPACT,
-        ("ext", "er"),
     ),
 ]

@@ -835,56 +835,47 @@ GRAPH_QUERIES = [
         "graph_degree_stats",
         q_graph_degree_stats,
         ORACLE_GRAPH_DEGREE_STATS,
-        ("ext", "graph", "profile"),
     ),
     QuerySpec(
         "dedup_components",
         q_dedup_components,
         ORACLE_DEDUP_COMPONENTS,
-        ("ext", "dedup", "graph"),
     ),
     QuerySpec(
         "dedup_keep_canonical",
         q_dedup_keep_canonical,
         ORACLE_DEDUP_KEEP_CANONICAL,
-        ("ext", "dedup", "graph"),
     ),
     QuerySpec(
         "dedup_cluster_stats",
         q_dedup_cluster_stats,
         ORACLE_DEDUP_CLUSTER_STATS,
-        ("ext", "dedup", "graph", "stats"),
     ),
     QuerySpec(
         "dedup_savings_report",
         q_dedup_savings_report,
         ORACLE_DEDUP_SAVINGS,
-        ("ext", "dedup", "graph", "ops"),
     ),
     QuerySpec(
         "dedup_simhash_clusters",
         q_dedup_simhash_clusters,
         ORACLE_DEDUP_SIMHASH_CLUSTERS,
-        ("ext", "dedup", "graph", "stats"),
         bench=True,
     ),
     QuerySpec(
         "split_cluster_safe",
         q_split_cluster_safe,
         _oracle_split_cluster_safe(),
-        ("ext", "sampling", "dedup", "graph"),
     ),
     QuerySpec(
         "graph_pagerank",
         q_graph_pagerank,
         _oracle_pagerank(),
-        ("ext", "graph", "iterative"),
     ),
     QuerySpec(
         "graph_triangles",
         q_graph_triangles,
         ORACLE_GRAPH_TRIANGLES,
-        ("ext", "graph"),
     ),
 ]
 
@@ -973,7 +964,6 @@ GRAPH_QUERIES.append(
         "graph_link_prediction",
         q_graph_link_prediction,
         ORACLE_LINK_PREDICTION,
-        ("ext", "graph", "similarity", "topk"),
     )
 )
 
@@ -1085,13 +1075,18 @@ def _sql_lpa_round(prev: str, out: str) -> str:
     GROUP BY e.dst, l.label) WHERE rn = 1)"""
 
 
-ORACLE_GRAPH_COMMUNITY_LPA = f"""
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+# the LPA oracles' co-purchase pairs ``p``: part pairs that share at
+# least LPA_MIN_CO orders (the edges of _co_purchase_edges)
+_SQL_CO_PURCHASE = f"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 p AS (
   SELECT a.l_partkey AS src, b.l_partkey AS dst
   FROM items a JOIN items b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= {LPA_MIN_CO}),
+  GROUP BY 1, 2 HAVING count(*) >= {LPA_MIN_CO})"""
+
+
+ORACLE_GRAPH_COMMUNITY_LPA = f"""
+{_SQL_CO_PURCHASE},
 edges AS (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
 lab0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
 {_sql_lpa_round('lab0', 'lab1')},
@@ -1106,7 +1101,6 @@ GRAPH_QUERIES.append(
         "graph_community_lpa",
         q_graph_community_lpa,
         ORACLE_GRAPH_COMMUNITY_LPA,
-        ("ext", "graph", "ml"),
     )
 )
 
@@ -1231,12 +1225,7 @@ _SQL_LPA_CONV_CHAIN = ",\n".join(
 )
 
 ORACLE_GRAPH_COMMUNITY_LPA_CONVERGED = f"""
-WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-p AS (
-  SELECT a.l_partkey AS src, b.l_partkey AS dst
-  FROM items a JOIN items b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= {LPA_MIN_CO}),
+{_SQL_CO_PURCHASE},
 edges AS MATERIALIZED (SELECT src, dst FROM p UNION ALL SELECT dst, src FROM p),
 lab0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS label FROM edges),
 {_SQL_LPA_CONV_CHAIN}
@@ -1250,6 +1239,5 @@ GRAPH_QUERIES.append(
         "graph_community_lpa_converged",
         q_graph_community_lpa_converged,
         ORACLE_GRAPH_COMMUNITY_LPA_CONVERGED,
-        ("ext", "graph", "ml", "convergence"),
     )
 )

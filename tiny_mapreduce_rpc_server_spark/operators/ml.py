@@ -98,41 +98,56 @@ def q_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IDS_SQL = ", ".join(str(i) for i in INIT_IDS)
 
-ORACLE_KMEANS_LLOYD = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-c0 AS (SELECT vec_id AS cluster, v AS cv FROM e WHERE vec_id IN ({_IDS_SQL})),
-d1 AS (
-  SELECT e.vec_id, e.v, c0.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i]),
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i])
-         ) AS dist
-  FROM e, c0),
-a1 AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT vec_id, v, cluster,
+
+def _sql_argmin(a: str, d: str, carry: tuple = ("v",), out: str = "") -> str:
+    """CTE ``a``: each vec_id's nearest row of the (vec_id, *carry,
+    cluster, dist) CTE ``d``, ties to the lowest cluster id, selected as
+    ``out`` (default: vec_id, the carried columns, cluster)."""
+    cols = ", ".join(("vec_id", *carry, "cluster"))
+    return f"""{a} AS (
+  SELECT {out or cols} FROM (
+    SELECT {cols},
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY dist ASC, cluster ASC) AS rn
-    FROM d1) WHERE rn = 1),
+    FROM {d}) WHERE rn = 1)"""
+
+
+def _sql_nearest(
+    d: str, a: str, src: str, cents: str, carry: tuple = ("v",), out: str = ""
+) -> str:
+    """CTEs ``d`` and ``a``: the oracle's nearest-centroid step. ``d``
+    scores every ``src`` row (vec_id, v) against every ``cents`` centroid
+    (cluster, cv) by the exact squared-L2 fold, ``a`` is its argmin."""
+    diff = f"list_transform(generate_series(1, len({src}.v)), i -> {src}.v[i] - cv[i])"
+    sel = ", ".join([f"{src}.{c}" for c in ("vec_id", *carry)] + [f"{cents}.cluster"])
+    return f"""{d} AS (
+  SELECT {sel},
+         list_dot_product(
+           {diff},
+           {diff}
+         ) AS dist
+  FROM {src}, {cents}),
+{_sql_argmin(a, d, carry, out)}"""
+
+
+def _sql_lloyd(carry: tuple) -> str:
+    """The oracle's two Lloyd iterations from the INIT_IDS seeds: assign
+    (d1/a1), decimal-exact centroid update (ex/c1l/c1), assign again
+    (d2/a2, carrying ``carry``)."""
+    return f"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+c0 AS (SELECT vec_id AS cluster, v AS cv FROM e WHERE vec_id IN ({_IDS_SQL})),
+{_sql_nearest("d1", "a1", "e", "c0")},
 ex AS (SELECT cluster, unnest(range(0, len(v))) AS pos, unnest(v) AS x FROM a1),
 c1l AS (
   SELECT cluster, pos,
          CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) / count(x) AS cval
   FROM ex GROUP BY cluster, pos),
 c1 AS (SELECT cluster, list(cval ORDER BY pos) AS cv FROM c1l GROUP BY cluster),
-d2 AS (
-  SELECT e.vec_id, c1.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i]),
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i])
-         ) AS dist
-  FROM e, c1),
-a2 AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM d2) WHERE rn = 1)
+{_sql_nearest("d2", "a2", "e", "c1", carry)}"""
+
+
+ORACLE_KMEANS_LLOYD = f"""
+{_sql_lloyd(())}
 SELECT cluster, count(*) AS n_members,
        min(vec_id) AS min_member, max(vec_id) AS max_member
 FROM a2 GROUP BY cluster
@@ -530,31 +545,26 @@ ML_QUERIES = [
         "embedding_spectrum",
         q_embedding_spectrum,
         _oracle_embedding_spectrum(),
-        ("ext", "embedding", "ml", "iterative"),
     ),
     QuerySpec(
         "negative_sampling",
         q_negative_sampling,
         _oracle_negative_sampling(),
-        ("ext", "ml", "sampling"),
     ),
     QuerySpec(
         "roc_auc",
         q_roc_auc,
         ORACLE_ROC_AUC,
-        ("ext", "ml", "eval"),
     ),
     QuerySpec(
         "ml_nearest_centroid",
         q_ml_nearest_centroid,
         ORACLE_ML_NEAREST_CENTROID,
-        ("ext", "ml", "embedding", "eval"),
     ),
     QuerySpec(
         "kmeans_lloyd",
         q_kmeans_lloyd,
         ORACLE_KMEANS_LLOYD,
-        ("ext", "ml", "clustering"),
     ),
 ]
 
@@ -736,57 +746,37 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cluster_rollup(SEMANTIC_DUP - 1e-9, SEMANTIC_DUP), _SEM_ROLLUP_SCHEMA
     )
 
-# reuses the kmeans CTE chain, but a2 carries v so the within-cluster
-# pairing can compute cosine
-ORACLE_DEDUP_SEMANTIC = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-c0 AS (SELECT vec_id AS cluster, v AS cv FROM e WHERE vec_id IN ({_IDS_SQL})),
-d1 AS (
-  SELECT e.vec_id, e.v, c0.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i]),
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i])
-         ) AS dist
-  FROM e, c0),
-a1 AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT vec_id, v, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM d1) WHERE rn = 1),
-ex AS (SELECT cluster, unnest(range(0, len(v))) AS pos, unnest(v) AS x FROM a1),
-c1l AS (
-  SELECT cluster, pos,
-         CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) / count(x) AS cval
-  FROM ex GROUP BY cluster, pos),
-c1 AS (SELECT cluster, list(cval ORDER BY pos) AS cv FROM c1l GROUP BY cluster),
-d2 AS (
-  SELECT e.vec_id, e.v, c1.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i]),
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i])
-         ) AS dist
-  FROM e, c1),
-a2 AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT vec_id, v, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM d2) WHERE rn = 1),
-drp AS (
+def _sql_sem_drops(a: str) -> str:
+    """Head of the SemDeDup oracle's ``drp`` CTE over the (vec_id, v,
+    cluster) CTE ``a``: every member with a lower-id same-cluster member
+    at cosine >= SEMANTIC_DUP. The caller closes the CTE."""
+    return f"""drp AS (
   SELECT DISTINCT a.cluster, b.vec_id
-  FROM a2 a JOIN a2 b
+  FROM {a} a JOIN {a} b
     ON a.cluster = b.cluster AND a.vec_id < b.vec_id
   WHERE list_dot_product(a.v, b.v)
           / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-        >= {SEMANTIC_DUP})
-SELECT m.cluster,
+        >= {SEMANTIC_DUP}"""
+
+
+def _sql_sem_counts(a: str) -> str:
+    """The SemDeDup oracle's per-cluster member/dropped/kept rollup of
+    ``a`` against ``drp``."""
+    return f"""SELECT m.cluster,
        count(*)::BIGINT AS n_members,
        count(drp.vec_id)::BIGINT AS n_dropped,
        (count(*) - count(drp.vec_id))::BIGINT AS n_kept
-FROM a2 m
+FROM {a} m
 LEFT JOIN drp ON m.cluster = drp.cluster AND m.vec_id = drp.vec_id
-GROUP BY m.cluster
+GROUP BY m.cluster"""
+
+
+# reuses the kmeans CTE chain, but a2 carries v so the within-cluster
+# pairing can compute cosine
+ORACLE_DEDUP_SEMANTIC = f"""
+{_sql_lloyd(("v",))},
+{_sql_sem_drops("a2")})
+{_sql_sem_counts("a2")}
 """
 
 ML_QUERIES.append(
@@ -794,7 +784,6 @@ ML_QUERIES.append(
         "dedup_semantic",
         q_dedup_semantic,
         ORACLE_DEDUP_SEMANTIC,
-        ("ext", "ml", "dedup", "embedding", "clustering"),
         bench=True,  # round-11 paired-gate sentinel: work-heavy
         # cluster-bounded pairing (SCALING grower class, 8.5x at sf1*)
     )
@@ -961,34 +950,10 @@ ORACLE_DEDUP_SEMANTIC_SCALED = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 c0 AS (SELECT vec_id AS cluster, v AS cv FROM e
        WHERE vec_id % {SEED_STRIDE} = {SEED_RESIDUE}),
-d1 AS (
-  SELECT e.vec_id, e.v, c0.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i]),
-           list_transform(generate_series(1, len(e.v)), i -> e.v[i] - cv[i])
-         ) AS dist
-  FROM e, c0),
-a1 AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT vec_id, v, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM d1) WHERE rn = 1),
-drp AS (
-  SELECT DISTINCT a.cluster, b.vec_id
-  FROM a1 a JOIN a1 b
-    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE list_dot_product(a.v, b.v)
-          / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-        >= {SEMANTIC_DUP}
+{_sql_nearest("d1", "a1", "e", "c0")},
+{_sql_sem_drops("a1")}
 )
-SELECT m.cluster,
-       count(*)::BIGINT AS n_members,
-       count(drp.vec_id)::BIGINT AS n_dropped,
-       (count(*) - count(drp.vec_id))::BIGINT AS n_kept
-FROM a1 m
-LEFT JOIN drp ON m.cluster = drp.cluster AND m.vec_id = drp.vec_id
-GROUP BY m.cluster
+{_sql_sem_counts("a1")}
 """
 
 ML_QUERIES.append(
@@ -996,7 +961,6 @@ ML_QUERIES.append(
         "dedup_semantic_scaled",
         q_dedup_semantic_scaled,
         ORACLE_DEDUP_SEMANTIC_SCALED,
-        ("ext", "ml", "dedup", "embedding", "clustering", "scale"),
         bench=True,
     )
 )
@@ -1130,27 +1094,10 @@ vc AS (
 cd AS (
   SELECT vc.vec_id, vc.v, fc.cluster, {_sql_sq_dist('vc.v', 'fc.cv')} AS dist
   FROM vc JOIN fc ON vc.cell = fc.cell),
-a1 AS (
-  SELECT vec_id, v, cluster FROM (
-    SELECT vec_id, v, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM cd) WHERE rn = 1),
-drp AS (
-  SELECT DISTINCT a.cluster, b.vec_id
-  FROM a1 a JOIN a1 b
-    ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE list_dot_product(a.v, b.v)
-          / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-        >= {SEMANTIC_DUP}
+{_sql_argmin("a1", "cd")},
+{_sql_sem_drops("a1")}
 )
-SELECT m.cluster,
-       count(*)::BIGINT AS n_members,
-       count(drp.vec_id)::BIGINT AS n_dropped,
-       (count(*) - count(drp.vec_id))::BIGINT AS n_kept
-FROM a1 m
-LEFT JOIN drp ON m.cluster = drp.cluster AND m.vec_id = drp.vec_id
-GROUP BY m.cluster
+{_sql_sem_counts("a1")}
 """
 
 ML_QUERIES.append(
@@ -1158,7 +1105,6 @@ ML_QUERIES.append(
         "dedup_semantic_twolevel",
         q_dedup_semantic_twolevel,
         ORACLE_DEDUP_SEMANTIC_TWOLEVEL,
-        ("ext", "ml", "dedup", "embedding", "clustering", "scale"),
     )
 )
 
@@ -1264,32 +1210,8 @@ ex AS (SELECT * FROM e
        WHERE ({P.sql_h1("CAST(vec_id AS VARCHAR)")} % 100) < {SEM_INCR_INCOMING_FROM}),
 c0 AS (SELECT vec_id AS cluster, v AS cv FROM ex
        WHERE vec_id % {SEED_STRIDE} = {SEED_RESIDUE}),
-dx AS (
-  SELECT ex.vec_id, ex.v, c0.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(ex.v)), i -> ex.v[i] - cv[i]),
-           list_transform(generate_series(1, len(ex.v)), i -> ex.v[i] - cv[i])
-         ) AS dist
-  FROM ex, c0),
-ax AS (
-  SELECT vec_id AS vec_old, v AS vo, cluster FROM (
-    SELECT vec_id, v, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM dx) WHERE rn = 1),
-di AS (
-  SELECT inc.vec_id, inc.v, c0.cluster,
-         list_dot_product(
-           list_transform(generate_series(1, len(inc.v)), i -> inc.v[i] - cv[i]),
-           list_transform(generate_series(1, len(inc.v)), i -> inc.v[i] - cv[i])
-         ) AS dist
-  FROM inc, c0),
-ai AS (
-  SELECT vec_id AS vec_new, v AS vn, cluster FROM (
-    SELECT vec_id, v, cluster,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY dist ASC, cluster ASC) AS rn
-    FROM di) WHERE rn = 1),
+{_sql_nearest("dx", "ax", "ex", "c0", out="vec_id AS vec_old, v AS vo, cluster")},
+{_sql_nearest("di", "ai", "inc", "c0", out="vec_id AS vec_new, v AS vn, cluster")},
 scored AS (
   SELECT ai.vec_new, ax.vec_old,
          list_dot_product(vn, vo)
@@ -1309,7 +1231,6 @@ ML_QUERIES.append(
         "dedup_semantic_incremental",
         q_dedup_semantic_incremental,
         ORACLE_DEDUP_SEMANTIC_INCREMENTAL,
-        ("ext", "ml", "dedup", "embedding", "incremental"),
     )
 )
 
@@ -1363,6 +1284,5 @@ ML_QUERIES.append(
         "dedup_semantic_incremental_persisted",
         q_dedup_semantic_incremental_persisted,
         ORACLE_DEDUP_SEMANTIC_INCREMENTAL,
-        ("ext", "ml", "dedup", "embedding", "incremental", "lakehouse"),
     )
 )

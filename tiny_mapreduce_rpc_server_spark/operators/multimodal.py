@@ -4,11 +4,10 @@ Images/audio/video are carried as ``binary`` columns with metadata
 computed Spark-side; decode / feature-extract steps are Arrow-batched
 ``mapInPandas`` stages. The decode pipeline operates on REAL image bytes:
 a spec-compliant 24-bit BMP is synthesized per document, and the decode
-stage branches on PIL when importable, falling back to a correct minimal
-BMP parser (BMP is uncompressed, so the fallback is a true decoder, not
-a fake). Audio/video decoding would slot into the same stages with
-torchaudio/ffmpeg — only the per-payload function changes, never the
-Spark plumbing.
+stage runs a correct minimal BMP parser (BMP is uncompressed, so the
+parser is a true decoder, not a fake). Audio/video decoding would slot
+into the same stages with torchaudio/ffmpeg — only the per-payload
+function changes, never the Spark plumbing.
 
 Scale notes: binary payloads ride parquet; metadata extraction is
 per-row (no shuffle); mapInPandas streams Arrow batches so peak memory is
@@ -62,12 +61,12 @@ FROM documents
 #
 # The payload is a spec-compliant 24-bit BMP synthesized per document
 # (dimensions and fill color derived from the text hash), so the decode
-# stage exercises a REAL image decoder over real image bytes: PIL when
-# importable, else a correct minimal BMP parser (pure Python — BMP is an
-# uncompressed format, so the parser is ~20 lines, not a fake). Both
-# decoders read only the payload, and the synthesized image's properties
-# are closed-form in the hash, which makes the whole encode->decode
-# pipeline oracle-checkable end to end.
+# stage exercises a REAL image decoder over real image bytes: a correct
+# minimal BMP parser (pure Python — BMP is an uncompressed format, so the
+# parser is ~20 lines, not a fake). The decoder reads only the payload,
+# and the synthesized image's properties are closed-form in the hash,
+# which makes the whole encode->decode pipeline oracle-checkable end to
+# end.
 
 import struct
 
@@ -88,31 +87,27 @@ def _bmp_encode(w: int, h: int, color: int) -> bytes:
     return header + pixels
 
 
-def _bmp_decode_py(payload: bytes) -> tuple[int, int, float]:
-    """Minimal BMP reader: dimensions + mean pixel value (all channels),
-    honoring 4-byte row padding. The fallback when PIL is absent."""
+def _bmp_header(payload: bytes) -> tuple[int, int, int, int]:
+    """(pixel offset, width, height, padded row stride) of a 24-bit BMP."""
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     offset = struct.unpack_from("<I", payload, 10)[0]
     w, h = struct.unpack_from("<ii", payload, 18)
     h = abs(h)
     stride = (3 * w + 3) & ~3
+    return offset, w, h, stride
+
+
+def _bmp_decode_py(payload: bytes) -> tuple[int, int, float]:
+    """Minimal BMP reader: dimensions + mean pixel value (all channels),
+    honoring 4-byte row padding. Decodes every payload the engine
+    synthesizes."""
+    offset, w, h, stride = _bmp_header(payload)
     total = 0
     for r in range(h):
         rowstart = offset + r * stride
         total += sum(payload[rowstart : rowstart + 3 * w])
     return w, h, total / (3 * w * h)
-
-
-def _bmp_decode_pil(payload: bytes) -> tuple[int, int, float]:
-    import io
-
-    from PIL import Image, ImageStat
-
-    img = Image.open(io.BytesIO(payload))
-    w, h = img.size
-    mean = sum(ImageStat.Stat(img).mean) / len(img.getbands())
-    return w, h, mean
 
 
 def encode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -127,22 +122,16 @@ def encode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def _decoder(passthrough: tuple = ()):
-    """mapInPandas worker factory: real image decode, payload-driven
-    only (PIL when available; minimal BMP parser otherwise — identical
-    outputs). ``passthrough`` columns are copied from input to output
-    unchanged, so every decode-shaped query shares ONE decode loop."""
+    """mapInPandas worker factory: real image decode by the BMP parser,
+    payload-driven only. ``passthrough`` columns are copied from input to
+    output unchanged, so every decode-shaped query shares ONE decode
+    loop."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            import PIL.Image  # noqa: F401
-
-            decode = _bmp_decode_pil
-        except ImportError:
-            decode = _bmp_decode_py
         for pdf in batches:
             ws, hs, means = [], [], []
             for payload in pdf["payload"]:
-                w, h, m = decode(bytes(payload))
+                w, h, m = _bmp_decode_py(bytes(payload))
                 ws.append(w)
                 hs.append(h)
                 means.append(m)
@@ -398,6 +387,14 @@ def _audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return src.mapInPandas(audio_encode_batch, _AUDIO_ENCODE_SCHEMA)
 
 
+# the audio oracles' (doc_id, n, k) source: _audio's closed form
+_SQL_AUDIO_SRC = f"""WITH src AS (
+  SELECT doc_id,
+         {P.sql_h1("text")} % 4000 + 100 AS n,
+         {P.sql_h1("text")} % 97 + 1 AS k
+  FROM documents)"""
+
+
 def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio pipeline over binary payloads: synthesize a real 16-bit
     mono PCM WAV per document (length and waveform slope hash-derived),
@@ -414,11 +411,7 @@ def q_multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_MULTIMODAL_AUDIO = f"""
-WITH src AS (
-  SELECT doc_id,
-         {P.sql_h1("text")} % 4000 + 100 AS n,
-         {P.sql_h1("text")} % 97 + 1 AS k
-  FROM documents),
+{_SQL_AUDIO_SRC},
 s AS (
   SELECT doc_id, n,
          list_transform(range(0, n), i -> (i * k) % 2048 - 1024) AS xs
@@ -479,18 +472,16 @@ MULTIMODAL_QUERIES: list[QuerySpec] = [
         "multimodal_image_dedup",
         q_multimodal_image_dedup,
         ORACLE_MULTIMODAL_IMAGE_DEDUP,
-        ("ext", "multimodal", "dedup", "udf"),
     ),
     QuerySpec(
         "multimodal_audio",
         q_multimodal_audio,
         ORACLE_MULTIMODAL_AUDIO,
-        ("ext", "multimodal", "udf", "audio"),
     ),
-    QuerySpec("multimodal_meta", q_multimodal_meta, ORACLE_MULTIMODAL_META, ("ext", "multimodal")),
-    QuerySpec("multimodal_decode", q_multimodal_decode, ORACLE_MULTIMODAL_DECODE, ("ext", "multimodal", "udf")),
-    QuerySpec("multimodal_frame_sample", q_multimodal_frame_sample, ORACLE_FRAME_SAMPLE, ("ext", "multimodal", "udf")),
-    QuerySpec("multimodal_resize", q_multimodal_resize, ORACLE_RESIZE, ("ext", "multimodal", "udf")),
+    QuerySpec("multimodal_meta", q_multimodal_meta, ORACLE_MULTIMODAL_META),
+    QuerySpec("multimodal_decode", q_multimodal_decode, ORACLE_MULTIMODAL_DECODE),
+    QuerySpec("multimodal_frame_sample", q_multimodal_frame_sample, ORACLE_FRAME_SAMPLE),
+    QuerySpec("multimodal_resize", q_multimodal_resize, ORACLE_RESIZE),
 ]
 
 
@@ -528,12 +519,7 @@ def _ahash_from_payload(payload: bytes) -> tuple[int, int, str]:
     """8x8 average-hash from DECODED BMP bytes: integer cell sums, bit =
     cell average > global average via cross-multiplication, hex-encoded
     row-major (bit 0 = top-left nibble-high)."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    offset = struct.unpack_from("<I", payload, 10)[0]
-    w, h = struct.unpack_from("<ii", payload, 18)
-    h = abs(h)
-    stride = (3 * w + 3) & ~3
+    offset, w, h, stride = _bmp_header(payload)
     # gray value = blue byte (B==G==R by construction)
     rows = [
         payload[offset + r * stride : offset + r * stride + 3 * w : 3]
@@ -686,7 +672,6 @@ MULTIMODAL_QUERIES.append(
         "multimodal_phash_dedup",
         q_multimodal_phash_dedup,
         _oracle_phash(),
-        ("ext", "multimodal", "dedup", "phash"),
     )
 )
 
@@ -753,11 +738,7 @@ def q_multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 ORACLE_AUDIO_FINGERPRINT = f"""
-WITH src AS (
-  SELECT doc_id,
-         {P.sql_h1("text")} % 4000 + 100 AS n,
-         {P.sql_h1("text")} % 97 + 1 AS k
-  FROM documents),
+{_SQL_AUDIO_SRC},
 s AS (
   SELECT doc_id, n,
          list_transform(range(0, n), i -> abs((i * k) % 2048 - 1024)) AS a
@@ -789,7 +770,6 @@ MULTIMODAL_QUERIES.append(
         "multimodal_audio_fingerprint",
         q_multimodal_audio_fingerprint,
         ORACLE_AUDIO_FINGERPRINT,
-        ("ext", "multimodal", "dedup", "audio"),
     )
 )
 
@@ -896,6 +876,5 @@ MULTIMODAL_QUERIES.append(
         "multimodal_binaryfile_ingest",
         q_multimodal_binaryfile_ingest,
         ORACLE_BINARYFILE_INGEST,
-        ("ext", "multimodal", "source", "lakehouse"),
     )
 )

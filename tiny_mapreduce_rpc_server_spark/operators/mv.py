@@ -92,7 +92,6 @@ MV_QUERIES: list[QuerySpec] = [
         "mv_incremental_agg",
         q_mv_incremental_agg,
         ORACLE_MV_INCREMENTAL_AGG,
-        ("ext", "mv", "incremental"),
     ),
 ]
 
@@ -156,6 +155,5 @@ MV_QUERIES.append(
         "mv_incremental_join",
         q_mv_incremental_join,
         ORACLE_MV_INCREMENTAL_JOIN,
-        ("ext", "mv", "ivm", "join"),
     )
 )

@@ -20,7 +20,7 @@ Scale discipline:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import davg, dsum, ntz_epoch_us
@@ -451,14 +451,24 @@ FROM orders
 # ---------------------------------------------------------------------------
 
 
-def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL + re-aggregation (multiset made deterministic by counting)."""
+def _nation_keys(
+    spark: SparkSession, sf_dir: str, supplier_where: Column | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The set-op inputs: the customer and the supplier nation keys, each
+    as one ``nationkey`` column; suppliers first filtered by
+    ``supplier_where`` when given."""
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
+    supp = load_table(spark, sf_dir, "supplier")
+    if supplier_where is not None:
+        supp = supp.filter(supplier_where)
+    return cust, supp.select(F.col("s_nationkey").alias("nationkey"))
+
+
+def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNION ALL + re-aggregation (multiset made deterministic by counting)."""
+    cust, supp = _nation_keys(spark, sf_dir)
     return cust.unionAll(supp).groupBy("nationkey").agg(F.count("*").alias("n"))
 
 
@@ -473,12 +483,7 @@ GROUP BY nationkey
 
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nations that have both customers and suppliers."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
+    cust, supp = _nation_keys(spark, sf_dir)
     return cust.intersect(supp)
 
 
@@ -491,14 +496,7 @@ SELECT s_nationkey AS nationkey FROM supplier
 
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nations with customers but no well-capitalized supplier (EXCEPT)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supp = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > 5000)
-        .select(F.col("s_nationkey").alias("nationkey"))
-    )
+    cust, supp = _nation_keys(spark, sf_dir, F.col("s_acctbal") > 5000)
     return cust.subtract(supp)  # EXCEPT (set semantics, like the SQL oracle)
 
 
@@ -532,12 +530,7 @@ FROM nation GROUP BY n_regionkey
 def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics intersect: keeps duplicate multiplicity (min of the
     two sides' counts per value)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
+    cust, supp = _nation_keys(spark, sf_dir)
     return cust.intersectAll(supp)
 
 
@@ -550,12 +543,7 @@ SELECT s_nationkey AS nationkey FROM supplier
 
 def q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics except: per-value multiplicity = count(left) - count(right)."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
+    cust, supp = _nation_keys(spark, sf_dir)
     return cust.exceptAll(supp)
 
 
@@ -1055,42 +1043,42 @@ FROM per_session GROUP BY user_id
 
 
 RELATIONAL_QUERIES: list[QuerySpec] = [
-    QuerySpec("wordcount", q_wordcount, ORACLE_WORDCOUNT, ("reference", "mapreduce"), bench=True),
-    QuerySpec("sum_by_key", q_sum_by_key, ORACLE_SUM_BY_KEY, ("reference", "agg")),
-    QuerySpec("sorted_group", q_sorted_group, ORACLE_SORTED_GROUP, ("reference", "sort")),
-    QuerySpec("agg_stats", q_agg_stats, ORACLE_AGG_STATS, ("agg",)),
-    QuerySpec("distinct", q_distinct, ORACLE_DISTINCT, ("agg",)),
-    QuerySpec("rollup", q_rollup, ORACLE_ROLLUP, ("agg",)),
-    QuerySpec("cube", q_cube, ORACLE_CUBE, ("agg",)),
-    QuerySpec("pivot", q_pivot, ORACLE_PIVOT, ("agg",)),
-    QuerySpec("q1_pricing_summary", q1_pricing_summary, ORACLE_Q1, ("tpch", "agg"), bench=True),
-    QuerySpec("q3_shipping_priority", q3_shipping_priority, ORACLE_Q3, ("tpch", "join"), bench=True),
-    QuerySpec("q5_local_supplier", q5_local_supplier, ORACLE_Q5, ("tpch", "join"), bench=True),
-    QuerySpec("join_dims", q_join_dims, ORACLE_JOIN_DIMS, ("join",)),
-    QuerySpec("semi_join", q_semi_join, ORACLE_SEMI_JOIN, ("join",)),
-    QuerySpec("anti_join", q_anti_join, ORACLE_ANTI_JOIN, ("join",)),
-    QuerySpec("outer_join", q_outer_join, ORACLE_OUTER_JOIN, ("join",), bench=True),
-    QuerySpec("topk", q_topk, ORACLE_TOPK, ("sort",)),
-    QuerySpec("topk_per_group", q_topk_per_group, ORACLE_TOPK_PER_GROUP, ("window",)),
-    QuerySpec("window_running", q_window_running, ORACLE_WINDOW_RUNNING, ("window",), bench=True),
-    QuerySpec("set_union", q_set_union, ORACLE_SET_UNION, ("setop",)),
-    QuerySpec("set_intersect", q_set_intersect, ORACLE_SET_INTERSECT, ("setop",)),
-    QuerySpec("set_except", q_set_except, ORACLE_SET_EXCEPT, ("setop",)),
-    QuerySpec("string_agg_sorted", q_string_agg_sorted, ORACLE_STRING_AGG_SORTED, ("agg", "collect")),
-    QuerySpec("set_intersect_all", q_set_intersect_all, ORACLE_SET_INTERSECT_ALL, ("setop",)),
-    QuerySpec("set_except_all", q_set_except_all, ORACLE_SET_EXCEPT_ALL, ("setop",)),
-    QuerySpec("string_funcs", q_string_funcs, ORACLE_STRING_FUNCS, ("scalar",)),
-    QuerySpec("date_funcs", q_date_funcs, ORACLE_DATE_FUNCS, ("scalar",)),
-    QuerySpec("date_arithmetic", q_date_arithmetic, ORACLE_DATE_ARITHMETIC, ("scalar", "temporal")),
-    QuerySpec("null_handling", q_null_handling, ORACLE_NULL_HANDLING, ("scalar", "nulls")),
-    QuerySpec("math_funcs", q_math_funcs, ORACLE_MATH_FUNCS, ("scalar",)),
-    QuerySpec("json_funcs", q_json_funcs, ORACLE_JSON_FUNCS, ("scalar", "json")),
-    QuerySpec("json_tolerant_parse", q_json_tolerant_parse, ORACLE_JSON_TOLERANT_PARSE, ("scalar", "json", "quality")),
-    QuerySpec("json_struct_parse", q_json_struct_parse, ORACLE_JSON_STRUCT_PARSE, ("scalar", "json")),
-    QuerySpec("regex_funcs", q_regex_funcs, ORACLE_REGEX_FUNCS, ("scalar", "regex")),
-    QuerySpec("bitwise_funcs", q_bitwise_funcs, ORACLE_BITWISE_FUNCS, ("scalar", "bitwise")),
-    QuerySpec("case_when", q_case_when, ORACLE_CASE_WHEN, ("scalar",)),
-    QuerySpec("tumbling_hour", q_tumbling_hour, ORACLE_TUMBLING_HOUR, ("events", "window"), bench=True),
-    QuerySpec("sessionize", q_sessionize, ORACLE_SESSIONIZE, ("events", "window"), bench=True),
-    QuerySpec("session_window_native", q_session_window_native, ORACLE_SESSION_WINDOW_NATIVE, ("events", "window", "session")),
+    QuerySpec("wordcount", q_wordcount, ORACLE_WORDCOUNT, bench=True),
+    QuerySpec("sum_by_key", q_sum_by_key, ORACLE_SUM_BY_KEY),
+    QuerySpec("sorted_group", q_sorted_group, ORACLE_SORTED_GROUP),
+    QuerySpec("agg_stats", q_agg_stats, ORACLE_AGG_STATS),
+    QuerySpec("distinct", q_distinct, ORACLE_DISTINCT),
+    QuerySpec("rollup", q_rollup, ORACLE_ROLLUP),
+    QuerySpec("cube", q_cube, ORACLE_CUBE),
+    QuerySpec("pivot", q_pivot, ORACLE_PIVOT),
+    QuerySpec("q1_pricing_summary", q1_pricing_summary, ORACLE_Q1, bench=True),
+    QuerySpec("q3_shipping_priority", q3_shipping_priority, ORACLE_Q3, bench=True),
+    QuerySpec("q5_local_supplier", q5_local_supplier, ORACLE_Q5, bench=True),
+    QuerySpec("join_dims", q_join_dims, ORACLE_JOIN_DIMS),
+    QuerySpec("semi_join", q_semi_join, ORACLE_SEMI_JOIN),
+    QuerySpec("anti_join", q_anti_join, ORACLE_ANTI_JOIN),
+    QuerySpec("outer_join", q_outer_join, ORACLE_OUTER_JOIN, bench=True),
+    QuerySpec("topk", q_topk, ORACLE_TOPK),
+    QuerySpec("topk_per_group", q_topk_per_group, ORACLE_TOPK_PER_GROUP),
+    QuerySpec("window_running", q_window_running, ORACLE_WINDOW_RUNNING, bench=True),
+    QuerySpec("set_union", q_set_union, ORACLE_SET_UNION),
+    QuerySpec("set_intersect", q_set_intersect, ORACLE_SET_INTERSECT),
+    QuerySpec("set_except", q_set_except, ORACLE_SET_EXCEPT),
+    QuerySpec("string_agg_sorted", q_string_agg_sorted, ORACLE_STRING_AGG_SORTED),
+    QuerySpec("set_intersect_all", q_set_intersect_all, ORACLE_SET_INTERSECT_ALL),
+    QuerySpec("set_except_all", q_set_except_all, ORACLE_SET_EXCEPT_ALL),
+    QuerySpec("string_funcs", q_string_funcs, ORACLE_STRING_FUNCS),
+    QuerySpec("date_funcs", q_date_funcs, ORACLE_DATE_FUNCS),
+    QuerySpec("date_arithmetic", q_date_arithmetic, ORACLE_DATE_ARITHMETIC),
+    QuerySpec("null_handling", q_null_handling, ORACLE_NULL_HANDLING),
+    QuerySpec("math_funcs", q_math_funcs, ORACLE_MATH_FUNCS),
+    QuerySpec("json_funcs", q_json_funcs, ORACLE_JSON_FUNCS),
+    QuerySpec("json_tolerant_parse", q_json_tolerant_parse, ORACLE_JSON_TOLERANT_PARSE),
+    QuerySpec("json_struct_parse", q_json_struct_parse, ORACLE_JSON_STRUCT_PARSE),
+    QuerySpec("regex_funcs", q_regex_funcs, ORACLE_REGEX_FUNCS),
+    QuerySpec("bitwise_funcs", q_bitwise_funcs, ORACLE_BITWISE_FUNCS),
+    QuerySpec("case_when", q_case_when, ORACLE_CASE_WHEN),
+    QuerySpec("tumbling_hour", q_tumbling_hour, ORACLE_TUMBLING_HOUR, bench=True),
+    QuerySpec("sessionize", q_sessionize, ORACLE_SESSIONIZE, bench=True),
+    QuerySpec("session_window_native", q_session_window_native, ORACLE_SESSION_WINDOW_NATIVE),
 ]

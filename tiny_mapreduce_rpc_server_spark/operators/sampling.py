@@ -563,31 +563,27 @@ SAMPLING_QUERIES: list[QuerySpec] = [
         "split_leakage_check",
         q_split_leakage_check,
         _oracle_split_leakage(),
-        ("ext", "sampling", "dedup", "quality"),
     ),
-    QuerySpec("temperature_mix", temperature_mix, ORACLE_TEMPERATURE_MIX, ("ext", "sampling", "mixing")),
+    QuerySpec("temperature_mix", temperature_mix, ORACLE_TEMPERATURE_MIX),
     QuerySpec(
         "rarity_bucket_mix",
         q_rarity_bucket_mix,
         ORACLE_RARITY_BUCKET_MIX,
-        ("ext", "sampling", "mixing", "text"),
     ),
-    QuerySpec("sequence_packing", sequence_packing, ORACLE_SEQUENCE_PACKING, ("ext", "sampling", "packing")),
-    QuerySpec("sample_hash_bucket", sample_hash_bucket, ORACLE_SAMPLE, ("ext", "sampling")),
-    QuerySpec("train_val_test_split", train_val_test_split, ORACLE_SPLIT, ("ext", "sampling")),
-    QuerySpec("stratified_hash_sample", stratified_hash_sample, ORACLE_STRATIFIED, ("ext", "sampling")),
-    QuerySpec("per_key_reservoir_sample", per_key_reservoir_sample, ORACLE_PER_KEY_SAMPLE, ("ext", "sampling")),
+    QuerySpec("sequence_packing", sequence_packing, ORACLE_SEQUENCE_PACKING),
+    QuerySpec("sample_hash_bucket", sample_hash_bucket, ORACLE_SAMPLE),
+    QuerySpec("train_val_test_split", train_val_test_split, ORACLE_SPLIT),
+    QuerySpec("stratified_hash_sample", stratified_hash_sample, ORACLE_STRATIFIED),
+    QuerySpec("per_key_reservoir_sample", per_key_reservoir_sample, ORACLE_PER_KEY_SAMPLE),
     QuerySpec(
         "quality_weighted_sample",
         quality_weighted_sample,
         _oracle_quality_weighted_sample(),
-        ("ext", "sampling", "quality"),
     ),
     QuerySpec(
         "corpus_manifest",
         corpus_manifest,
         _oracle_corpus_manifest(),
-        ("ext", "sampling", "pipeline", "dedup", "quality"),
     ),
 ]
 
@@ -689,7 +685,6 @@ SAMPLING_QUERIES.append(
         "training_manifest",
         q_training_manifest,
         _oracle_training_manifest(),
-        ("ext", "sampling", "pipeline"),
     )
 )
 
@@ -780,7 +775,6 @@ SAMPLING_QUERIES.append(
         "pipeline_yield_report",
         q_pipeline_yield_report,
         _oracle_pipeline_yield(),
-        ("ext", "sampling", "pipeline", "ops"),
     )
 )
 
@@ -854,6 +848,5 @@ SAMPLING_QUERIES.append(
         "temporal_split",
         q_temporal_split,
         ORACLE_TEMPORAL_SPLIT,
-        ("ext", "sampling", "temporal", "split"),
     )
 )

@@ -49,6 +49,59 @@ def _sql_plane(p: int) -> str:
     return "[" + ", ".join(repr(v) for v in _plane(p)) + "]::DOUBLE[]"
 
 
+def _sql_cos(a: str, b: str) -> str:
+    return (
+        f"list_dot_product({a}, {b}) / "
+        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+    )
+
+
+def _sql_cos_ranked(ranked: str, src: str) -> str:
+    """The cosine oracles' tail: CTE ``ranked`` numbers the ``src``
+    (query_id, neighbor_id, cos_sim) rows per query by cosine DESC,
+    neighbor_id ASC, and the final SELECT keeps the top TOP_K."""
+    return f"""{ranked} AS (
+  SELECT query_id, neighbor_id, cos_sim,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
+  FROM {src})
+SELECT query_id, rnk, neighbor_id, cos_sim FROM {ranked} WHERE rnk <= {TOP_K}"""
+
+
+def _sql_cos_topk(src: str, pairs: str) -> str:
+    """The brute-force, LSH and IVF oracles' ``scored``/``ranked`` tail:
+    the cosine of every query (query_id, qv) x ``src`` candidate (vec_id,
+    v) pair of the FROM clause ``pairs``, then its top TOP_K."""
+    return f"""scored AS (
+  SELECT query_id, {src}.vec_id AS neighbor_id,
+         list_dot_product(qv, {src}.v)
+           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product({src}.v, {src}.v)))
+           AS cos_sim
+  FROM {pairs}),
+{_sql_cos_ranked("ranked", "scored")}"""
+
+
+def _sql_topk_ids(name: str, src: str) -> str:
+    """CTE ``name``: the (query_id, neighbor_id) top TOP_K by cosine of
+    the ``src`` (query_id, neighbor_id, cos_sim) rows."""
+    return f"""{name} AS (SELECT query_id, neighbor_id FROM (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
+  FROM {src}) WHERE rnk <= {TOP_K})"""
+
+
+def _sql_recall(name: str, path: str, approx: str) -> str:
+    """CTE ``name``: the recall row of ``path`` — the share of the truth
+    pairs ``t`` that the (query_id, neighbor_id) CTE ``approx`` returns."""
+    return f"""{name} AS (
+  SELECT '{path}' AS path, count(*) AS n_truth,
+         count(a.neighbor_id) AS n_hit,
+         count(a.neighbor_id)::DOUBLE / count(*) AS recall
+  FROM t LEFT JOIN {approx} a
+    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id)"""
+
+
 def _cos_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
     """The per-query tail every cosine path shares: rank (query_id,
     neighbor_id, cos_sim) rows by cosine DESC, neighbor_id ASC and keep
@@ -98,18 +151,7 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_ANN_BRUTEFORCE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}),
-scored AS (
-  SELECT query_id, e.vec_id AS neighbor_id,
-         list_dot_product(qv, e.v)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v)))
-           AS cos_sim
-  FROM q JOIN e ON e.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM scored)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {TOP_K}
+{_sql_cos_topk("e", "q JOIN e ON e.vec_id <> q.query_id")}
 """
 
 
@@ -164,18 +206,7 @@ ORACLE_ANN_LSH = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 eb AS (SELECT vec_id, v, {_sql_bucket("v")} AS bucket FROM e),
 q AS (SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM eb WHERE vec_id < {N_QUERIES}),
-scored AS (
-  SELECT query_id, eb.vec_id AS neighbor_id,
-         list_dot_product(qv, eb.v)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(eb.v, eb.v)))
-           AS cos_sim
-  FROM q JOIN eb ON eb.bucket = q.qbucket AND eb.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM scored)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {TOP_K}
+{_sql_cos_topk("eb", "q JOIN eb ON eb.bucket = q.qbucket AND eb.vec_id <> q.query_id")}
 """
 
 
@@ -265,9 +296,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CENTROID_IDS = ", ".join(str(i) for i in CENTROID_IDS)
 
-ORACLE_ANN_IVF = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cent AS (SELECT vec_id AS cent_id, v AS cv FROM e
+# the IVF oracles' cell assignment: every row's cell is its most similar
+# centroid (ties to the lowest id), every query probes its N_PROBE best
+_SQL_IVF_PROBES = f"""cent AS (SELECT vec_id AS cent_id, v AS cv FROM e
          WHERE vec_id IN ({_SQL_CENTROID_IDS})),
 assigned AS (
   SELECT e.vec_id, e.v, cent_id,
@@ -280,20 +311,17 @@ assigned AS (
   FROM e CROSS JOIN cent),
 cells AS (SELECT vec_id, v, cent_id AS cell FROM assigned WHERE crnk = 1),
 probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS probe_cell
-           FROM assigned WHERE vec_id < {N_QUERIES} AND crnk <= {N_PROBE}),
-scored AS (
-  SELECT query_id, cells.vec_id AS neighbor_id,
-         list_dot_product(qv, cells.v)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cells.v, cells.v)))
-           AS cos_sim
-  FROM probes JOIN cells
-    ON cells.cell = probes.probe_cell AND cells.vec_id <> probes.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM scored)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {TOP_K}
+           FROM assigned WHERE vec_id < {N_QUERIES} AND crnk <= {N_PROBE})"""
+# the probed (query, candidate) pairs: same cell, not the query itself
+_SQL_IVF_PAIRS = (
+    "probes JOIN cells\n"
+    "    ON cells.cell = probes.probe_cell AND cells.vec_id <> probes.query_id"
+)
+
+ORACLE_ANN_IVF = f"""
+WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+{_SQL_IVF_PROBES},
+{_sql_cos_topk("cells", _SQL_IVF_PAIRS)}
 """
 
 
@@ -455,36 +483,11 @@ ivf AS (SELECT query_id, neighbor_id FROM ({ORACLE_ANN_IVF})),
 pq AS (SELECT query_id, neighbor_id FROM ({ORACLE_ANN_PQ})),
 ivfpq AS (SELECT query_id, neighbor_id FROM ({ORACLE_ANN_IVF_PQ})),
 pqr AS (SELECT query_id, neighbor_id FROM ({ORACLE_ANN_PQ_RERANK})),
-jl AS (
-  SELECT 'lsh' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN lsh a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-ji AS (
-  SELECT 'ivf' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN ivf a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-jp AS (
-  SELECT 'pq' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN pq a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-jip AS (
-  SELECT 'ivfpq' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN ivfpq a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-jpr AS (
-  SELECT 'pq_rerank' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN pqr a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id)
+{_sql_recall("jl", "lsh", "lsh")},
+{_sql_recall("ji", "ivf", "ivf")},
+{_sql_recall("jp", "pq", "pq")},
+{_sql_recall("jip", "ivfpq", "ivfpq")},
+{_sql_recall("jpr", "pq_rerank", "pqr")}
 SELECT * FROM jl UNION ALL SELECT * FROM ji UNION ALL SELECT * FROM jp
 UNION ALL SELECT * FROM jip UNION ALL SELECT * FROM jpr
 """
@@ -606,55 +609,21 @@ q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}),
 tsc AS (
   SELECT query_id, e.vec_id AS neighbor_id, {_sql_cos('qv', 'e.v')} AS cos_sim
   FROM q JOIN e ON e.vec_id <> q.query_id),
-t AS (SELECT query_id, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM tsc) WHERE rnk <= {TOP_K}),
+{_sql_topk_ids("t", "tsc")},
 eb AS (SELECT vec_id, v, {_sql_bucket("v")} AS bucket FROM e),
 qb AS (SELECT vec_id AS query_id, v AS qv, bucket AS qbucket FROM eb
        WHERE vec_id < {N_QUERIES}),
 lsc AS (
   SELECT query_id, eb.vec_id AS neighbor_id, {_sql_cos('qv', 'eb.v')} AS cos_sim
   FROM qb JOIN eb ON eb.bucket = qb.qbucket AND eb.vec_id <> qb.query_id),
-lsh AS (SELECT query_id, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM lsc) WHERE rnk <= {TOP_K}),
-cent AS (SELECT vec_id AS cent_id, v AS cv FROM e
-         WHERE vec_id IN ({_SQL_CENTROID_IDS})),
-assigned AS (
-  SELECT e.vec_id, e.v, cent_id,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY list_dot_product(e.v, cv)
-                      / (sqrt(list_dot_product(e.v, e.v))
-                         * sqrt(list_dot_product(cv, cv))) DESC,
-                    cent_id ASC) AS crnk
-  FROM e CROSS JOIN cent),
-cells AS (SELECT vec_id, v, cent_id AS cell FROM assigned WHERE crnk = 1),
-probes AS (SELECT vec_id AS query_id, v AS qv, cent_id AS probe_cell
-           FROM assigned WHERE vec_id < {N_QUERIES} AND crnk <= {N_PROBE}),
+{_sql_topk_ids("lsh", "lsc")},
+{_SQL_IVF_PROBES},
 isc AS (
   SELECT query_id, cells.vec_id AS neighbor_id, {_sql_cos('qv', 'cells.v')} AS cos_sim
-  FROM probes JOIN cells
-    ON cells.cell = probes.probe_cell AND cells.vec_id <> probes.query_id),
-ivf AS (SELECT query_id, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM isc) WHERE rnk <= {TOP_K}),
+  FROM {_SQL_IVF_PAIRS}),
+{_sql_topk_ids("ivf", "isc")},
 {_sql_pq_cb_codes('e')},
-plut AS (
-  SELECT q.vec_id AS query_id, cb.m, cb.code, {_sql_sub_sqd('q.v')} AS ld
-  FROM e q, cb WHERE q.vec_id < {N_QUERIES}),
-padc AS (
-  SELECT l.query_id, c.vec_id AS neighbor_id,
-         {_SQL_ADC_SUM} AS adc_dist
-  FROM codes c JOIN plut l ON l.m = c.m AND l.code = c.code
-  WHERE c.vec_id <> l.query_id
-  GROUP BY 1, 2),
+{_sql_pq_adc("plut", "padc")},
 pcand AS (
   SELECT query_id, neighbor_id, rnk FROM (
     SELECT query_id, neighbor_id,
@@ -662,40 +631,12 @@ pcand AS (
                               ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
     FROM padc) WHERE rnk <= {RERANK_R}),
 pq AS (SELECT query_id, neighbor_id FROM pcand WHERE rnk <= {TOP_K}),
-prsc AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_cos('qv', 'e.v')} AS cos_sim
-  FROM pcand c
-  JOIN e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id),
-pqr AS (SELECT query_id, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM prsc) WHERE rnk <= {TOP_K}),
-jl AS (
-  SELECT 'lsh' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN lsh a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-ji AS (
-  SELECT 'ivf' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN ivf a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-jp AS (
-  SELECT 'pq' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN pq a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id),
-jr AS (
-  SELECT 'pq_rerank' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN pqr a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id){_sweep_ctes()}
+{_sql_rescored("prsc", "pcand", "q")}),
+{_sql_topk_ids("pqr", "prsc")},
+{_sql_recall("jl", "lsh", "lsh")},
+{_sql_recall("ji", "ivf", "ivf")},
+{_sql_recall("jp", "pq", "pq")},
+{_sql_recall("jr", "pq_rerank", "pqr")}{_sweep_ctes()}
 SELECT * FROM jl UNION ALL SELECT * FROM ji UNION ALL SELECT * FROM jp
 UNION ALL SELECT * FROM jr{_sweep_union()}
 """
@@ -710,23 +651,10 @@ def _sweep_ctes() -> str:
         if r_cap == RERANK_R:
             continue
         parts.append(f""",
-prsc{r_cap} AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_cos('qv', 'e.v')} AS cos_sim
-  FROM pcand c
-  JOIN e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
+{_sql_rescored(f"prsc{r_cap}", "pcand", "q")}
   WHERE c.rnk <= {r_cap}),
-pqr{r_cap} AS (SELECT query_id, neighbor_id FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM prsc{r_cap}) WHERE rnk <= {TOP_K}),
-jr{r_cap} AS (
-  SELECT 'pq_rerank_r{r_cap}' AS path, count(*) AS n_truth,
-         count(a.neighbor_id) AS n_hit,
-         count(a.neighbor_id)::DOUBLE / count(*) AS recall
-  FROM t LEFT JOIN pqr{r_cap} a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id)""")
+{_sql_topk_ids(f"pqr{r_cap}", f"prsc{r_cap}")},
+{_sql_recall(f"jr{r_cap}", f"pq_rerank_r{r_cap}", f"pqr{r_cap}")}""")
     return "".join(parts)
 
 
@@ -935,13 +863,6 @@ def q_embedding_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggs.append(davg(f"err_{d}", f"mean_abs_err_d{d}"))
         aggs.append(F.max(f"err_{d}").alias(f"max_abs_err_d{d}"))
     return errs.agg(*aggs)
-
-
-def _sql_cos(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b}) / "
-        f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-    )
 
 
 ORACLE_EMBEDDING_MATRYOSHKA = f"""
@@ -1241,6 +1162,32 @@ _SQL_ADC_SUM = "\n         + ".join(
 )
 
 
+def _sql_pq_adc(lut: str, adc: str) -> str:
+    """CTEs ``lut`` (per-query ADC lookup distances against ``cb``) and
+    ``adc`` (every query x coded candidate's summed ADC distance)."""
+    return f"""{lut} AS (
+  SELECT q.vec_id AS query_id, cb.m, cb.code, {_sql_sub_sqd('q.v')} AS ld
+  FROM e q, cb WHERE q.vec_id < {N_QUERIES}),
+{adc} AS (
+  SELECT l.query_id, c.vec_id AS neighbor_id,
+         {_SQL_ADC_SUM} AS adc_dist
+  FROM codes c JOIN {lut} l ON l.m = c.m AND l.code = c.code
+  WHERE c.vec_id <> l.query_id
+  GROUP BY 1, 2)"""
+
+
+# the ADC oracles' tail: rank every query's candidates by ADC distance
+# (ties to the lowest id), keep the top TOP_K
+_SQL_ADC_RANKED = """ranked AS (
+  SELECT query_id, neighbor_id, adc_dist,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
+  FROM adc)"""
+_SQL_ADC_TOP_K = (
+    f"SELECT query_id, rnk, neighbor_id, adc_dist FROM ranked WHERE rnk <= {TOP_K}"
+)
+
+
 def _sql_pq_cb_codes(src: str, keep: tuple = ()) -> str:
     """cb + codes CTE text over ``src`` rows (vec_id, v[, *keep]) —
     the single source of the codebook/encoding SQL shared by every
@@ -1264,21 +1211,9 @@ codes AS (
 ORACLE_ANN_PQ = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 {_sql_pq_cb_codes('e')},
-lut AS (
-  SELECT q.vec_id AS query_id, cb.m, cb.code, {_sql_sub_sqd('q.v')} AS ld
-  FROM e q, cb WHERE q.vec_id < {N_QUERIES}),
-adc AS (
-  SELECT l.query_id, c.vec_id AS neighbor_id,
-         {_SQL_ADC_SUM} AS adc_dist
-  FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-  WHERE c.vec_id <> l.query_id
-  GROUP BY 1, 2),
-ranked AS (
-  SELECT query_id, neighbor_id, adc_dist,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
-  FROM adc)
-SELECT query_id, rnk, neighbor_id, adc_dist FROM ranked WHERE rnk <= {TOP_K}
+{_sql_pq_adc("lut", "adc")},
+{_SQL_ADC_RANKED}
+{_SQL_ADC_TOP_K}
 """
 
 
@@ -1356,23 +1291,21 @@ def _rescore(vecs: DataFrame, cands: DataFrame, emb: DataFrame) -> DataFrame:
     )
 
 
-_SQL_COS_QV_EV = (
-    "list_dot_product(qv, e.v)"
-    " / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(e.v, e.v)))"
-)
+def _sql_rescored(name: str, cand: str, q: str) -> str:
+    """Head of CTE ``name``: the exact cosine of every ``cand``
+    (query_id, neighbor_id) survivor against its query vector from ``q``
+    (query_id, qv). The caller closes the CTE."""
+    return f"""{name} AS (
+  SELECT c.query_id, c.neighbor_id, {_sql_cos('qv', 'e.v')} AS cos_sim
+  FROM {cand} c
+  JOIN e ON e.vec_id = c.neighbor_id
+  JOIN {q} ON {q}.query_id = c.query_id"""
+
 
 ORACLE_ANN_PQ_RERANK = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 {_sql_pq_cb_codes('e')},
-lut AS (
-  SELECT q.vec_id AS query_id, cb.m, cb.code, {_sql_sub_sqd('q.v')} AS ld
-  FROM e q, cb WHERE q.vec_id < {N_QUERIES}),
-adc AS (
-  SELECT l.query_id, c.vec_id AS neighbor_id,
-         {_SQL_ADC_SUM} AS adc_dist
-  FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code
-  WHERE c.vec_id <> l.query_id
-  GROUP BY 1, 2),
+{_sql_pq_adc("lut", "adc")},
 cand AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
@@ -1380,17 +1313,8 @@ cand AS (
                               ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
     FROM adc) WHERE rnk <= {RERANK_R}),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}),
-rescored AS (
-  SELECT c.query_id, c.neighbor_id, {_SQL_COS_QV_EV} AS cos_sim
-  FROM cand c
-  JOIN e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM rescored)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM ranked WHERE rnk <= {TOP_K}
+{_sql_rescored("rescored", "cand", "q")}),
+{_sql_cos_ranked("ranked", "rescored")}
 """
 
 
@@ -1524,17 +1448,15 @@ def q_ann_ivf_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rescore(emb, cands, emb)
 
 
-_IVFPQ_CENT_IDS_SQL = ", ".join(str(i) for i in CENTROID_IDS)
-
-
 def _sql_sqd_full(a: str, b: str) -> str:
     diff = f"list_transform(generate_series(1, {DIM}), i -> {a}[i] - {b}[i])"
     return f"list_dot_product({diff}, {diff})"
 
 
-ORACLE_ANN_IVF_PQ = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cents AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id IN ({_IVFPQ_CENT_IDS_SQL})),
+# the IVF-PQ oracles' CTE chain up to the residual-ADC distances: cell
+# assignment, residual codebook + codes, query probes, LUTs, ADC
+_SQL_IVF_PQ_CTES = f"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+cents AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id IN ({_SQL_CENTROID_IDS})),
 assigned AS (
   SELECT vec_id, cell,
          list_transform(generate_series(1, {DIM}), i -> v[i] - cv[i]) AS v
@@ -1563,45 +1485,26 @@ adc AS (
   FROM codes c
   JOIN lut l ON l.cell = c.cell AND l.m = c.m AND l.code = c.code
   WHERE c.vec_id <> l.query_id
-  GROUP BY 1, 2),
-ranked AS (
-  SELECT query_id, neighbor_id, adc_dist,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_dist ASC, neighbor_id ASC) AS rnk
-  FROM adc)
-SELECT query_id, rnk, neighbor_id, adc_dist FROM ranked WHERE rnk <= {TOP_K}
+  GROUP BY 1, 2)"""
+
+ORACLE_ANN_IVF_PQ = f"""
+{_SQL_IVF_PQ_CTES},
+{_SQL_ADC_RANKED}
+{_SQL_ADC_TOP_K}
 """
 
 
-# IVFADC+R oracle: the SAME CTE chain as ORACLE_ANN_IVF_PQ (single
-# owner — derived by swapping the final cut), candidates kept to
-# RERANK_R, then exact-cosine rescore on the raw vectors.
-# Import-time guard (ADVICE r9): if the base oracle's final SELECT ever
-# drifts, str.replace would silently no-op and the rerank oracle would
-# degrade to the plain IVFPQ oracle — fail loudly here instead.
-_IVF_PQ_FINAL_SELECT = (
-    f"SELECT query_id, rnk, neighbor_id, adc_dist FROM ranked WHERE rnk <= {TOP_K}"
-)
-assert _IVF_PQ_FINAL_SELECT in ORACLE_ANN_IVF_PQ, (
-    "ORACLE_ANN_IVF_PQ final SELECT drifted; update _IVF_PQ_FINAL_SELECT"
-)
-ORACLE_ANN_IVF_PQ_RERANK = ORACLE_ANN_IVF_PQ.replace(
-    _IVF_PQ_FINAL_SELECT,
-    f""", cand AS (
+# IVFADC+R oracle: the SAME CTE chain as ORACLE_ANN_IVF_PQ, candidates
+# kept to RERANK_R, then exact-cosine rescore on the raw vectors.
+ORACLE_ANN_IVF_PQ_RERANK = f"""
+{_SQL_IVF_PQ_CTES},
+{_SQL_ADC_RANKED}
+, cand AS (
   SELECT query_id, neighbor_id FROM ranked WHERE rnk <= {RERANK_R}),
 qr AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {N_QUERIES}),
-resc AS (
-  SELECT c.query_id, c.neighbor_id, {_SQL_COS_QV_EV} AS cos_sim
-  FROM cand c
-  JOIN e ON e.vec_id = c.neighbor_id
-  JOIN qr ON qr.query_id = c.query_id),
-rr AS (
-  SELECT query_id, neighbor_id, cos_sim,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, neighbor_id ASC) AS rnk
-  FROM resc)
-SELECT query_id, rnk, neighbor_id, cos_sim FROM rr WHERE rnk <= {TOP_K}""",
-)
+{_sql_rescored("resc", "cand", "qr")}),
+{_sql_cos_ranked("rr", "resc")}
+"""
 
 
 def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1669,7 +1572,7 @@ def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_ANN_INDEX_STATS = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-cents AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id IN ({_IVFPQ_CENT_IDS_SQL})),
+cents AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id IN ({_SQL_CENTROID_IDS})),
 assigned AS (
   SELECT vec_id, cell FROM (
     SELECT e.vec_id, cents.cell,
@@ -1783,97 +1686,82 @@ SIMILARITY_QUERIES: list[QuerySpec] = [
         "ann_pq",
         q_ann_pq,
         ORACLE_ANN_PQ,
-        ("ext", "similarity", "pq"),
         bench=True,
     ),
     QuerySpec(
         "ann_pq_rerank",
         q_ann_pq_rerank,
         ORACLE_ANN_PQ_RERANK,
-        ("ext", "similarity", "pq", "rerank"),
         bench=True,
     ),
     QuerySpec(
         "ann_pq_persisted",
         q_ann_pq_persisted,
         ORACLE_ANN_PQ,
-        ("ext", "similarity", "pq", "lakehouse"),
     ),
     QuerySpec(
         "ann_pq_rerank_persisted",
         q_ann_pq_rerank_persisted,
         ORACLE_ANN_PQ_RERANK,
-        ("ext", "similarity", "pq", "rerank", "lakehouse"),
     ),
     QuerySpec(
         "ann_ivf_pq",
         q_ann_ivf_pq,
         ORACLE_ANN_IVF_PQ,
-        ("ext", "similarity", "pq", "ivf"),
     ),
     QuerySpec(
         "ann_ivf_pq_rerank",
         q_ann_ivf_pq_rerank,
         ORACLE_ANN_IVF_PQ_RERANK,
-        ("ext", "similarity", "pq", "ivf", "rerank"),
     ),
     QuerySpec(
         "ann_index_stats",
         q_ann_index_stats,
         ORACLE_ANN_INDEX_STATS,
-        ("ext", "similarity", "eval", "dq"),
     ),
     QuerySpec(
         "source_semantic_similarity",
         q_source_semantic_similarity,
         ORACLE_SOURCE_SEMANTIC,
-        ("ext", "embedding", "similarity", "corpus-map"),
     ),
     QuerySpec(
         "embedding_matryoshka",
         q_embedding_matryoshka,
         ORACLE_EMBEDDING_MATRYOSHKA,
-        ("ext", "embedding", "similarity", "eval"),
     ),
     QuerySpec(
         "hard_negative_mining",
         q_hard_negative_mining,
         ORACLE_HARD_NEGATIVE_MINING,
-        ("ext", "similarity", "training"),
     ),
     QuerySpec(
         "embedding_quantize",
         q_embedding_quantize,
         ORACLE_EMBEDDING_QUANTIZE,
-        ("ext", "similarity", "quantization"),
     ),
     QuerySpec(
         "ann_eval_recall",
         q_ann_eval_recall,
         _oracle_ann_eval_recall(),
-        ("ext", "similarity", "eval"),
     ),
     QuerySpec(
         "embedding_normalize",
         q_embedding_normalize,
         ORACLE_EMBEDDING_NORMALIZE,
-        ("ext", "embedding"),
     ),
     QuerySpec(
         "embedding_centroids",
         q_embedding_centroids,
         ORACLE_EMBEDDING_CENTROIDS,
-        ("ext", "embedding", "ml"),
         bench=True,
     ),
     QuerySpec(
         "ann_eval_recall_clustered",
         q_ann_eval_recall_clustered,
         _oracle_ann_eval_recall_clustered(),
-        ("ext", "similarity", "eval"),
     ),
-    QuerySpec("ann_bruteforce", q_ann_bruteforce, ORACLE_ANN_BRUTEFORCE, ("ext", "similarity"), bench=True),
-    QuerySpec("ann_lsh_bucketed", q_ann_lsh_bucketed, ORACLE_ANN_LSH, ("ext", "similarity")),
-    QuerySpec("ann_ivf", q_ann_ivf, ORACLE_ANN_IVF, ("ext", "similarity", "ivf"), bench=True),
-    QuerySpec("ann_ml_brp", q_ann_ml_brp, None, ("ext", "similarity", "ml")),
+    QuerySpec("ann_bruteforce", q_ann_bruteforce, ORACLE_ANN_BRUTEFORCE, bench=True),
+    QuerySpec("ann_lsh_bucketed", q_ann_lsh_bucketed, ORACLE_ANN_LSH),
+    QuerySpec("ann_ivf", q_ann_ivf, ORACLE_ANN_IVF, bench=True),
+    QuerySpec("ann_ml_brp", q_ann_ml_brp, None),
 ]

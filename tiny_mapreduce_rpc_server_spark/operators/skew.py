@@ -124,8 +124,8 @@ ORDER BY c.c_mktsegment
 
 
 SKEW_QUERIES: list[QuerySpec] = [
-    QuerySpec("salted_user_stats", salted_user_stats, ORACLE_SALTED, ("scale", "skew")),
-    QuerySpec("skew_join_salted", q_skew_join_salted, ORACLE_SKEW_JOIN_SALTED, ("scale", "skew", "join")),
+    QuerySpec("salted_user_stats", salted_user_stats, ORACLE_SALTED),
+    QuerySpec("skew_join_salted", q_skew_join_salted, ORACLE_SKEW_JOIN_SALTED),
 ]
 
 
@@ -182,6 +182,5 @@ SKEW_QUERIES.append(
         "join_skew_diagnosis",
         q_join_skew_diagnosis,
         ORACLE_JOIN_SKEW,
-        ("ext", "skew", "ops", "topk"),
     )
 )

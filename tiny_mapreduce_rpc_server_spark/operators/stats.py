@@ -857,24 +857,22 @@ STATS_QUERIES: list[QuerySpec] = [
         "heavy_hitters_cms",
         q_heavy_hitters_cms,
         ORACLE_HEAVY_HITTERS_CMS,
-        ("ext", "stats", "sketch", "text"),
     ),
     QuerySpec(
         "equidepth_histogram",
         q_equidepth_histogram,
         _oracle_equidepth(),
-        ("stats", "quantile", "profile"),
     ),
-    QuerySpec("weighted_median", q_weighted_median, ORACLE_WEIGHTED_MEDIAN, ("stats", "quantile")),
-    QuerySpec("ingest_anomaly", q_ingest_anomaly, ORACLE_INGEST_ANOMALY, ("stats", "quality", "ops")),
-    QuerySpec("ols_trend", q_ols_trend, ORACLE_OLS_TREND, ("stats", "trend")),
-    QuerySpec("theil_sen_trend", q_theil_sen_trend, ORACLE_THEIL_SEN, ("stats", "robust", "quantile")),
-    QuerySpec("winsorized_stats", q_winsorized_stats, ORACLE_WINSORIZED_STATS, ("stats", "quantile", "quality")),
-    QuerySpec("outlier_mad", q_outlier_mad, ORACLE_OUTLIER_MAD, ("stats", "quantile", "quality")),
-    QuerySpec("drift_chisq", q_drift_chisq, ORACLE_DRIFT_CHISQ, ("stats", "quality", "drift")),
-    QuerySpec("covar_corr", q_covar_corr, ORACLE_COVAR_CORR, ("stats",)),
-    QuerySpec("quantiles_by_flag", quantiles_by_flag, ORACLE_QUANTILES, ("stats", "quantile")),
-    QuerySpec("approx_distinct_users", approx_distinct_users, None, ("stats", "sketch")),
-    QuerySpec("column_profile", q_column_profile, ORACLE_COLUMN_PROFILE, ("stats", "profile")),
-    QuerySpec("value_histogram", q_value_histogram, ORACLE_VALUE_HISTOGRAM, ("stats", "profile")),
+    QuerySpec("weighted_median", q_weighted_median, ORACLE_WEIGHTED_MEDIAN),
+    QuerySpec("ingest_anomaly", q_ingest_anomaly, ORACLE_INGEST_ANOMALY),
+    QuerySpec("ols_trend", q_ols_trend, ORACLE_OLS_TREND),
+    QuerySpec("theil_sen_trend", q_theil_sen_trend, ORACLE_THEIL_SEN),
+    QuerySpec("winsorized_stats", q_winsorized_stats, ORACLE_WINSORIZED_STATS),
+    QuerySpec("outlier_mad", q_outlier_mad, ORACLE_OUTLIER_MAD),
+    QuerySpec("drift_chisq", q_drift_chisq, ORACLE_DRIFT_CHISQ),
+    QuerySpec("covar_corr", q_covar_corr, ORACLE_COVAR_CORR),
+    QuerySpec("quantiles_by_flag", quantiles_by_flag, ORACLE_QUANTILES),
+    QuerySpec("approx_distinct_users", approx_distinct_users, None),
+    QuerySpec("column_profile", q_column_profile, ORACLE_COLUMN_PROFILE),
+    QuerySpec("value_histogram", q_value_histogram, ORACLE_VALUE_HISTOGRAM),
 ]

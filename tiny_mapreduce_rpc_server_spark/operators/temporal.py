@@ -1034,73 +1034,62 @@ TEMPORAL_QUERIES: list[QuerySpec] = [
         "gap_fill_interpolate",
         q_gap_fill_interpolate,
         ORACLE_GAP_FILL_INTERPOLATE,
-        ("ext", "temporal", "timeseries"),
     ),
     QuerySpec(
         "event_gaps",
         q_event_gaps,
         ORACLE_EVENT_GAPS,
-        ("temporal", "quality"),
     ),
     QuerySpec(
         "engagement_decay",
         q_engagement_decay,
         ORACLE_ENGAGEMENT_DECAY,
-        ("temporal", "scoring"),
     ),
     QuerySpec(
         "merge_into_upsert",
         q_merge_into_upsert,
         ORACLE_MERGE_INTO_UPSERT,
-        ("temporal", "cdc", "merge"),
     ),
     QuerySpec(
         "rolling_window_7d",
         q_rolling_window_7d,
         ORACLE_ROLLING_WINDOW_7D,
-        ("temporal", "window"),
     ),
     QuerySpec(
         "changelog_upsert",
         q_changelog_upsert,
         ORACLE_CHANGELOG_UPSERT,
-        ("temporal", "cdc"),
     ),
     QuerySpec(
         "scd2_history",
         q_scd2_history,
         ORACLE_SCD2_HISTORY,
-        ("temporal", "cdc", "scd2"),
     ),
     QuerySpec(
         "attribution_asof_tolerance",
         q_attribution_asof_tolerance,
         ORACLE_ATTRIBUTION,
-        ("ext", "temporal", "asof", "attribution"),
     ),
     QuerySpec(
         "snapshot_diff",
         q_snapshot_diff,
         ORACLE_SNAPSHOT_DIFF,
-        ("ext", "temporal", "cdc", "versioning"),
     ),
     QuerySpec(
         "point_in_time_join",
         q_point_in_time_join,
         ORACLE_POINT_IN_TIME,
-        ("ext", "temporal", "asof", "feature-store"),
     ),
-    QuerySpec("asof_join", asof_join_last_order, ORACLE_ASOF, ("temporal", "asof"), bench=True),
+    QuerySpec("asof_join", asof_join_last_order, ORACLE_ASOF, bench=True),
     QuerySpec(
         "asof_join_sliced",
         asof_join_sliced,
         ORACLE_ASOF,  # identical results by construction — same oracle
-        ("temporal", "asof", "skew"),
     ),
-    QuerySpec("asof_join_forward", asof_join_next_order, ORACLE_ASOF_NEXT, ("temporal", "asof")),
-    QuerySpec("range_join_bands", range_join_quantity_bands, ORACLE_RANGE_JOIN, ("temporal", "range-join")),
-    QuerySpec("interval_overlap_join", q_interval_overlap_join, ORACLE_INTERVAL_OVERLAP, ("temporal", "range-join")),
-    QuerySpec("time_bucket_rollup", time_bucket_rollup, ORACLE_TIME_BUCKET, ("temporal", "rollup"), bench=True),
+    QuerySpec("asof_join_forward", asof_join_next_order, ORACLE_ASOF_NEXT),
+    QuerySpec("range_join_bands", range_join_quantity_bands, ORACLE_RANGE_JOIN),
+    QuerySpec("interval_overlap_join", q_interval_overlap_join, ORACLE_INTERVAL_OVERLAP),
+    QuerySpec("time_bucket_rollup", time_bucket_rollup, ORACLE_TIME_BUCKET, bench=True),
 ]
 
 
@@ -1166,6 +1155,5 @@ TEMPORAL_QUERIES.append(
         "time_weighted_avg",
         q_time_weighted_avg,
         ORACLE_TIME_WEIGHTED_AVG,
-        ("ext", "temporal", "twap"),
     )
 )

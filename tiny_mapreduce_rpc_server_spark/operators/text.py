@@ -1106,53 +1106,46 @@ TEXT_QUERIES: list[QuerySpec] = [
         "text_normalize",
         q_text_normalize,
         ORACLE_TEXT_NORMALIZE,
-        ("ext", "text", "cleaning"),
     ),
     QuerySpec(
         "quality_percentile_filter",
         q_quality_percentile_filter,
         _oracle_quality_percentile_filter(),
-        ("ext", "text", "quality"),
     ),
     QuerySpec(
         "text_char_entropy",
         q_char_entropy,
         ORACLE_CHAR_ENTROPY,
-        ("ext", "text", "quality"),
     ),
     QuerySpec(
         "corpus_report",
         q_corpus_report,
         ORACLE_CORPUS_REPORT,
-        ("ext", "text", "profile"),
     ),
     QuerySpec(
         "text_vocab_coverage",
         q_vocab_coverage,
         ORACLE_VOCAB_COVERAGE,
-        ("ext", "text", "vocab"),
     ),
     QuerySpec(
         "text_bm25_search",
         q_bm25_search,
         ORACLE_BM25_SEARCH,
-        ("ext", "text", "retrieval"),
     ),
     QuerySpec(
         "text_repetition_filter",
         q_repetition_filter,
         ORACLE_REPETITION_FILTER,
-        ("ext", "text", "quality"),
         bench=True,
     ),
-    QuerySpec("text_token_stats", q_token_stats, ORACLE_TOKEN_STATS, ("ext", "text"), bench=True),
-    QuerySpec("text_quality_score", q_quality_score, ORACLE_QUALITY_SCORE, ("ext", "text")),
-    QuerySpec("text_lang_id", q_lang_id, ORACLE_LANG_ID, ("ext", "text")),
-    QuerySpec("text_fingerprint", q_fingerprint, ORACLE_FINGERPRINT, ("ext", "text")),
-    QuerySpec("text_tf_idf", q_tf_idf, ORACLE_TF_IDF, ("ext", "text", "retrieval"), bench=True),
-    QuerySpec("text_pii_redact", q_pii_redact, ORACLE_PII_REDACT, ("ext", "text", "quality")),
-    QuerySpec("text_bigram_lm", q_bigram_lm, ORACLE_BIGRAM_LM, ("ext", "text", "ngram"), bench=True),
-    QuerySpec("text_novelty", q_novelty, ORACLE_NOVELTY, ("ext", "text", "ngram", "quality"), bench=True),
+    QuerySpec("text_token_stats", q_token_stats, ORACLE_TOKEN_STATS, bench=True),
+    QuerySpec("text_quality_score", q_quality_score, ORACLE_QUALITY_SCORE),
+    QuerySpec("text_lang_id", q_lang_id, ORACLE_LANG_ID),
+    QuerySpec("text_fingerprint", q_fingerprint, ORACLE_FINGERPRINT),
+    QuerySpec("text_tf_idf", q_tf_idf, ORACLE_TF_IDF, bench=True),
+    QuerySpec("text_pii_redact", q_pii_redact, ORACLE_PII_REDACT),
+    QuerySpec("text_bigram_lm", q_bigram_lm, ORACLE_BIGRAM_LM, bench=True),
+    QuerySpec("text_novelty", q_novelty, ORACLE_NOVELTY, bench=True),
 ]
 
 
@@ -1225,7 +1218,6 @@ TEXT_QUERIES.append(
         "vocab_arrival_curve",
         q_vocab_arrival_curve,
         ORACLE_VOCAB_ARRIVAL,
-        ("ext", "text", "vocabulary", "curve"),
     )
 )
 
@@ -1381,7 +1373,6 @@ TEXT_QUERIES.append(
         "boilerplate_removal",
         q_boilerplate_removal,
         ORACLE_BOILERPLATE_REMOVAL,
-        ("ext", "text", "cleaning", "dedup"),
         bench=True,
     )
 )
@@ -1551,6 +1542,5 @@ TEXT_QUERIES.append(
         "text_lm_quality_filter",
         q_text_lm_quality_filter,
         ORACLE_TEXT_LM_QUALITY,
-        ("ext", "text", "quality", "ngram"),
     )
 )

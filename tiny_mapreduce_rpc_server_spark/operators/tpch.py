@@ -848,23 +848,23 @@ ORDER BY numwait DESC, s_name
 
 
 TPCH_QUERIES: list[QuerySpec] = [
-    QuerySpec("q2_min_cost_part", q2_min_cost_part, ORACLE_Q2, ("tpch", "subquery")),
-    QuerySpec("q4_order_priority", q4_order_priority, ORACLE_Q4, ("tpch", "semi")),
-    QuerySpec("q6_forecast_revenue", q6_forecast_revenue, ORACLE_Q6, ("tpch", "scan"), bench=True),
-    QuerySpec("q7_volume_shipping", q7_volume_shipping, ORACLE_Q7, ("tpch", "join")),
-    QuerySpec("q8_market_share", q8_market_share, ORACLE_Q8, ("tpch", "join")),
-    QuerySpec("q9_product_profit", q9_product_profit, ORACLE_Q9, ("tpch", "join"), bench=True),
-    QuerySpec("q10_returned_items", q10_returned_items, ORACLE_Q10, ("tpch", "topk")),
-    QuerySpec("q13_order_distribution", q13_order_distribution, ORACLE_Q13, ("tpch", "outer")),
-    QuerySpec("q14_promo_revenue", q14_promo_revenue, ORACLE_Q14, ("tpch", "ratio")),
-    QuerySpec("q15_top_supplier", q15_top_supplier, ORACLE_Q15, ("tpch", "argmax")),
-    QuerySpec("q17_small_qty_revenue", q17_small_qty_revenue, ORACLE_Q17, ("tpch", "subquery")),
-    QuerySpec("q18_large_volume_cust", q18_large_volume_cust, ORACLE_Q18, ("tpch", "having"), bench=True),
-    QuerySpec("q19_discounted_revenue", q19_discounted_revenue, ORACLE_Q19, ("tpch", "disjunction")),
-    QuerySpec("q22_sales_opportunity", q22_sales_opportunity, ORACLE_Q22, ("tpch", "anti")),
-    QuerySpec("q11_important_parts", q11_important_parts, ORACLE_Q11, ("tpch", "having")),
-    QuerySpec("q12_priority_classes", q12_priority_classes, ORACLE_Q12, ("tpch", "condcount")),
-    QuerySpec("q16_parts_suppliers", q16_parts_suppliers, ORACLE_Q16, ("tpch", "anti")),
-    QuerySpec("q20_dominant_suppliers", q20_dominant_suppliers, ORACLE_Q20, ("tpch", "nested-agg")),
-    QuerySpec("q21_suppliers_kept_waiting", q21_suppliers_kept_waiting, ORACLE_Q21, ("tpch", "exists"), bench=True),
+    QuerySpec("q2_min_cost_part", q2_min_cost_part, ORACLE_Q2),
+    QuerySpec("q4_order_priority", q4_order_priority, ORACLE_Q4),
+    QuerySpec("q6_forecast_revenue", q6_forecast_revenue, ORACLE_Q6, bench=True),
+    QuerySpec("q7_volume_shipping", q7_volume_shipping, ORACLE_Q7),
+    QuerySpec("q8_market_share", q8_market_share, ORACLE_Q8),
+    QuerySpec("q9_product_profit", q9_product_profit, ORACLE_Q9, bench=True),
+    QuerySpec("q10_returned_items", q10_returned_items, ORACLE_Q10),
+    QuerySpec("q13_order_distribution", q13_order_distribution, ORACLE_Q13),
+    QuerySpec("q14_promo_revenue", q14_promo_revenue, ORACLE_Q14),
+    QuerySpec("q15_top_supplier", q15_top_supplier, ORACLE_Q15),
+    QuerySpec("q17_small_qty_revenue", q17_small_qty_revenue, ORACLE_Q17),
+    QuerySpec("q18_large_volume_cust", q18_large_volume_cust, ORACLE_Q18, bench=True),
+    QuerySpec("q19_discounted_revenue", q19_discounted_revenue, ORACLE_Q19),
+    QuerySpec("q22_sales_opportunity", q22_sales_opportunity, ORACLE_Q22),
+    QuerySpec("q11_important_parts", q11_important_parts, ORACLE_Q11),
+    QuerySpec("q12_priority_classes", q12_priority_classes, ORACLE_Q12),
+    QuerySpec("q16_parts_suppliers", q16_parts_suppliers, ORACLE_Q16),
+    QuerySpec("q20_dominant_suppliers", q20_dominant_suppliers, ORACLE_Q20),
+    QuerySpec("q21_suppliers_kept_waiting", q21_suppliers_kept_waiting, ORACLE_Q21, bench=True),
 ]

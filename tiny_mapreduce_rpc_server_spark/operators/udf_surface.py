@@ -251,31 +251,26 @@ UDF_SURFACE_QUERIES = [
         "arrow_python_udf",
         q_arrow_python_udf,
         ORACLE_ARROW_PYTHON_UDF,
-        ("udf", "arrow"),
     ),
     QuerySpec(
         "variant_funcs",
         q_variant_funcs,
         ORACLE_VARIANT_FUNCS,
-        ("ext", "json", "variant"),
     ),
     QuerySpec(
         "pandas_udaf_sum",
         q_pandas_udaf_sum,
         ORACLE_PANDAS_UDAF_SUM,
-        ("udf", "udaf"),
     ),
     QuerySpec(
         "python_udtf_words",
         q_python_udtf_words,
         ORACLE_PYTHON_UDTF_WORDS,
-        ("udf", "udtf"),
     ),
     QuerySpec(
         "applyinpandas_runs",
         q_applyinpandas_runs,
         ORACLE_APPLYINPANDAS_RUNS,
-        ("udf", "grouped-map"),
     ),
 ]
 
@@ -350,7 +345,6 @@ UDF_SURFACE_QUERIES.append(
         "arrow_map_batches",
         q_arrow_map_batches,
         ORACLE_ARROW_MAP_BATCHES,
-        ("ext", "udf", "arrow"),
     )
 )
 
@@ -416,6 +410,5 @@ UDF_SURFACE_QUERIES.append(
         "applyinarrow_lang_profile",
         q_applyinarrow_lang_profile,
         ORACLE_APPLYINARROW_LANG,
-        ("ext", "udf", "arrow", "grouped-map"),
     )
 )

@@ -3,8 +3,7 @@
 Imports are deliberately NOT guarded: a syntax error or missing symbol in
 any operator module must crash the registry (and therefore the driver's
 smoke check, the bench, and the tests) instead of silently shrinking
-``queries()``. Genuinely optional dependencies (e.g. PIL) are gated
-inside the operator modules themselves, at call time.
+``queries()``.
 """
 
 from __future__ import annotations

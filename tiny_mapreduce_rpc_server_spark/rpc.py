@@ -132,7 +132,6 @@ def _rpc_specs():
             "rpc_registry_call",
             q_rpc_registry_call,
             ORACLE_RPC_REGISTRY,
-            ("s2", "rpc", "udf"),
         )
     ]
 

@@ -292,7 +292,6 @@ def _linefile_spec() -> QuerySpec:
         "linefile_wordcount",
         q_linefile_wordcount,
         ORACLE_LINEFILE_WORDCOUNT,
-        ("source", "linefile", "datasource-v2"),
     )
 
 
@@ -306,7 +305,6 @@ def _kv_textsink_spec() -> QuerySpec:
         "kv_textsink_roundtrip",
         q_kv_textsink_roundtrip,
         ORACLE_KV_TEXTSINK,
-        ("sink", "linefile", "datasource-v2"),
     )
 
 
@@ -616,7 +614,6 @@ FORMAT_QUERIES = [
         "file_layout_report",
         q_file_layout_report,
         _oracle_file_layout(),
-        ("ext", "layout", "ops"),
     ),
     _linefile_spec(),
     _kv_textsink_spec(),
@@ -624,55 +621,46 @@ FORMAT_QUERIES = [
         "compaction_roundtrip",
         q_compaction_roundtrip,
         ORACLE_COMPACTION,
-        ("sink", "compaction"),
     ),
     QuerySpec(
         "partitioned_sink_roundtrip",
         q_partitioned_sink_roundtrip,
         ORACLE_PARTITIONED_SINK,
-        ("sink", "partitioning"),
     ),
     QuerySpec(
         "csv_source_roundtrip",
         q_csv_roundtrip,
         ORACLE_CSV_ROUNDTRIP,
-        ("source", "csv"),
     ),
     QuerySpec(
         "json_source_roundtrip",
         q_json_roundtrip,
         ORACLE_JSON_ROUNDTRIP,
-        ("source", "json"),
     ),
     QuerySpec(
         "orc_source_roundtrip",
         q_orc_roundtrip,
         ORACLE_ORC_ROUNDTRIP,
-        ("source", "orc"),
     ),
     QuerySpec(
         "xml_source_roundtrip",
         q_xml_roundtrip,
         ORACLE_XML_ROUNDTRIP,
-        ("source", "xml"),
     ),
     QuerySpec(
         "bucketed_join_roundtrip",
         q_bucketed_join_roundtrip,
         ORACLE_BUCKETED_JOIN,
-        ("source", "bucketing", "join"),
     ),
     QuerySpec(
         "dpp_partitioned_join",
         q_dpp_partitioned_join,
         ORACLE_DPP_JOIN,
-        ("source", "partitioning", "dpp"),
     ),
     QuerySpec(
         "total_order_sort",
         q_total_order_sort,
         ORACLE_TOTAL_ORDER_SORT,
-        ("layout", "sort", "scale"),
         bench=True,  # round-11 paired-gate sentinel: the work-heavy
         # range-partitioned global sort (SCALING grower class)
     ),
@@ -680,13 +668,11 @@ FORMAT_QUERIES = [
         "layout_zorder",
         q_layout_zorder,
         ORACLE_LAYOUT_ZORDER,
-        ("layout", "zorder", "scale"),
     ),
     QuerySpec(
         "schema_evolution_roundtrip",
         q_schema_evolution_roundtrip,
         ORACLE_SCHEMA_EVOLUTION,
-        ("source", "schema-evolution"),
     ),
 ]
 
@@ -749,6 +735,5 @@ FORMAT_QUERIES.append(
         "csv_malformed_handling",
         q_csv_malformed_handling,
         ORACLE_CSV_MALFORMED,
-        ("source", "csv", "quarantine"),
     )
 )

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -12,12 +12,14 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     """A named query: Spark builder + (optional) equivalent ANSI SQL oracle.
 
-    ``fn(spark, sf_dir)`` returns the result DataFrame. ``oracle`` is a
-    DuckDB-runnable SQL string over the same parquet tables (views
-    pre-registered by the driver); None for non-SQL-expressible operators
-    (driver then records a weaker rows-only check). Column names/aliases
-    MUST match between the two — the comparator sorts columns by name
-    before hashing.
+    - ``name``: the registry key, unique across the engine.
+    - ``fn(spark, sf_dir)`` returns the result DataFrame.
+    - ``oracle`` is a DuckDB-runnable SQL string over the same parquet
+      tables (views pre-registered by the driver); None for
+      non-SQL-expressible operators (driver then records a weaker
+      rows-only check). Column names/aliases MUST match between the two
+      — the comparator sorts columns by name before hashing.
+    - ``bench`` marks the headliner queries ``bench.py`` times.
 
     Eager-materialization contract: most builders are plan-only (no
     Spark job until an action), but queries whose candidate sets go
@@ -35,5 +37,4 @@ class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    tags: tuple[str, ...] = field(default=())
     bench: bool = False

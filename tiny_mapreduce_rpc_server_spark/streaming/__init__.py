@@ -574,8 +574,10 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memory_sink(pairs, "append", "ojoin")
 
 
-ORACLE_STREAMING_OUTER_JOIN = """
-WITH wm AS (
+# The outer joins' oracle head: ``wm`` is the final watermark wmF (the
+# min of the two sides' max ts, minus 10 minutes), ``matched`` the batch
+# inner join of q_streaming_stream_join.
+_SQL_WM_MATCHED = """WITH wm AS (
   SELECT least(max(ts) FILTER (WHERE event_type = 'click'),
                max(ts) FILTER (WHERE event_type = 'view'))
          - INTERVAL 10 MINUTE AS wmf
@@ -586,8 +588,13 @@ matched AS (
   FROM events c JOIN events v
     ON v.user_id = c.user_id
    AND c.event_type = 'click' AND v.event_type = 'view'
-   AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE),
-expired_unmatched AS (
+   AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE)"""
+
+
+def _sql_expired_clicks(name: str) -> str:
+    """CTE ``name``: one null-view row per click with no view in its
+    10-minute horizon, emitted once that horizon falls below wmF."""
+    return f"""{name} AS (
   SELECT c.user_id, c.event_id AS click_id,
          CAST(NULL AS BIGINT) AS view_id,
          c.ts AS click_ts, CAST(NULL AS TIMESTAMP) AS view_ts
@@ -597,7 +604,12 @@ expired_unmatched AS (
     AND NOT EXISTS (
       SELECT 1 FROM events v
       WHERE v.user_id = c.user_id AND v.event_type = 'view'
-        AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE))
+        AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE))"""
+
+
+ORACLE_STREAMING_OUTER_JOIN = f"""
+{_SQL_WM_MATCHED},
+{_sql_expired_clicks("expired_unmatched")}
 SELECT * FROM matched
 UNION ALL
 SELECT * FROM expired_unmatched
@@ -630,30 +642,9 @@ def q_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _memory_sink(pairs, "append", "fojoin")
 
 
-ORACLE_STREAMING_FULL_OUTER_JOIN = """
-WITH wm AS (
-  SELECT least(max(ts) FILTER (WHERE event_type = 'click'),
-               max(ts) FILTER (WHERE event_type = 'view'))
-         - INTERVAL 10 MINUTE AS wmf
-  FROM events),
-matched AS (
-  SELECT c.user_id, c.event_id AS click_id, v.event_id AS view_id,
-         c.ts AS click_ts, v.ts AS view_ts
-  FROM events c JOIN events v
-    ON v.user_id = c.user_id
-   AND c.event_type = 'click' AND v.event_type = 'view'
-   AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE),
-expired_clicks AS (
-  SELECT c.user_id, c.event_id AS click_id,
-         CAST(NULL AS BIGINT) AS view_id,
-         c.ts AS click_ts, CAST(NULL AS TIMESTAMP) AS view_ts
-  FROM events c, wm
-  WHERE c.event_type = 'click'
-    AND c.ts + INTERVAL 10 MINUTE < wm.wmf
-    AND NOT EXISTS (
-      SELECT 1 FROM events v
-      WHERE v.user_id = c.user_id AND v.event_type = 'view'
-        AND v.ts >= c.ts AND v.ts <= c.ts + INTERVAL 10 MINUTE)),
+ORACLE_STREAMING_FULL_OUTER_JOIN = f"""
+{_SQL_WM_MATCHED},
+{_sql_expired_clicks("expired_clicks")},
 expired_views AS (
   SELECT v.user_id, CAST(NULL AS BIGINT) AS click_id,
          v.event_id AS view_id,
@@ -869,59 +860,50 @@ STREAMING_QUERIES: list[QuerySpec] = [
         "streaming_quarantine",
         q_streaming_quarantine,
         ORACLE_STREAMING_QUARANTINE,
-        ("ext", "streaming", "quarantine"),
     ),
     QuerySpec(
         "streaming_trending",
         q_streaming_trending,
         ORACLE_STREAMING_TRENDING,
-        ("ext", "streaming", "monitoring"),
     ),
     QuerySpec(
         "streaming_chained_windows",
         q_streaming_chained_windows,
         ORACLE_STREAMING_CHAINED,
-        ("ext", "streaming", "chained"),
     ),
     QuerySpec(
         "streaming_outer_join",
         q_streaming_outer_join,
         ORACLE_STREAMING_OUTER_JOIN,
-        ("streaming", "join", "outer"),
     ),
     QuerySpec(
         "streaming_full_outer_join",
         q_streaming_full_outer_join,
         ORACLE_STREAMING_FULL_OUTER_JOIN,
-        ("streaming", "join", "outer"),
     ),
     QuerySpec(
         "streaming_static_join",
         q_streaming_static_join,
         ORACLE_STREAMING_STATIC_JOIN,
-        ("streaming", "join"),
     ),
     QuerySpec(
         "streaming_stream_join",
         q_streaming_stream_join,
         ORACLE_STREAMING_STREAM_JOIN,
-        ("streaming", "join"),
     ),
     QuerySpec(
         "streaming_foreach_batch",
         q_streaming_foreach_batch,
         ORACLE_STREAMING_FOREACH_BATCH,
-        ("streaming", "sink"),
     ),
-    QuerySpec("streaming_tumbling", q_streaming_tumbling, ORACLE_STREAMING_TUMBLING, ("streaming",)),
-    QuerySpec("streaming_sliding", q_streaming_sliding, ORACLE_STREAMING_SLIDING, ("streaming",)),
-    QuerySpec("streaming_session_window", q_streaming_session_window, ORACLE_STREAMING_SESSION, ("streaming", "session")),
-    QuerySpec("streaming_stateful_user_stats", q_streaming_stateful_user_stats, ORACLE_STREAMING_STATEFUL, ("streaming", "stateful")),
-    QuerySpec("streaming_dedup", q_streaming_dedup, ORACLE_STREAMING_DEDUP, ("streaming", "dedup")),
+    QuerySpec("streaming_tumbling", q_streaming_tumbling, ORACLE_STREAMING_TUMBLING),
+    QuerySpec("streaming_sliding", q_streaming_sliding, ORACLE_STREAMING_SLIDING),
+    QuerySpec("streaming_session_window", q_streaming_session_window, ORACLE_STREAMING_SESSION),
+    QuerySpec("streaming_stateful_user_stats", q_streaming_stateful_user_stats, ORACLE_STREAMING_STATEFUL),
+    QuerySpec("streaming_dedup", q_streaming_dedup, ORACLE_STREAMING_DEDUP),
     QuerySpec(
         "streaming_late_data",
         q_streaming_late_data,
         ORACLE_STREAMING_LATE_DATA,
-        ("streaming", "watermark", "late"),
     ),
 ]
