@@ -39,32 +39,9 @@ class is exercised (broadcast join, shuffle join, window, partial agg,
 banded-signature equi-join, iterative localCheckpoint loop, Arrow
 mapInPandas, Structured Streaming with watermark, DataSource V2
 read/write, UDAF/UDTF surface); the scale-showdown headliners stay in
-(they are the queries whose regressions matter most). The frozen set:
-
-  reference parity — wordcount, sum_by_key, total_order_sort,
-    kv_textsink_roundtrip, rpc_registry_call, linefile_wordcount,
-    python_udtf_words, pandas_udaf_sum
-  relational/TPC-H — q1_pricing_summary, q9_product_profit,
-    q21_suppliers_kept_waiting
-  temporal — asof_join_forward, interval_overlap_join,
-    time_weighted_avg
-  lakehouse/formats — merge_into_upsert, schema_evolution_roundtrip
-  dedup — dedup_minhash_lsh, dedup_ngram_jaccard, dedup_simhash,
-    dedup_incremental, dedup_embedding, dedup_components,
-    dedup_savings_report, contamination_check
-  similarity/embeddings — ann_ivf, hard_negative_mining
-  text — text_tf_idf, text_bigram_lm, quality_percentile_filter
-  tokenizer — bpe_train_merges, bpe_encode
-  multimodal — multimodal_phash_dedup
-  sampling — training_manifest, temporal_split
-  dq/privacy — dq_constraint_check, k_anonymity_audit
-  streaming — streaming_late_data, streaming_session_window,
-    streaming_outer_join, streaming_quarantine
-  stats/sketches — heavy_hitters_cms, theil_sen_trend
-  incremental views — mv_incremental_agg, mv_incremental_join
-  graph/ML/ER — graph_pagerank, graph_triangles, er_fuzzy_candidates
-  skew — skew_join_salted
-  behavioral — item_cooccurrence, json_tolerant_parse
+(they are the queries whose regressions matter most). The frozen set is
+``registry._PRIORITY``, pinned by
+``tests/test_invariants.py::test_priority_list_is_exactly_the_driver_window``.
 """
 
 from __future__ import annotations

@@ -59,9 +59,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tiny_mapreduce_rpc_server_spark import get_spark, release_caches
+from tiny_mapreduce_rpc_server_spark import get_spark
 from tiny_mapreduce_rpc_server_spark.registry import all_queries
 
 # Sentinels for the paired engine-vs-oracle ratio: span the plan
@@ -93,17 +94,22 @@ PAIRED_SENTINELS = [
 ]
 
 
-def _median_of(reps: int, fn) -> tuple[float, float]:
-    """One untimed warm call, then ``reps`` timed; (median, spread)."""
-    fn()
-    times = sorted(_timed(fn) for _ in range(reps))
-    return times[len(times) // 2], times[-1] - times[0]
+def _median_of(reps: int, run) -> tuple[float, float, object]:
+    """One untimed warm call, then ``reps`` timed; ``run()`` returns
+    ``(seconds, result)``. (median, spread, the warm call's result)."""
+    _, result = run()
+    times = sorted(run()[0] for _ in range(reps))
+    return times[len(times) // 2], times[-1] - times[0], result
 
 
-def _timed(fn) -> float:
+def _timed(fn) -> tuple[float, object]:
     t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
+    result = fn()
+    return time.perf_counter() - t0, result
+
+
+def _collect_len(df: DataFrame) -> int:
+    return len(df.collect())
 
 
 def main() -> None:
@@ -146,28 +152,19 @@ def main() -> None:
     errors: dict[str, str] = {}
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     for spec in specs:
-
-        def run_once():
-            # drop cached blocks from prior runs: a query that .cache()s
-            # or localCheckpoints internally must not get warm-cache credit
-            # across repetitions. The previous rep's result is consumed
-            # already, which is release_caches()' one precondition.
-            release_caches()
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            n = df.count() if spec.oracle is None else len(df.collect())
-            return time.perf_counter() - t0, n
-
+        # QuerySpec.run releases cached blocks around every rep, outside
+        # the timed span: a query that .cache()s or localCheckpoints
+        # internally gets no warm-cache credit across repetitions
+        consume = DataFrame.count if spec.oracle is None else _collect_len
         try:
-            _, n = run_once()  # untimed warm run (plan codegen/JIT)
-            times = sorted(run_once()[0] for _ in range(reps))
-            dt = times[len(times) // 2]
+            dt, spread, n = _median_of(
+                reps, lambda: spec.run(spark, sf_dir, consume)
+            )
         except Exception as exc:  # one broken query must not kill the bench
             errors[spec.name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {spec.name}: FAILED {type(exc).__name__}", file=sys.stderr)
             continue
         timings[spec.name] = round(dt, 3)
-        spread = times[-1] - times[0]
         print(
             f"# {spec.name}: {dt:.3f}s rows~{n} "
             f"(warm median of {reps}, spread {spread:.3f}s)",
@@ -195,15 +192,6 @@ def main() -> None:
         if spec is None or spec.oracle is None or name not in timings:
             continue
 
-        def engine_rep(spec=spec) -> float:
-            # cache release OUTSIDE the timed region — identical to the
-            # headliner protocol above (a timed release would inflate
-            # cache-building sentinels relative to their headliner cells)
-            release_caches()
-            t0 = time.perf_counter()
-            len(spec.fn(spark, sf_dir).collect())
-            return time.perf_counter() - t0
-
         con = duckdb.connect()
         try:
             # view creation inside the try (ADVICE r10): a missing
@@ -214,12 +202,14 @@ def main() -> None:
                     f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{table_path(sf_dir, t)}')"
                 )
-            engine_rep()  # untimed warm rep
-            etimes = sorted(engine_rep() for _ in range(reps))
-            e_med = etimes[len(etimes) // 2]
-            e_spread = etimes[-1] - etimes[0]
-            o_med, o_spread = _median_of(
-                reps, lambda: con.execute(spec.oracle).fetchall()
+            # same protocol as the headliner cell above: releases fall
+            # outside the timed span, so cache-building sentinels are
+            # not inflated relative to their headliner cells
+            e_med, e_spread, _ = _median_of(
+                reps, lambda: spec.run(spark, sf_dir, _collect_len)
+            )
+            o_med, o_spread, _ = _median_of(
+                reps, lambda: _timed(lambda: con.execute(spec.oracle).fetchall())
             )
         except Exception as exc:
             print(f"# paired {name}: FAILED {type(exc).__name__}", file=sys.stderr)

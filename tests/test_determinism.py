@@ -25,7 +25,6 @@ import pytest
 
 from tests.conftest import SF_ORACLE
 from tests.oracle_utils import _rowset
-from tiny_mapreduce_rpc_server_spark import release_caches
 from tiny_mapreduce_rpc_server_spark.registry import all_queries
 
 # The queries whose output contains derived floats and whose plans
@@ -72,9 +71,9 @@ _COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 
 
 def _rows(spark, name):
-    release_caches()
-    df = all_queries()[name].fn(spark, SF_ORACLE)
-    return _rowset(df.columns, [tuple(r) for r in df.collect()])
+    return all_queries()[name].run(
+        spark, SF_ORACLE, lambda df: _rowset(df.columns, [tuple(r) for r in df.collect()])
+    )[1]
 
 
 @pytest.mark.parametrize("name", FLOAT_SHUFFLE_QUERIES)

@@ -331,15 +331,14 @@ def test_codegen_cache_keeps_a_query_across_others(tmp_path):
         f"""
         import json, sys
         sys.path.insert(0, {repo!r})
-        from tiny_mapreduce_rpc_server_spark import get_spark, release_caches
+        from tiny_mapreduce_rpc_server_spark import get_spark
         from tiny_mapreduce_rpc_server_spark.registry import all_queries
         spark = get_spark("codegen_cache")
         metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         specs = all_queries()
 
         def run(name):
-            specs[name].fn(spark, {SF_SMOKE!r}).toArrow()
-            release_caches()
+            specs[name].run(spark, {SF_SMOKE!r}, lambda df: df.toArrow())
             return metric.METRIC_COMPILATION_TIME().getCount()
 
         a = "wordcount"
@@ -1428,23 +1427,40 @@ def test_dedup_eval_embedding_bands(spark):
     ],
 )
 def test_release_caches_leaves_nothing_persisted(spark, name):
-    """One release_caches() after a consumed query drops every block the
-    query persisted — cache-manager entries, the bounded-broadcast
+    """``QuerySpec.run`` drops every block the query persisted once the
+    result is consumed — cache-manager entries, the bounded-broadcast
     persist and localCheckpoint RDDs alike — and the query still runs
     to the same rows afterwards."""
     from tests.oracle_utils import _rowset
-    from tiny_mapreduce_rpc_server_spark import release_caches
     from tiny_mapreduce_rpc_server_spark.registry import all_queries
 
-    fn = all_queries()[name].fn
+    spec = all_queries()[name]
 
-    def rows():
-        t = fn(spark, SF_SMOKE).toArrow()
+    def rows(df):
+        t = df.toArrow()
         return _rowset(t.column_names, [tuple(r.values()) for r in t.to_pylist()])
 
-    release_caches()
-    first = rows()
-    release_caches()
+    _, first = spec.run(spark, SF_SMOKE, rows)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert rows() == first
+    assert spec.run(spark, SF_SMOKE, rows)[1] == first
+
+
+def test_run_releases_when_consume_raises(spark):
+    """A failing consumer still releases what the query persisted: the
+    localCheckpoint blocks ``bpe_train_merges`` pins at build time are
+    gone after ``run`` re-raises the consumer's error."""
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+
+    jsc = spark.sparkContext._jsc
+    persisted = []
+
+    def fail(df):
+        persisted.append(jsc.getPersistentRDDs().size())
+        raise RuntimeError("consumer failed")
+
+    with pytest.raises(RuntimeError, match="consumer failed"):
+        all_queries()["bpe_train_merges"].run(spark, SF_SMOKE, fail)
+    assert persisted[0] > 0
+    assert jsc.getPersistentRDDs().size() == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1172,14 +1172,12 @@ def test_plan_fingerprints_registry_wide(spark):
         # diff to zero).
         import tools.dump_plans as dp
 
-        retried = {}
-        for name in drifted:
-            from tiny_mapreduce_rpc_server_spark import release_caches
-
-            release_caches()
-            retried[name] = dp.operator_tree(
-                spark, all_queries()[name].fn(spark, FP_SF_DIR)
-            )
+        retried = {
+            name: all_queries()[name].run(
+                spark, FP_SF_DIR, lambda df: dp.operator_tree(spark, df)
+            )[1]
+            for name in drifted
+        }
         drifted = {
             name: (stored_trees[name], tree)
             for name, tree in retried.items()

@@ -73,8 +73,8 @@ def _bounded_broadcast(cand: DataFrame) -> DataFrame:
     CONTRACT NOTE (also in QuerySpec's docstring): building a query that
     goes through this gate runs a real Spark job (the count) at
     DataFrame-construction time — construction is NOT plan-only for the
-    dedup/graph/sampling queries that need the gate. The persisted
-    blocks live until ``release_caches()`` or session teardown.
+    dedup/graph/sampling queries that need the gate. ``QuerySpec.run``
+    releases the persisted blocks once the query's result is consumed.
     """
     from pyspark import StorageLevel
 

@@ -446,7 +446,7 @@ def q_ann_eval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL."""
     # pin: the O(Q*N) brute-force truth feeds BOTH union branches —
     # without it the full cosine scan executes once per path;
-    # release_caches() drops it between queries.
+    # QuerySpec.run drops it once the result is consumed.
     truth = q_ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").cache()
     return (
         path_recall(truth, q_ann_lsh_bucketed(spark, sf_dir), "lsh")

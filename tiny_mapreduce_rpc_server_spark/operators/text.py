@@ -1285,8 +1285,8 @@ def q_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rewrite). Pin the key stream — 16 bytes/row of ids + hashes, NOT
     # the corpus text — so scan+tokenize runs twice (seg materialization
     # + rewrite) instead of three times; pinning `sized` instead would
-    # cache corpus-sized token arrays, a 100 TB hazard. Released via
-    # release_caches().
+    # cache corpus-sized token arrays, a 100 TB hazard. Released by
+    # QuerySpec.run.
     seg = seg.cache()
     # (2) boilerplate keys: appears in >= threshold distinct docs of a source
     boiler = (

@@ -2,10 +2,16 @@
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+from tiny_mapreduce_rpc_server_spark.session import release_caches
+
+_T = TypeVar("_T")
 
 
 @dataclass(frozen=True)
@@ -27,14 +33,29 @@ class QuerySpec:
     sampling composites) run a real count job and persist blocks at
     ``fn(...)`` call time — the size gate cannot be decided lazily.
     Query functions also ``.cache()`` shared subtrees and
-    ``localCheckpoint`` iterative loops. Long-lived sessions release
-    all of it with ``tiny_mapreduce_rpc_server_spark.release_caches()``
-    between queries, and only after the previous result has been
-    consumed: a ``localCheckpoint`` block cannot be recomputed once
-    unpersisted.
+    ``localCheckpoint`` iterative loops. ``run`` is the one way to
+    execute a query and release all of it: it consumes the result
+    before the release, which ``release_caches`` requires because a
+    ``localCheckpoint`` block cannot be recomputed once unpersisted.
     """
 
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     bench: bool = False
+
+    def run(
+        self, spark: SparkSession, sf_dir: str, consume: Callable[[DataFrame], _T]
+    ) -> tuple[float, _T]:
+        """Build the query at ``sf_dir``, pass its DataFrame to
+        ``consume`` and return ``(seconds, consume's result)``. The
+        seconds cover the build and ``consume``; the releases before
+        and after (the latter also when ``consume`` raises) fall
+        outside them."""
+        release_caches()
+        try:
+            t0 = time.perf_counter()
+            result = consume(self.fn(spark, sf_dir))
+            return time.perf_counter() - t0, result
+        finally:
+            release_caches()

@@ -2,6 +2,11 @@
 --fingerprints) a normalized operator-tree fingerprint for EVERY
 registered query to PLAN_FINGERPRINTS.json.
 
+Named queries (positional arguments) print their plans to stdout, or
+to --out when given; with --full that is the whole formatted plan, so
+PushedFilters, ReadSchema and join build sides are visible — the form
+to keep next to a re-plan as its before/after evidence.
+
 The plan regression tests (tests/test_plans.py) assert the load-bearing
 properties; this artifact exists so a reviewer can read the plans
 without running anything. Default output is the OPERATOR TREE only
@@ -20,7 +25,7 @@ stored file. An INTENTIONAL re-plan must regenerate the file in the
 same commit: ``python tools/dump_plans.py --fingerprints``.
 
 Usage: python tools/dump_plans.py [--sf-dir DIR] [--out PLANS.md]
-       [--full] [--fingerprints [OUT.json]]
+       [--full] [--fingerprints [OUT.json]] [QUERY ...]
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tiny_mapreduce_rpc_server_spark import get_spark, release_caches  # noqa: E402
+from tiny_mapreduce_rpc_server_spark import get_spark  # noqa: E402
 from tiny_mapreduce_rpc_server_spark.registry import all_queries  # noqa: E402
 
 # default corpus for fingerprints: smallest SF (plan SHAPE is what's
@@ -56,43 +61,54 @@ _STRIP_RES = (
 )
 
 
+def formatted_plan(spark, df) -> str:
+    return spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def operator_tree(spark, df) -> str:
     """Normalized physical operator tree: the formatted-explain tree
     section with per-session ids stripped, so the string is stable
     across sessions and rounds unless the PLAN SHAPE changes."""
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    tree = plan.split("\n\n", 1)[0]
+    tree = formatted_plan(spark, df).split("\n\n", 1)[0]
     for rx in _STRIP_RES:
         tree = rx.sub("", tree)
     return "\n".join(ln.rstrip() for ln in tree.splitlines()).rstrip()
 
 
 def fingerprint_all(spark, sf_dir: str) -> dict[str, str]:
-    """Operator tree per registered query. Caches are dropped before
-    each build: Spark's CacheManager substitutes InMemoryRelation into
-    ANY matching analyzed subplan, so a cache left by query A would
-    rewrite query B's tree and make fingerprints order-dependent."""
-    fps: dict[str, str] = {}
-    for name, spec in all_queries().items():
-        release_caches()
-        fps[name] = operator_tree(spark, spec.fn(spark, sf_dir))
-    release_caches()
-    return fps
+    """Operator tree per registered query. Each is built through
+    ``QuerySpec.run``, which drops caches around the build: Spark's
+    CacheManager substitutes InMemoryRelation into ANY matching
+    analyzed subplan, so a cache left by query A would rewrite query
+    B's tree and make fingerprints order-dependent."""
+    return {
+        name: spec.run(spark, sf_dir, lambda df: operator_tree(spark, df))[1]
+        for name, spec in all_queries().items()
+    }
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default="PLANS.md")
+    ap.add_argument("--out", default=None,
+                    help="output file (default: PLANS.md, or stdout for "
+                         "named queries)")
     ap.add_argument("--full", action="store_true",
                     help="include the numbered operator-detail blocks")
     ap.add_argument("--fingerprints", nargs="?", const=FP_PATH, default=None,
                     metavar="OUT.json",
                     help="write registry-wide plan fingerprints instead "
                          f"of PLANS.md (default output: {FP_PATH})")
+    ap.add_argument("queries", nargs="*",
+                    help="plan only these queries (default: the bench set)")
     args = ap.parse_args()
+    specs = all_queries()
+    unknown = [q for q in args.queries if q not in specs]
+    if unknown:
+        print(f"unknown queries: {unknown}", file=sys.stderr)
+        return 1
 
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
@@ -115,27 +131,31 @@ def main() -> int:
             fh.write("\n")
         print(f"wrote {args.fingerprints} ({len(fps)} queries)")
         return 0
-    lines = [
+    names = args.queries or [n for n, s in specs.items() if s.bench]
+    lines = [] if args.queries else [
         "# Physical plans (bench queries)",
         "",
         f"Generated by `python tools/dump_plans.py --sf-dir {args.sf_dir}`.",
         "Plan properties are regression-tested in `tests/test_plans.py`;",
         "this file shows each bench query's physical operator tree",
         "(re-run with --full for the per-operator detail blocks).",
+        "",
     ]
-    for name, spec in all_queries().items():
-        if not spec.bench:
-            continue
-        df = spec.fn(spark, args.sf_dir)
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+    for name in names:
+        plan = specs[name].run(
+            spark, args.sf_dir, lambda df: formatted_plan(spark, df)
+        )[1]
         if not args.full:
             plan = plan.split("\n\n", 1)[0]
-        lines += ["", f"## {name}", "", "```", plan.rstrip(), "```"]
-    with open(args.out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote {args.out}")
+        lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
+    text = "\n".join(lines)
+    out = args.out or (None if args.queries else "PLANS.md")
+    if out is None:
+        print(text, end="")
+        return 0
+    with open(out, "w") as fh:
+        fh.write(text)
+    print(f"wrote {out}")
     return 0
 
 

@@ -45,16 +45,22 @@ import duckdb
 
 SRC = "/root/testdata/sf0.1"
 STRIDE = 1_000_000_000
+REPLICA_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".scale_replica",
+    "sf1",
+)
 
 
-def main() -> int:
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else os.path.join(repo, ".scale_replica", "sf1")
-    )
+def ensure_replica() -> str:
+    """The default 10x replica's directory, built first if missing."""
+    if not os.path.exists(REPLICA_DIR):
+        print("# building sf1 replica (one-time)", file=sys.stderr)
+        build(10, REPLICA_DIR)
+    return REPLICA_DIR
+
+
+def build(k: int, out: str) -> None:
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     con.execute(f"CREATE TABLE copies AS SELECT range AS i FROM range({k})")
@@ -119,7 +125,13 @@ def main() -> int:
             f"TO '{out}/{name}.parquet' (FORMAT parquet)"
         )
         print(f"  {name}: copied (dimension, not replicated)", flush=True)
+    con.close()
     print(f"replica K={k} at {out}")
+
+
+def main() -> int:
+    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
+    build(k, sys.argv[2] if len(sys.argv) > 2 else REPLICA_DIR)
     return 0
 
 

@@ -95,16 +95,14 @@ def main() -> int:
         rnd = int(sys.argv[sys.argv.index("--round") + 1])
     loadavg_start = list(os.getloadavg())
     ncpu = os.cpu_count() or 1
-    sf_dir = os.path.join(_REPO, ".scale_replica", "sf1")
-    if not os.path.exists(sf_dir):
-        import subprocess
+    from tools.make_scale_replica import ensure_replica
 
-        subprocess.check_call(
-            [sys.executable, os.path.join(_REPO, "tools", "make_scale_replica.py")]
-        )
+    sf_dir = ensure_replica()
     os.environ["SPARK_GRAFT_ORACLE_SF"] = sf_dir
 
-    from tiny_mapreduce_rpc_server_spark import get_spark, release_caches
+    from pyspark.sql import DataFrame
+
+    from tiny_mapreduce_rpc_server_spark import get_spark
     from tiny_mapreduce_rpc_server_spark.registry import all_queries
     from oracle_utils import duckdb_connect
 
@@ -119,9 +117,7 @@ def main() -> int:
     # run levels the field; DuckDB needs no twin (its library warms with
     # the first connection, and each oracle rep is a fresh connection by
     # design).
-    release_caches()
-    q[PROBE[0]].fn(spark, sf_dir).toPandas()
-    release_caches()
+    q[PROBE[0]].run(spark, sf_dir, DataFrame.toPandas)
     rows = []
     detail: dict[str, dict] = {}
     for name in PROBE:
@@ -146,20 +142,19 @@ def main() -> int:
         # (Spark: distributed write, its real output path; DuckDB: COPY
         # TO), which measures engine work instead of a single-driver
         # Arrow funnel. Row equality is asserted from the written files.
-        probe_n = spec.fn(spark, sf_dir).count()
-        sink = probe_n > SINK_ROWS
+        sink = spec.run(spark, sf_dir, DataFrame.count)[1] > SINK_ROWS
+        path = f"/tmp/showdown_eng_{name}"
+
+        def write(df: DataFrame) -> None:
+            df.write.mode("overwrite").parquet(path)
+
         eng = None
         for rep in range(3):
-            release_caches()
-            t0 = time.perf_counter()
             if sink:
-                path = f"/tmp/showdown_eng_{name}"
-                spec.fn(spark, sf_dir).write.mode("overwrite").parquet(path)
-                dt = time.perf_counter() - t0
+                dt, _ = spec.run(spark, sf_dir, write)
                 n_eng = spark.read.parquet(path).count()  # untimed
             else:
-                n_eng = len(spec.fn(spark, sf_dir).toPandas())
-                dt = time.perf_counter() - t0
+                dt, n_eng = spec.run(spark, sf_dir, lambda df: len(df.toPandas()))
             eng = dt if eng is None or dt < eng else eng
             if dt > 60:
                 break

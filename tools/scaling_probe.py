@@ -15,12 +15,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tiny_mapreduce_rpc_server_spark import get_spark, release_caches  # noqa: E402
+from pyspark.sql import DataFrame  # noqa: E402
+
+from tiny_mapreduce_rpc_server_spark import get_spark  # noqa: E402
 from tiny_mapreduce_rpc_server_spark.registry import all_queries  # noqa: E402
+from tools.make_scale_replica import REPLICA_DIR, ensure_replica  # noqa: E402
 
 # (label, dir) per scale point. sf1 is a 10x statistical replica of the
 # driver's sf0.1 (tools/make_scale_replica.py — key-shifted, constant
@@ -30,7 +32,7 @@ SFS = [
     ("0.001", "/root/testdata/sf0.001"),
     ("0.01", "/root/testdata/sf0.01"),
     ("0.1", "/root/testdata/sf0.1"),
-    ("1*", os.path.join(_REPO, ".scale_replica", "sf1")),
+    ("1*", REPLICA_DIR),
 ]
 PROBE = [
     # data-dominated (per-row compute / inverted-index joins)
@@ -87,6 +89,17 @@ PROBE = [
 ]
 
 
+def _fetch_s(spec, spark, sf_dir: str) -> float:
+    """Seconds to build one query and fetch all of it: through Arrow
+    (toPandas), not collect() — pair-emitting queries return tens of
+    millions of rows at sf1*, and Row-object materialization costs
+    minutes of Python IPC that has nothing to do with the engine's
+    scaling behavior — and never count() for an oracle-backed query,
+    which would let Catalyst prune columns and whole branches."""
+    consume = DataFrame.toPandas if spec.oracle else DataFrame.count
+    return spec.run(spark, sf_dir, consume)[0]
+
+
 def measure(names: list[str], sf_dir: str, reps: int = 3) -> int:
     """Solo re-measure protocol (round-10 verdict #6, the judge's
     adjudication recipe made one command): for each named query, one
@@ -112,16 +125,8 @@ def measure(names: list[str], sf_dir: str, reps: int = 3) -> int:
         return 1
     for name in names:
         spec = q[name]
-
-        def run_once() -> float:
-            release_caches()
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.toPandas() if spec.oracle else df.count()
-            return time.perf_counter() - t0
-
-        run_once()  # untimed warm pass
-        times = sorted(run_once() for _ in range(reps))
+        _fetch_s(spec, spark, sf_dir)  # untimed warm pass
+        times = sorted(_fetch_s(spec, spark, sf_dir) for _ in range(reps))
         med = times[len(times) // 2]
         print(
             f"{name}: median {med:.3f}s of {reps} (spread "
@@ -150,43 +155,30 @@ def simhash_split() -> int:
     """
     from pyspark.sql import functions as F
 
-    if not os.path.exists(SFS[-1][1]):
-        import subprocess
-
-        print("# building sf1 replica (one-time)", file=sys.stderr)
-        subprocess.check_call(
-            [sys.executable, os.path.join(_REPO, "tools", "make_scale_replica.py")]
-        )
+    ensure_replica()
     spark = get_spark("simhash-split")
     spark.range(1).count()
     q = all_queries()
+
+    def drain(df: DataFrame) -> None:
+        # decimal sum: 23.5M 64-bit hashes overflow a long sum under
+        # ANSI mode
+        df.agg(
+            F.count("*"),
+            F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+        ).collect()
+
     rows = []
     for name in ("dedup_simhash", "dedup_simhash_wide"):
         spec = q[name]
+
+        def write(df: DataFrame) -> None:
+            df.write.mode("overwrite").parquet(f"/tmp/simhash_split_{name}")
+
         cells = []
         for sf, sf_dir in SFS:
-            def compute_once() -> float:
-                release_caches()
-                t0 = time.perf_counter()
-                df = spec.fn(spark, sf_dir)
-                # decimal sum: 23.5M 64-bit hashes overflow a long sum
-                # under ANSI mode
-                df.agg(
-                    F.count("*"),
-                    F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
-                ).collect()
-                return time.perf_counter() - t0
-
-            def sink_once() -> float:
-                release_caches()
-                t0 = time.perf_counter()
-                spec.fn(spark, sf_dir).write.mode("overwrite").parquet(
-                    f"/tmp/simhash_split_{name}"
-                )
-                return time.perf_counter() - t0
-
-            comp = min(compute_once() for _ in range(2))
-            sink = min(sink_once() for _ in range(2))
+            comp = min(spec.run(spark, sf_dir, drain)[0] for _ in range(2))
+            sink = min(spec.run(spark, sf_dir, write)[0] for _ in range(2))
             cells += [comp, sink]
             print(f"# {name} sf{sf}: compute {comp:.2f}s sink {sink:.2f}s",
                   file=sys.stderr)
@@ -264,13 +256,7 @@ def main() -> int:
         ap.add_argument("--reps", type=int, default=3)
         args = ap.parse_args()
         return measure(args.measure, args.sf_dir, args.reps)
-    if not os.path.exists(SFS[-1][1]):
-        import subprocess
-
-        print("# building sf1 replica (one-time)", file=sys.stderr)
-        subprocess.check_call(
-            [sys.executable, os.path.join(_REPO, "tools", "make_scale_replica.py")]
-        )
+    ensure_replica()
     spark = get_spark("scaling")
     spark.range(1).count()
     q = all_queries()
@@ -279,20 +265,8 @@ def main() -> int:
         spec = q[name]
         cells = []
         for sf, sf_dir in SFS:
-            best = None
-            for _ in range(2):  # best-of-2: drop one-time codegen cost
-                release_caches()
-                t0 = time.perf_counter()
-                df = spec.fn(spark, sf_dir)
-                # Arrow fetch, not collect(): pair-emitting queries
-                # return tens of millions of rows at sf1*, and Row-object
-                # materialization costs minutes of Python IPC that has
-                # nothing to do with the engine's scaling behavior.
-                # toPandas keeps full result materialization without the
-                # count()-style risk of column pruning.
-                df.toPandas() if spec.oracle else df.count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
+            # best-of-2: drop one-time codegen cost
+            best = min(_fetch_s(spec, spark, sf_dir) for _ in range(2))
             cells.append(best)
             print(f"# {name} sf{sf}: {best:.2f}s", file=sys.stderr)
         growth = cells[3] / cells[0] if cells[0] > 0 else float("nan")

@@ -3,8 +3,9 @@
 The plan pins assert shuffle *shapes* (broadcasts, partial aggregation,
 no cartesians); this probe adds the measurement: for each bench-flagged
 query at a given SF, the bytes actually written to shuffle by all jobs
-the query ran — read from Spark's own REST metrics API (the UI
-endpoint), not estimated. A query whose shuffle volume rivals its input
+the query ran, build-time jobs included — read from Spark's live status
+store (``lastStageAttempt`` over the query's job group, SKIPPED stages
+left out), not estimated. A query whose shuffle volume rivals its input
 size is re-shuffling the corpus; the inverted-index/dedup family should
 shuffle only keys+ids, the broadcast-join family almost nothing beyond
 its final aggregate.
@@ -15,21 +16,28 @@ Writes SHUFFLE.md. Usage: python tools/shuffle_probe.py [--sf-dir D]
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _stage_totals(ui: str, app: str) -> tuple[int, int]:
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-        stages = json.load(r)
-    w = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    rd = sum(s.get("inputBytes", 0) for s in stages)
-    return w, rd
+def _shuffle_write_bytes(sc, group: str) -> int:
+    """Shuffle bytes written by the stages of ``group``'s jobs."""
+    # the status store is fed by the listener bus; drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    stages: set[int] = set()
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        info = sc.statusTracker().getJobInfo(job)
+        if info is not None:
+            stages.update(info.stageIds)
+    total = 0
+    for sid in stages:
+        st = store.lastStageAttempt(sid)
+        if st.status().toString() != "SKIPPED":
+            total += st.shuffleWriteBytes()
+    return total
 
 
 def main() -> int:
@@ -42,35 +50,33 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    spark = get_spark("shuffle-probe", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark("shuffle-probe")
+    sc = spark.sparkContext
     spark.range(1_000_000).groupBy(F.col("id") % 7).count().collect()  # warm
-    ui = spark.sparkContext.uiWebUrl or "http://localhost:4040"
-    app = spark.sparkContext.applicationId
 
     rows = []
     for name, spec in all_queries().items():
         if not spec.bench:
             continue
-        w0, _ = _stage_totals(ui, app)
-        t0 = time.perf_counter()
-        df = spec.fn(spark, args.sf_dir)
-        n = len(df.collect())
-        dt = time.perf_counter() - t0
-        time.sleep(0.3)  # let the UI ingest the last stage events
-        w1, _ = _stage_totals(ui, app)
-        rows.append((name, (w1 - w0) / 1e6, n, dt))
+        group = f"shuffle-probe-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            dt, n = spec.run(spark, args.sf_dir, lambda df: len(df.collect()))
+        finally:
+            sc._jsc.clearJobGroup()
+        rows.append((name, _shuffle_write_bytes(sc, group) / 1e6, n, dt))
         print(f"# {name}: shuffle write {rows[-1][1]:.2f} MB, {n} rows, "
               f"{dt:.2f}s", file=sys.stderr)
 
     lines = [
         "# SHUFFLE.md — measured shuffle volume per bench query",
         "",
-        f"Source: Spark REST metrics (completed stages), {args.sf_dir},",
-        "local[32]. `shuffle_mb` is bytes actually written to shuffle by",
+        f"Source: Spark status store (each query's job group), {args.sf_dir},",
+        f"{sc.master}. `shuffle_mb` is bytes actually written to shuffle by",
         "every job the query ran, end to end (incl. any setup writes).",
         "For reference, the sf0.1 inputs are ~40 MB lineitem, ~28 MB",
         "documents-with-text, ~2.5 MB embeddings on disk. (Input-bytes",
-        "deltas from the same API are omitted: with a warm page cache the",
+        "deltas from the same source are omitted: with a warm page cache the",
         "columnar scan underreports them, which made ratios misleading.)",
         "",
         "The discipline this measures: queries shuffle keys / ids /",

@@ -66,7 +66,8 @@ def main() -> int:
         .getOrCreate()
     )
 
-    from tiny_mapreduce_rpc_server_spark import release_caches
+    from pyspark.sql import DataFrame
+
     from tiny_mapreduce_rpc_server_spark.registry import all_queries
     from oracle_utils import compare
 
@@ -81,17 +82,17 @@ def main() -> int:
         spec = q[name]
         t0 = time.time()
         try:
-            # mirror the driver contract: __spark_entry__.queries() wraps
-            # every fn with a release_caches() so caches and checkpoints
-            # don't accumulate across a many-query session
-            release_caches()
-            df = spec.fn(spark, args.sf_dir)
+            # QuerySpec.run releases caches and checkpoints around each
+            # query, so they don't accumulate across a many-query session
+            # (the driver contract's queries() releases before each build)
             if spec.oracle is None:
-                n_rows = df.count()
+                _, n_rows = spec.run(spark, args.sf_dir, DataFrame.count)
                 print(f"[{i+1:3d}/{len(names)}] {name}: rows-only ({n_rows} rows) "
                       f"{time.time()-t0:.1f}s", flush=True)
                 continue
-            compare(df, spec.oracle, args.sf_dir)
+            spec.run(
+                spark, args.sf_dir, lambda df: compare(df, spec.oracle, args.sf_dir)
+            )
             print(f"[{i+1:3d}/{len(names)}] {name}: PASS {time.time()-t0:.1f}s", flush=True)
         except Exception as e:  # noqa: BLE001 - report and continue
             failed.append(name)
