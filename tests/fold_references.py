@@ -7,7 +7,7 @@ package no longer runs them, but they stay the definition the kernels
 are pinned against, bit for bit:
 
 - ``minhash_fold`` for ``dedup._minhash_kernel``;
-- ``simhash_fold`` for ``dedup._simhash_kernel``;
+- ``P.h2`` per token + ``simhash_fold`` for ``dedup._simhash_kernel``;
 - ``py_h1`` is the pure-Python ``portable.h1`` for driver-side checks.
 """
 

@@ -211,46 +211,36 @@ def test_bpe_local_matches_distributed_loop(spark, monkeypatch):
 
 
 def test_simhash_kernel_matches_fold(spark):
-    """r12: the vectorized Arrow vote-count kernel must be bit-identical
-    to the retained JVM fold — on the real corpus at BOTH bit widths and
-    on synthetic edge rows (null token array, empty array, single token,
-    negative hash values exercising arithmetic-shift bit extraction, a
-    null element: counted in n, no votes)."""
+    """The Arrow simhash kernel (token hash + vote count) must equal
+    ``P.h2`` per token + the retained JVM fold — on the real corpus at
+    BOTH bit widths and on edge rows: a null token array, an empty
+    array, a single token, a null token (counted in n, no votes),
+    non-ASCII tokens hashed per code point, and one ~200k-token doc."""
     import tiny_mapreduce_rpc_server_spark.operators.dedup as D
     from tests.fold_references import simhash_fold
 
-    sf = SF_SMOKE
-    for bits in (D.SIMHASH_BITS, D.SIMHASH_WIDE_BITS):
-        got = {
-            (r.doc_id, r.simhash)
-            for r in D._doc_simhash(spark, sf, bits).collect()
-        }
-        docs = D.load_table(spark, sf, "documents")
-        th = F.transform(
-            F.array_distinct(D._toks(F.col("text"))), lambda t: D.P.h2(t)
-        )
-        hashed = docs.select("doc_id", th.alias("th"))
-        ref = {
-            (r.doc_id, r.simhash)
-            for r in simhash_fold(hashed, bits).collect()
-        }
-        assert got == ref and len(got) > 0
+    def ref(toks, bits):
+        th = toks.select("doc_id", F.transform("toks", lambda t: D.P.h2(t)).alias("th"))
+        return sorted(simhash_fold(th, bits).collect())
 
+    docs = D.load_table(spark, SF_SMOKE, "documents")
+    corpus = docs.select("doc_id", F.array_distinct(D._toks(F.col("text"))).alias("toks"))
     edge = spark.createDataFrame(
         [
             (1, None),
             (2, []),
-            (3, [5]),
-            (4, [-5, 7, -9, 3]),
-            (5, [1, 2, 4]),
-            (6, [3, None, -1]),
+            (3, ["solo"]),
+            (4, ["a", None, "bc"]),
+            (5, ["é日", "a😀b", "plain"]),
+            (6, [f"w{i}" for i in range(200_000)]),
         ],
-        "doc_id long, th array<long>",
-    )
-    for bits in (31, 63):
+        "doc_id long, toks array<string>",
+    ).coalesce(1)
+    for bits in (D.SIMHASH_BITS, D.SIMHASH_WIDE_BITS):
+        got = sorted(D._doc_simhash(spark, SF_SMOKE, bits).collect())
+        assert got == ref(corpus, bits) and len(got) > 0
         got = sorted(D._simhash_kernel(edge, bits).collect())
-        ref = sorted(simhash_fold(edge, bits).collect())
-        assert got == ref
+        assert got == ref(edge, bits)
         assert got[0]["simhash"] == 0 and got[1]["simhash"] == 0
 
 
@@ -412,17 +402,19 @@ def test_spread_is_noop_with_enough_partitions(spark):
 
 
 def test_dedup_embedding_blocked_matmul_is_exact(spark, monkeypatch):
-    """The broadcast path's score matmul is blocked over build-side
-    columns to bound executor memory. Shrinking the block cap so every
-    arrow batch needs MANY chunks must not change the result — compare
-    against the oracle with a 4 KB cap (step collapses to a handful of
-    columns at sf0.001)."""
+    """The score matmuls of dedup_embedding's broadcast path and of the
+    SemDeDup rollup are blocked to bound executor memory. Shrinking the
+    block cap so every arrow batch and every cluster needs MANY blocks
+    must not change either result — compare both against their oracles
+    with a 4 KB cap (a step of a handful of rows)."""
     from tests.oracle_utils import compare
-    from tiny_mapreduce_rpc_server_spark.operators import dedup
+    from tiny_mapreduce_rpc_server_spark.functions import kernels
+    from tiny_mapreduce_rpc_server_spark.operators import dedup, ml
 
-    monkeypatch.setattr(dedup, "_MAX_SCORE_BLOCK_BYTES", 1 << 12)
+    monkeypatch.setattr(kernels, "SCORE_BLOCK_BYTES", 1 << 12)
     df = dedup.q_dedup_embedding(spark, SF_ORACLE)
     compare(df, dedup.ORACLE_DEDUP_EMBEDDING, SF_ORACLE)
+    compare(ml.q_dedup_semantic(spark, SF_ORACLE), ml.ORACLE_DEDUP_SEMANTIC, SF_ORACLE)
 
 
 def test_pii_salts_actually_match(spark):
@@ -1009,7 +1001,9 @@ def test_zero_norm_embedding_pairs_are_excluded(spark):
     same rows: DuckDB's zero-divide cosine is NULL and the NULL
     comparison drops the pair, so the engine must emit no pair touching
     the zero vector — and must not raise under ANSI (a forced candidate
-    would put 0/0 through the exact Spark cosine)."""
+    would put 0/0 through the exact Spark cosine). A null or NaN vector,
+    which DuckDB's list_dot_product rejects or decides as a match,
+    raises a ValueError naming its vec_id instead."""
     import duckdb
 
     from tiny_mapreduce_rpc_server_spark.operators.dedup import (
@@ -1021,6 +1015,13 @@ def test_zero_norm_embedding_pairs_are_excluded(spark):
     data = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [-1.0, 0.0])]
     emb = spark.createDataFrame(data, "vec_id long, embedding array<double>")
     rows = _dedup_embedding_broadcast(spark, emb).collect()
+    # a null or NaN vector has no cosine: it raises, naming its vec_id
+    for bad, msg in ((None, "null"), ([float("nan"), 0.0], "non-finite")):
+        with pytest.raises(ValueError, match=f"vec_id 4 has a {msg} vector"):
+            _dedup_embedding_broadcast(
+                spark,
+                spark.createDataFrame(data + [(4, bad)], emb.schema),
+            )
     pairs = {(r.vec_a, r.vec_b) for r in rows}
     assert pairs == {(1, 2)}, pairs  # exact duplicates only
     # the registered oracle agrees on the identical input
@@ -1049,9 +1050,7 @@ def test_pq_seed_rows_encode_to_their_own_code(spark):
         N_QUERIES,
         q_ann_pq,
     )
-    from tiny_mapreduce_rpc_server_spark.operators.similarity import (
-        _sub_sqd,
-    )
+    from tiny_mapreduce_rpc_server_spark.functions import sq_dist
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
     sf = SF_ORACLE
@@ -1062,7 +1061,7 @@ def test_pq_seed_rows_encode_to_their_own_code(spark):
     seeds = emb.filter(F.col("vec_id").isin(PQ_SEED_IDS))
     for m in range(PQ_M):
         d = seeds.select(
-            _sub_sqd(F.lit(m), F.col("v"), F.slice("v", m * 16 + 1, 16)).alias("d")
+            sq_dist(F.slice("v", m * 16 + 1, 16), F.slice("v", m * 16 + 1, 16)).alias("d")
         ).agg(F.max("d")).first()[0]
         assert d == 0.0
     out = q_ann_pq(spark, sf).collect()

@@ -105,15 +105,19 @@ def test_cluster_rollup_drops_zero_norm():
     scores (0 * inf) compare False against both the margin and the
     certainty band, so a zero-norm row is never dropped and never
     reaches the exact fold — matching the oracle and never tripping
-    ANSI division."""
+    ANSI division. A null or NaN vector raises instead, naming its
+    vec_id."""
+    import math
+
     import pandas as pd
+    import pytest
 
     from tiny_mapreduce_rpc_server_spark.operators.ml import (
         SEMANTIC_DUP,
         _cluster_rollup,
     )
 
-    fn = _cluster_rollup(SEMANTIC_DUP - 1e-9, SEMANTIC_DUP)
+    fn = _cluster_rollup()
     pdf = pd.DataFrame(
         {"vec_id": [1, 2, 3, 4],
          "v": [[0.0, 0.0], [1.0, 0.0], [-1.0, 0.0], [1.0, 1e-9]]}
@@ -127,6 +131,10 @@ def test_cluster_rollup_drops_zero_norm():
     # pair is a normal BLAS reject.
     assert list(out["n_dropped"]) == [1]
     assert list(out["n_kept"]) == [3]
+    # a null or NaN vector has no cosine: it raises, naming its vec_id
+    for bad, msg in ((None, "null"), ([math.nan, 0.0], "non-finite")):
+        with pytest.raises(ValueError, match=f"vec_id 5 has a {msg} vector"):
+            fn((7,), pd.concat([pdf, pd.DataFrame({"vec_id": [5], "v": [bad]})]))
 
 
 def test_cluster_rollup_uncertainty_band_exact_fold():
@@ -144,7 +152,7 @@ def test_cluster_rollup_uncertainty_band_exact_fold():
 
     import math
 
-    fn = _cluster_rollup(SEMANTIC_DUP - 1e-9, SEMANTIC_DUP)
+    fn = _cluster_rollup()
     # v2 is built so its exact-fold cosine against v1 lands within a few
     # ulps of the threshold (2/5 up to norm rounding): the BLAS score
     # falls inside the [t-1e-9, t+1e-9) uncertainty band and the exact

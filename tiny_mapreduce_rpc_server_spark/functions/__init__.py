@@ -148,3 +148,14 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def sq_dist(a: Column, b: Column) -> Column:
+    """Ordered-fold squared L2: each ``(x - y) * (x - y)`` rounded, then
+    summed left to right from 0.0 — bit-identical to DuckDB's
+    list_dot_product of the difference list with itself."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )

@@ -21,9 +21,9 @@ Scale note: the higher-order array functions (``transform``,
 ``aggregate``) are CodegenFallback: Spark interprets them element by
 element, outside whole-stage codegen. Where a per-token hash is a hot
 path, a vectorized Arrow kernel computes the same integers instead
-(``dedup._minhash_kernel`` for h1 and the minhash minima,
-``dedup._simhash_kernel`` for the simhash votes), pinned bit for bit
-against these expressions.
+(``kernels.h1``; ``dedup._minhash_kernel`` for the minhash minima,
+``dedup._simhash_kernel`` for h2 and the simhash votes), pinned bit for
+bit against these expressions.
 """
 
 from __future__ import annotations

@@ -6,10 +6,11 @@ No reference counterpart (the reference has no distinct/dedup of any kind
 pipeline, built Spark-first:
 
 - signatures are computed per row with zero shuffle. Shingle sets are
-  array expressions; the minhash and simhash folds run in vectorized
-  Arrow kernels (``_minhash_kernel``, ``_simhash_kernel``), because as
-  higher-order array functions they are CodegenFallback, interpreted
-  element by element;
+  array expressions; the token hashes and the minhash and simhash folds
+  run in vectorized Arrow kernels (``_minhash_kernel``,
+  ``_simhash_kernel``, on the shared numerics of ``functions/kernels.py``),
+  because as higher-order array functions they are CodegenFallback,
+  interpreted element by element;
 - candidate generation shuffles only (band_key) or (shingle) pairs, never
   the full cross product;
 - verification joins candidates back to per-doc token arrays and checks
@@ -28,10 +29,14 @@ DuckDB oracle reproduces every signature bit-for-bit.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
+from tiny_mapreduce_rpc_server_spark.functions import kernels
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.functions import psl
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
@@ -457,70 +462,29 @@ def _minhash_kernel(ds: DataFrame) -> DataFrame:
     shingle for ``h1`` and an ``aggregate``/``zip_with`` fold for the 16
     minima, all CodegenFallback: Spark interprets them element by
     element. Here each Arrow batch is hashed in a few numpy passes over
-    its flat string buffer, and only (doc_id, mh0..mh15) crosses back.
+    its flat string buffer (``kernels.h1``), and only (doc_id,
+    mh0..mh15) crosses back.
 
     Exactness against the expression fold (pinned by
-    ``tests/test_invariants.py::test_minhash_kernel_matches_fold``):
-
-    - ``h1`` is the char-weighted sum of ``F.split(s, "")`` + ``F.ascii``,
-      which is per code point. A batch whose bytes are all ASCII is
-      summed byte by byte; any other batch is decoded to code points
-      first (UTF-32, so a character outside the BMP is one element, as
-      in Spark, not two UTF-16 units). An empty string hashes to 0.
-    - Sums and remainders use int64 with truncating ``fmod``, the JVM's
-      ``long`` arithmetic.
-    - A null shingle array gives 16 nulls; an empty one gives all M2
-      (the fold's initial value); a null shingle is skipped, as
-      ``least`` skips nulls.
+    ``tests/test_invariants.py::test_minhash_kernel_matches_fold``): a
+    null shingle array gives 16 nulls; an empty one gives all M2 (the
+    fold's initial value); a null shingle is skipped, as ``least``
+    skips nulls.
     """
-    # plain ints only: the kernel must unpickle without this package
-    c1, c2, m1, m2 = P.C1, P.C2, P.M1, P.M2
     coeffs = [P.perm_coeffs(i) for i in range(N_HASHES)]
     names = ["doc_id"] + [f"mh{i}" for i in range(N_HASHES)]
 
     def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def h1(vals):
-            # h1 of every string of an Arrow string array (nulls: any value)
-            wide = pa.types.is_large_string(vals.type)
-            offs = np.frombuffer(vals.buffers()[1], np.int64 if wide else np.int32)
-            offs = offs[vals.offset : vals.offset + len(vals) + 1].astype(np.int64)
-            buf = vals.buffers()[2]
-            if buf is None or offs[-1] == offs[0]:
-                return np.zeros(len(vals), np.int64)
-            data = np.frombuffer(buf, np.uint8)[offs[0] : offs[-1]]
-            offs = offs - offs[0]
-            if data.max() >= 128:
-                starts = np.concatenate(([0], np.cumsum((data & 0xC0) != 0x80)))
-                offs = starts[offs]
-                data = np.frombuffer(
-                    data.tobytes().decode("utf-8").encode("utf-32-le"), "<u4"
-                )
-            lens = np.diff(offs)
-            pos = np.arange(len(data)) - np.repeat(offs[:-1], lens)
-            w = (np.arange(1, lens.max() + 1, dtype=np.int64) * c1 + c2) % m1
-            cum = np.concatenate(([0], np.cumsum(data.astype(np.int64) * w[pos])))
-            return np.fmod(cum[offs[1:]] - cum[offs[:-1]], m2)
-
         for batch in batches:
-            sh = batch.column("shingles")
-            lens = pc.list_value_length(sh).fill_null(0).to_numpy().astype(np.int64)
-            vals = sh.flatten()
-            h = h1(vals)
-            skip = vals.is_null().to_numpy(zero_copy_only=False)
-            nz = np.flatnonzero(lens)
-            seg = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
-            null_row = sh.is_null().to_numpy(zero_copy_only=False)
+            sh = kernels.list_column(batch.column("shingles"))
+            h = kernels.h1(sh.values)
             cols = [batch.column("doc_id")]
             for a, b in coeffs:
-                p = np.where(skip, m2, np.fmod(a * h + b, m2))
-                mh = np.full(len(lens), m2, np.int64)
-                if nz.size:
-                    mh[nz] = np.minimum.reduceat(p, seg)
-                cols.append(pa.array(mh, mask=null_row))
+                p = np.where(sh.null_values, P.M2, np.fmod(a * h + b, P.M2))
+                mh = np.full(len(sh.lens), P.M2, np.int64)
+                if sh.nz.size:
+                    mh[sh.nz] = np.minimum.reduceat(p, sh.seg)
+                cols.append(pa.array(mh, mask=sh.null_rows))
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     t = ds.schema["doc_id"].dataType.simpleString()
@@ -786,74 +750,57 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _simhash_kernel(hashed: DataFrame, bits: int) -> DataFrame:
-    """(doc_id, simhash) from the token-hash table via a vectorized
-    Arrow kernel (r12 optimization round; guide §4.1/§4.2).
+def _simhash_kernel(toks: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, simhash) of a (doc_id, toks) table of distinct-token
+    arrays, via a vectorized Arrow kernel.
 
-    The per-bit vote count is exact integer arithmetic, but Spark
-    higher-order functions (``aggregate``/``zip_with``) are
-    CodegenFallback — the r11 single-pass fold evaluated ~2 array
-    allocations plus 63 interpreted-expression steps PER TOKEN, and the
-    measured sig build was ~1.0 s of dedup_simhash_clusters' 2.4 s cell
-    at sf0.1 (stage split in OPTIMIZATION_r12.md #8). Here each Arrow
-    batch concatenates its token-hash arrays once and takes 63
-    ``np.add.reduceat`` passes over the flat stream — C-speed, O(tokens)
-    transients (no tokens x bits matrix), no slab logic needed for
-    pathological doc sizes, and the same mapInPandas pattern as
-    graph._cc_local. Only (doc_id, th) crosses the boundary.
+    The token hash ``h2 = (h1*C1 + 911) mod M31`` and the per-bit vote
+    count are exact integer arithmetic, but as Spark higher-order
+    functions (``transform``/``aggregate``/``zip_with``) they are
+    CodegenFallback, interpreted element by element. Here each Arrow
+    batch hashes its flat token buffer once (``kernels.h1``) and takes
+    ``bits`` ``np.add.reduceat`` passes over the hash stream: O(tokens)
+    transients, no tokens x bits matrix. Only (doc_id, simhash) crosses
+    the boundary.
 
-    Exactness: ones[j] = count of tokens with bit j set (integer), bit j
-    of the fingerprint set iff 2*ones[j] > n — identical to the fold
-    (``tests/fold_references.py::simhash_fold``) and to the SQL oracle's
-    list_sum votes. numpy's ``>>`` on int64 is the arithmetic shift, so
-    bit extraction matches the JVM for negative hashes too. Null/empty
-    token arrays yield fingerprint 0 exactly as
-    the fold's null-condition ``when`` does, and a null element counts
-    in n with no votes, as in the fold. Arrow hands a batch holding a
-    null element to pandas as float64 (NaN) or object (None) arrays;
-    they are zero-filled, exact for the portable hashes (< 2**31)."""
+    Exactness: ones[j] = count of tokens with bit j set, bit j of the
+    fingerprint set iff 2*ones[j] > n — identical to ``P.h2`` + the fold
+    (``tests/fold_references.py::simhash_fold``, pinned by
+    ``tests/test_invariants.py::test_simhash_kernel_matches_fold``) and
+    to the SQL oracle's list_sum votes. A null or empty token array
+    yields fingerprint 0, as the fold does, and a null token counts in n
+    with no votes, as in the fold."""
     assert 0 < bits <= 63, bits
+    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
 
     def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        weights = np.int64(1) << np.arange(bits, dtype=np.int64)
-        for pdf in batches:
-            vals = pdf["th"].to_numpy()
-            lens = np.array(
-                [0 if v is None else len(v) for v in vals], dtype=np.int64
-            )
-            out = np.zeros(len(vals), dtype=np.int64)
-            nz = np.flatnonzero(lens)
-            if nz.size:
-                flat = np.concatenate([np.asarray(v) for v in vals[nz]])
-                if flat.dtype.kind != "i":
-                    flat = np.where(pd.isna(flat), 0, flat)
-                flat = flat.astype(np.int64, copy=False)
-                seg = np.concatenate(([0], np.cumsum(lens[nz])[:-1]))
-                ones = np.empty((nz.size, bits), dtype=np.int64)
+        for batch in batches:
+            tk = kernels.list_column(batch.column("toks"))
+            h2 = (kernels.h1(tk.values) * P.C1 + 911) % P.M31
+            h2[tk.null_values] = 0  # a null token votes for no bit
+            out = np.zeros(len(tk.lens), np.int64)
+            if tk.nz.size:
+                ones = np.empty((tk.nz.size, bits), np.int64)
                 for j in range(bits):
-                    ones[:, j] = np.add.reduceat((flat >> j) & 1, seg)
-                out[nz] = (((2 * ones) > lens[nz][:, None]) * weights).sum(
-                    axis=1
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
+                    ones[:, j] = np.add.reduceat((h2 >> j) & 1, tk.seg)
+                out[tk.nz] = ((2 * ones > tk.lens[tk.nz, None]) * weights).sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), pa.array(out)], names=["doc_id", "simhash"]
+            )
 
-    t = hashed.schema["doc_id"].dataType.simpleString()
-    return hashed.mapInPandas(kernel, f"doc_id {t}, simhash long")
+    t = toks.schema["doc_id"].dataType.simpleString()
+    return toks.select("doc_id", "toks").mapInArrow(kernel, f"doc_id {t}, simhash long")
 
 
 def _doc_simhash(
     spark: SparkSession, sf_dir: str, bits: int = SIMHASH_BITS
 ) -> DataFrame:
-    """(doc_id, simhash): tokenize + portable h2 as Spark expressions,
-    then the per-bit vote count in the vectorized Arrow kernel (see
+    """(doc_id, simhash): distinct tokens as a Spark expression, then
+    the token hash and per-bit vote count in the Arrow kernel (see
     ``_simhash_kernel``)."""
     docs = load_table(spark, sf_dir, "documents")
-    th = F.transform(F.array_distinct(_toks(F.col("text"))), lambda t: P.h2(t))
-    hashed = spread(docs).select("doc_id", th.alias("th"))
-    return _simhash_kernel(hashed, bits)
+    toks = F.array_distinct(_toks(F.col("text")))
+    return _simhash_kernel(spread(docs).select("doc_id", toks.alias("toks")), bits)
 
 
 def q_text_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,12 +1008,9 @@ ORACLE_DEDUP_SIMHASH_WIDE = _sql_dedup_simhash(
 # 64-dim float64 => ~0.5 GB at the limit) would exceed a sane broadcast
 # budget; switch to the LSH-bucketed candidate path, which never
 # collects the table. The score matmul inside the broadcast path is
-# independently blocked to _MAX_SCORE_BLOCK_BYTES per step, so executor
-# memory stays bounded across the whole 0..1M-row window.
+# independently blocked to kernels.SCORE_BLOCK_BYTES per step, so
+# executor memory stays bounded across the whole 0..1M-row window.
 DEDUP_EMB_BROADCAST_MAX_ROWS = 1_000_000
-
-# Dense (arrow_batch_rows x build_cols) score block cap: 256 MB float64.
-_MAX_SCORE_BLOCK_BYTES = 1 << 28
 
 # The "true near-dup" band for dedup_eval_embedding's recall_high: pairs
 # at cosine >= 0.9 are the near-identical documents a dedup pipeline
@@ -1114,125 +1058,49 @@ def _dedup_embedding_broadcast(spark: SparkSession, emb: DataFrame) -> DataFrame
     One fused pass, the idiomatic Spark brute-force pattern (r11
     optimization round — guide §1.2, §2.4, §4.2): broadcast the (small)
     embedding matrix to every executor and score each partition's rows
-    against it with a blocked float64 BLAS matmul inside ``mapInPandas``;
-    BLAS hits above a 1e-9 threshold margin (which absorbs the
-    summation-order difference between BLAS and an ordered fold, so no
-    true pair is lost) are then re-scored IN THE KERNEL with the exact
-    sequential fold — the same left-to-right product/add sequence with
-    correctly-rounded sqrt/multiply/divide as the oracle's
-    list_dot_product over DOUBLE[], bit-identical — and emitted with the
-    exact cosine at the exact threshold. The previous two-stage form
-    shipped the candidate pairs out of the kernel, persisted + counted
-    them (an extra eager job), and joined them back to the vectors twice
-    to recompute the cosine as ``F.aggregate`` folds; the fused kernel
-    produces the identical rows in a single corpus scan with no joins
-    and no candidate materialization (per-pair exact-fold cost is
-    O(output), and output IS the near-dup pair list).
+    against it with blocked float64 BLAS inside ``mapInPandas``
+    (``kernels.cosine_blocks``); BLAS hits above the threshold less
+    ``kernels.MARGIN`` (which absorbs the summation-order difference
+    between BLAS and an ordered fold, so no true pair is lost) are then
+    re-scored IN THE KERNEL with the exact sequential fold — bit-identical
+    to the oracle's list_dot_product over DOUBLE[] — and emitted with the
+    exact cosine at the exact threshold. The fused kernel needs a single
+    corpus scan with no joins and no candidate materialization (per-pair
+    exact-fold cost is O(output), and output IS the near-dup pair list).
+
+    A null or non-finite vector raises ``ValueError`` naming its vec_id;
+    a zero-norm vector's pairs are excluded, as the oracle's NULL cosine
+    drops them (pinned by test_zero_norm_embedding_pairs_are_excluded).
 
     Memory contract: the broadcast side must fit executor memory (same
     as any broadcast join — ~0.5 GB at the 1M-row switch point), and the
-    dense score matrix is BLOCKED over build-side columns so each step
-    materializes at most ``_MAX_SCORE_BLOCK_BYTES`` (256 MB) regardless
-    of N — an unblocked (arrow_batch x N) matrix would be ~80 GB per
-    10k-row batch at N=1M."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-
+    dense score matrix is BLOCKED over build-side rows so each step
+    materializes at most ``kernels.SCORE_BLOCK_BYTES`` (256 MB)
+    regardless of N — an unblocked (arrow_batch x N) matrix would be
+    ~80 GB per 10k-row batch at N=1M."""
     pdf = emb.toPandas()  # small side — this IS the broadcast build, as in any broadcast join
-    ids_np = pdf["vec_id"].to_numpy(dtype="int64")
-    mat = np.array([np.asarray(v, dtype="float64") for v in pdf["embedding"]])
-    with np.errstate(invalid="ignore", divide="ignore"):
-        inv_norms = 1.0 / np.sqrt((mat * mat).sum(axis=1))
-    bc = spark.sparkContext.broadcast((ids_np, mat, inv_norms))
-    margin = COSINE_DUP - 1e-9
-    threshold = COSINE_DUP
-    # closure-captured (pickled by value into the workers), so tests can
-    # shrink it to force the multi-chunk path at small SFs
-    block_bytes = _MAX_SCORE_BLOCK_BYTES
+    ids = pdf["vec_id"].to_numpy(dtype="int64")
+    mat = kernels.matrix(ids, pdf["embedding"], "vec_id")
+    bc = spark.sparkContext.broadcast((ids, mat))
+    block_bytes = kernels.SCORE_BLOCK_BYTES
 
     def _pairs(batches):
-        b_ids, b_mat, b_inv = bc.value
-        # zero-norm rows: cosine is undefined — the oracle's division by
-        # zero yields NULL and NULL >= t DROPS the pair, while ANSI Spark
-        # would THROW if such a pair were cosine'd. The NaN BLAS scores
-        # (0 * inf) compare False against the margin, so those pairs are
-        # excluded before the exact fold, matching the oracle's NULL-drop
-        # (pinned by test_zero_norm_embedding_pairs_are_excluded)
-        n_build = b_mat.shape[0]
-        # exact-fold caches for the build side, populated on demand:
-        # only rows that actually appear in a candidate pay the list
-        # conversion / exact-norm fold, so memory stays O(output rows)
-        b_lists: dict[int, list] = {}
-        b_norms: dict[int, float] = {}
-
-        def b_lst(j: int) -> list:
-            cached = b_lists.get(j)
-            if cached is None:
-                cached = b_mat[j].tolist()
-                b_lists[j] = cached
-            return cached
-
-        def b_nrm(j: int) -> float:
-            cached = b_norms.get(j)
-            if cached is None:
-                s = 0.0
-                for x in b_lst(j):
-                    s += x * x
-                cached = math.sqrt(s)
-                b_norms[j] = cached
-            return cached
-
+        b_ids, b_mat = bc.value
+        b_rows = kernels.FoldRows(b_mat)
         for pb in batches:
             a_ids = pb["vec_id"].to_numpy(dtype="int64")
-            a_mat = np.array([np.asarray(v, dtype="float64") for v in pb["embedding"]])
-            if len(a_ids) == 0 or n_build == 0:
-                yield pd.DataFrame(
-                    {"vec_a": np.empty(0, "int64"),
-                     "vec_b": np.empty(0, "int64"),
-                     "cos_sim": np.empty(0, "float64")}
-                )
-                continue
-            with np.errstate(invalid="ignore", divide="ignore"):
-                a_inv = 1.0 / np.sqrt((a_mat * a_mat).sum(axis=1))
-            a_lists: dict[int, list] = {}
-            a_norms: dict[int, float] = {}
+            a_mat = kernels.matrix(a_ids, pb["embedding"], "vec_id")
+            a_rows = kernels.FoldRows(a_mat)
             out_a, out_b, out_c = [], [], []
-            # worst-case per-step scores block: len(a_ids) * step * 8 bytes
-            step = max(1, block_bytes // (8 * len(a_ids)))
-            for lo in range(0, n_build, step):
-                hi = min(lo + step, n_build)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    scores = (
-                        (a_mat @ b_mat[lo:hi].T)
-                        * a_inv[:, None]
-                        * b_inv[None, lo:hi]
-                    )
-                    hit = (scores >= margin) & (
-                        a_ids[:, None] < b_ids[None, lo:hi]
-                    )
-                for ai, bi in zip(*np.nonzero(hit)):
-                    ia, ib = int(ai), lo + int(bi)
-                    la = a_lists.get(ia)
-                    if la is None:
-                        la = a_mat[ia].tolist()
-                        a_lists[ia] = la
-                    na = a_norms.get(ia)
-                    if na is None:
-                        s = 0.0
-                        for x in la:
-                            s += x * x
-                        na = math.sqrt(s)
-                        a_norms[ia] = na
-                    lb = b_lst(ib)
-                    d = 0.0
-                    for x, y in zip(la, lb):
-                        d += x * y
-                    cos = d / (na * b_nrm(ib))
-                    if cos >= threshold:
-                        out_a.append(a_ids[ia])
-                        out_b.append(b_ids[ib])
+            for lo, s in kernels.cosine_blocks(a_mat, b_mat, block_bytes):
+                lower = a_ids[:, None] < b_ids[None, lo : lo + s.shape[1]]
+                hit = lower & (s >= COSINE_DUP - kernels.MARGIN)
+                for i, j in zip(*np.nonzero(hit)):
+                    i, j = int(i), lo + int(j)
+                    cos = a_rows.cosine(i, b_rows, j)
+                    if cos >= COSINE_DUP:
+                        out_a.append(a_ids[i])
+                        out_b.append(b_ids[j])
                         out_c.append(cos)
             yield pd.DataFrame(
                 {"vec_a": np.asarray(out_a, dtype="int64"),

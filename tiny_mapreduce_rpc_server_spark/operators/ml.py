@@ -27,10 +27,13 @@ through DECIMAL(38,6) sums; ties broken by cluster id.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot
+from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot, sq_dist
+from tiny_mapreduce_rpc_server_spark.functions import kernels
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
@@ -47,17 +50,9 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sq_dist(v, cv):
-    return F.aggregate(
-        F.zip_with(v, cv, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, v, cluster): nearest centroid, ties to lowest cluster id."""
-    d = _sq_dist(F.col("v"), F.col("cv"))
+    d = sq_dist(F.col("v"), F.col("cv"))
     w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cluster"))
     return (
         emb.join(F.broadcast(cents))
@@ -578,124 +573,68 @@ SEMANTIC_DUP = 0.4
 _SEM_ROLLUP_SCHEMA = "cluster long, n_members long, n_dropped long, n_kept long"
 
 
-def _cluster_rollup(margin: float, threshold: float):
+def _cluster_rollup():
     """applyInPandas kernel factory: the ENTIRE per-cluster SemDeDup
     accounting — blocked-BLAS candidate scoring, exact-threshold verify,
     keep/drop counting — in one pass over the cluster group. Shared by
     all three SemDeDup variants (fixed-K, scaled-K, two-level).
 
     r11 optimization-round shape (guide §1.2 "fix the distributed
-    algorithm", §2.3/§2.4): the previous two-stage form emitted candidate
-    PAIRS from this kernel and re-scored them with the ordered-fold
-    cosine via TWO equi-joins against the full N-row assignment — so the
-    assignment had to be cached and the embedding payload
-    crossed two more exchanges just to recompute cosines the kernel had
-    already (approximately) computed. The group handed to applyInPandas
-    IS the whole cluster, so the exact decision can be made in place and
-    only K accounting rows ever leave the kernel. The joins, the N-row
-    cache, and the candidate shuffle all disappear.
+    algorithm", §2.3/§2.4): the group handed to applyInPandas IS the
+    whole cluster, so the exact decision is made in place and only K
+    accounting rows ever leave the kernel — no candidate shuffle, no
+    N-row assignment cache, no re-score joins.
 
-    Exactness contract (same as `_exact_nearest`): the BLAS cosine
-    differs from the oracle's sequential-fold cosine by < 1e-9 (float64
-    dot error ~d*eps*|a||b| after normalization => cosine error
-    <= ~3*d*eps ~= 4e-14 at d=64; the 1e-9 band holds to d ~ 1e6 — widen
-    both constants proportionally for wider embeddings). So a BLAS score
-    >= threshold + 1e-9 is a CERTAIN drop, < threshold - 1e-9 (the
-    candidate margin) a certain keep, and only scores inside the 2e-9
-    uncertainty band are re-scored with the exact sequential fold
-    (bit-identical to Spark's `F.aggregate` cosine and DuckDB's
-    list_dot_product: same left-to-right product/add sequence, same
-    correctly-rounded sqrt/multiply/divide) — in practice zero to a
-    handful of pairs, so the interpreted fold never touches the
-    candidate volume.
+    Exactness contract (``functions/kernels.py``): the BLAS cosine
+    differs from the oracle's sequential-fold cosine by less than
+    ``kernels.MARGIN``. So a BLAS score >= SEMANTIC_DUP + MARGIN is a
+    CERTAIN drop, < SEMANTIC_DUP - MARGIN a certain keep, and only
+    scores inside that uncertainty band are re-scored with the exact
+    sequential fold (bit-identical to Spark's `F.aggregate` cosine and
+    DuckDB's list_dot_product) — in practice zero to a handful of
+    pairs, so the interpreted fold never touches the candidate volume.
 
+    A null or non-finite vector raises ``ValueError`` naming its vec_id.
     Zero-norm rows: a zero-norm vector's cosine is undefined — DuckDB's
     division by zero yields NULL and ``NULL >= t`` DROPS the pair, while
     ANSI Spark (the driver's vanilla default) would THROW if such a pair
-    were cosine'd. The convergent contract is exclusion: the BLAS
-    phase's NaN scores (0 * inf) compare False against the margin, so
-    pairs touching a zero-norm row are never dropped and never reach the
-    exact fold — matching the oracle's NULL-drop exactly. Pinned by
+    were cosine'd. The convergent contract is exclusion: their NaN BLAS
+    scores compare False against both bounds, so pairs touching a
+    zero-norm row are never dropped and never reach the exact fold —
+    matching the oracle's NULL-drop exactly. Pinned by
     tests/test_properties.py::test_cluster_rollup_drops_zero_norm.
 
-    Counting rule (unchanged): a member is DROPPED iff some lower-id
-    member of the same cluster has cosine >= threshold with it;
+    Counting rule: a member is DROPPED iff some lower-id member of the
+    same cluster has cosine >= SEMANTIC_DUP with it;
     n_dropped = |distinct dropped members|.
     """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    certain = threshold + 1e-9
+    block_bytes = kernels.SCORE_BLOCK_BYTES
+    keep, drop = SEMANTIC_DUP - kernels.MARGIN, SEMANTIC_DUP + kernels.MARGIN
 
     # no type hints: applyInPandas infers its eval type from them, and
     # a partly annotated function makes it warn on every call
     def _rollup(key, pdf):
-        n = len(pdf)
-
-        def out(nd: int) -> pd.DataFrame:
-            return pd.DataFrame(
-                {"cluster": np.array([key[0]], dtype="int64"),
-                 "n_members": np.array([n], dtype="int64"),
-                 "n_dropped": np.array([nd], dtype="int64"),
-                 "n_kept": np.array([n - nd], dtype="int64")}
-            )
-
-        if n < 2:
-            return out(0)
         ids = pdf["vec_id"].to_numpy(dtype="int64")
-        mat = np.array([np.asarray(x, dtype="float64") for x in pdf["v"]])
-        with np.errstate(invalid="ignore", divide="ignore"):
-            inv = 1.0 / np.sqrt((mat * mat).sum(axis=1))
-        # exact-fold state, built lazily: only rows that hit the 2e-9
-        # uncertainty band ever materialize a Python list / exact norm
-        lists: dict[int, list] = {}
-        norms: dict[int, float] = {}
-
-        def lst(i: int) -> list:
-            cached = lists.get(i)
-            if cached is None:
-                cached = mat[i].tolist()
-                lists[i] = cached
-            return cached
-
-        def nrm(i: int) -> float:
-            cached = norms.get(i)
-            if cached is None:
-                s = 0.0
-                for x in lst(i):
-                    s += x * x
-                cached = math.sqrt(s)
-                norms[i] = cached
-            return cached
-
+        mat = kernels.matrix(ids, pdf["v"], "vec_id")
+        rows = kernels.FoldRows(mat)
         dropped: set[int] = set()
-        # block the (step x n) score matrix to 256 MB so a huge cluster
-        # can't blow the worker (same budget as dedup_embedding)
-        step = max(1, (1 << 28) // (8 * n))
-        for lo in range(0, n, step):
-            hi = min(lo + step, n)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                s = (mat[lo:hi] @ mat.T) * inv[lo:hi, None] * inv[None, :]
-                lower = ids[lo:hi, None] < ids[None, :]
-                # NaN scores (zero-norm rows) compare False everywhere:
-                # excluded, by contract (see docstring)
-                sure = (s >= certain) & lower
-                band = (s >= margin) & ~(s >= certain) & lower
-            dropped.update(np.nonzero(sure.any(axis=0))[0].tolist())
-            for a, b in zip(*np.nonzero(band)):
-                gb = int(b)
+        for lo, s in kernels.cosine_blocks(mat, mat, block_bytes):
+            lower = ids[:, None] < ids[None, lo : lo + s.shape[1]]
+            sure = (lower & (s >= drop)).any(axis=0)
+            dropped.update((lo + np.nonzero(sure)[0]).tolist())
+            for a, b in zip(*np.nonzero(lower & (s >= keep) & (s < drop))):
+                gb = lo + int(b)
                 if gb in dropped:
                     continue
-                ga = lo + int(a)
-                la, lb = lst(ga), lst(gb)
-                d = 0.0
-                for x, y in zip(la, lb):
-                    d += x * y
-                if d / (nrm(ga) * nrm(gb)) >= threshold:
+                if rows.cosine(int(a), rows, gb) >= SEMANTIC_DUP:
                     dropped.add(gb)
-        return out(len(dropped))
+        n, nd = len(ids), len(dropped)
+        return pd.DataFrame(
+            {"cluster": np.array([key[0]], dtype="int64"),
+             "n_members": np.array([n], dtype="int64"),
+             "n_dropped": np.array([nd], dtype="int64"),
+             "n_kept": np.array([n - nd], dtype="int64")}
+        )
 
     return _rollup
 
@@ -743,7 +682,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the assignment is computed once with no cache and nothing but K
     # accounting rows leaves the pairing stage
     return a2.groupBy("cluster").applyInPandas(
-        _cluster_rollup(SEMANTIC_DUP - 1e-9, SEMANTIC_DUP), _SEM_ROLLUP_SCHEMA
+        _cluster_rollup(), _SEM_ROLLUP_SCHEMA
     )
 
 def _sql_sem_drops(a: str) -> str:
@@ -815,43 +754,27 @@ def _exact_nearest(
     mapInPandas scan computes the (batch x K) distance matrix via the
     |x|^2+|c|^2-2x.c expansion, then re-scores only the candidates within
     tolerance of the n-th smallest BLAS distance with the sequential fold
-    the oracle uses, ordered by (distance, cluster id) — so n=1 is the
-    argmin with ties to the lowest id. Emits min(n, K) rows per vector.
-    ``cents`` is a pandas DataFrame (cluster, cv) — the broadcast index.
+    the oracle uses (``kernels.fold_sq_dist``), ordered by (distance,
+    cluster id) — so n=1 is the argmin with ties to the lowest id. Emits
+    min(n, K) rows per vector. ``cents`` is a pandas DataFrame (cluster,
+    cv) — the broadcast index.
 
     A null or non-finite vector or centroid has no defined distance, so
-    it raises ValueError naming its vec_id or cluster: centroids once on
-    the driver, vectors once per batch.
+    it raises ValueError naming its vec_id or cluster (``kernels.matrix``):
+    centroids once on the driver, vectors once per batch.
 
     Shared by ``dedup_semantic_scaled`` (self-index), both incremental
     queries (existing-corpus index probed by both sides) and
     ``dedup_semantic_twolevel`` (fine seeds to their coarse cell at n=1,
     vectors to their NPROBE nearest cells)."""
-    import numpy as np
-    import pandas as pd
-
-    def _matrix(keys, vecs, what: str):
-        rows = []
-        for key, x in zip(keys, vecs):
-            if x is None:
-                raise ValueError(f"_exact_nearest: {what} {key} has a null vector")
-            rows.append(np.asarray(x, dtype="float64"))
-        if not rows:
-            return np.empty((0, 1), dtype="float64")
-        mat = np.array(rows)
-        bad = ~np.isfinite(mat).all(axis=1)
-        if bad.any():
-            raise ValueError(
-                f"_exact_nearest: {what} {keys[bad.argmax()]} has a non-finite vector"
-            )
-        return mat
-
     cents = cents.sort_values("cluster")
     c_ids = cents["cluster"].to_numpy(dtype="int64")
-    bc = spark.sparkContext.broadcast((c_ids, _matrix(c_ids, cents["cv"], "cluster")))
+    c_mat = kernels.matrix(c_ids, cents["cv"], "cluster")
+    bc = spark.sparkContext.broadcast((c_ids, c_mat))
 
     def _nearest(batches):
         ids_c, cm = bc.value
+        c_rows = kernels.FoldRows(cm)
         c_norm2 = (cm * cm).sum(axis=1)
         c_max = float(np.sqrt(c_norm2.max())) if len(ids_c) else 0.0
         d = cm.shape[1]
@@ -860,7 +783,7 @@ def _exact_nearest(
             vids = pb["vec_id"].to_numpy(dtype="int64")
             rows: list[int] = []
             cells: list[int] = []
-            mat = _matrix(vids, pb["v"], "vec_id")
+            mat = kernels.matrix(vids, pb["v"], "vec_id")
             if take and len(vids):
                 x_norm2 = (mat * mat).sum(axis=1)
                 # BLAS phase: full (batch x K) distance matrix in 3 ops
@@ -871,13 +794,11 @@ def _exact_nearest(
                 nth = np.partition(dist, take - 1, axis=1)[:, take - 1]
                 tol = 8.0 * d * 2.3e-16 * (np.sqrt(x_norm2) + c_max) ** 2
                 for r in range(len(vids)):
-                    scored = []
-                    for j in np.nonzero(dist[r] <= nth[r] + tol[r])[0]:
-                        s = 0.0
-                        for x in mat[r] - cm[j]:  # sequential fold == oracle's fold
-                            s += x * x
-                        scored.append((s, int(ids_c[j])))
-                    scored.sort()  # (exact dist, cluster id) == oracle ORDER BY
+                    x = mat[r].tolist()
+                    scored = sorted(  # (exact dist, cluster id) == oracle ORDER BY
+                        (kernels.fold_sq_dist(x, c_rows.row(j)), int(ids_c[j]))
+                        for j in np.nonzero(dist[r] <= nth[r] + tol[r])[0]
+                    )
                     for _, cid in scored[:take]:
                         rows.append(r)
                         cells.append(cid)
@@ -939,7 +860,7 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact per-cluster decision in place — no cache, no re-score
     # joins, only ~N/64 accounting rows leave the pairing stage
     return assigned.groupBy("cluster").applyInPandas(
-        _cluster_rollup(SEMANTIC_DUP - 1e-9, SEMANTIC_DUP), _SEM_ROLLUP_SCHEMA
+        _cluster_rollup(), _SEM_ROLLUP_SCHEMA
     )
 
 
@@ -1042,7 +963,7 @@ def q_dedup_semantic_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate fines per vector: hash join on the coarse cell id — the
     # fine matrix is never broadcast; per-vector fan-out is
     # fines-per-cell x NPROBE, independent of K
-    dist = _sq_dist(F.col("v"), F.col("cv"))
+    dist = sq_dist(F.col("v"), F.col("cv"))
     w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cluster"))
     assigned = (
         v_cells.join(f_cells, "cluster")
@@ -1056,7 +977,7 @@ def q_dedup_semantic_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single consumer (r11 optimization round): fused kernel, see
     # _cluster_rollup — no assignment cache, no re-score joins
     return assigned.groupBy("cluster").applyInPandas(
-        _cluster_rollup(SEMANTIC_DUP - 1e-9, SEMANTIC_DUP), _SEM_ROLLUP_SCHEMA
+        _cluster_rollup(), _SEM_ROLLUP_SCHEMA
     )
 
 

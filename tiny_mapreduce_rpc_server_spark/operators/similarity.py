@@ -21,14 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot
+from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot, sq_dist
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.operators.ml import _embeddings
-
-# full-vector squared L2: the ordered fold whose DuckDB bit-parity
-# (list_dot_product of the diff vector) ml.py's kmeans tests pin —
-# import, don't re-implement, so the pinned fold shape has ONE owner
-from tiny_mapreduce_rpc_server_spark.operators.ml import _sq_dist as _sqd_full
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -978,21 +973,6 @@ PQ_K = 16  # codewords per subspace
 PQ_SEED_IDS = sorted(11 + 29 * c for c in range(PQ_K))  # 11..446, all >= N_QUERIES
 
 
-def _sub_sqd(m, v, cw):
-    """Squared L2 between ``v``'s m-th sub-vector and codeword ``cw``.
-
-    Ordered fold (same shape ml._sq_dist pins against DuckDB's
-    list_dot_product of the diff vector): per-element (x-y)*(x-y) rounds
-    twice, the sum folds left-to-right from 0.0 — bit-identical in both
-    engines."""
-    sub = F.slice(v, m * PQ_SUBDIM + 1, PQ_SUBDIM)
-    return F.aggregate(
-        F.zip_with(sub, cw, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-
-
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: the memory-bounded ANN path at corpus
     scale. The 64-dim vector is split into 4 sub-vectors, each encoded as
@@ -1070,7 +1050,9 @@ def _pq_codes(emb: DataFrame, cb_one: DataFrame, keep=("vec_id",)) -> DataFrame:
                 F.transform(
                     F.filter(F.col("cb"), lambda e: e["m"] == m),
                     lambda e: F.struct(
-                        _sub_sqd(m, F.col("v"), e["cw"]).alias("d"),
+                        sq_dist(
+                            F.slice(F.col("v"), m * PQ_SUBDIM + 1, PQ_SUBDIM), e["cw"]
+                        ).alias("d"),
                         e["code"].alias("code"),
                     ),
                 )
@@ -1092,7 +1074,7 @@ def _pq_grid_col():
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda m: F.transform(
             F.filter(F.col("cb"), lambda e: e["m"] == m),
-            lambda e: _sub_sqd(m, F.col("v"), e["cw"]),
+            lambda e: sq_dist(F.slice(F.col("v"), m * PQ_SUBDIM + 1, PQ_SUBDIM), e["cw"]),
         ),
     )
 
@@ -1342,7 +1324,7 @@ def _ranked_cells(v):
         F.transform(
             F.col("cents"),
             lambda c: F.struct(
-                _sqd_full(v, c["cv"]).alias("d"), c["cell"].alias("cell")
+                sq_dist(v, c["cv"]).alias("d"), c["cell"].alias("cell")
             ),
         )
     )

@@ -27,6 +27,7 @@ import glob
 import json
 import os
 import re
+import shutil
 import sys
 import time
 
@@ -144,45 +145,51 @@ def main() -> int:
         # Arrow funnel. Row equality is asserted from the written files.
         sink = spec.run(spark, sf_dir, DataFrame.count)[1] > SINK_ROWS
         path = f"/tmp/showdown_eng_{name}"
+        opath = f"/tmp/showdown_ora_{name}.parquet"
 
         def write(df: DataFrame) -> None:
             df.write.mode("overwrite").parquet(path)
 
-        eng = None
-        for rep in range(3):
-            if sink:
-                dt, _ = spec.run(spark, sf_dir, write)
-                n_eng = spark.read.parquet(path).count()  # untimed
-            else:
-                dt, n_eng = spec.run(spark, sf_dir, lambda df: len(df.toPandas()))
-            eng = dt if eng is None or dt < eng else eng
-            if dt > 60:
-                break
-        # oracle: best-of-3 on a fresh connection each time (cold
-        # cache); same early-stop shape, at 2 minutes — the skip only
-        # ever *understates* the oracle's time (flattering DuckDB,
-        # never the engine)
-        ora = None
-        n_ora = None
-        for rep in range(3):
-            con = duckdb_connect(sf_dir)
-            t0 = time.perf_counter()
-            if sink:
-                opath = f"/tmp/showdown_ora_{name}.parquet"
-                con.execute(
-                    f"COPY ({spec.oracle}) TO '{opath}' (FORMAT PARQUET)"
-                )
-                dt = time.perf_counter() - t0
-                n_ora = con.sql(
-                    f"SELECT count(*) FROM '{opath}'"
-                ).fetchone()[0]  # untimed
-            else:
-                n_ora = con.sql(spec.oracle).arrow().num_rows
-                dt = time.perf_counter() - t0
-            ora = dt if ora is None or dt < ora else ora
-            con.close()
-            if dt > 120:
-                break
+        try:
+            eng = None
+            for rep in range(3):
+                if sink:
+                    dt, _ = spec.run(spark, sf_dir, write)
+                    n_eng = spark.read.parquet(path).count()  # untimed
+                else:
+                    dt, n_eng = spec.run(spark, sf_dir, lambda df: len(df.toPandas()))
+                eng = dt if eng is None or dt < eng else eng
+                if dt > 60:
+                    break
+            # oracle: best-of-3 on a fresh connection each time (cold
+            # cache); same early-stop shape, at 2 minutes — the skip only
+            # ever *understates* the oracle's time (flattering DuckDB,
+            # never the engine)
+            ora = None
+            n_ora = None
+            for rep in range(3):
+                con = duckdb_connect(sf_dir)
+                t0 = time.perf_counter()
+                if sink:
+                    con.execute(
+                        f"COPY ({spec.oracle}) TO '{opath}' (FORMAT PARQUET)"
+                    )
+                    dt = time.perf_counter() - t0
+                    n_ora = con.sql(
+                        f"SELECT count(*) FROM '{opath}'"
+                    ).fetchone()[0]  # untimed
+                else:
+                    n_ora = con.sql(spec.oracle).arrow().num_rows
+                    dt = time.perf_counter() - t0
+                ora = dt if ora is None or dt < ora else ora
+                con.close()
+                if dt > 120:
+                    break
+        finally:
+            # a sink output is the whole pair list: drop both once counted
+            shutil.rmtree(path, ignore_errors=True)
+            if os.path.exists(opath):
+                os.remove(opath)
         assert n_eng == n_ora, f"{name}: row count diverged {n_eng} vs {n_ora}"
         rows.append((name, eng, ora, ora / eng if eng > 0 else float("nan")))
         detail[name] = {

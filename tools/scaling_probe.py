@@ -14,6 +14,7 @@ Writes SCALING.md. Usage: python tools/scaling_probe.py
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -172,16 +173,22 @@ def simhash_split() -> int:
     for name in ("dedup_simhash", "dedup_simhash_wide"):
         spec = q[name]
 
+        path = f"/tmp/simhash_split_{name}"
+
         def write(df: DataFrame) -> None:
-            df.write.mode("overwrite").parquet(f"/tmp/simhash_split_{name}")
+            df.write.mode("overwrite").parquet(path)
 
         cells = []
-        for sf, sf_dir in SFS:
-            comp = min(spec.run(spark, sf_dir, drain)[0] for _ in range(2))
-            sink = min(spec.run(spark, sf_dir, write)[0] for _ in range(2))
-            cells += [comp, sink]
-            print(f"# {name} sf{sf}: compute {comp:.2f}s sink {sink:.2f}s",
-                  file=sys.stderr)
+        try:
+            for sf, sf_dir in SFS:
+                comp = min(spec.run(spark, sf_dir, drain)[0] for _ in range(2))
+                sink = min(spec.run(spark, sf_dir, write)[0] for _ in range(2))
+                cells += [comp, sink]
+                print(f"# {name} sf{sf}: compute {comp:.2f}s sink {sink:.2f}s",
+                      file=sys.stderr)
+        finally:
+            # the sink output is the whole pair list, kept by nothing
+            shutil.rmtree(path, ignore_errors=True)
         g_comp = cells[6] / cells[0]
         g_sink = cells[7] / cells[1]
         rows.append((name, cells, g_comp, g_sink))
