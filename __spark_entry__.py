@@ -71,12 +71,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     Each callable calls ``release_caches()`` before building its plan,
     dropping everything the previous query persisted (``.cache()``,
-    ``_bounded_broadcast`` and ``localCheckpoint`` blocks), so a session
-    that iterates many queries holds at most one query's caches at a
-    time instead of accumulating all of them until teardown. This is
-    safe only because the caller consumes each query's result before it
-    builds the next: a ``localCheckpoint`` block cannot be recomputed
-    once unpersisted, so a plan still pending across the release would
+    ``_bounded_broadcast`` and ``localCheckpoint`` blocks) and deleting
+    the files it wrote under the session's scratch root, so a session
+    that iterates many queries holds at most one query's caches and
+    scratch files at a time instead of accumulating all of them until
+    teardown. This is safe only because the caller consumes each
+    query's result before it builds the next: a ``localCheckpoint``
+    block cannot be recomputed once unpersisted, nor a scratch store
+    read once deleted, so a plan still pending across the release would
     fail rather than recompute.
     """
     from tiny_mapreduce_rpc_server_spark import release_caches

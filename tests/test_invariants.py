@@ -465,14 +465,12 @@ def test_every_registered_query_is_documented_in_survey():
     assert not missing, f"queries not documented in SURVEY.md: {missing}"
 
 
-def test_dedup_substring_window_guarantee(spark):
+def test_dedup_substring_window_guarantee(spark, tmp_path):
     """The ExactSubstr construction guarantee: any shared verbatim span of
     >= W + STRIDE - 1 chars (47 here) fully contains at least one stride
     window, so two docs sharing such a span MUST both be flagged.
     Planted: two synthetic docs sharing a 60-char span, embedded in
     otherwise-distinct text."""
-    import uuid
-
     from tiny_mapreduce_rpc_server_spark.operators.dedup import (
         SUBSTR_STRIDE,
         SUBSTR_W,
@@ -490,10 +488,9 @@ def test_dedup_substring_window_guarantee(spark):
         (3, "unrelated text entirely " * 10),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    tmp = f"/tmp/dedup_substr_{uuid.uuid4().hex[:8]}"
-    df.repartition(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
+    df.repartition(1).write.parquet(str(tmp_path / "documents.parquet"))
     flagged = {
-        r["doc_id"] for r in q_dedup_substring(spark, tmp).collect()
+        r["doc_id"] for r in q_dedup_substring(spark, str(tmp_path)).collect()
     }
     assert {1, 2} <= flagged, flagged
     assert 3 not in flagged, flagged
@@ -515,14 +512,13 @@ def test_zorder_bucket_is_spatial_tile(spark):
     assert n["avg_y_width"] > 10 * z["avg_y_width"], (n, z)
 
 
-def test_triangle_counts_match_bruteforce(spark):
+def test_triangle_counts_match_bruteforce(spark, tmp_path):
     """Adjacency-intersection triangle counts cross-checked against an
     independent brute-force enumeration on a small planted graph
     (4-clique + dangling edge): K4 has 4 triangles, 3 per clique node."""
     from tiny_mapreduce_rpc_server_spark.operators.graph import (
         q_graph_triangles,
     )
-    import uuid
 
     # lineitem-shaped input: orders {10,11,12,13} each hold a K4 face
     clique = [1, 2, 3, 4]
@@ -533,11 +529,10 @@ def test_triangle_counts_match_bruteforce(spark):
         rows += [(o, p) for p in tri]
     rows += [(99, 4), (99, 7)]  # dangling edge 4-7, no triangle
     df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    tmp = f"/tmp/tri_{uuid.uuid4().hex[:8]}"
-    df.repartition(1).write.mode("overwrite").parquet(f"{tmp}/lineitem.parquet")
+    df.repartition(1).write.parquet(str(tmp_path / "lineitem.parquet"))
     got = {
         r["p_partkey"]: r["n_triangles"]
-        for r in q_graph_triangles(spark, tmp).collect()
+        for r in q_graph_triangles(spark, str(tmp_path)).collect()
     }
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}, got
 
@@ -581,13 +576,11 @@ def test_streaming_outer_join_min_watermark_at_sparse_sf(spark):
     compare(q_streaming_outer_join(spark, sf), ORACLE_STREAMING_OUTER_JOIN, sf)
 
 
-def test_dedup_substring_anchored_alignment_independent(spark):
+def test_dedup_substring_anchored_alignment_independent(spark, tmp_path):
     """Content-defined anchors: a shared span must be detected even when
     the two copies sit at different offsets AND different alignments mod
     stride — word starts inside the span are at identical in-span
     positions by construction."""
-    import uuid
-
     from tiny_mapreduce_rpc_server_spark.operators.dedup import (
         q_dedup_substring_anchored,
     )
@@ -599,9 +592,10 @@ def test_dedup_substring_anchored_alignment_independent(spark):
         (3, "unrelated words entirely different " * 8),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    tmp = f"/tmp/dedup_anch_{uuid.uuid4().hex[:8]}"
-    df.repartition(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
-    flagged = {r["doc_id"] for r in q_dedup_substring_anchored(spark, tmp).collect()}
+    df.repartition(1).write.parquet(str(tmp_path / "documents.parquet"))
+    flagged = {
+        r["doc_id"] for r in q_dedup_substring_anchored(spark, str(tmp_path)).collect()
+    }
     assert {1, 2} <= flagged, flagged
     assert 3 not in flagged, flagged
 
@@ -1211,7 +1205,7 @@ def test_ann_pq_rerank_refine_contract(spark):
         )
 
 
-def test_registrable_domain_full_size_psl(spark):
+def test_registrable_domain_full_size_psl(spark, tmp_path):
     """Round-9 verdict #3: the PSL machinery at FULL list size. A ~9k-rule
     synthetic list in the official file format (generated + measured by
     tests/psl_fullsize_probe.py) goes through load_psl_file(), and all
@@ -1228,7 +1222,7 @@ def test_registrable_domain_full_size_psl(spark):
     from tiny_mapreduce_rpc_server_spark.functions import psl
     from tests.psl_fullsize_probe import synthesize_psl_text, write_synthetic_psl
 
-    path = write_synthetic_psl("/tmp/psl_synthetic_full_test.dat")
+    path = write_synthetic_psl(str(tmp_path / "psl_synthetic_full.dat"))
     parsed = psl.load_psl_file(path)
     n_rules = sum(len(v) for v in parsed.values())
     assert n_rules > 9000, n_rules
@@ -1463,3 +1457,55 @@ def test_run_releases_when_consume_raises(spark):
     assert persisted[0] > 0
     assert jsc.getPersistentRDDs().size() == 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_scratch_dir_never_repeats(spark):
+    """Two calls with one tag give two paths, neither of which exists
+    yet, under the same per-application root."""
+    from tiny_mapreduce_rpc_server_spark.session import scratch_dir
+
+    a, b = scratch_dir(spark, "probe"), scratch_dir(spark, "probe")
+    assert a != b
+    assert not os.path.exists(a) and not os.path.exists(b)
+    assert os.path.dirname(a) == os.path.dirname(b)
+
+
+@pytest.mark.parametrize(
+    "name, store",
+    [("total_order_sort", "sorted_li"), ("dedup_incremental_persisted", "lsh_index")],
+)
+def test_run_deletes_scratch_after_consume(spark, name, store):
+    """A query's stores sit under the session's scratch root while its
+    result is consumed, and ``QuerySpec.run``'s release deletes the
+    root once ``consume`` returns."""
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+    from tiny_mapreduce_rpc_server_spark.session import scratch_dir
+
+    root = os.path.dirname(scratch_dir(spark, "probe"))
+    seen = []
+
+    def consume(df):
+        seen.extend(os.listdir(root))
+        return df.toArrow().num_rows
+
+    _, n = all_queries()[name].run(spark, SF_SMOKE, consume)
+    assert n > 0
+    assert any(e.startswith(f"{store}-") for e in seen), seen
+    assert not os.path.exists(root)
+
+
+def test_memory_sink_views_are_dropped(spark):
+    """The memory sink's temporary view is dropped once its table is
+    resolved, so the sink's rows do not stay in the session after the
+    query is consumed."""
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+
+    spec = all_queries()["streaming_dedup"]
+    for _ in range(2):
+        assert spec.run(spark, SF_SMOKE, lambda df: df.toArrow().num_rows)[1] > 0
+    views = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.isTemporary and t.name.startswith("stream_")
+    ]
+    assert views == []

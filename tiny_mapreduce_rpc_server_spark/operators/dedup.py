@@ -39,6 +39,7 @@ from tiny_mapreduce_rpc_server_spark.functions import cosine, dot
 from tiny_mapreduce_rpc_server_spark.functions import kernels
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.functions import psl
+from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -727,20 +728,17 @@ def q_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     catalog for bucketed saveAsTable) and the probe relies on the
     broadcast of the small batch instead — the same no-corpus-shuffle
     guarantee."""
-    import os as _os
-    import tempfile as _tempfile
-
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    base = _os.path.join(_tempfile.gettempdir(), f"tmrs_lsh_index_{sf}")
+    base = scratch_dir(spark, "lsh_index")
     ds = _doc_shingles(spark, sf_dir).cache()
     incoming_pred = (P.h1(F.col("doc_id").cast("string")) % 100) >= INCR_INCOMING_FROM
     existing = ds.filter(~incoming_pred)
+    bands = _band_keys(existing)
     # ---- build: the batch indexing job (writes the lake state) ----
-    _band_keys(existing).write.mode("overwrite").parquet(base + "/bands")
-    existing.write.mode("overwrite").parquet(base + "/shingles")
+    bands.write.parquet(base + "/bands")
+    existing.write.parquet(base + "/shingles")
     # ---- probe: only the STORED index + the incoming batch ----
-    ex_keys = spark.read.parquet(base + "/bands")
-    store = spark.read.parquet(base + "/shingles")
+    ex_keys = spark.read.schema(bands.schema).parquet(base + "/bands")
+    store = spark.read.schema(existing.schema).parquet(base + "/shingles")
     inc = ds.filter(incoming_pred)
     return _best_lsh_match(_band_keys(inc), ex_keys, inc, store)
 

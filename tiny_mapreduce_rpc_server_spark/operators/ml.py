@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot, sq_dist
 from tiny_mapreduce_rpc_server_spark.functions import kernels
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
+from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -1179,21 +1180,19 @@ def q_dedup_semantic_incremental_persisted(
     shuffle happens at probe time — exactly what makes per-batch dedup
     affordable when batches are small and the corpus is 100 TB. Same
     output contract (and oracle) as ``dedup_semantic_incremental``."""
-    import os as _os
-    import tempfile as _tempfile
-
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    base = _os.path.join(_tempfile.gettempdir(), f"tmrs_sem_index_{sf}")
+    base = scratch_dir(spark, "sem_index")
     existing, incoming = _split_incoming(_embeddings(spark, sf_dir))
+    seeds = _seeds(existing)
     # ---- build: the batch indexing job (writes the lake state) ----
-    _seeds(existing).write.mode("overwrite").parquet(base + "/centroids")
-    cents_build = spark.read.parquet(base + "/centroids").toPandas()
-    _exact_nearest(spark, existing, cents_build).select(
+    seeds.write.parquet(base + "/centroids")
+    cents_build = spark.read.schema(seeds.schema).parquet(base + "/centroids").toPandas()
+    assigned = _exact_nearest(spark, existing, cents_build).select(
         F.col("vec_id").alias("vec_old"), "cluster", F.col("v").alias("vo")
-    ).write.mode("overwrite").parquet(base + "/members")
+    )
+    assigned.write.parquet(base + "/members")
     # ---- probe: only the STORED index + the incoming batch ----
-    cents = spark.read.parquet(base + "/centroids").toPandas()
-    members = spark.read.parquet(base + "/members")
+    cents = spark.read.schema(seeds.schema).parquet(base + "/centroids").toPandas()
+    members = spark.read.schema(assigned.schema).parquet(base + "/members")
     return _best_existing_match(
         _paired_side(spark, incoming, cents, "vec_new", "vn"),
         members.filter(dot(F.col("vo"), F.col("vo")) > 0),

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
+from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -818,23 +819,16 @@ def q_multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     container). On object stores the per-file write uses the store's
     client the same way; the Spark-side plumbing is unchanged. Stale
     files: filenames are deterministic per doc_id and content
-    deterministic per text, so re-runs overwrite in place; the builder
-    additionally clears ``base`` up front (driver-visible files — the
-    whole path in local mode and on shared storage alike).
+    deterministic per text, and every run lands in a fresh
+    ``scratch_dir`` that the session's release deletes, so no run sees
+    another run's files.
 
     100 TB shape: binaryFile parallelizes by file and prunes by glob;
     small-asset corpora want the files coalesced into larger archives
     (or this very ingest run ONCE, landing content into parquet binary
     columns — which is exactly what the other multimodal operators
     then consume). No reference counterpart (SURVEY §2.11 — [EXT])."""
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    base = _os.path.join(_tempfile.gettempdir(), f"tmrs_binaryfile_{sf}")
-    if _os.path.exists(base):
-        _shutil.rmtree(base)
+    base = scratch_dir(spark, "binaryfile")
     docs = spread(load_table(spark, sf_dir, "documents"))
     h = P.h1(F.col("text"))
     src = docs.select(

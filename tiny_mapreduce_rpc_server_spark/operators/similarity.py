@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from tiny_mapreduce_rpc_server_spark.functions import cosine, davg, dot, sq_dist
 from tiny_mapreduce_rpc_server_spark.functions import portable as P
 from tiny_mapreduce_rpc_server_spark.operators.ml import _embeddings
+from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.sources import load_table, spread
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
@@ -1605,21 +1606,16 @@ def q_ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codebook retrains. Here both tables are plain parquet (no
     catalog in this container); a real lake would sort/cluster codes by
     code prefix for cell-level skipping."""
-    import os as _os
-    import tempfile as _tempfile
-
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    base = _os.path.join(_tempfile.gettempdir(), f"tmrs_pq_index_{sf}")
+    base = scratch_dir(spark, "pq_index")
     emb = _embeddings(spark, sf_dir)
     cb_entries = _pq_codebook_entries(emb)
+    codes = _pq_codes(emb, _pq_cb_one(cb_entries))
     # ---- build: offline train + encode jobs (write the lake state) ----
-    cb_entries.write.mode("overwrite").parquet(base + "/codebook")
-    _pq_codes(emb, _pq_cb_one(cb_entries)).write.mode("overwrite").parquet(
-        base + "/codes"
-    )
+    cb_entries.write.parquet(base + "/codebook")
+    codes.write.parquet(base + "/codes")
     # ---- probe: stored tables + fresh query vectors only ----
-    stored_cb = spark.read.parquet(base + "/codebook")
-    stored_codes = spark.read.parquet(base + "/codes")
+    stored_cb = spark.read.schema(cb_entries.schema).parquet(base + "/codebook")
+    stored_codes = spark.read.schema(codes.schema).parquet(base + "/codes")
     luts = _pq_luts(emb, _pq_cb_one(stored_cb))
     return _pq_adc_topk(stored_codes, luts)
 
@@ -1640,23 +1636,20 @@ def q_ann_pq_rerank_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     by vec_id — on a real lake a point-lookup-friendly layout (bucketed
     or sorted by vec_id) so the Q*R candidate fetch is file-pruned, not
     a full scan."""
-    import os as _os
-    import tempfile as _tempfile
-
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    base = _os.path.join(_tempfile.gettempdir(), f"tmrs_pqr_index_{sf}")
+    base = scratch_dir(spark, "pqr_index")
     emb = _embeddings(spark, sf_dir)
     cb_entries = _pq_codebook_entries(emb)
+    codes = _pq_codes(emb, _pq_cb_one(cb_entries))
     # ---- build: train + encode + refine-store writes ----
-    cb_entries.write.mode("overwrite").parquet(base + "/codebook")
-    _pq_codes(emb, _pq_cb_one(cb_entries)).write.mode("overwrite").parquet(
-        base + "/codes"
-    )
-    emb.write.mode("overwrite").parquet(base + "/vectors")
+    cb_entries.write.parquet(base + "/codebook")
+    codes.write.parquet(base + "/codes")
+    emb.write.parquet(base + "/vectors")
     # ---- probe: stored tables + fresh query vectors only ----
-    stored_cb_one = _pq_cb_one(spark.read.parquet(base + "/codebook"))
-    stored_codes = spark.read.parquet(base + "/codes")
-    stored_vecs = spark.read.parquet(base + "/vectors")
+    stored_cb_one = _pq_cb_one(
+        spark.read.schema(cb_entries.schema).parquet(base + "/codebook")
+    )
+    stored_codes = spark.read.schema(codes.schema).parquet(base + "/codes")
+    stored_vecs = spark.read.schema(emb.schema).parquet(base + "/vectors")
     luts = _pq_luts(emb, stored_cb_one)
     return _rescore(
         stored_vecs, _pq_adc_topk(stored_codes, luts, k=RERANK_R), emb

@@ -7,11 +7,18 @@ knobs map onto Spark's equivalents and are parameterized instead of fixed:
 ``DEFAULT_READ_SPLIT_SIZE`` and ``spark.sql.shuffle.partitions`` the role of
 ``DEFAULT_PARTITION_NUM``, with AQE enabled so the runtime re-plans
 partition counts / skew at real data sizes.
+
+The module also owns what a query leaves behind: ``release_caches``
+drops its caches and checkpoint blocks and deletes the files it wrote
+under ``scratch_dir``, once its result has been consumed.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -109,16 +116,38 @@ def get_spark(
     return spark
 
 
+def _scratch_root(spark: SparkSession) -> str:
+    return os.path.join(
+        tempfile.gettempdir(), f"tmrs-{spark.sparkContext.applicationId}"
+    )
+
+
+def scratch_dir(spark: SparkSession, tag: str) -> str:
+    """A fresh path for a query that writes files and reads them back:
+    it does not exist yet and is never handed out again. All of them
+    sit under one root per application, ``<tempdir>/tmrs-<app id>``
+    (the temporary directory follows ``TMPDIR``), which
+    ``release_caches`` deletes, so a query needs neither to clear old
+    data before it writes nor to delete its files afterwards.
+
+    Deployment contract: the root is a driver-local path, so the
+    executors' writes land where the driver reads and deletes them only
+    in local mode; a cluster points the root at shared storage."""
+    return os.path.join(_scratch_root(spark), f"{tag}-{uuid.uuid4().hex}")
+
+
 def release_caches() -> None:
     """Release everything the previous query persisted: the cache
-    manager's entries (``.cache()`` / ``persist()``) and every RDD still
-    persisted on the context, which covers ``localCheckpoint`` blocks.
+    manager's entries (``.cache()`` / ``persist()``), every RDD still
+    persisted on the context, which covers ``localCheckpoint`` blocks,
+    and the session's scratch files (every ``scratch_dir`` path).
     Does nothing without an active session.
 
     Precondition: call it only after the previous query's result has
     been consumed. A ``localCheckpoint`` block cannot be recomputed once
-    unpersisted, so a plan built before the release and executed after
-    it fails instead of recomputing.
+    unpersisted, and a scratch store cannot be read once deleted, so a
+    plan built before the release and executed after it fails instead
+    of recomputing.
     """
     spark = SparkSession.getActiveSession()
     if spark is None:
@@ -126,3 +155,4 @@ def release_caches() -> None:
     spark.catalog.clearCache()
     for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         rdd.unpersist(True)
+    shutil.rmtree(_scratch_root(spark), ignore_errors=True)

@@ -20,27 +20,22 @@ the read is a normal one-shuffle hash aggregate.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.functions import dsum
+from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.sources import load_table
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 
 _DEC = "DECIMAL(38,6)"
 
 
-def _tmp(sf_dir: str, tag: str) -> str:
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"tmrs_fmt_{tag}_{sf}")
-
-
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
-    path = _tmp(sf_dir, "csv_nation")
-    nation.write.mode("overwrite").option("header", "true").csv(path)
+    path = scratch_dir(spark, "csv_nation")
+    nation.write.option("header", "true").csv(path)
     back = spark.read.schema(nation.schema).option("header", "true").csv(path)
     return back.groupBy("n_regionkey").agg(
         F.count("*").alias("n_nations"),
@@ -60,8 +55,8 @@ FROM nation GROUP BY n_regionkey
 
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = load_table(spark, sf_dir, "supplier")
-    path = _tmp(sf_dir, "json_supplier")
-    supplier.write.mode("overwrite").json(path)
+    path = scratch_dir(spark, "json_supplier")
+    supplier.write.json(path)
     back = spark.read.schema(supplier.schema).json(path)
     return back.groupBy("s_nationkey").agg(
         F.count("*").alias("n_suppliers"),
@@ -93,10 +88,9 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     line-oblivious, so Spark parallelizes by file, making many medium
     files the scalable layout."""
     cust = load_table(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "xml_customer")
+    path = scratch_dir(spark, "xml_customer")
     (
-        cust.write.mode("overwrite")
-        .format("xml")
+        cust.write.format("xml")
         .option("rootTag", "customers")
         .option("rowTag", "customer")
         .save(path)
@@ -133,12 +127,8 @@ def q_partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     full scan and a directory listing). The aggregate over the pruned
     read must match the same filter+aggregate on the original table."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _tmp(sf_dir, "part_orders")
-    (
-        orders.write.mode("overwrite")
-        .partitionBy("o_orderstatus")
-        .parquet(path)
-    )
+    path = scratch_dir(spark, "part_orders")
+    orders.write.partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),
@@ -162,13 +152,13 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrows partitions WITHOUT a shuffle (unlike repartition). The check
     proves the rewrite is lossless AND the file count actually dropped."""
     docs = load_table(spark, sf_dir, "documents")
-    frag, compact = _tmp(sf_dir, "frag_docs"), _tmp(sf_dir, "compact_docs")
-    docs.repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compact)
+    frag, compact = scratch_dir(spark, "frag_docs"), scratch_dir(spark, "compact_docs")
+    docs.repartition(64).write.parquet(frag)
+    spark.read.schema(docs.schema).parquet(frag).coalesce(4).write.parquet(compact)
     n_files = len([f for f in os.listdir(compact) if f.endswith(".parquet")])
     if n_files > 4:
         raise AssertionError(f"compaction produced {n_files} files, expected <= 4")
-    back = spark.read.parquet(compact)
+    back = spark.read.schema(docs.schema).parquet(compact)
     return back.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -189,8 +179,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, predicate pushdown, column pruning — proven lossless by
     aggregating the read-back against the original table's oracle."""
     customer = load_table(spark, sf_dir, "customer")
-    path = _tmp(sf_dir, "orc_customer")
-    customer.write.mode("overwrite").orc(path)
+    path = scratch_dir(spark, "orc_customer")
+    customer.write.orc(path)
     back = spark.read.orc(path)
     return back.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_customers"),
@@ -217,10 +207,8 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets. The aggregate must match the plain join on the originals."""
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    wh = _tmp(sf_dir, "bucketed_wh")
-    # catalog table names carry the sf label (as the temp paths already
-    # do): fixed global names would race across concurrent sessions /
-    # sf dirs on DROP TABLE + saveAsTable
+    # catalog table names carry the sf label: fixed global names would
+    # race across sf dirs on DROP TABLE + saveAsTable
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_").replace("-", "_")
     for name, df, key in (
         (f"tmrs_b_orders_{sf}", orders, "o_custkey"),
@@ -231,7 +219,7 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.write.mode("overwrite")
             .bucketBy(8, key)
             .sortBy(key)
-            .option("path", os.path.join(wh, name))
+            .option("path", scratch_dir(spark, f"bucketed_{key}"))
             .saveAsTable(name)
         )
     bo = spark.table(f"tmrs_b_orders_{sf}")
@@ -260,8 +248,8 @@ def q_dpp_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the difference between scanning one partition and the
     whole fact table when the selective predicate lives on the dim."""
     orders = load_table(spark, sf_dir, "orders")
-    path = _tmp(sf_dir, "dpp_orders")
-    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
+    path = scratch_dir(spark, "dpp_orders")
+    orders.write.partitionBy("o_orderstatus").parquet(path)
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
         [("F", 1.0), ("O", 0.1), ("P", 0.2)], "status string, weight double"
@@ -328,9 +316,9 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = orders.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    base = _tmp(sf_dir, "evo_orders")
-    old.write.mode("overwrite").parquet(f"{base}/snap=0")
-    new.write.mode("overwrite").parquet(f"{base}/snap=1")
+    base = scratch_dir(spark, "evo_orders")
+    old.write.parquet(f"{base}/snap=0")
+    new.write.parquet(f"{base}/snap=1")
     back = spark.read.option("mergeSchema", "true").parquet(base)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_rows"),
@@ -495,14 +483,13 @@ def q_total_order_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sort_key"
         )
     )
-    path = _tmp(sf_dir, "sorted_li")
+    path = scratch_dir(spark, "sorted_li")
     (
         li.repartitionByRange(_SORT_FILES, "sort_key")
         .sortWithinPartitions("sort_key")
-        .write.mode("overwrite")
-        .parquet(path)
+        .write.parquet(path)
     )
-    back = spark.read.parquet(path).select(
+    back = spark.read.schema(li.schema).parquet(path).select(
         "sort_key",
         # r12: substring_index instead of regexp_extract — the verify
         # scan evaluates this per ROW, and the regexp engine cost
@@ -701,8 +688,8 @@ def q_csv_malformed_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",", F.col("n_nationkey"), F.col("n_name"), F.col("n_regionkey")
         )
     )
-    path = _tmp(sf_dir, "malformed_csv")
-    nat.select(line.alias("value")).write.mode("overwrite").text(path)
+    path = scratch_dir(spark, "malformed_csv")
+    nat.select(line.alias("value")).write.text(path)
     back = (
         spark.read.schema(
             "k INT, nm STRING, r INT, _corrupt_record STRING"

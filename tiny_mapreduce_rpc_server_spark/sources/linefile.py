@@ -216,19 +216,16 @@ def q_linefile_wordcount(spark, sf_dir: str):
     result. The oracle tokenizes the documents table directly, so a pass
     proves the split planner + straddle rule lose and duplicate nothing.
     """
-    import os as _os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from tiny_mapreduce_rpc_server_spark.functions import portable as P
+    from tiny_mapreduce_rpc_server_spark.session import scratch_dir
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
     register(spark)
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"tmrs_linefile_{sf}")
+    path = scratch_dir(spark, "linefile")
     docs = load_table(spark, sf_dir, "documents")
-    docs.select("text").write.mode("overwrite").text(path)
+    docs.select("text").write.text(path)
     lines = (
         spark.read.format("linefile")
         .option("path", path)
@@ -264,19 +261,14 @@ def q_kv_textsink_roundtrip(spark, sf_dir: str):
     direct word count over documents, so a pass proves the sink wrote
     every pair exactly once AND the source re-read it exactly once —
     write-path and read-path parity in one check."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from tiny_mapreduce_rpc_server_spark.functions import portable as P
+    from tiny_mapreduce_rpc_server_spark.session import scratch_dir
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
     register(spark)
-    sf = _os.path.basename(_os.path.normpath(sf_dir))
-    out = _os.path.join(tempfile.gettempdir(), f"tmrs_kvsink_{sf}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir(spark, "kvsink")
 
     docs = load_table(spark, sf_dir, "documents")
     kv = (

@@ -32,11 +32,13 @@ class QuerySpec:
     through ``operators.dedup._bounded_broadcast`` (dedup / graph /
     sampling composites) run a real count job and persist blocks at
     ``fn(...)`` call time — the size gate cannot be decided lazily.
-    Query functions also ``.cache()`` shared subtrees and
-    ``localCheckpoint`` iterative loops. ``run`` is the one way to
+    Query functions also ``.cache()`` shared subtrees,
+    ``localCheckpoint`` iterative loops, and write stores they read
+    back under ``session.scratch_dir``. ``run`` is the one way to
     execute a query and release all of it: it consumes the result
     before the release, which ``release_caches`` requires because a
-    ``localCheckpoint`` block cannot be recomputed once unpersisted.
+    ``localCheckpoint`` block cannot be recomputed once unpersisted and
+    a scratch store cannot be read once deleted.
     """
 
     name: str

@@ -20,31 +20,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tiny_mapreduce_rpc_server_spark.functions import instant_as_ntz, ntz_as_instant
+from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 from tiny_mapreduce_rpc_server_spark.sources import table_path
 
 _DEC = "DECIMAL(38,6)"
 
 
-def _replay_batches(tag: str, batches: list[DataFrame]) -> str:
+def _replay_batches(spark: SparkSession, tag: str, batches: list[DataFrame]) -> str:
     """Write each DataFrame as one parquet file into a fresh stream
     directory, mtime-ordered so a maxFilesPerTrigger=1 file source
     replays them as microbatches in list order. Returns the dir path."""
     import glob
     import os
     import shutil
-    import tempfile
 
-    stream_dir = os.path.join(tempfile.gettempdir(), f"tmrs_{tag}")
-    shutil.rmtree(stream_dir, ignore_errors=True)
+    stream_dir = scratch_dir(spark, tag)
     os.makedirs(stream_dir)
     for i, batch in enumerate(batches):
-        tmp = f"{stream_dir}_w{i}"
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
+        tmp = scratch_dir(spark, f"{tag}_w{i}")
+        batch.coalesce(1).write.parquet(tmp)
         dst = os.path.join(stream_dir, f"{i:03d}.parquet")
         shutil.copyfile(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
         os.utime(dst, (1_700_000_000 + 100 * i,) * 2)  # mtime order = batch order
-        shutil.rmtree(tmp)
     return stream_dir
 
 
@@ -56,17 +54,15 @@ def _replay_two_batches(
     latest, then the latest alone. The second batch advances the
     watermark to max(ts) - 10min, so state whose horizon lies before it
     is evicted and emitted."""
-    import os
-
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
-    sf = os.path.basename(os.path.normpath(sf_dir))
     ev = load_table(spark, sf_dir, "events").select(
         *cols, ntz_as_instant("ts").alias("ts")
     )
     latest = ev.orderBy(F.desc("ts"), F.desc("event_id")).limit(1).collect()[0]
     stream_dir = _replay_batches(
-        f"{tag}_{sf}",
+        spark,
+        tag,
         [
             ev.filter(F.col("event_id") != latest["event_id"]),
             ev.filter(F.col("event_id") == latest["event_id"]),
@@ -120,7 +116,11 @@ def _memory_sink(df: DataFrame, mode: str, tag: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    return df.sparkSession.table(name)
+    # the resolved plan holds the sink's rows; the view would only keep
+    # them alive for the rest of the session
+    sink = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return sink
 
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
@@ -230,17 +230,15 @@ def q_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, flipping this oracle with no code change here. If this
     query alone starts failing after an upgrade, re-derive wmA/wmF
     (suspect semantics drift, not a regression)."""
-    import os
-
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
-    sf = os.path.basename(os.path.normpath(sf_dir))
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", ntz_as_instant("ts").alias("ts"), "value"
     )
     latest = ev.orderBy(F.desc("ts"), F.desc("event_id")).limit(1).collect()[0]
     stream_dir = _replay_batches(
-        f"late_{sf}",
+        spark,
+        "late",
         [
             ev.filter((F.col("event_id") % 2 == 0) & (F.col("event_id") != latest["event_id"])),
             ev.filter(F.col("event_id") == latest["event_id"]),
@@ -442,15 +440,12 @@ def q_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the same aggregate straight off the events table, so a pass
     proves no batch was lost or double-counted."""
     import os
-    import shutil
-    import tempfile
 
     events = read_events_stream(spark, sf_dir)
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"tmrs_foreach_batch_{sf}")
+    # a fresh base per run: no checkpoint or epoch left by an earlier run
+    base = scratch_dir(spark, "foreach_batch")
     out_dir = os.path.join(base, "data")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)  # deterministic re-run
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(
@@ -464,7 +459,11 @@ def q_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    written = spark.read.option("recursiveFileLookup", "true").parquet(out_dir)
+    written = (
+        spark.read.schema(events.schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(out_dir)
+    )
     return written.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(F.col("value").cast(_DEC.lower())).cast("double").alias("sum_value"),
@@ -792,10 +791,6 @@ def q_streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``to_json`` omit the field and a non-finite double would serialize
     unparseably, either of which would silently diverge from the
     event_id % 7 corruption oracle."""
-    import os
-    import shutil
-    import tempfile
-
     from tiny_mapreduce_rpc_server_spark.sources import load_table
 
     ev = (
@@ -819,12 +814,8 @@ def q_streaming_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('","value":oops}'),
         ),
     ).otherwise(F.to_json(F.struct("event_id", "event_type", "value")))
-    feed = os.path.join(
-        tempfile.gettempdir(),
-        f"tmrs_quarantine_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    shutil.rmtree(feed, ignore_errors=True)
-    ev.select(line.alias("value")).write.mode("overwrite").text(feed)
+    feed = scratch_dir(spark, "quarantine")
+    ev.select(line.alias("value")).write.text(feed)
 
     raw = spark.readStream.format("text").load(feed)
     parsed = raw.select(

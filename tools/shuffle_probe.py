@@ -10,7 +10,9 @@ size is re-shuffling the corpus; the inverted-index/dedup family should
 shuffle only keys+ids, the broadcast-join family almost nothing beyond
 its final aggregate.
 
-Writes SHUFFLE.md. Usage: python tools/shuffle_probe.py [--sf-dir D]
+Rewrites the measured-table section of SHUFFLE.md (everything before
+its first ``## `` heading) and keeps the hand-written sections after it.
+Usage: python tools/shuffle_probe.py [--sf-dir D]
 """
 
 from __future__ import annotations
@@ -68,6 +70,7 @@ def main() -> int:
         print(f"# {name}: shuffle write {rows[-1][1]:.2f} MB, {n} rows, "
               f"{dt:.2f}s", file=sys.stderr)
 
+    top = max(rows, key=lambda r: r[1])
     lines = [
         "# SHUFFLE.md — measured shuffle volume per bench query",
         "",
@@ -81,10 +84,10 @@ def main() -> int:
         "",
         "The discipline this measures: queries shuffle keys / ids /",
         "aggregates — a fraction of what they scan — never the corpus",
-        "itself. The largest shuffler (q21, ~17 MB) is re-keying the",
-        "widest per-order aggregate; every dedup candidate-generation",
-        "path moves less than half of its input; the broadcast-join and",
-        "pure-filter families shuffle at most their final aggregate.",
+        f"itself. The largest shuffler is {top[0]} ({top[1]:.2f} MB);",
+        "every dedup candidate-generation path moves less than half of",
+        "its input; the broadcast-join and pure-filter families shuffle",
+        "at most their final aggregate.",
         "",
         "| query | shuffle_mb | out_rows | sec |",
         "|---|---|---|---|",
@@ -93,8 +96,15 @@ def main() -> int:
         lines.append(f"| {name} | {wmb:.2f} | {n} | {dt:.2f} |")
     lines.append("")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SHUFFLE.md")
+    # keep the hand-written sections that follow the table
+    tail = ""
+    if os.path.exists(out):
+        prev = open(out).read()
+        i = prev.find("\n## ")
+        if i >= 0:
+            tail = prev[i:]
     with open(out, "w") as f:
-        f.write("\n".join(lines))
+        f.write("\n".join(lines) + tail)
     print("wrote SHUFFLE.md")
     return 0
 

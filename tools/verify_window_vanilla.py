@@ -82,8 +82,9 @@ def main() -> int:
         spec = q[name]
         t0 = time.time()
         try:
-            # QuerySpec.run releases caches and checkpoints around each
-            # query, so they don't accumulate across a many-query session
+            # QuerySpec.run releases caches, checkpoints and scratch files
+            # around each query, so they don't accumulate across a
+            # many-query session
             # (the driver contract's queries() releases before each build)
             if spec.oracle is None:
                 _, n_rows = spec.run(spark, args.sf_dir, DataFrame.count)
