@@ -75,7 +75,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     the files it wrote under the session's scratch root, so a session
     that iterates many queries holds at most one query's caches and
     scratch files at a time instead of accumulating all of them until
-    teardown. This is safe only because the caller consumes each
+    teardown; the last query's scratch files go when the process exits
+    (``session.scratch_dir``). This is safe only because the caller consumes each
     query's result before it builds the next: a ``localCheckpoint``
     block cannot be recomputed once unpersisted, nor a scratch store
     read once deleted, so a plan still pending across the release would

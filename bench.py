@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark import get_spark
 from tiny_mapreduce_rpc_server_spark.registry import all_queries
+from tiny_mapreduce_rpc_server_spark.sources import TABLES, load_table, table_path
 
 # Sentinels for the paired engine-vs-oracle ratio: span the plan
 # classes the gate cares about — the two weak-flagged rows whose
@@ -135,9 +136,8 @@ def main() -> None:
     # first (registry order), making round-over-round per-query deltas
     # noise.
     spark.range(1).count()
-    smallest = os.path.join(sf_dir, "region.parquet")
-    if os.path.exists(smallest):
-        spark.read.parquet(smallest).groupBy("r_regionkey").count().count()
+    if os.path.exists(table_path(sf_dir, "region")):
+        load_table(spark, sf_dir, "region").groupBy("r_regionkey").count().count()
     spark.range(2).mapInPandas(lambda it: it, "id long").count()
     # sort-merge join + window codegen warm (observed: the first SMJ of a
     # session costs ~2.5s extra regardless of which query runs it)
@@ -182,8 +182,6 @@ def main() -> None:
     # registered DuckDB SQL in-process (DuckDB is the single-node
     # baseline engine — one process, no JVM, same box, same parquet).
     import duckdb
-
-    from tiny_mapreduce_rpc_server_spark.sources import TABLES, table_path
 
     by_name = {s.name: s for s in specs}
     paired: dict[str, dict[str, float]] = {}

@@ -1509,3 +1509,48 @@ def test_memory_sink_views_are_dropped(spark):
         if t.isTemporary and t.name.startswith("stream_")
     ]
     assert views == []
+
+
+def test_driver_scratch_root_is_removed_at_exit(tmp_path):
+    """The driver contract releases only before each build, so the last
+    query a session runs is never released: its scratch root still holds
+    the query's store when the driver process ends, and is gone after
+    it exits."""
+    import json
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    code = textwrap.dedent(
+        f"""
+        import importlib.util, json, os, tempfile
+        spec = importlib.util.spec_from_file_location(
+            "__spark_entry__", {os.path.join(repo, "__spark_entry__.py")!r})
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        from tiny_mapreduce_rpc_server_spark import get_spark
+        spark = get_spark("scratch_exit")
+        df = mod.queries()["total_order_sort"](spark, {SF_SMOKE!r})
+        assert df.toArrow().num_rows > 0
+        print("RESULT", json.dumps(os.listdir(tempfile.gettempdir())))
+        """
+    )
+    env = dict(
+        os.environ, TMPDIR=str(tmpdir), SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert lines, out.stderr[-3000:]
+    before_exit = json.loads(lines[0].split(" ", 1)[1])
+    assert any(e.startswith("tmrs-") for e in before_exit), before_exit
+    assert [e for e in os.listdir(tmpdir) if e.startswith("tmrs-")] == []

@@ -9,12 +9,16 @@ These tests prove both behaviors end-to-end through our sinks.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.test_plans import plan
 from tiny_mapreduce_rpc_server_spark.sources import load_table
 from tiny_mapreduce_rpc_server_spark.sources.sinks import write_parquet
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_partitioned_write_prunes(spark, tmp_path):
@@ -110,17 +114,6 @@ def test_sorted_kv_text_sink_contract(spark, tmp_path):
     assert seen == docs.count()
 
 
-def test_parse_bytes_handles_spark_conf_suffixes():
-    from tiny_mapreduce_rpc_server_spark.sources import _parse_bytes
-
-    assert _parse_bytes("134217728b", 0) == 128 * 1024 * 1024
-    assert _parse_bytes("128m", 0) == 128 * 1024 * 1024
-    assert _parse_bytes("64MB", 0) == 64 * 1024 * 1024
-    assert _parse_bytes("4194304", 0) == 4 * 1024 * 1024
-    assert _parse_bytes("1g", 0) == 1024**3
-    assert _parse_bytes("garbage", 7) == 7
-
-
 def test_scan_estimate_models_packing_and_bytes_per_core(spark, tmp_path):
     """The estimator must reproduce BOTH FilePartition adjustments:
     openCost packing (many tiny files -> FEW partitions, so spread()
@@ -146,6 +139,20 @@ def test_scan_estimate_models_packing_and_bytes_per_core(spark, tmp_path):
     act_s = single.rdd.getNumPartitions()
     assert abs(est_s - act_s) <= max(2, act_s // 2), (est_s, act_s)
 
+    # a suffixed byte size set at run time, below the file size; a new
+    # frame, because a DataFrame keeps the RDD it planned first
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    try:
+        split = load_table(spark, SF_ORACLE, "lineitem")
+        est_k = _estimated_scan_partitions(split)
+        act_k = split.rdd.getNumPartitions()
+    finally:
+        spark.conf.set(key, saved)
+    assert est_k > 1
+    assert abs(est_k - act_k) <= max(2, act_k // 2), (est_k, act_k)
+
 
 def test_paired_sentinels_are_oracle_backed_bench_queries():
     """bench.py's paired gate silently skips a sentinel whose name no
@@ -162,3 +169,84 @@ def test_paired_sentinels_are_oracle_backed_bench_queries():
         assert name in q, name
         assert q[name].bench, f"{name} is not a bench headliner"
         assert q[name].oracle, f"{name} has no oracle to pair against"
+
+
+# every shipped data directory: the test tables and perfbench's
+_DATA_DIRS = {
+    f"{root}/{sf}": os.path.join(parent, sf)
+    for root, parent, sfs in [
+        ("testdata", os.path.dirname(SF_SMOKE), ["sf0.001", "sf0.01", "sf0.1"]),
+        ("perfbench", os.path.join(_REPO, "perfbench", "data"), ["sf0.001", "sf0.1"]),
+    ]
+    for sf in sfs
+}
+
+
+@pytest.mark.parametrize("data", _DATA_DIRS)
+def test_declared_schemas_match_inference(spark, data):
+    """Every table's declared schema is exactly what Spark infers from
+    its parquet footer: names, order, types and nullability."""
+    from tiny_mapreduce_rpc_server_spark.sources import TABLES, table_path
+
+    sf_dir = _DATA_DIRS[data]
+
+    for name, ddl in TABLES.items():
+        inferred = spark.read.parquet(table_path(sf_dir, name)).schema
+        assert load_table(spark, sf_dir, name).schema == inferred, name
+        assert inferred.toDDL() == ddl, name
+
+
+def test_table_readers_fire_no_jobs(spark):
+    """Building a table-scan query and opening the events stream run no
+    Spark job: the schema is declared, not inferred from a footer."""
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+    from tiny_mapreduce_rpc_server_spark.streaming import read_events_stream
+
+    sc = spark.sparkContext
+    builds = {
+        "q6_forecast_revenue": lambda: all_queries()["q6_forecast_revenue"].fn(
+            spark, SF_SMOKE
+        ),
+        "read_events_stream": lambda: read_events_stream(spark, SF_SMOKE),
+    }
+    for name, build in builds.items():
+        group = f"declared-schema-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+
+
+def test_events_queries_leave_session_conf_alone(spark):
+    """Running an events query does not set the legacy parquet
+    nanos-as-long conf on the caller's session."""
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    conf = spark._jsparkSession.sessionState().conf()
+    spark.conf.unset(key)
+    _, n = all_queries()["time_bucket_rollup"].run(
+        spark, SF_SMOKE, lambda df: df.toArrow().num_rows
+    )
+    assert n > 0
+    assert not conf.contains(key)
+
+
+def test_nanos_events_file_is_rejected(spark, tmp_path):
+    """An events file whose ``ts`` is parquet TIMESTAMP(NANOS) does not
+    match the declared TIMESTAMP_NTZ (microseconds) layout: reading
+    ``ts`` fails loudly instead of returning reinterpreted values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tiny_mapreduce_rpc_server_spark.sources import table_path
+
+    events = pq.read_table(table_path(SF_SMOKE, "events"))
+    i = events.schema.get_field_index("ts")
+    events = events.set_column(i, "ts", events.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(events, table_path(str(tmp_path), "events"))
+    # select ts explicitly: a count() prunes every column and reads nothing
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        load_table(spark, str(tmp_path), "events").select("ts").collect()

@@ -15,6 +15,7 @@ under ``scratch_dir``, once its result has been consumed.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -116,6 +117,10 @@ def get_spark(
     return spark
 
 
+# scratch roots whose removal at interpreter exit is registered
+_ROOTS_REMOVED_AT_EXIT: set[str] = set()
+
+
 def _scratch_root(spark: SparkSession) -> str:
     return os.path.join(
         tempfile.gettempdir(), f"tmrs-{spark.sparkContext.applicationId}"
@@ -128,12 +133,18 @@ def scratch_dir(spark: SparkSession, tag: str) -> str:
     sit under one root per application, ``<tempdir>/tmrs-<app id>``
     (the temporary directory follows ``TMPDIR``), which
     ``release_caches`` deletes, so a query needs neither to clear old
-    data before it writes nor to delete its files afterwards.
+    data before it writes nor to delete its files afterwards. The root
+    is also removed when the interpreter exits, which covers the last
+    query of a session that is never released.
 
     Deployment contract: the root is a driver-local path, so the
     executors' writes land where the driver reads and deletes them only
     in local mode; a cluster points the root at shared storage."""
-    return os.path.join(_scratch_root(spark), f"{tag}-{uuid.uuid4().hex}")
+    root = _scratch_root(spark)
+    if root not in _ROOTS_REMOVED_AT_EXIT:
+        _ROOTS_REMOVED_AT_EXIT.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return os.path.join(root, f"{tag}-{uuid.uuid4().hex}")
 
 
 def release_caches() -> None:

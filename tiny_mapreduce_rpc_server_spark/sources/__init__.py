@@ -14,18 +14,42 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# The ten input tables and their layouts, as Spark DDL, in the column
+# order and with the types that schema inference gives for every shipped
+# data directory (all fields nullable). Reading with a declared schema
+# skips inference, which runs one footer-reading Spark job per read.
+# ``events.ts`` is parquet TIMESTAMP(MICROS) with isAdjustedToUTC=false,
+# i.e. TIMESTAMP_NTZ; a file with any other ``ts`` layout (such as
+# TIMESTAMP(NANOS)) fails its first read of ``ts`` instead of being
+# silently reinterpreted.
+TABLES = {
+    "region": "r_regionkey INT,r_name STRING",
+    "nation": "n_nationkey INT,n_name STRING,n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT,c_name STRING,c_nationkey INT,c_acctbal DOUBLE,"
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT,s_name STRING,s_nationkey INT,s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT,p_name STRING,p_brand STRING,p_type STRING,p_size INT,"
+        "p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT,o_custkey BIGINT,o_orderstatus STRING,"
+        "o_totalprice DOUBLE,o_orderdate TIMESTAMP_NTZ,o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT,l_partkey BIGINT,l_suppkey BIGINT,l_linenumber INT,"
+        "l_quantity DOUBLE,l_extendedprice DOUBLE,l_discount DOUBLE,l_tax DOUBLE,"
+        "l_returnflag STRING,l_linestatus STRING,l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT,ts TIMESTAMP_NTZ,user_id BIGINT,event_type STRING,"
+        "value DOUBLE,props STRING"
+    ),
+    "documents": "doc_id BIGINT,text STRING,lang STRING,source STRING,n_chars BIGINT",
+    "embeddings": "vec_id BIGINT,embedding ARRAY<FLOAT>,label INT",
+}
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -48,36 +72,6 @@ def spread(df: DataFrame) -> DataFrame:
     if _estimated_scan_partitions(df) < target:
         return df.repartition(target)
     return df
-
-
-_SIZE_SUFFIXES = {
-    "": 1,
-    "b": 1,
-    "k": 1024,
-    "kb": 1024,
-    "m": 1024**2,
-    "mb": 1024**2,
-    "g": 1024**3,
-    "gb": 1024**3,
-    "t": 1024**4,
-    "tb": 1024**4,
-    "p": 1024**5,
-    "pb": 1024**5,
-}
-
-
-def _parse_bytes(raw: str, default: int) -> int:
-    """Parse Spark byte-size conf values ('134217728b', '128m', '4MB',
-    plain ints). Returns `default` on anything unrecognized."""
-    s = str(raw).strip().lower()
-    i = len(s)
-    while i > 0 and not s[i - 1].isdigit():
-        i -= 1
-    num, suffix = s[:i], s[i:]
-    try:
-        return int(num) * _SIZE_SUFFIXES[suffix]
-    except (ValueError, KeyError):
-        return default
 
 
 def _estimated_scan_partitions(df: DataFrame) -> int:
@@ -112,14 +106,9 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
         files = []
     if not files:
         return df.rdd.getNumPartitions()
-    conf = df.sparkSession.conf
-    mpb = _parse_bytes(
-        conf.get("spark.sql.files.maxPartitionBytes", "134217728b"),
-        128 * 1024 * 1024,
-    )
-    open_cost = _parse_bytes(
-        conf.get("spark.sql.files.openCostInBytes", "4194304b"), 4 * 1024 * 1024
-    )
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    mpb = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     sizes = []
     for f in files:
@@ -146,26 +135,9 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table. Parquet scan => column pruning +
-    predicate pushdown for free once Catalyst sees the full plan."""
+    """Read one synthetic table with its declared schema. Parquet scan
+    => column pruning + predicate pushdown for free once Catalyst sees
+    the full plan."""
     if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.ts is parquet TIMESTAMP(NANOS), which Spark's reader rejects
-    ([PARQUET_TYPE_ILLEGAL]). Read nanos as raw int64 (legacy conf, set
-    dynamically so it works under any session) and convert to a
-    microsecond timestamp with integer floor-division — the same ns->us
-    truncation DuckDB applies, so oracle comparisons stay exact."""
-    from pyspark.sql import functions as F
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
-    if dict(df.dtypes).get("ts") == "bigint":
-        # integer division — double math would lose precision above 2^53 ns
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+        raise KeyError(f"unknown table {name!r}; known: {list(TABLES)}")
+    return spark.read.schema(TABLES[name]).parquet(table_path(sf_dir, name))

@@ -17,12 +17,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tiny_mapreduce_rpc_server_spark.functions import instant_as_ntz, ntz_as_instant
 from tiny_mapreduce_rpc_server_spark.session import scratch_dir
 from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
-from tiny_mapreduce_rpc_server_spark.sources import table_path
+from tiny_mapreduce_rpc_server_spark.sources import TABLES
 
 _DEC = "DECIMAL(38,6)"
 
@@ -123,47 +122,26 @@ def _memory_sink(df: DataFrame, mode: str, tag: str) -> DataFrame:
     return sink
 
 
-def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet, matching the batch reader's
-    layout handling (sources._load_events). The testdata has shipped two
-    layouts for events.ts — parquet TIMESTAMP(NANOS), which Spark can only
-    read as raw int64 (legacy conf) and needs ns->us truncation, and plain
-    us-precision naive timestamps (TIMESTAMP_NTZ). Probe the footer via a
-    batch read, build the matching stream schema, and keep ts
-    TIMESTAMP_NTZ either way: watermarks/windows support NTZ (Spark
-    3.4+), window boundaries align on naive time exactly like the DuckDB
+    """readStream over the events parquet with the table's declared
+    schema (``sources.TABLES``). ``ts`` becomes the instant whose UTC
+    wall-clock equals its naive value (``ntz_as_instant``), because
+    watermarks reject TIMESTAMP_NTZ. That step is timezone-free, so
+    window boundaries align on naive time exactly like the DuckDB
     oracles' date_trunc/time_bucket, and nothing depends on the session
-    timezone (a cast to session-tz TIMESTAMP would shift every window
-    boundary under a non-UTC driver session — by 30 minutes under
-    half-hour-offset zones, and across DST transitions everywhere)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_ts = dict(spark.read.parquet(table_path(sf_dir, "events")).dtypes)["ts"]
-    nanos_layout = batch_ts == "bigint"
-    ts_type = T.LongType() if nanos_layout else T.TimestampNTZType()
+    timezone (a plain cast to session-tz TIMESTAMP would shift every
+    window boundary under a non-UTC driver session — by 30 minutes
+    under half-hour-offset zones, and across DST transitions
+    everywhere)."""
     # streaming file source requires a directory: point at sf_dir and
     # glob-filter to the events file
-    raw = (
-        spark.readStream.schema(_events_raw_schema(ts_type))
+    return (
+        spark.readStream.schema(TABLES["events"])
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
+        .withColumn("ts", ntz_as_instant("ts"))
     )
-    if nanos_layout:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", ntz_as_instant("ts"))
 
 
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
