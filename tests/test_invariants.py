@@ -388,17 +388,43 @@ def test_cc_local_rejects_null_endpoints(spark):
         propagate_components(pairs).collect()
 
 
-def test_spread_is_noop_with_enough_partitions(spark):
+def test_spread_is_noop_with_enough_partitions(spark, tmp_path):
     """spread() must widen a narrow scan to session parallelism and be a
     structural no-op (same object, no added shuffle) when the input
     already has enough splits — the real-scale case."""
-    from tiny_mapreduce_rpc_server_spark.sources import spread
+    from tiny_mapreduce_rpc_server_spark.sources import spread, table_path
 
     target = spark.sparkContext.defaultParallelism
     wide = spark.range(0, 1000, 1, target)
     assert spread(wide) is wide
     narrow = spark.range(0, 1000, 1, 1)
     assert spread(narrow).rdd.getNumPartitions() == target
+
+    # Scans follow Spark's own split plan. Spark packs 64 tiny files
+    # into about defaultParallelism splits; planned for one core
+    # (minPartitionNum 1) it packs them into fewer, which spread widens.
+    frag = str(tmp_path / "frag")
+    load_table(spark, SF_ORACLE, "documents").repartition(64).write.parquet(frag)
+    # lineitem cut into at least target splits by a smaller split size
+    split_bytes = os.path.getsize(table_path(SF_ORACLE, "lineitem")) // target
+    min_parts = "spark.sql.files.minPartitionNum"
+    max_bytes = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(max_bytes)
+    # a new frame per setting, because a DataFrame keeps the RDD it
+    # planned first
+    try:
+        spark.conf.set(min_parts, "1")
+        packed = spark.read.parquet(frag)
+        assert packed.rdd.getNumPartitions() < target
+        assert spread(packed).rdd.getNumPartitions() == target
+        spark.conf.unset(min_parts)
+        spark.conf.set(max_bytes, str(split_bytes))
+        split = load_table(spark, SF_ORACLE, "lineitem")
+        assert split.rdd.getNumPartitions() >= target
+        assert spread(split) is split
+    finally:
+        spark.conf.unset(min_parts)
+        spark.conf.set(max_bytes, saved)
 
 
 def test_dedup_embedding_blocked_matmul_is_exact(spark, monkeypatch):
@@ -1509,6 +1535,18 @@ def test_memory_sink_views_are_dropped(spark):
         if t.isTemporary and t.name.startswith("stream_")
     ]
     assert views == []
+
+
+def test_bucketed_tables_leave_the_catalog(spark):
+    """bucketed_join_roundtrip drops its two catalog tables once they
+    are resolved, so the session's catalog names no table whose files
+    the release deleted."""
+    from tiny_mapreduce_rpc_server_spark.registry import all_queries
+
+    spec = all_queries()["bucketed_join_roundtrip"]
+    assert spec.run(spark, SF_SMOKE, lambda df: df.toArrow().num_rows)[1] > 0
+    for name in ("tmrs_b_orders_sf0_001", "tmrs_b_customer_sf0_001"):
+        assert not spark.catalog.tableExists(name), name
 
 
 def test_driver_scratch_root_is_removed_at_exit(tmp_path):

@@ -114,46 +114,6 @@ def test_sorted_kv_text_sink_contract(spark, tmp_path):
     assert seen == docs.count()
 
 
-def test_scan_estimate_models_packing_and_bytes_per_core(spark, tmp_path):
-    """The estimator must reproduce BOTH FilePartition adjustments:
-    openCost packing (many tiny files -> FEW partitions, so spread()
-    still widens them) and the bytesPerCore shrink (est never lags far
-    below Spark's actual plan). Pinned against Spark's real planning."""
-    from tiny_mapreduce_rpc_server_spark.sources import (
-        _estimated_scan_partitions,
-        load_table,
-    )
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    frag = str(tmp_path / "frag")
-    docs.repartition(64).write.parquet(frag)
-    df = spark.read.parquet(frag)
-    est = _estimated_scan_partitions(df)
-    actual = df.rdd.getNumPartitions()
-    # 64 tiny files must NOT be reported as 64 scan partitions
-    assert est < 64
-    assert abs(est - actual) <= max(2, actual // 2), (est, actual)
-
-    single = load_table(spark, SF_ORACLE, "lineitem")
-    est_s = _estimated_scan_partitions(single)
-    act_s = single.rdd.getNumPartitions()
-    assert abs(est_s - act_s) <= max(2, act_s // 2), (est_s, act_s)
-
-    # a suffixed byte size set at run time, below the file size; a new
-    # frame, because a DataFrame keeps the RDD it planned first
-    key = "spark.sql.files.maxPartitionBytes"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "256k")
-    try:
-        split = load_table(spark, SF_ORACLE, "lineitem")
-        est_k = _estimated_scan_partitions(split)
-        act_k = split.rdd.getNumPartitions()
-    finally:
-        spark.conf.set(key, saved)
-    assert est_k > 1
-    assert abs(est_k - act_k) <= max(2, act_k // 2), (est_k, act_k)
-
-
 def test_paired_sentinels_are_oracle_backed_bench_queries():
     """bench.py's paired gate silently skips a sentinel whose name no
     longer resolves to an oracle-backed bench query (deliberate

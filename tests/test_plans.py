@@ -373,7 +373,7 @@ def test_tf_idf_row_local_tf_broadcast_df(spark):
 
     p = plan(spark, _q(spark, "text_tf_idf"))
     tree = p.split("\n\n", 1)[0]
-    # df joins back broadcast under the count gate — never a shuffled
+    # df joins back broadcast on its measured size — never a shuffled
     # probe of corpus pairs by term
     assert "BroadcastHashJoin" in tree, p
     assert "SortMergeJoin" not in tree and "ShuffledHashJoin" not in tree, p
@@ -858,9 +858,9 @@ def test_global_topk_is_take_ordered(spark, name):
 
 def test_minhash_verify_join_broadcasts_bounded_candidate_set(spark):
     """The exact re-score join must broadcast the candidate pair set so
-    shingle arrays never ride an exchange. The hint is count-gated
-    (dedup._bounded_broadcast — the round-4 scale-hazard fix), so this
-    pins BOTH that the bound admits the broadcast at test SF AND that no
+    shingle arrays never ride an exchange. The set is pinned and
+    broadcast on its measured size (dedup._bounded_broadcast), so this
+    pins BOTH that the threshold admits it at test SF AND that no
     Exchange in the plan carries the shingles column."""
     import re
 
@@ -871,18 +871,29 @@ def test_minhash_verify_join_broadcasts_bounded_candidate_set(spark):
             assert "shingles" not in block, block
 
 
-def test_bounded_broadcast_degrades_above_bound(spark, monkeypatch):
-    """Above the pair bound the broadcast hint must be DROPPED — the
+def test_bounded_broadcast_degrades_above_bound(spark):
+    """The pinned pair table broadcasts only below the session's
+    broadcast threshold, on its materialized size: above it the
     re-score degrades to a shuffled join instead of OOMing the driver
     on a duplicate-heavy corpus."""
     from tiny_mapreduce_rpc_server_spark.operators import dedup
 
     pairs = spark.range(100).selectExpr("id as doc_a", "id + 1 as doc_b")
-    hinted = dedup._bounded_broadcast(pairs)
-    assert "hint" in hinted._jdf.queryExecution().logical().toString().lower()
-    monkeypatch.setattr(dedup, "BROADCAST_PAIR_BOUND", 10)
-    plain = dedup._bounded_broadcast(pairs)
-    assert "hint" not in plain._jdf.queryExecution().logical().toString().lower()
+    big = spark.range(100_000).selectExpr("id as doc_a", "id * 2 as v")
+
+    def joined():
+        return plan(spark, dedup._bounded_broadcast(pairs).join(big, "doc_a"))
+
+    p = joined()
+    assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p, p
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "100")
+    try:
+        p = joined()
+    finally:
+        spark.conf.set(key, saved)
+    assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p, p
 
 
 @pytest.mark.parametrize(
@@ -891,8 +902,9 @@ def test_bounded_broadcast_degrades_above_bound(spark, monkeypatch):
 )
 def test_gated_broadcasts_still_broadcast_at_test_sf(spark, name):
     """The round-5 bounded-broadcast discipline must not cost the small-
-    scale plan: at test SF the count gates admit the hint, so the dup-
-    list / adjacency joins stay broadcast (no corpus-side exchange)."""
+    scale plan: at test SF the pinned tables measure under the broadcast
+    threshold, so the dup-list / adjacency joins stay broadcast (no
+    corpus-side exchange)."""
     p = plan(spark, _q(spark, name))
     assert "BroadcastHashJoin" in p, p
     assert "CartesianProduct" not in p, p
@@ -1002,7 +1014,7 @@ def test_dedup_semantic_incremental_index_probe_shape(spark):
     """The incremental SemDeDup probe must be the index-probe shape: both
     sides assigned via MapInPandas against the broadcast centroid matrix
     (no N x K row explosion), candidates generated ONLY by the cluster
-    equi-join (broadcast of the count-gated incoming batch or a shuffled
+    equi-join (broadcast of the pinned incoming batch or a shuffled
     cluster-key join — never a cartesian), exact cosine on candidates."""
     import re as _re
 

@@ -84,13 +84,6 @@ def perm_coeffs(i: int) -> tuple[int, int]:
     return 2 * i + 3, (i * i * 7919 + 31) % M2
 
 
-def ln_lut() -> Column:
-    """512-entry array literal: ``element_at(ln_lut(), k)`` == ln(k) for
-    1 <= k <= LN_MAX. Alias it into a projection once per query (the
-    expression-materialization rule) rather than inlining per use."""
-    return F.array(*[F.lit(v) for v in _LN_TABLE])
-
-
 # ---------------------------------------------------------------------------
 # DuckDB side (SQL text generated from the same constants)
 # ---------------------------------------------------------------------------
@@ -121,8 +114,9 @@ def sql_perm(i: int, expr: str) -> str:
 
 
 def sql_ln_lut() -> str:
-    """The identical table as a DuckDB list literal. repr() is the
-    shortest round-trip form; the ``e0`` suffix is load-bearing — DuckDB
-    parses a bare decimal literal as DECIMAL(p,s) (losing the last ulp),
-    but an exponent-form literal as DOUBLE (exact bits back)."""
+    """``_LN_TABLE`` as a DuckDB list literal: ``lut[k]`` == ln(k) for
+    1 <= k <= LN_MAX. repr() is the shortest round-trip form; the
+    ``e0`` suffix is load-bearing — DuckDB parses a bare decimal literal
+    as DECIMAL(p,s) (losing the last ulp), but an exponent-form literal
+    as DOUBLE (exact bits back)."""
     return "[" + ", ".join(f"{v!r}e0" for v in _LN_TABLE) + "]"

@@ -55,38 +55,35 @@ COSINE_DUP = 0.4
 # many docs (stop-shingle cap — prevents hot-key shuffle skew at scale)
 MAX_SHINGLE_DF = 50
 
-# broadcast a candidate-pair set only below this many pairs: 2M rows of
-# (long, long) is ~32 MB, the session's autoBroadcastJoinThreshold
-BROADCAST_PAIR_BOUND = 2_000_000
-
 
 def _bounded_broadcast(cand: DataFrame) -> DataFrame:
-    """Broadcast a small derived table (candidate pairs, duplicate-id
-    lists) only when it is PROVABLY small.
+    """Pin a small derived table (candidate pairs, duplicate-id lists)
+    so the planner broadcasts it only when it is MEASURED small.
 
     The consumers want these tables broadcast so the large corpus /
     shingle / embedding side is never shuffled — but an *unconditional*
     hint is a scale hazard: on a duplicate-heavy 100 TB crawl LSH bands
     can emit billions of candidate pairs and the duplicate list is a
     large fraction of the corpus, and a forced broadcast then kills the
-    driver instead of degrading. So the table (a couple of longs per
-    row — cheap to hold) is persisted, counted, and broadcast only
-    under BROADCAST_PAIR_BOUND; above the bound the hint is dropped and
-    the join degrades to a shuffle — slower, but alive. The count
-    reuses the persisted rows, so the upstream computation still runs
-    exactly once.
+    driver instead of degrading. So the table is persisted and counted,
+    which materializes it: the planner then sizes it by its real cached
+    bytes, not by an estimate, and broadcasts it only under
+    ``spark.sql.autoBroadcastJoinThreshold`` (32 MB in ``get_spark``).
+    Above that the join degrades to a shuffle — slower, but alive. The
+    persisted rows are reused, so the upstream computation runs exactly
+    once.
 
     CONTRACT NOTE (also in QuerySpec's docstring): building a query that
-    goes through this gate runs a real Spark job (the count) at
+    goes through this pin runs a real Spark job (the count) at
     DataFrame-construction time — construction is NOT plan-only for the
-    dedup/graph/sampling queries that need the gate. ``QuerySpec.run``
+    dedup/graph/sampling queries that use it. ``QuerySpec.run``
     releases the persisted blocks once the query's result is consumed.
     """
     from pyspark import StorageLevel
 
     cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    n = cand.count()
-    return F.broadcast(cand) if n <= BROADCAST_PAIR_BOUND else cand
+    cand.count()
+    return cand
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiny_mapreduce_rpc_server_spark.operators.dedup import (
-    BROADCAST_PAIR_BOUND,
     HAMMING_MAX,
     ORACLE_DEDUP_NGRAM_JACCARD,
     SIMHASH_WIDE_BITS,
@@ -54,8 +53,8 @@ from tiny_mapreduce_rpc_server_spark.spec import QuerySpec
 _MAX_ROUNDS = 20
 
 # Single-task union-find gate: below this many edges the whole pair list
-# provably fits in ONE task's memory (2M (long,long) rows ~ 32 MB — the
-# same constant class as dedup.BROADCAST_PAIR_BOUND) and the iterative
+# provably fits in ONE task's memory (2M (long,long) rows ~ 32 MB, the
+# session's spark.sql.autoBroadcastJoinThreshold) and the iterative
 # loop's per-round scheduler cost dominates the actual work, so CC runs
 # as one mapInPandas over coalesce(1). Above the gate the distributed
 # O(log diameter) loop below is unchanged. The edge count is read off
@@ -317,13 +316,13 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-dedup storage/token budget is.
 
     Shape: the duplicate list is cluster members minus representatives,
-    broadcast against one corpus scan when provably small (count-gated
-    via dedup._bounded_broadcast — on a duplicate-heavy crawl the dup
+    broadcast against one corpus scan when measured small (pinned via
+    dedup._bounded_broadcast — on a duplicate-heavy crawl the dup
     list is a large FRACTION of the corpus, and an unconditional hint
-    would OOM the driver; the count is a cheap scan of the
-    localCheckpoint-materialized component table). Above the bound the
-    LEFT join degrades to a hash shuffle on doc_id. The per-source rollup
-    partial-aggregates map-side. The savings fraction is a double
+    would OOM the driver; the pin's count is a cheap scan of the
+    localCheckpoint-materialized component table). Above the broadcast
+    threshold the LEFT join degrades to a hash shuffle on doc_id. The
+    per-source rollup partial-aggregates map-side. The savings fraction is a double
     division of two exact BIGINTs, identical in both engines."""
     comp = _components(spark, sf_dir)
     dups = (
@@ -683,9 +682,9 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: at 100 TB orient by (degree, id) instead of raw id so
     hub adjacency lists stay short (arboricity bound, Suri &
     Vassilvitskii "Counting Triangles and the Curse of the Last
-    Reducer"); the adjacency broadcast is count-gated on |E| (the
-    exact adjacency payload), degrading to shuffled equi-joins when
-    the graph outgrows the broadcast budget — the per-edge
+    Reducer"); the adjacency is pinned and broadcast only while its
+    materialized size is under the broadcast threshold, degrading to
+    shuffled equi-joins when the graph outgrows it — the per-edge
     intersection algebra is unchanged. Id-orientation keeps the oracle
     deterministic here. The oracle verifies via the independent wedge
     formulation in SQL.
@@ -714,24 +713,16 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort-merge join; intersecting per-edge neighbor lists touches each
     # edge once with O(deg) work and needs no wedge shuffle at all.
     # adj(u) holds only HIGHER neighbors, so triangle {a<b<c} is found
-    # exactly once, at edge (a,b), as c in adj(a) ∩ adj(b).
-    adj = e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb")).cache()
+    # exactly once, at edge (a,b), as c in adj(a) ∩ adj(b). The
+    # adjacency is pinned (this materializes e too), so the probes
+    # broadcast it on its measured size and degrade to shuffled
+    # equi-joins above the broadcast threshold.
+    adj = _bounded_broadcast(
+        e.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nb"))
+    )
     adj_u = adj.withColumnRenamed("u", "x").withColumnRenamed("nb", "nb_u")
     adj_v = adj.withColumnRenamed("u", "y").withColumnRenamed("nb", "nb_v")
     empty = F.array().cast("array<bigint>")
-    # the adjacency payload holds exactly |E| neighbor entries, so gate
-    # the broadcast on the edge count (e is cached — this materializes
-    # it once for both consumers); above the bound the probes degrade to
-    # shuffled equi-joins instead of OOMing the driver. The bound is
-    # BROADCAST_PAIR_BOUND/4, NOT the raw pair bound: that constant is
-    # calibrated for ~16 bytes/row of bare (long, long) pairs, while a
-    # collected neighbor-array row carries UnsafeArrayData headers, the
-    # per-row key, and java object overhead on top of each 8-byte entry
-    # — conservatively budgeted at up to 4x the bare-pair bytes — so the
-    # quartered bound keeps the worst-case adjacency broadcast inside
-    # the same ~32 MB budget
-    if e.count() <= BROADCAST_PAIR_BOUND // 4:
-        adj_u, adj_v = F.broadcast(adj_u), F.broadcast(adj_v)
     ea = (
         e.join(adj_u, F.col("u") == F.col("x"))
         .drop("x")

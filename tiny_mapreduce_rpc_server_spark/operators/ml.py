@@ -1104,7 +1104,7 @@ def _best_existing_match(in_a: DataFrame, ex_a: DataFrame) -> DataFrame:
     (vec_new, cluster, vn), ``ex_a`` (vec_old, cluster, vo)."""
     from tiny_mapreduce_rpc_server_spark.operators.dedup import _bounded_broadcast
 
-    # batch is small by contract, but gate the broadcast on a real count
+    # batch is small by contract, but broadcast it on its measured size
     # so a mis-sized batch degrades to a shuffled cluster-key join
     scored = (
         _bounded_broadcast(in_a)

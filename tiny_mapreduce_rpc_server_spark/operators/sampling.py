@@ -700,7 +700,7 @@ def q_pipeline_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     its builder, so the four stage branches read it instead of re-running
     clustering; each stage is a one-row aggregate over a progressively
     filtered scan, unioned at the end. The duplicate list broadcasts
-    only when provably small (count-gated, dedup._bounded_broadcast —
+    only when measured small (pinned by dedup._bounded_broadcast —
     it is a large fraction of a duplicate-heavy corpus, not a constant);
     the sha256 dedup shuffles 32-byte digests."""
     from pyspark.sql import Window

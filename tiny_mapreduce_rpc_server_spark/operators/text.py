@@ -469,11 +469,11 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     task — and AQE can skew-split a join's partitions but never a
     window's. df now partial-aggregates map-side (groupBy(w): the
     shuffle carries one pre-combined row per term per map partition,
-    hot terms included) and joins back BROADCAST when the vocabulary
-    passes the count gate (``_bounded_broadcast``) — zero pairs-by-term
-    shuffle at all. Above the gate it degrades to a shuffled join,
-    where AQE's skew-join split handles the hot probe partitions the
-    window form could not. The pinned pairs subtree feeds both the df
+    hot terms included) and joins back BROADCAST when the pinned
+    vocabulary (``_bounded_broadcast``) measures under the broadcast
+    threshold — zero pairs-by-term shuffle at all. Above it the join
+    degrades to a shuffled one, where AQE's skew-join split handles the
+    hot probe partitions the window form could not. The pinned pairs subtree feeds both the df
     aggregate and the probe side, so tokenization runs once.
 
     The idf factor is the raw ratio N/df WITHOUT the log (monotone in
@@ -909,8 +909,8 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       code-point order == Spark's binary sort of single-char strings ==
       DuckDB's list_sort;
     - per-run terms ``n_i * ln(n_i)`` read ln from the SAME Python
-      ``_LN_TABLE`` constants the JVM literal array and the DuckDB
-      oracle's SQL LUT are generated from, each term one double multiply
+      ``_LN_TABLE`` constants the DuckDB oracle's SQL LUT is generated
+      from, each term one double multiply
       (identical rounding);
     - the run terms are summed SEQUENTIALLY in sorted order via
       ``np.cumsum`` (cumsum output is by definition the left-bracketed

@@ -64,74 +64,15 @@ def spread(df: DataFrame) -> DataFrame:
     input split — so without this, per-document work (shingling,
     signature folds, regex suites) runs on ONE core of the session. The
     round-robin repartition shuffles only the scan's raw bytes (small)
-    and buys full-width compute. At real scale inputs arrive in many
-    splits and this is a structural no-op (partitions >= parallelism
-    => returned unchanged), so the plan stays shuffle-free exactly when
-    the shuffle would not pay for itself."""
+    and buys full-width compute. The split count is Spark's own plan
+    (``df.rdd.getNumPartitions()``, which plans the scan and runs no
+    job): when it already reaches ``defaultParallelism``, as at real
+    scale, the frame is returned unchanged, so the plan stays
+    shuffle-free exactly when the shuffle would not pay for itself."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    if _estimated_scan_partitions(df) < target:
+    if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def _estimated_scan_partitions(df: DataFrame) -> int:
-    """Estimate how many input splits a scan will plan WITHOUT converting
-    the DataFrame to a classic RDD (``df.rdd.getNumPartitions()`` forces
-    full analysis + physical planning through the RDD path on every
-    call).
-
-    This reproduces FilePartition.maxSplitBytes + packing, not just a
-    size/maxPartitionBytes division — both of the planner's adjustments
-    move the count in DIFFERENT directions and each matters here:
-
-    - ``bytesPerCore`` shrink: maxSplitBytes = min(maxPartitionBytes,
-      max(openCostInBytes, totalBytes / defaultParallelism)). One 100 MB
-      file on 8 cores is already split ~8 ways by Spark; ignoring this
-      would bolt a useless round-robin shuffle onto a scan that has full
-      width.
-    - ``openCostInBytes`` packing: many tiny files pack into few
-      partitions (ceil(totalBytes / maxSplitBytes) with each file padded
-      by the open cost). Ignoring this reports 64 tiny files as 64
-      partitions when Spark plans ~2 — exactly the starved-compute case
-      spread() exists to fix.
-
-    Non-file plans (range, joins, …) fall back to the RDD probe —
-    spread() is only applied to scans, so the fallback is test-only."""
-    import math
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        files = []
-    if not files:
-        return df.rdd.getNumPartitions()
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    mpb = conf.filesMaxPartitionBytes()
-    open_cost = conf.filesOpenCostInBytes()
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    sizes = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("file", ""):
-            # remote store: sizes not stat-able from here. Assume
-            # size 0 — packing then UNDER-estimates (tiny padded
-            # totals), which errs toward an occasionally-redundant
-            # repartition; assuming large files would instead make
-            # spread() skip the widen exactly in the many-tiny-files
-            # case it exists for.
-            sizes.append(0)
-            continue
-        try:
-            sizes.append(os.path.getsize(u.path))
-        except OSError:
-            sizes.append(0)
-    padded_total = sum(s + open_cost for s in sizes)
-    max_split = min(mpb, max(open_cost, padded_total // max(1, parallelism)))
-    # splits: files chopped at max_split, then bin-packed with padding
-    n_splits = sum(max(1, math.ceil(s / max_split)) for s in sizes)
-    n_packed = max(1, math.ceil(padded_total / max_split))
-    return min(n_splits, n_packed)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

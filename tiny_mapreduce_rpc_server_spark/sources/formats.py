@@ -210,6 +210,7 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # catalog table names carry the sf label: fixed global names would
     # race across sf dirs on DROP TABLE + saveAsTable
     sf = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_").replace("-", "_")
+    bucketed = []
     for name, df, key in (
         (f"tmrs_b_orders_{sf}", orders, "o_custkey"),
         (f"tmrs_b_customer_{sf}", customer, "c_custkey"),
@@ -222,8 +223,11 @@ def q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("path", scratch_dir(spark, f"bucketed_{key}"))
             .saveAsTable(name)
         )
-    bo = spark.table(f"tmrs_b_orders_{sf}")
-    bc = spark.table(f"tmrs_b_customer_{sf}")
+        bucketed.append(spark.table(name))
+        # external (written with a path): dropping the resolved table
+        # empties the catalog and keeps its files for the release
+        spark.sql(f"DROP TABLE {name}")
+    bo, bc = bucketed
     joined = bo.join(bc, bo.o_custkey == bc.c_custkey)
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_orders"),

@@ -28,10 +28,11 @@ class QuerySpec:
     - ``bench`` marks the headliner queries ``bench.py`` times.
 
     Eager-materialization contract: most builders are plan-only (no
-    Spark job until an action), but queries whose candidate sets go
+    Spark job until an action), but queries whose derived tables go
     through ``operators.dedup._bounded_broadcast`` (dedup / graph /
     sampling composites) run a real count job and persist blocks at
-    ``fn(...)`` call time — the size gate cannot be decided lazily.
+    ``fn(...)`` call time — the planner can size a table for the
+    broadcast threshold only once it is materialized.
     Query functions also ``.cache()`` shared subtrees,
     ``localCheckpoint`` iterative loops, and write stores they read
     back under ``session.scratch_dir``. ``run`` is the one way to
