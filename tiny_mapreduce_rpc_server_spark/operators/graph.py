@@ -322,8 +322,9 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     would OOM the driver; the pin's count is a cheap scan of the
     localCheckpoint-materialized component table). Above the broadcast
     threshold the LEFT join degrades to a hash shuffle on doc_id. The
-    per-source rollup partial-aggregates map-side. The savings fraction is a double
-    division of two exact BIGINTs, identical in both engines."""
+    per-source rollup partial-aggregates map-side. The savings fraction
+    is a double division of two exact BIGINTs, identical in both
+    engines."""
     comp = _components(spark, sf_dir)
     dups = (
         comp.filter(F.col("doc_id") != F.col("component"))

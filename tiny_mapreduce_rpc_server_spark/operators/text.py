@@ -473,8 +473,9 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (``_bounded_broadcast``) measures under the broadcast
     threshold — zero pairs-by-term shuffle at all. Above it the join
     degrades to a shuffled one, where AQE's skew-join split handles the
-    hot probe partitions the window form could not. The pinned pairs subtree feeds both the df
-    aggregate and the probe side, so tokenization runs once.
+    hot probe partitions the window form could not. The pinned pairs
+    subtree feeds both the df aggregate and the probe side, so
+    tokenization runs once.
 
     The idf factor is the raw ratio N/df WITHOUT the log (monotone in
     the true idf, and +,*,/ are correctly-rounded IEEE ops => bit-exact
